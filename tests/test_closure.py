@@ -308,7 +308,6 @@ class TestDriverFastpathLockstep:
 
         fast = compute_closure(catalog, full, dict(partial or {}), spark=spark)
         monkeypatch.setattr(C, "DRIVER_CLOSURE_LIMIT", 0)
-        monkeypatch.setattr(C, "DRIVER_SELF_CLOSURE_LIMIT", 0)
         slow = compute_closure(catalog, full, dict(partial or {}), spark=spark)
         assert set(fast) == set(slow)
         for t in fast:

@@ -442,12 +442,13 @@ def test_sequence_state_beyond_long_range(spark):
 
 
 def test_dump_enforces_small_selection_contract(tmp_path, engine):
-    """dump() collects to the driver; an oversized selection must raise
-    (pointing at dump_distributed) BEFORE any collect happens."""
+    """dump() collects to the driver through a max_driver_rows + 1 limit;
+    an oversized selection must raise (pointing at dump_distributed)
+    before any archive is written."""
+    big = tmp_path / "big.zip"
     with pytest.raises(ValueError, match="dump_distributed"):
-        engine.dump(
-            str(tmp_path / "big.zip"), full_tables=["groups"], max_driver_rows=1
-        )
+        engine.dump(str(big), full_tables=["groups"], max_driver_rows=1)
+    assert not big.exists()
     # opting out restores the old behavior
     out = str(tmp_path / "ok.zip")
     engine.dump(out, full_tables=["groups"], max_driver_rows=None)

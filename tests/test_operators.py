@@ -673,6 +673,10 @@ def test_minhash_exact_driver_fastpath_lockstep(spark, monkeypatch):
         threshold=0.2, num_perm=32, bands=16, verify="exact", max_bucket=20
     )
     fast_guard = pairs(d01, **guard_kw)
+    # duplicate ids: a doc repeated under its own id must not pair with
+    # itself (the distributed self-join keeps id_a < id_b)
+    dup = d01.filter("doc_id % 3 = 0").unionByName(d01.filter("doc_id % 30 = 0"))
+    fast_dup = pairs(dup, **panel_kw)
     # raw-pair budget exhausted mid-function ⇒ _driver_lsh_pairs returns
     # None and the distributed plan must produce the same rows
     monkeypatch.setattr(D, "_DRIVER_PAIR_MAX_RAW_PAIRS", 0)
@@ -683,6 +687,7 @@ def test_minhash_exact_driver_fastpath_lockstep(spark, monkeypatch):
     slow_guard = pairs(d01, **guard_kw)
     assert fast and fast == slow == budget_fallback
     assert fast_guard == slow_guard
+    assert fast_dup == pairs(dup, **panel_kw)
 
 
 def test_simhash_driver_fastpath_lockstep(spark, monkeypatch):
@@ -699,9 +704,14 @@ def test_simhash_driver_fastpath_lockstep(spark, monkeypatch):
     panel_kw = dict(max_hamming=3, hash_fn="md5", max_bucket=None)
     fast_panel = pairs(d01, **panel_kw)
     fast_default = pairs(d01, max_bucket=20)
+    # duplicate ids: a doc repeated under its own id must not pair with
+    # itself (the distributed self-join keeps id_a < id_b)
+    dup = d01.unionByName(d01.filter("doc_id % 10 = 0"))
+    fast_dup = pairs(dup, **panel_kw)
     monkeypatch.setattr(D, "_DRIVER_PAIR_MAX_DOCS", 0)
     assert fast_panel == pairs(d01, **panel_kw) and fast_panel
     assert fast_default == pairs(d01, max_bucket=20)
+    assert fast_dup == pairs(dup, **panel_kw)
 
 
 # ------------------------------------------- connected components ----

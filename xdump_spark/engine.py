@@ -127,9 +127,10 @@ class SparkDumpEngine:
 
         Archive dumps collect each selected table to the driver — valid
         because partial dumps are small by construction, and ENFORCED by
-        ``max_driver_rows``: any table whose selection exceeds it raises
-        (checked with a limit+count probe BEFORE collecting, so an
-        oversized selection cannot OOM the driver first). Use
+        ``max_driver_rows``: each table is collected through
+        ``limit(max_driver_rows + 1)``, so the driver never holds more
+        than that many rows of one table, and a table that fills the
+        limit raises before any archive is written. Use
         ``dump_distributed`` for large selections, or pass
         ``max_driver_rows=None`` to opt out."""
         with log_time("total dump"):
@@ -151,9 +152,16 @@ class SparkDumpEngine:
         self, filename, selections, dump_schema, dump_data, compression,
         max_driver_rows=None,
     ) -> dict[str, int]:
-        if dump_data and max_driver_rows is not None:
+        data: dict[str, bytes] = {}
+        counts: dict[str, int] = {}
+        if dump_data:
             for table, df in selections.items():
-                if df.limit(max_driver_rows + 1).count() > max_driver_rows:
+                with log_time(f"export {table}", level=10):
+                    cols = df.columns
+                    if max_driver_rows is not None:
+                        df = df.limit(max_driver_rows + 1)
+                    rows = [tuple(r) for r in df.collect()]
+                if max_driver_rows is not None and len(rows) > max_driver_rows:
                     raise ValueError(
                         f"dump() collects to the driver and the selection for "
                         f"table {table!r} exceeds max_driver_rows="
@@ -161,6 +169,9 @@ class SparkDumpEngine:
                         "selections (executors write partitioned parquet/CSV) "
                         "or raise max_driver_rows explicitly"
                     )
+                counts[table] = len(rows)
+                data[table] = rows_to_csv(cols, rows)
+                logger.debug("%s: %d rows", table, counts[table])
         schema = None
         sequences = None
         if dump_schema:
@@ -176,16 +187,6 @@ class SparkDumpEngine:
                 ],
             }
             sequences = sequence_state(selections, self.catalog)
-        data: dict[str, bytes] = {}
-        counts: dict[str, int] = {}
-        if dump_data:
-            for table, df in selections.items():
-                with log_time(f"export {table}", level=10):
-                    cols = df.columns
-                    rows = [tuple(r) for r in df.collect()]
-                counts[table] = len(rows)
-                data[table] = rows_to_csv(cols, rows)
-                logger.debug("%s: %d rows", table, counts[table])
         DumpArchive(filename).write(schema, sequences, data, compression)
         return counts
 

@@ -357,8 +357,11 @@ def _driver_lsh_pairs(
     if SIG is None:
         return None
     id_list = st.column("id").to_pylist()
-    if any(i is None for i in id_list):
-        return None  # null ids: keep the distributed path's null semantics
+    if any(i is None for i in id_list) or len(set(id_list)) < n:
+        # null ids keep the distributed path's null semantics; duplicate
+        # ids would pair a row with its own id (id_a == id_b), which the
+        # distributed self-join's id_a < id_b never emits
+        return None
     ids = np.asarray(id_list)
     order = np.argsort(ids, kind="stable")
     ids, SIG = ids[order], SIG[order]
@@ -749,8 +752,11 @@ def _driver_simhash_pairs(
             [], f"id_a {id_type}, id_b {id_type}, hamming int"
         )
     id_list = st.column("id").to_pylist()
-    if any(i is None for i in id_list):
-        return None  # null ids: keep the distributed path's null semantics
+    if any(i is None for i in id_list) or len(set(id_list)) < n:
+        # null ids keep the distributed path's null semantics; duplicate
+        # ids would pair a row with its own id (id_a == id_b), which the
+        # distributed self-join's id_a < id_b never emits
+        return None
     ids = np.asarray(id_list)
     sig = st.column("sig").to_numpy(zero_copy_only=False).astype(np.int64)
     order = np.argsort(ids, kind="stable")

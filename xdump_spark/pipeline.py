@@ -85,6 +85,123 @@ class CorpusResult:
     splits: dict | None = None            # name -> DataFrame (if splits)
 
 
+def _keep_ids(src: DataFrame, keep: DataFrame, key: str, id_col: str) -> DataFrame:
+    """The rows of ``src`` whose ``id_col`` appears in ``keep[key]``."""
+    kept = keep.select(F.col(key).alias("_keep_id"))
+    return src.join(kept, src[id_col] == F.col("_keep_id"), "left_semi")
+
+
+# Document-level dedup modes. Each build takes the doc_deduped stage's
+# own parameter dict ``ck`` (its checkpoint fingerprint contribution), so
+# what is fingerprinted is exactly what runs. Operators are imported at
+# call time.
+def _exact_once(src, ck):
+    from xdump_spark.operators.dedup import exact_dedup
+
+    return exact_dedup(src, ck["text_col"], ck["id_col"])
+
+
+def _exact_increment(src, store, ck):
+    from xdump_spark.operators.incremental import incremental_exact_dedup
+
+    return incremental_exact_dedup(
+        src, store, text_col=ck["text_col"], id_col=ck["id_col"],
+        defer_commit=True,
+    )
+
+
+def _exact_replay(frame, store, ck):
+    # the survivors' distinct content hashes ARE the accepted hashes
+    from xdump_spark.operators.incremental import content_hashes
+
+    store.append(
+        content_hashes(frame, ck["text_col"], ck["id_col"])
+        .select("h1", "h2").distinct()
+    )
+
+
+def _fuzzy_once(src, ck):
+    from xdump_spark.operators.components import fuzzy_dedup
+
+    clusters = fuzzy_dedup(
+        src, threshold=ck["threshold"], id_col=ck["id_col"],
+        text_col=ck["text_col"], **ck["kwargs"],
+    )
+    return _keep_ids(src, clusters.filter("is_survivor"), "vertex", ck["id_col"])
+
+
+def _fuzzy_increment(src, store, ck):
+    from xdump_spark.operators.incremental import incremental_neardup
+
+    res = incremental_neardup(
+        src, store, text_col=ck["text_col"], id_col=ck["id_col"],
+        threshold=ck["threshold"], resolve=ck["resolve"], defer_commit=True,
+        **ck["kwargs"],
+    )
+    return res.accepted, res.commit
+
+
+def _fuzzy_replay(frame, store, ck):
+    # re-sign the accepted docs (one narrow pass over the stage parquet)
+    from xdump_spark.operators.dedup import _norm_text, _spread, minhash_signatures
+    from xdump_spark.operators.incremental import _banded
+
+    id_col, text_col, kw = ck["id_col"], ck["text_col"], ck["kwargs"]
+    num_perm = kw.get("num_perm", 128)
+    normed = _spread(frame.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col).alias("id"), _norm_text(F.col(text_col)).alias("_norm"),
+    )
+    store.append(
+        _banded(
+            minhash_signatures(normed, num_perm, kw.get("shingle_k", 5)),
+            num_perm, kw.get("bands", 32),
+        )
+    )
+
+
+def _semantic_once(src, ck):
+    from xdump_spark.operators.similarity import semantic_dedup
+
+    marked = semantic_dedup(
+        src, threshold=ck["threshold"], id_col=ck["id_col"],
+        vec_col=ck["embedding_col"], **ck["kwargs"],
+    )
+    return _keep_ids(src, marked.filter("is_survivor"), ck["id_col"], ck["id_col"])
+
+
+def _semantic_increment(src, store, ck):
+    from xdump_spark.operators.incremental import incremental_semantic_dedup
+
+    res = incremental_semantic_dedup(
+        src, store, threshold=ck["threshold"], id_col=ck["id_col"],
+        vec_col=ck["embedding_col"], defer_commit=True, **ck["kwargs"],
+    )
+    return res.accepted, res.commit
+
+
+def _semantic_replay(frame, store, ck):
+    # re-assign the survivors' vectors against the store's FROZEN
+    # centroids (one Arrow pass; bit-identical to the crashed run's
+    # assignment)
+    from xdump_spark.operators.similarity import ivf_assign
+
+    store.append_assigned(
+        ivf_assign(store.centers(), frame, ck["id_col"], ck["embedding_col"])
+    )
+
+
+# doc_dedup mode -> (its dedup_store class in operators.incremental,
+# one-shot build, store-increment build, and the store commit replayed
+# from the checkpointed stage output when a resumed run skipped the build)
+_DEDUP_MODES = {
+    "exact": ("ExactHashStore", _exact_once, _exact_increment, _exact_replay),
+    "fuzzy": ("SignatureStore", _fuzzy_once, _fuzzy_increment, _fuzzy_replay),
+    "semantic": (
+        "VectorStore", _semantic_once, _semantic_increment, _semantic_replay,
+    ),
+}
+
+
 def prepare_training_corpus(
     docs: DataFrame,
     text_col: str = "text",
@@ -188,34 +305,24 @@ def prepare_training_corpus(
       and if it crashed earlier the resume replays the commit from the
       checkpointed stage output without recomputing the dedup.
     """
-    if dedup_store is not None:
-        from xdump_spark.operators.incremental import (
-            ExactHashStore,
-            SignatureStore,
-            VectorStore,
+    if doc_dedup is not None and doc_dedup not in _DEDUP_MODES:
+        raise ValueError(
+            f"doc_dedup must be one of {sorted(_DEDUP_MODES)}, got {doc_dedup!r}"
         )
+    if dedup_store is not None:
+        from xdump_spark.operators import incremental
 
-        if doc_dedup == "exact" and not isinstance(dedup_store, ExactHashStore):
+        if doc_dedup is None:
             raise ValueError(
-                "dedup_store for doc_dedup='exact' must be an "
-                f"ExactHashStore, got {type(dedup_store).__name__}"
+                "dedup_store requires doc_dedup: " + ", ".join(
+                    f"{m!r} ({spec[0]})" for m, spec in _DEDUP_MODES.items()
+                )
             )
-        if doc_dedup == "fuzzy" and not isinstance(dedup_store, SignatureStore):
+        store_cls = _DEDUP_MODES[doc_dedup][0]
+        if not isinstance(dedup_store, getattr(incremental, store_cls)):
             raise ValueError(
-                "dedup_store for doc_dedup='fuzzy' must be a "
-                f"SignatureStore (near-dup signature history), got "
-                f"{type(dedup_store).__name__}"
-            )
-        if doc_dedup == "semantic" and not isinstance(dedup_store, VectorStore):
-            raise ValueError(
-                "dedup_store for doc_dedup='semantic' must be a "
-                f"VectorStore (embedding history), got "
-                f"{type(dedup_store).__name__}"
-            )
-        if doc_dedup not in ("exact", "fuzzy", "semantic"):
-            raise ValueError(
-                "dedup_store requires doc_dedup='exact' (ExactHashStore), "
-                "'fuzzy' (SignatureStore), or 'semantic' (VectorStore)"
+                f"dedup_store for doc_dedup={doc_dedup!r} must be of type "
+                f"{store_cls}, got {type(dedup_store).__name__}"
             )
     if fuzzy_kwargs:
         overlap = set(fuzzy_kwargs) & {"threshold", "id_col", "text_col"}
@@ -233,7 +340,7 @@ def prepare_training_corpus(
                 "instead"
             )
     counts: dict = {}
-    store_commit = None  # deferred ExactHashStore append (see dedup stage)
+    store_commit = None  # deferred dedup_store append (see dedup stage)
 
     ckpt = None
     if checkpoint_dir is not None:
@@ -247,39 +354,31 @@ def prepare_training_corpus(
             resume=resume,
         )
 
-    def note(stage: str, df: DataFrame, ck: dict | None = None) -> DataFrame:
-        """Count (audit) and, when checkpointing, materialize-or-load the
-        stage. ``ck`` = the stage's own parameters (its fingerprint
-        contribution); ck=None marks a stage that never checkpoints
-        (e.g. the input itself)."""
-        if ckpt is not None and ck is not None:
-            if ckpt.wants(stage):
-                df, n, _ = ckpt.stage(stage, ck, df)
-                if audit:
-                    counts[stage] = n
-                return df
-            ckpt.advance(stage, ck)  # unmaterialized stages still chain
-        if audit:
-            counts[stage] = df.count()
+    def run(stage, ck, build, extra=None, chain_only=False):
+        """Run one stage: chain its parameters ``ck`` into the checkpoint
+        fingerprint, load it from a valid checkpoint or call ``build``,
+        and record its audit count. ``build`` is a thunk, so a checkpoint
+        hit skips construction and any driver jobs in it (DSIR fit,
+        mixture-rate estimation). ``ck=None`` marks the input (audited,
+        never chained); ``chain_only`` a stage that chains but neither
+        checkpoints nor audits. ``extra``, a dict the build fills,
+        round-trips through the manifest to resumed runs."""
+        chained = ckpt is not None and ck is not None
+        audited = audit and not chain_only
+        if chained and not chain_only and ckpt.wants(stage):
+            df, n, x = ckpt.stage(stage, ck, build, extra)
+            if extra is not None:
+                extra.update(x)
+        else:
+            if chained:
+                ckpt.advance(stage, ck)
+            df = build()
+            n = df.count() if audited else None
+        if audited:
+            counts[stage] = n
         return df
 
-    def note_lazy(stage: str, ck: dict, build, extra=None):
-        """Thunk form for stages whose CONSTRUCTION runs driver jobs
-        (DSIR fit, mixture-rate estimation): on a checkpoint hit the
-        thunk never runs. Returns (frame, extra_dict)."""
-        if ckpt is not None and ckpt.wants(stage):
-            df, n, x = ckpt.stage(stage, ck, build, extra)
-            if audit:
-                counts[stage] = n
-            return df, x
-        if ckpt is not None:
-            ckpt.advance(stage, ck)
-        df = build()
-        if audit:
-            counts[stage] = df.count()
-        return df, (extra() if callable(extra) else (extra or {}))
-
-    cur = note("input", docs)
+    cur = run("input", None, lambda: docs)
     # URL-keyed stages run before anything touches the text: re-crawl
     # removal by canonical URL is the cheapest dedup pass a crawl gets
     # (no text ever shuffles), and the per-registrable-domain cap bounds
@@ -293,18 +392,18 @@ def prepare_training_corpus(
     if dedup_urls:
         from xdump_spark.operators.web import url_dedup
 
-        cur = note(
+        cur = run(
             "url_deduped",
-            url_dedup(cur, url_col, id_col),
-            ck={"url_col": url_col, "id_col": id_col},
+            {"url_col": url_col, "id_col": id_col},
+            lambda: url_dedup(cur, url_col, id_col),
         )
     if domain_cap is not None:
         from xdump_spark.operators.web import domain_cap as _domain_cap
 
-        cur = note(
+        cur = run(
             "domain_capped",
-            _domain_cap(cur, domain_cap, url_col, id_col),
-            ck={"domain_cap": domain_cap, "url_col": url_col, "id_col": id_col},
+            {"domain_cap": domain_cap, "url_col": url_col, "id_col": id_col},
+            lambda: _domain_cap(cur, domain_cap, url_col, id_col),
         )
     # Line-granular stages run FIRST: normalize_text collapses newlines,
     # so markup/line filtering/line dedup must see the raw line structure
@@ -312,37 +411,41 @@ def prepare_training_corpus(
     if markup:
         from xdump_spark.operators.cleaning import strip_markup
 
-        cur = strip_markup(cur, text_col)
-        if ckpt is not None:
-            ckpt.advance("markup", {"text_col": text_col})
+        cur = run(
+            "markup", {"text_col": text_col},
+            lambda: strip_markup(cur, text_col), chain_only=True,
+        )
     if line_filter:
         from xdump_spark.operators.cleaning import c4_line_filter
 
-        cur = note(
+        cur = run(
             "line_filtered",
-            c4_line_filter(cur, text_col).drop("n_lines_kept", "n_lines_dropped"),
-            ck={"text_col": text_col},
+            {"text_col": text_col},
+            lambda: c4_line_filter(cur, text_col).drop(
+                "n_lines_kept", "n_lines_dropped"
+            ),
         )
     if line_dedup:
         from xdump_spark.operators.cleaning import dedup_lines
 
-        cur = note(
+        cur = run(
             "line_deduped",
-            dedup_lines(cur, text_col, id_col).drop("n_lines_removed"),
-            ck={"text_col": text_col, "id_col": id_col},
+            {"text_col": text_col, "id_col": id_col},
+            lambda: dedup_lines(cur, text_col, id_col).drop("n_lines_removed"),
         )
-    cur = note(
+    cur = run(
         "cleaned",
-        redact_pii(normalize_text(cur, text_col), text_col),
-        ck={"text_col": text_col},
+        {"text_col": text_col},
+        lambda: redact_pii(normalize_text(cur, text_col), text_col),
     )
 
     if span_k is not None:
-        cur = strip_duplicated_spans(cur, k=span_k, text_col=text_col, id_col=id_col)
-        cur = note(
+        cur = run(
             "span_stripped",
-            cur.drop("n_removed_tokens"),
-            ck={"span_k": span_k, "text_col": text_col, "id_col": id_col},
+            {"span_k": span_k, "text_col": text_col, "id_col": id_col},
+            lambda: strip_duplicated_spans(
+                cur, k=span_k, text_col=text_col, id_col=id_col
+            ).drop("n_removed_tokens"),
         )
 
     if doc_dedup is not None:
@@ -350,192 +453,14 @@ def prepare_training_corpus(
         # 2022 order: canonicalized text makes duplicates visible) and
         # BEFORE the quality/selection gates, so every later stage sees
         # one copy per document.
-        if doc_dedup == "exact":
-            if dedup_store is not None:
-                # Production increments (r6): dedup TODAY'S batch against
-                # every previously-accepted doc via the bucketed
-                # ExactHashStore — the history never shuffles. The store
-                # commit is DEFERRED to the end of the run (after the
-                # sink write): an eager append would poison the store on
-                # a downstream failure, making the retry reject the
-                # whole batch as "previously accepted". With
-                # checkpointing (r7) the commit is additionally
-                # IDEMPOTENT per increment: keyed by the dedup stage's
-                # chain fingerprint and marked in the manifest, so a
-                # resumed run cannot double-append; a resume that skips
-                # the dedup recompute replays the commit from the
-                # checkpointed stage output (its distinct content hashes
-                # ARE the survivors' hashes).
-                from xdump_spark.operators.incremental import (
-                    content_hashes,
-                    incremental_exact_dedup,
-                )
-
-                src, live_commit = cur, None
-
-                def _build_dedup(src=src):
-                    nonlocal live_commit
-                    accepted, live_commit = incremental_exact_dedup(
-                        src, dedup_store, text_col=text_col, id_col=id_col,
-                        defer_commit=True,
-                    )
-                    acc = accepted.select(F.col("id").alias("_keep_id"))
-                    return src.join(
-                        acc, src[id_col] == F.col("_keep_id"), "left_semi"
-                    )
-
-                cur, _ = note_lazy(
-                    "doc_deduped",
-                    {
-                        "doc_dedup": "exact-incremental",
-                        "store": dedup_store.table_name,
-                        "n_buckets": dedup_store.n_buckets,
-                        "text_col": text_col, "id_col": id_col,
-                    },
-                    _build_dedup,
-                )
-                commit_key = ckpt.chain if ckpt is not None else None
-                dd_frame = cur
-
-                def store_commit():
-                    if ckpt is not None and ckpt.is_marked(
-                        "store_commit", commit_key
-                    ):
-                        return
-                    if live_commit is not None:
-                        live_commit()  # survivors frame already pinned
-                    else:
-                        # resumed: the dedup never ran this process —
-                        # replay the append from the checkpointed output
-                        dedup_store.append(
-                            content_hashes(dd_frame, text_col, id_col)
-                            .select("h1", "h2").distinct()
-                        )
-                    if ckpt is not None:
-                        ckpt.mark("store_commit", commit_key)
-            else:
-                from xdump_spark.operators.dedup import exact_dedup
-
-                cur = note(
-                    "doc_deduped",
-                    exact_dedup(cur, text_col, id_col),
-                    ck={"doc_dedup": "exact", "text_col": text_col, "id_col": id_col},
-                )
-        elif doc_dedup == "fuzzy":
-            if dedup_store is not None:
-                # Near-dup increments vs SignatureStore history (r7) —
-                # the fuzzy twin of the ExactHashStore path above, same
-                # deferred + fingerprint-keyed idempotent commit.
-                # resolve defaults to "components" (min-id cluster
-                # survivor, store-tainted clusters rejected wholesale):
-                # the same cluster semantics the one-shot fuzzy_dedup
-                # applies, and the fully-distributed path for
-                # template-heavy daily batches.
-                from xdump_spark.operators.incremental import (
-                    incremental_neardup,
-                )
-
-                fk = dict(fuzzy_kwargs or {})
-                nd_resolve = fk.pop("resolve", "components")
-                src_f, live_res = cur, None
-
-                def _build_fuzzy(src=src_f):
-                    nonlocal live_res
-                    live_res = incremental_neardup(
-                        src, dedup_store, text_col=text_col,
-                        id_col=id_col, threshold=fuzzy_threshold,
-                        resolve=nd_resolve, defer_commit=True, **fk,
-                    )
-                    acc = live_res.accepted.select(
-                        F.col("id").alias("_keep_id")
-                    )
-                    return src.join(
-                        acc, src[id_col] == F.col("_keep_id"), "left_semi"
-                    )
-
-                cur, _ = note_lazy(
-                    "doc_deduped",
-                    {
-                        "doc_dedup": "fuzzy-incremental",
-                        "store": dedup_store.path,
-                        "threshold": fuzzy_threshold,
-                        "resolve": nd_resolve,
-                        "kwargs": fk,
-                        "text_col": text_col, "id_col": id_col,
-                    },
-                    _build_fuzzy,
-                )
-                fz_key = ckpt.chain if ckpt is not None else None
-                fz_frame = cur
-
-                def store_commit():
-                    if ckpt is not None and ckpt.is_marked(
-                        "store_commit", fz_key
-                    ):
-                        return
-                    if live_res is not None:
-                        live_res.commit()  # banded sigs already pinned
-                    else:
-                        # resumed: re-sign the checkpointed accepted
-                        # docs (one narrow pass over the stage parquet)
-                        from xdump_spark.operators.dedup import (
-                            _norm_text,
-                            _spread,
-                            minhash_signatures,
-                        )
-                        from xdump_spark.operators.incremental import (
-                            _banded,
-                        )
-
-                        np_ = fk.get("num_perm", 128)
-                        nb_ = fk.get("bands", 32)
-                        sk_ = fk.get("shingle_k", 5)
-                        normed = _spread(
-                            fz_frame.select(F.col(id_col), F.col(text_col))
-                        ).select(
-                            F.col(id_col).alias("id"),
-                            _norm_text(F.col(text_col)).alias("_norm"),
-                        )
-                        dedup_store.append(
-                            _banded(
-                                minhash_signatures(normed, np_, sk_),
-                                np_, nb_,
-                            )
-                        )
-                    if ckpt is not None:
-                        ckpt.mark("store_commit", fz_key)
-            else:
-                from xdump_spark.operators.components import fuzzy_dedup
-
-                survivors = fuzzy_dedup(
-                    cur, threshold=fuzzy_threshold, id_col=id_col,
-                    text_col=text_col, **(fuzzy_kwargs or {}),
-                    # fuzzy_kwargs reaches minhash_lsh_pairs (num_perm
-                    # defaults to the calibrated 128 as of r7)
-                ).filter("is_survivor").select(F.col("vertex").alias("_keep_id"))
-                cur = note(
-                    "doc_deduped",
-                    cur.join(
-                        survivors, cur[id_col] == survivors["_keep_id"], "left_semi"
-                    ),
-                    ck={
-                        "doc_dedup": "fuzzy",
-                        "threshold": fuzzy_threshold,
-                        "kwargs": fuzzy_kwargs or {},
-                        "text_col": text_col,
-                        "id_col": id_col,
-                    },
-                )
-        elif doc_dedup == "semantic":
-            # SemDeDup-style embedding dedup as a pipeline stage (r8) —
-            # the frame must already CARRY the embedding column (join
-            # your embedding table upstream; the pipeline never invents
-            # vectors). Same deferred + fingerprint-keyed idempotent
-            # commit protocol as the exact/fuzzy store paths.
+        if doc_dedup == "semantic":
+            # SemDeDup-style embedding dedup (r8): the frame must already
+            # CARRY the embedding column (join your embedding table
+            # upstream; the pipeline never invents vectors) — unless
+            # hash_embed asks for model-free lexical geometry, computed
+            # HERE on the CLEANED text the other dedup modes see
+            # (text.hash_embed_col; one withColumn, no join).
             if hash_embed is not None:
-                # model-free lexical geometry, computed HERE — on the
-                # CLEANED text the other dedup modes see, not the raw
-                # input (text.hash_embed_col; one withColumn, no join)
                 from xdump_spark.operators.text import hash_embed_col
 
                 cur = cur.withColumn(
@@ -547,126 +472,103 @@ def prepare_training_corpus(
                     "on the input (join your embeddings table before the "
                     "pipeline, set embedding_col=, or set hash_embed=dim)"
                 )
-            sk = dict(semantic_kwargs or {})
-            if dedup_store is not None:
-                from xdump_spark.operators.incremental import (
-                    incremental_semantic_dedup,
-                )
-
-                live_sem = None
-
-                def _build_semantic(src=cur):
-                    nonlocal live_sem
-                    live_sem = incremental_semantic_dedup(
-                        src, dedup_store, threshold=semantic_threshold,
-                        id_col=id_col, vec_col=embedding_col,
-                        defer_commit=True, **sk,
-                    )
-                    acc = live_sem.accepted.select(
-                        F.col("id").alias("_keep_id")
-                    )
-                    return src.join(
-                        acc, src[id_col] == F.col("_keep_id"), "left_semi"
-                    )
-
-                cur, _ = note_lazy(
-                    "doc_deduped",
-                    {
-                        "doc_dedup": "semantic-incremental",
-                        "store": dedup_store.path,
-                        "threshold": semantic_threshold,
-                        "kwargs": sk,
-                        "hash_embed": hash_embed,
-                        "embedding_col": embedding_col, "id_col": id_col,
-                    },
-                    _build_semantic,
-                )
-                sem_key = ckpt.chain if ckpt is not None else None
-                sem_frame = cur
-
-                def store_commit():
-                    if ckpt is not None and ckpt.is_marked(
-                        "store_commit", sem_key
-                    ):
-                        return
-                    if live_sem is not None:
-                        live_sem.commit()  # accepted vectors already pinned
-                    else:
-                        # resumed: the dedup never ran this process —
-                        # re-assign the checkpointed survivors' vectors
-                        # against the store's FROZEN centroids (one Arrow
-                        # pass; bit-identical to the crashed run's
-                        # assignment) and replay the append
-                        from xdump_spark.operators.similarity import (
-                            ivf_assign,
-                        )
-
-                        dedup_store.append_assigned(
-                            ivf_assign(
-                                dedup_store.centers(), sem_frame,
-                                id_col, embedding_col,
-                            )
-                        )
-                    if ckpt is not None:
-                        ckpt.mark("store_commit", sem_key)
-            else:
-                from xdump_spark.operators.similarity import semantic_dedup
-
-                survivors = (
-                    semantic_dedup(
-                        cur, threshold=semantic_threshold, id_col=id_col,
-                        vec_col=embedding_col, **sk,
-                    )
-                    .filter("is_survivor")
-                    .select(F.col(id_col).alias("_keep_id"))
-                )
-                cur = note(
-                    "doc_deduped",
-                    cur.join(
-                        survivors, cur[id_col] == survivors["_keep_id"],
-                        "left_semi",
-                    ),
-                    ck={
-                        "doc_dedup": "semantic",
-                        "threshold": semantic_threshold,
-                        "kwargs": sk,
-                        "hash_embed": hash_embed,
-                        "embedding_col": embedding_col,
-                        "id_col": id_col,
-                    },
-                )
+            ck = {
+                "threshold": semantic_threshold,
+                "kwargs": dict(semantic_kwargs or {}),
+                "hash_embed": hash_embed,
+                "embedding_col": embedding_col,
+            }
+        elif doc_dedup == "fuzzy":
+            # fuzzy_kwargs reaches minhash_lsh_pairs (num_perm defaults
+            # to the calibrated 128 as of r7)
+            ck = {
+                "threshold": fuzzy_threshold,
+                "kwargs": dict(fuzzy_kwargs or {}),
+                "text_col": text_col,
+            }
         else:
-            raise ValueError(
-                "doc_dedup must be 'exact', 'fuzzy', or 'semantic', "
-                f"got {doc_dedup!r}"
-            )
+            ck = {"text_col": text_col}
+        ck.update(doc_dedup=doc_dedup, id_col=id_col)
+        _, once, increment, replay = _DEDUP_MODES[doc_dedup]
+        if dedup_store is None:
+            cur = run("doc_deduped", ck, lambda: once(cur, ck))
+        else:
+            # Production increments: dedup TODAY'S batch against the
+            # store's history of every previously-accepted doc. The
+            # store commit is DEFERRED to the end of the run (after the
+            # sink write): an eager append would poison the store on a
+            # downstream failure, making the retry reject the whole
+            # batch as "previously accepted". With checkpointing the
+            # commit is also IDEMPOTENT per increment: keyed by the
+            # dedup stage's chain fingerprint and marked in the
+            # manifest, so a resumed run cannot double-append, and a
+            # resume that skips the dedup recompute replays the commit
+            # from the checkpointed stage output.
+            ck["doc_dedup"] += "-incremental"
+            if doc_dedup == "exact":
+                ck.update(
+                    store=dedup_store.table_name,
+                    n_buckets=dedup_store.n_buckets,
+                )
+            else:
+                ck["store"] = dedup_store.path
+            if doc_dedup == "fuzzy":
+                # "components" (min-id cluster survivor, store-tainted
+                # clusters rejected wholesale): the one-shot fuzzy_dedup
+                # cluster semantics, fully distributed for template-heavy
+                # daily batches
+                ck["resolve"] = ck["kwargs"].pop("resolve", "components")
+            live = []  # the deferred commit, if the dedup ran this process
+
+            def build():
+                accepted, commit = increment(cur, dedup_store, ck)
+                live.append(commit)
+                return _keep_ids(cur, accepted, "id", id_col)
+
+            cur = run("doc_deduped", ck, build)
+            commit_key = ckpt.chain if ckpt is not None else None
+            dd_frame = cur
+
+            def store_commit():
+                if ckpt is not None and ckpt.is_marked("store_commit", commit_key):
+                    return
+                if live:
+                    live[0]()
+                else:
+                    replay(dd_frame, dedup_store, ck)
+                if ckpt is not None:
+                    ckpt.mark("store_commit", commit_key)
 
     n_tok = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    cur = note(
+    cur = run(
         "quality_gated",
-        cur.filter((F.length(F.trim(F.col(text_col))) > 0) & (n_tok >= min_tokens)),
-        ck={"min_tokens": min_tokens, "text_col": text_col},
+        {"min_tokens": min_tokens, "text_col": text_col},
+        lambda: cur.filter(
+            (F.length(F.trim(F.col(text_col))) > 0) & (n_tok >= min_tokens)
+        ),
     )
     if blocklist:
         from xdump_spark.operators.cleaning import blocklist_filter
 
-        cur = note(
+        cur = run(
             "blocklist_gated",
-            blocklist_filter(cur, blocklist, text_col=text_col, mode=blocklist_mode)
+            {"blocklist": sorted(blocklist), "mode": blocklist_mode},
+            lambda: blocklist_filter(
+                cur, blocklist, text_col=text_col, mode=blocklist_mode
+            )
             .filter(~F.col("blocked"))
             .drop("blocked", "n_blocklist_hits"),
-            ck={"blocklist": sorted(blocklist), "mode": blocklist_mode},
         )
 
     if gopher:
         from xdump_spark.operators.curation import gopher_filter
 
-        cur = note(
+        cur = run(
             "gopher_gated",
-            gopher_filter(cur, text_col, id_col)
+            {"gopher": True, "text_col": text_col},
+            lambda: gopher_filter(cur, text_col, id_col)
             .filter("kept")
             .drop("kept", "drop_reasons"),
-            ck={"gopher": True, "text_col": text_col},
         )
 
     if compression_min is not None:
@@ -676,17 +578,16 @@ def prepare_training_corpus(
         # other per-doc gates; the signal is one Arrow-batched pass.
         from xdump_spark.operators.curation import compression_ratio_frame
 
-        ratios = compression_ratio_frame(cur, text_col, id_col).select(
-            F.col(id_col).alias("_cr_id"), "compression_ratio"
-        )
-        cur = note(
+        cur = run(
             "compression_gated",
-            cur.join(
-                ratios.filter(F.col("compression_ratio") >= compression_min),
-                cur[id_col] == F.col("_cr_id"),
-                "left_semi",
+            {"compression_min": compression_min, "text_col": text_col},
+            lambda: _keep_ids(
+                cur,
+                compression_ratio_frame(cur, text_col, id_col).filter(
+                    F.col("compression_ratio") >= compression_min
+                ),
+                id_col, id_col,
             ),
-            ck={"compression_min": compression_min, "text_col": text_col},
         )
 
     if audio_gate is not None:
@@ -696,8 +597,6 @@ def prepare_training_corpus(
         # audio is undecodable or falls outside the duration/rms floors
         # are dropped. Docs WITHOUT a blob pass through by default
         # (keep_missing) — a text-only doc is not bad audio.
-        from xdump_spark.operators.audio import decode_audio
-
         allowed = {
             "blob_col", "min_duration_s", "max_duration_s",
             "min_rms", "max_rms", "keep_missing",
@@ -708,37 +607,40 @@ def prepare_training_corpus(
         blob_col = audio_gate.get("blob_col", "blob")
         if blob_col not in cur.columns:
             raise ValueError(f"audio_gate blob column {blob_col!r} not in corpus")
-        with_blob = cur.filter(F.col(blob_col).isNotNull())
-        prof = decode_audio(
-            with_blob.select(F.col(id_col), F.col(blob_col).alias("blob")),
-            id_col=id_col,
-        )
-        cond = F.col("duration_s").isNotNull()  # undecodable rows null out
-        if "min_duration_s" in audio_gate:
-            cond &= F.col("duration_s") >= audio_gate["min_duration_s"]
-        if "max_duration_s" in audio_gate:
-            cond &= F.col("duration_s") <= audio_gate["max_duration_s"]
-        if "min_rms" in audio_gate:
-            cond &= F.col("rms") >= audio_gate["min_rms"]
-        if "max_rms" in audio_gate:
-            cond &= F.col("rms") <= audio_gate["max_rms"]
-        keep = prof.filter(cond).select(F.col(id_col).alias("_au_id"))
-        gated = with_blob.join(
-            keep, with_blob[id_col] == F.col("_au_id"), "left_semi"
-        )
-        if audio_gate.get("keep_missing", True):
-            gated = gated.unionByName(cur.filter(F.col(blob_col).isNull()))
-        cur = note("audio_gated", gated, ck={"audio_gate": audio_gate})
+
+        def _build_audio():
+            from xdump_spark.operators.audio import decode_audio
+
+            with_blob = cur.filter(F.col(blob_col).isNotNull())
+            prof = decode_audio(
+                with_blob.select(F.col(id_col), F.col(blob_col).alias("blob")),
+                id_col=id_col,
+            )
+            cond = F.col("duration_s").isNotNull()  # undecodable rows null out
+            if "min_duration_s" in audio_gate:
+                cond &= F.col("duration_s") >= audio_gate["min_duration_s"]
+            if "max_duration_s" in audio_gate:
+                cond &= F.col("duration_s") <= audio_gate["max_duration_s"]
+            if "min_rms" in audio_gate:
+                cond &= F.col("rms") >= audio_gate["min_rms"]
+            if "max_rms" in audio_gate:
+                cond &= F.col("rms") <= audio_gate["max_rms"]
+            gated = _keep_ids(with_blob, prof.filter(cond), id_col, id_col)
+            if audio_gate.get("keep_missing", True):
+                gated = gated.unionByName(cur.filter(F.col(blob_col).isNull()))
+            return gated
+
+        cur = run("audio_gated", {"audio_gate": audio_gate}, _build_audio)
 
     if quality_model is not None:
         from xdump_spark.operators.classifier import with_quality_score
 
-        cur = note(
+        cur = run(
             "classifier_gated",
-            with_quality_score(cur, quality_model, text_col=text_col)
+            {"model": repr(quality_model), "score_min": quality_score_min},
+            lambda: with_quality_score(cur, quality_model, text_col=text_col)
             .filter(F.col("quality_score") >= quality_score_min)
             .drop("quality_score"),
-            ck={"model": repr(quality_model), "score_min": quality_score_min},
         )
 
     if (ppl_model is None) != (max_ppl is None):
@@ -774,15 +676,15 @@ def prepare_training_corpus(
         # the kept set): lm_score has no row for empty/whitespace docs,
         # and a gate that only promises "docs above max_ppl are dropped"
         # must not silently remove unscorable docs too
-        _ppl_drop = (
-            _lmod.lm_score(cur, _lm_model, text_col=text_col, id_col=id_col)
-            .filter(F.col("ppl") > max_ppl)
-            .select(id_col)
-        )
-        cur = note(
+        cur = run(
             "ppl_gated",
-            cur.join(_ppl_drop, id_col, "left_anti"),
-            ck={"model": _lm_ck, "max_ppl": max_ppl},
+            {"model": _lm_ck, "max_ppl": max_ppl},
+            lambda: cur.join(
+                _lmod.lm_score(cur, _lm_model, text_col=text_col, id_col=id_col)
+                .filter(F.col("ppl") > max_ppl)
+                .select(id_col),
+                id_col, "left_anti",
+            ),
         )
 
     if dsir_target is not None:
@@ -796,23 +698,20 @@ def prepare_training_corpus(
             raise ValueError("dsir_target requires dsir_n (selection size)")
         from xdump_spark.operators.dsir import dsir_resample, fit_dsir
 
-        def _build_dsir(pool=cur):
+        def _build_dsir():
             model = fit_dsir(
-                dsir_target, pool, text_col=text_col, num_buckets=dsir_buckets
+                dsir_target, cur, text_col=text_col, num_buckets=dsir_buckets
             )
             picked = dsir_resample(
-                pool, model, n=dsir_n, text_col=text_col, id_col=id_col,
+                cur, model, n=dsir_n, text_col=text_col, id_col=id_col,
                 temperature=dsir_temperature, seed=dsir_seed,
             )
-            return pool.join(picked.select(id_col), id_col, "left_semi")
+            return cur.join(picked.select(id_col), id_col, "left_semi")
 
-        # thunk form: the DSIR fit runs driver jobs; a checkpoint hit
-        # must skip them, not just the materialization
-        target_fp = _frame_fp(dsir_target) if ckpt is not None else None
-        cur, _ = note_lazy(
+        cur = run(
             "dsir_selected",
             {
-                "target": target_fp,
+                "target": _frame_fp(dsir_target) if ckpt is not None else None,
                 "n": dsir_n,
                 "temperature": dsir_temperature,
                 "buckets": dsir_buckets,
@@ -825,14 +724,17 @@ def prepare_training_corpus(
     if sample_rates is not None:
         from xdump_spark.operators.curation import stratified_sample
 
-        cur = note(
+        cur = run(
             "sampled",
-            stratified_sample(cur, sample_rates, strata_col=strata_col, id_col=id_col),
-            ck={"rates": sample_rates, "strata_col": strata_col},
+            {"rates": sample_rates, "strata_col": strata_col},
+            lambda: stratified_sample(
+                cur, sample_rates, strata_col=strata_col, id_col=id_col
+            ),
         )
 
     if benchmark is not None:
         k = span_k if span_k is not None else 8
+        bench_fp = _frame_fp(benchmark) if ckpt is not None else None
         if contamination_policy == "strip":
             # GPT-3 App. C semantics: cut the overlapped spans, keep the
             # document (the surgical choice for long docs quoting an
@@ -840,31 +742,31 @@ def prepare_training_corpus(
             # doc may fall below it.
             from xdump_spark.operators.spans import strip_contaminated_spans
 
-            stripped = strip_contaminated_spans(
-                cur, benchmark, k=k, text_col=text_col, id_col=id_col
-            ).drop("n_removed_tokens")
-            cur = note(
+            cur = run(
                 "decontaminated",
-                stripped.filter(
-                    (F.length(F.trim(F.col(text_col))) > 0)
-                    & (F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= min_tokens)
-                ),
-                ck={
-                    "benchmark": _frame_fp(benchmark) if ckpt is not None else None,
-                    "policy": "strip", "k": k, "min_tokens": min_tokens,
+                {
+                    "benchmark": bench_fp, "policy": "strip", "k": k,
+                    "min_tokens": min_tokens,
                 },
+                lambda: strip_contaminated_spans(
+                    cur, benchmark, k=k, text_col=text_col, id_col=id_col
+                )
+                .drop("n_removed_tokens")
+                .filter(
+                    (F.length(F.trim(F.col(text_col))) > 0) & (n_tok >= min_tokens)
+                ),
             )
         elif contamination_policy == "drop":
-            dirty = contamination_spans(
-                cur, benchmark, k=k, text_col=text_col, id_col=id_col
-            ).select(F.col("doc_id").alias("_dirty_id")).distinct()
-            cur = note(
+            cur = run(
                 "decontaminated",
-                cur.join(dirty, cur[id_col] == dirty["_dirty_id"], "left_anti"),
-                ck={
-                    "benchmark": _frame_fp(benchmark) if ckpt is not None else None,
-                    "policy": "drop", "k": k,
-                },
+                {"benchmark": bench_fp, "policy": "drop", "k": k},
+                lambda: cur.join(
+                    contamination_spans(
+                        cur, benchmark, k=k, text_col=text_col, id_col=id_col
+                    ).select(F.col("doc_id").alias("_dirty_id")).distinct(),
+                    cur[id_col] == F.col("_dirty_id"),
+                    "left_anti",
+                ),
             )
         else:
             raise ValueError(
@@ -877,23 +779,22 @@ def prepare_training_corpus(
 
         # Runs LAST among selection stages: every earlier gate changes
         # the composition the rebalance has to correct.
-        rates_box = {}
+        mix: dict = {}
 
-        def _build_mixture(pool=cur):
-            rebalanced, rates = mixture_resample(
-                pool, target_mixture, part_col=mixture_col,
+        def _build_mixture():
+            rebalanced, mix["mixture_rates"] = mixture_resample(
+                cur, target_mixture, part_col=mixture_col,
                 id_col=id_col, text_col=text_col,
             )
-            rates_box["rates"] = rates
             return rebalanced
 
-        cur, mix_extra = note_lazy(
+        cur = run(
             "mixture_rebalanced",
             {"target": target_mixture, "mixture_col": mixture_col},
             _build_mixture,
-            extra=lambda: {"mixture_rates": rates_box["rates"]},
+            extra=mix,
         )
-        mixture_rates = mix_extra.get("mixture_rates", rates_box.get("rates"))
+        mixture_rates = mix.get("mixture_rates")
 
     cur = deterministic_shuffle(cur, seed=shuffle_seed, id_col=id_col)
 

@@ -54,27 +54,20 @@ from xdump_spark.catalog import Catalog
 # ones go through a shuffled join (AQE may still pick SHJ/SMJ).
 BROADCAST_KEY_LIMIT = 5_000_000
 
-# A table whose outgoing FKs are ALL self-edges and whose narrow
-# (key + FK columns) projection has at most this many rows runs its
-# recursion as ONE driver-side BFS over the collected edge map instead
-# of O(depth) Spark rounds (each round = a checkpoint job + a count
-# job; a 10-level manager chain paid ~20 tiny jobs of pure scheduling
-# latency — r14 measurement). The bound keeps the driver safe the same
-# way the broadcast limit does: ~3 longs/row, so 1M rows is ~24 MB
-# collected (dict overhead included, well under typical driver heaps);
-# a fact-sized self-FK table stays on the distributed loop.
-DRIVER_SELF_CLOSURE_LIMIT = 1_000_000
-
-# Generalization of the same bound to the WHOLE closure (r15): when every
-# table the worklist could touch fits this narrow-projection row bound,
-# the FK subgraph is collected once (one bounded collect per table,
-# overlapped on driver threads) and the entire fixed point saturates as a
-# driver-side BFS — O(tables) small jobs instead of O(depth × tables)
-# checkpoint+count job pairs. Any oversized table keeps the distributed
-# loop for the whole closure. Aggregate driver memory is bounded by
-# (reached tables) × limit narrow rows; with the 10-table catalog that is
-# the same order as one broadcast relation.
-DRIVER_CLOSURE_LIMIT = DRIVER_SELF_CLOSURE_LIMIT
+# When every table the worklist could touch fits this narrow-projection
+# (key + FK columns) row bound, the FK subgraph is collected once (one
+# bounded collect per table, overlapped on driver threads) and the entire
+# fixed point saturates as a driver-side BFS — O(tables) small jobs
+# instead of O(depth × tables) checkpoint+count job pairs (a 10-level
+# manager chain paid ~20 tiny jobs of pure scheduling latency on the
+# round loop). Any oversized table keeps the distributed loop for the
+# whole closure. The bound keeps the driver safe the same way the
+# broadcast limit does: ~3 longs/row, so 1M rows is ~24 MB collected per
+# table (dict overhead included, well under typical driver heaps), and
+# aggregate driver memory is bounded by (reached tables) × limit narrow
+# rows — with the 10-table catalog the same order as one broadcast
+# relation.
+DRIVER_CLOSURE_LIMIT = 1_000_000
 
 
 def validate_tables(catalog: Catalog, full_tables, partial_tables) -> None:
@@ -242,36 +235,6 @@ def compute_closure(
         return out
 
     narrow_base: dict[str, DataFrame] = {}
-    # parent -> (key -> tuple of referenced keys) | None when the table
-    # is over DRIVER_SELF_CLOSURE_LIMIT (falls back to the round loop)
-    self_edges_cache: dict[str, dict | None] = {}
-
-    def driver_self_edges(parent: str, key_col: str) -> dict | None:
-        """Collected edge map of an ALL-self-FK table (see
-        DRIVER_SELF_CLOSURE_LIMIT): key value -> the row's non-null FK
-        values. Built once from the already-materialized narrow
-        projection; None (permanently) when the table is too big to
-        collect, in which case the caller stays on the round loop."""
-        if parent in self_edges_cache:
-            return self_edges_cache[parent]
-        base, _ = propagation_base(parent, key_col)
-        cols = propagation_columns(parent)
-        narrow = base.select(key_col, *cols)
-        if narrow.limit(DRIVER_SELF_CLOSURE_LIMIT + 1).count() > DRIVER_SELF_CLOSURE_LIMIT:
-            self_edges_cache[parent] = None
-            return None
-        edges: dict = {}
-        for row in narrow.collect():
-            dsts = [v for v in row[1:] if v is not None]
-            if dsts:
-                # Accumulate per key: a duplicated key value must keep
-                # EVERY row's edges, exactly as the distributed semi-join
-                # pulls every matching row (last-write-wins would silently
-                # under-export).
-                edges.setdefault(row[0], []).extend(dsts)
-        self_edges_cache[parent] = edges
-        return edges
-
     def propagation_base(parent: str, key_col: str) -> tuple[DataFrame, bool]:
         """Base frame increment rows are pulled from. A self-FK table is
         semi-joined once per recursion LEVEL (deep chains → many rounds),
@@ -290,8 +253,7 @@ def compute_closure(
         return catalog.tables[parent], False
 
     def driver_closure_fastpath() -> bool:
-        """Whole-closure driver-side fixed point (r15, generalizing the
-        r14 all-self-FK BFS to mixed-edge graphs): when EVERY table the
+        """Whole-closure driver-side fixed point (r15): when EVERY table the
         worklist could statically touch fits DRIVER_CLOSURE_LIMIT narrow
         rows, collect each table's (key + FK columns) projection once —
         one bounded collect per table, overlapped on driver threads — and
@@ -555,45 +517,6 @@ def compute_closure(
             contrib = parts[0]
             for extra in parts[1:]:
                 contrib = contrib.union(extra)
-            fks = catalog.outgoing(parent)
-            if fks and all(
-                fk.is_recursive and fk.foreign_table == parent for fk in fks
-            ):
-                edges = driver_self_edges(parent, p.key_col)
-                if edges is not None:
-                    # ONE driver BFS saturates the whole self-recursion:
-                    # the round loop pays a checkpoint+count job pair per
-                    # chain LEVEL (a 10-deep manager chain = ~20 tiny
-                    # jobs of pure scheduling latency), while the edge
-                    # map — already bounded by DRIVER_SELF_CLOSURE_LIMIT
-                    # — answers every level at dict speed. All edges are
-                    # self-edges, so nothing propagates to other tables
-                    # and the table's pending work ends here.
-                    total = {r[0] for r in contrib.distinct().collect()}
-                    frontier = set(total)
-                    while frontier:
-                        nxt = set()
-                        for kv in frontier:
-                            for dst in edges.get(kv, ()):
-                                if dst not in total:
-                                    total.add(dst)
-                                    nxt.add(dst)
-                        frontier = nxt
-                    if not total:
-                        return parent, None
-                    from pyspark.sql import types as T
-
-                    schema = T.StructType(
-                        [catalog.tables[parent].schema[p.key_col]]
-                    )
-                    reach = catalog.tables[parent].sparkSession.createDataFrame(
-                        [(v,) for v in sorted(total)], schema
-                    )
-                    new = p.subtract_seen(reach).localCheckpoint(eager=True)
-                    n_new = new.count()
-                    if n_new:
-                        p.add_keys(new, n_new)
-                    return parent, None
             contrib = contrib.distinct()   # multi-path dedup in one shot
             contrib = p.subtract_seen(contrib)
             new = contrib.localCheckpoint(eager=True)
