@@ -858,10 +858,12 @@ def test_cli_maintain_vector_store_absent(spark, tmp_path, capsys):
                 "--action", "compact"])["files_before"] == 0
 
     # meta-only shell (first increment crashed pre-commit): retrain says so
+    from xdump_spark import fsutil
+
     store = VectorStore(spark, p)
-    spark.createDataFrame(
-        [('{"centers": [[1.0, 0.0]], "n_cells": 1}',)], "meta string"
-    ).coalesce(1).write.mode("overwrite").json(p + "/meta")
+    fsutil.write_text_atomic(
+        spark, p + "/meta.json", '{"centers": [[1.0, 0.0]], "n_cells": 1}'
+    )
     with _pytest.raises(ValueError, match="no vectors"):
         store.retrain(4)
 

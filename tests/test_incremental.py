@@ -1007,35 +1007,31 @@ def test_vector_store_retrain_crash_window_keeps_old_generation(
     assert store._meta()["generation"] == 1
 
 
-def test_vector_store_legacy_meta_dir_read_and_migrated(spark, tmp_path):
-    """Stores written before r9 carry a Spark-JSON ``meta/`` DIR; reads
-    must accept it and the next meta write must migrate to the file."""
+def test_vector_store_meta_dir_only_raises(spark, tmp_path):
+    """A store directory holding a Spark-JSON ``meta/`` dir but no
+    ``meta.json`` (the store format before the single-file meta) raises
+    with rebuild guidance: read as "no store", the next increment would
+    silently re-fit a fresh store over the old cells."""
     import json
-    import shutil
 
-    store = _fresh_semantic_store(spark, tmp_path / "vs")
-    # convert to the legacy layout the old writer produced
-    meta = store._meta()
-    spark.createDataFrame(
-        [(json.dumps(meta),)], "meta string"
-    ).coalesce(1).write.json(str(tmp_path / "vs" / "meta"))
-    (tmp_path / "vs" / "meta.json").unlink()
-    assert store.exists() and store._meta() == meta
-
-    # increments read the legacy meta fine
     from xdump_spark.operators.incremental import incremental_semantic_dedup
 
+    store = _fresh_semantic_store(spark, tmp_path / "vs")
+    meta = (tmp_path / "vs" / "meta.json").read_text()
+    (tmp_path / "vs" / "meta").mkdir()
+    (tmp_path / "vs" / "meta" / "part-00000.json").write_text(
+        json.dumps({"meta": meta}) + "\n"
+    )
+    (tmp_path / "vs" / "meta.json").unlink()
+
+    with pytest.raises(ValueError, match="rebuild the store"):
+        store.exists()
     probe = spark.createDataFrame(
         [(100, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    r = incremental_semantic_dedup(probe, store, threshold=0.98, n_cells=2)
-    assert r.accepted.count() == 0
-
-    # the next meta write migrates: file appears, legacy dir swept
-    store.retrain(n_cells=2)
-    assert (tmp_path / "vs" / "meta.json").is_file()
-    assert not (tmp_path / "vs" / "meta").exists()
-    assert store._meta()["generation"] == 1
+    with pytest.raises(ValueError, match="rebuild the store"):
+        incremental_semantic_dedup(probe, store, threshold=0.98, n_cells=2)
+    assert not (tmp_path / "vs" / "meta.json").exists()
 
 
 def test_incremental_semantic_count_store_flag(spark, tmp_path):

@@ -1181,39 +1181,32 @@ def test_datacard_mixed_script_fixture(spark):
     assert sum(e["n_docs"] for e in und) <= 1  # only the digits doc
 
 
-def test_ivf_write_legacy_meta_dir_still_reads(spark, tmp_path):
-    """r9 atomic-meta migration: indexes written by older rounds carry
-    a Spark-JSON meta DIR; ivf_read accepts both and a rewrite sweeps
-    the legacy dir for the file form."""
+def test_ivf_and_ivfpq_meta_dir_only_raises(spark, tmp_path):
+    """An index directory holding a Spark-JSON ``meta/`` dir but no
+    ``meta.json`` (the index format before the single-file meta) is
+    refused with rebuild guidance by ivf_read, ivf_append and
+    ivfpq_read."""
     import json
 
+    from xdump_spark.operators.pq import ivfpq_build, ivfpq_read, ivfpq_write
+
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    idx = S.ivf_build(emb, n_cells=4, persist=False)
-    path = str(tmp_path / "ivf")
-    S.ivf_write(idx, path)
-    assert (tmp_path / "ivf" / "meta.json").is_file()
-
-    # forge the legacy layout
-    meta = json.loads((tmp_path / "ivf" / "meta.json").read_text())
-    spark.createDataFrame(
-        [(json.dumps(meta),)], "meta string"
-    ).coalesce(1).write.json(path + "/meta")
-    (tmp_path / "ivf" / "meta.json").unlink()
-    loaded = S.ivf_read(spark, path)
-    assert loaded.n_cells == 4 and len(loaded.centers) == 4
-
-    # append works off the legacy meta; rewrite migrates it (pin the
-    # assignment first — an in-place overwrite cannot read lazily from
-    # the files it is deleting)
-    S.ivf_append(spark, path, emb.limit(5))
-    pinned = S.IVFIndex(
-        centers=loaded.centers,
-        assigned=loaded.assigned.localCheckpoint(eager=True),
-        n_cells=loaded.n_cells,
-    )
-    S.ivf_write(pinned, path)
-    assert (tmp_path / "ivf" / "meta.json").is_file()
-    assert not (tmp_path / "ivf" / "meta").exists()
+    for name, build, write, read in [
+        ("ivf", S.ivf_build, S.ivf_write, S.ivf_read),
+        ("ivfpq", ivfpq_build, ivfpq_write, ivfpq_read),
+    ]:
+        path = tmp_path / name
+        write(build(emb, n_cells=4, persist=False), str(path))
+        meta = (path / "meta.json").read_text()
+        (path / "meta").mkdir()
+        (path / "meta" / "part-00000.json").write_text(
+            json.dumps({"meta": meta}) + "\n"
+        )
+        (path / "meta.json").unlink()
+        with pytest.raises(ValueError, match=f"rebuild it with {name}_write"):
+            read(spark, str(path))
+    with pytest.raises(ValueError, match="rebuild it with ivf_write"):
+        S.ivf_append(spark, str(tmp_path / "ivf"), emb.limit(5))
 
 
 def test_lang_markers_disjoint_and_lowercase():

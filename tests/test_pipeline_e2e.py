@@ -1587,7 +1587,7 @@ def test_streaming_rag_ingest_one_daemon_chain(spark, tmp_path):
         spark, _fsutil.join(out, _CORPUS_META)
     )
     assert _corpus_layout(spark, out) == {
-        "kind": "bucketed", "n_buckets": 64,
+        "kind": "bucketed", "n_buckets": 64, "bucket_by": "doc_id",
     }
     assert all(
         "/_bucket=" in f for f, _ in _fsutil.list_data_files(spark, out)
@@ -1985,17 +1985,22 @@ def test_forget_rag_corpus_bucket_pruning(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2 * per_doc
 
 
-def test_forget_rag_corpus_bucketed_without_sidecar(spark, tmp_path):
-    """ADVICE r13 low: a bucketed corpus whose ``_corpus_meta.json``
-    sidecar is lost degrades to a full read — but it must get the flat
-    path's COUNT-FIRST probe, so a typo'd no-match forget touches
-    nothing instead of full-rewriting the corpus; a real match still
-    rewrites with each surviving row keeping its RECORDED bucket (the
-    partition column read back via basePath)."""
+def test_unmarked_rag_corpus_raises_and_compact_recovers(spark, tmp_path):
+    """A survivor corpus with data files but no ``_corpus_meta.json``
+    sidecar — bucket dirs whose sidecar was deleted, or root-level
+    flat files — has an unknown layout: forget_rag_docs,
+    prepare_rag_corpus and a plain compact refuse it without touching
+    any artifact, and name the recovery. compact_rag_corpus(n_buckets=N)
+    rewrites it into N doc-hash buckets with a fresh sidecar, after
+    which forget prunes to the doomed doc's bucket."""
+    from pyspark.sql import functions as F
+
     from xdump_spark import fsutil
     from xdump_spark.operators.incremental import VectorStore
     from xdump_spark.pipeline import (
         _CORPUS_META,
+        _corpus_layout,
+        compact_rag_corpus,
         forget_rag_docs,
         prepare_rag_corpus,
     )
@@ -2003,59 +2008,101 @@ def test_forget_rag_corpus_bucketed_without_sidecar(spark, tmp_path):
     store = VectorStore(spark, str(tmp_path / "vs"))
     idx_dir = str(tmp_path / "tidx")
     out = str(tmp_path / "chunks")
+    flat = str(tmp_path / "flat")
 
     def body(tag):
         return " ".join(f"{tag}{i} {tag}x{i} {tag}y{i}" for i in range(40))
 
-    docs = [(i, body(f"v{i}q")) for i in range(1, 5)]
+    kw = dict(max_tokens=32, overlap=8, hash_embed_dim=64,
+              threshold=0.9, n_cells=2)
     r = prepare_rag_corpus(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        store, idx_dir, out_dir=out, max_tokens=32, overlap=8,
-        hash_embed_dim=64, threshold=0.9, n_cells=2, corpus_buckets=8,
+        spark.createDataFrame(
+            [(i, body(f"v{i}q")) for i in range(1, 5)],
+            "doc_id long, text string",
+        ),
+        store, idx_dir, out_dir=out, corpus_buckets=8, **kw,
     )
     per_doc = r.audit["accepted_chunks"] // 4
+    cols = ["chunk_id", "doc_id", "text"]
+    rows_before = sorted(
+        tuple(row) for row in spark.read.parquet(out).select(*cols).collect()
+    )
+    spark.read.parquet(out).drop("_bucket").write.parquet(flat)
     fsutil.delete(spark, fsutil.join(out, _CORPUS_META), recursive=False)
-    bucket_by_chunk = {
-        row.chunk_id: row._bucket
-        for row in spark.read.parquet(out)
-        .select("chunk_id", "_bucket").collect()
-    }
+    new_doc = spark.createDataFrame(
+        [(9, body("newdoc"))], "doc_id long, text string"
+    )
 
-    # no-match forget: the count-first probe fires and NOTHING is
-    # rewritten — every file byte-identical by (path, size) listing
-    before = set(fsutil.list_data_files(spark, out))
-    rpt = forget_rag_docs(spark, store, idx_dir, [999], corpus_dir=out)
-    assert rpt["corpus_rows_deleted"] == 0
-    assert rpt["corpus"] == {
-        "rows_deleted": 0, "buckets_touched": 0, "files_rewritten": 0,
-    }
-    assert set(fsutil.list_data_files(spark, out)) == before
+    recovery = r"compact_rag_corpus\(n_buckets=N\)"
+    for corpus in (out, flat):
+        files = set(fsutil.list_data_files(spark, corpus))
+        with pytest.raises(ValueError, match=recovery):
+            forget_rag_docs(spark, store, idx_dir, [1], corpus_dir=corpus)
+        with pytest.raises(ValueError, match=recovery):
+            prepare_rag_corpus(new_doc, store, idx_dir, out_dir=corpus, **kw)
+        with pytest.raises(ValueError, match=recovery):
+            compact_rag_corpus(spark, corpus)
+        assert set(fsutil.list_data_files(spark, corpus)) == files
+        assert _corpus_layout(spark, corpus) == {"kind": "unmarked"}
 
-    # a real match rewrites (degraded: every bucket read), and each
-    # surviving row keeps the bucket it was recorded under
-    rpt2 = forget_rag_docs(spark, store, idx_dir, [1], corpus_dir=out)
-    assert rpt2["corpus_rows_deleted"] == per_doc
-    assert rpt2["corpus"]["files_rewritten"] == len(before)
-    left = spark.read.parquet(out)
-    assert left.count() == 3 * per_doc
-    assert {
-        row.chunk_id: row._bucket
-        for row in left.select("chunk_id", "_bucket").collect()
-    } == {
-        c: b
-        for c, b in bucket_by_chunk.items()
-        if not c.startswith("1:")
-    }
+        rpt = compact_rag_corpus(spark, corpus, n_buckets=8)
+        assert rpt["migration"] == {
+            "files_migrated": len(files), "n_buckets": 8,
+        }
+        assert _corpus_layout(spark, corpus) == {
+            "kind": "bucketed", "n_buckets": 8, "bucket_by": "doc_id",
+        }
+        assert sorted(
+            tuple(row)
+            for row in spark.read.parquet(corpus).select(*cols).collect()
+        ) == rows_before
+        assert spark.read.parquet(corpus).filter(
+            F.col("_bucket")
+            != F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(8))
+        ).count() == 0
+
+    # the refused calls touched nothing: the store and index still hold
+    # doc 1, and the recovered corpus prunes the forget to its bucket
+    doomed_bucket = int(
+        spark.createDataFrame([("1",)], ["d"])
+        .select(F.pmod(F.xxhash64("d"), F.lit(8)).alias("b"))
+        .collect()[0]["b"]
+    )
+    for corpus in (out, flat):
+        untouched = {
+            (f, sz)
+            for f, sz in fsutil.list_data_files(spark, corpus)
+            if f"/_bucket={doomed_bucket}/" not in f
+        }
+        assert untouched
+        frpt = forget_rag_docs(spark, store, idx_dir, [1], corpus_dir=corpus)
+        assert frpt["corpus"]["rows_deleted"] == per_doc
+        assert frpt["corpus"]["buckets_touched"] == 1
+        assert {
+            (f, sz)
+            for f, sz in fsutil.list_data_files(spark, corpus)
+            if f"/_bucket={doomed_bucket}/" not in f
+        } == untouched
+        if corpus == out:
+            assert frpt["store"]["deleted_rows"] == per_doc
+            assert frpt["index"]["deleted_docs"] == per_doc
+
+    # the refused ingest committed nothing to the store: the doc is
+    # still novel and lands in the recovered corpus's bucketed layout
+    r2 = prepare_rag_corpus(new_doc, store, idx_dir, out_dir=out, **kw)
+    assert r2.audit["accepted_chunks"] > 0
+    assert all(
+        "/_bucket=" in f for f, _ in fsutil.list_data_files(spark, out)
+    )
 
 
-def test_compact_rag_corpus_buckets_and_flat(spark, tmp_path):
+def test_compact_rag_corpus_buckets(spark, tmp_path):
     """r13: per-bucket small-file compaction for the survivor corpus.
     Every increment appends ~one file per touched bucket (a year of
     daily drops = O(days) files per bucket); compact_rag_corpus
     coalesces each bucket dir through the store family's kernel — file
     count drops, the row multiset is unchanged, and forget still
-    prunes afterwards. A flat legacy corpus compacts its root files
-    through the same append-then-delete discipline."""
+    prunes afterwards."""
     from xdump_spark import fsutil
     from xdump_spark.operators.incremental import VectorStore
     from xdump_spark.pipeline import (
@@ -2111,130 +2158,6 @@ def test_compact_rag_corpus_buckets_and_flat(spark, tmp_path):
     assert frpt["corpus_rows_deleted"] == per_doc
     assert spark.read.parquet(out).count() == len(rows_before) - per_doc
 
-    # flat legacy corpus: compaction MIGRATES it to the bucketed
-    # layout (r14 — the compact was going to read every flat file
-    # anyway; see test_compact_rag_corpus_migrates_flat_to_bucketed
-    # for the full migration contract)
-    from xdump_spark.pipeline import _corpus_layout
-
-    flat = str(tmp_path / "flat")
-    frame = spark.createDataFrame(
-        [(f"{i}:0", i, "seed text") for i in range(10)],
-        "chunk_id string, doc_id long, text string",
-    )
-    for _ in range(3):
-        frame.write.mode("append").parquet(flat)
-    n_flat_before = len(fsutil.list_data_files(spark, flat))
-    assert n_flat_before >= 3
-    frpt2 = compact_rag_corpus(spark, flat)
-    assert frpt2["migration"]["files_migrated"] == n_flat_before
-    assert frpt2["migration"]["n_buckets"] == 64
-    assert _corpus_layout(spark, flat) == {
-        "kind": "bucketed", "n_buckets": 64,
-    }
-    assert all(
-        "/_bucket=" in f for f, _ in fsutil.list_data_files(spark, flat)
-    )
-    assert spark.read.parquet(flat).count() == 30
-
-
-def test_compact_rag_corpus_migrates_flat_to_bucketed(spark, tmp_path):
-    """r13 verdict Next #1: compacting a pre-r13 FLAT survivor corpus
-    migrates it to the bucketed layout in the same bounded rewrite —
-    pre-r13 corpora permanently shed the flat forget degradation
-    (full rewrite per forget). Post-migration: the meta sidecar
-    records the count, forget prunes to the doomed docs' buckets
-    (untouched buckets byte-identical), and appends follow the new
-    layout."""
-    from pyspark.sql import functions as F
-
-    from xdump_spark import fsutil
-    from xdump_spark.operators.incremental import VectorStore
-    from xdump_spark.pipeline import (
-        _corpus_layout,
-        compact_rag_corpus,
-        forget_rag_docs,
-        prepare_rag_corpus,
-    )
-
-    store = VectorStore(spark, str(tmp_path / "vs"))
-    idx_dir = str(tmp_path / "tidx")
-    out = str(tmp_path / "chunks")
-
-    def body(tag):
-        return " ".join(f"{tag}{i} {tag}x{i} {tag}y{i}" for i in range(40))
-
-    # the pre-r13 layout: a flat file already present, then increments
-    # that keep appending flat
-    spark.createDataFrame(
-        [("0:0", 0, 0, "seed row", 2)],
-        "chunk_id string, doc_id long, chunk_idx int, text string, "
-        "n_tokens int",
-    ).write.parquet(out)
-    r = prepare_rag_corpus(
-        spark.createDataFrame(
-            [(i, body(f"v{i}q")) for i in range(1, 5)],
-            "doc_id long, text string",
-        ),
-        store, idx_dir, out_dir=out, max_tokens=32, overlap=8,
-        hash_embed_dim=64, threshold=0.9, n_cells=2,
-    )
-    per_doc = r.audit["accepted_chunks"] // 4
-    assert _corpus_layout(spark, out)["kind"] == "flat"
-    cols = ["chunk_id", "doc_id", "text"]
-    rows_before = sorted(
-        tuple(row) for row in spark.read.parquet(out).select(*cols).collect()
-    )
-
-    rpt = compact_rag_corpus(spark, out, n_buckets=8)
-    assert rpt["migration"]["n_buckets"] == 8
-    assert _corpus_layout(spark, out) == {"kind": "bucketed", "n_buckets": 8}
-    assert all(
-        "/_bucket=" in f for f, _ in fsutil.list_data_files(spark, out)
-    )
-    assert sorted(
-        tuple(row) for row in spark.read.parquet(out).select(*cols).collect()
-    ) == rows_before
-    # every row sits in its doc-hash bucket
-    assert spark.read.parquet(out).filter(
-        F.col("_bucket")
-        != F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(8))
-    ).count() == 0
-
-    # the migrated corpus prunes forgets: untouched buckets stay
-    # byte-identical by (path, size) listing
-    doomed_bucket = int(
-        spark.createDataFrame([("1",)], ["d"])
-        .select(F.pmod(F.xxhash64("d"), F.lit(8)).alias("b"))
-        .collect()[0]["b"]
-    )
-    untouched_before = {
-        (f, sz)
-        for f, sz in fsutil.list_data_files(spark, out)
-        if f"/_bucket={doomed_bucket}/" not in f
-    }
-    assert untouched_before
-    frpt = forget_rag_docs(spark, store, idx_dir, [1], corpus_dir=out)
-    assert frpt["corpus_rows_deleted"] == per_doc
-    assert frpt["corpus"]["buckets_touched"] == 1
-    assert {
-        (f, sz)
-        for f, sz in fsutil.list_data_files(spark, out)
-        if f"/_bucket={doomed_bucket}/" not in f
-    } == untouched_before
-
-    # appends now follow the bucketed layout (no new root-level files)
-    prepare_rag_corpus(
-        spark.createDataFrame(
-            [(9, body("newdoc"))], "doc_id long, text string"
-        ),
-        store, idx_dir, out_dir=out, max_tokens=32, overlap=8,
-        hash_embed_dim=64, threshold=0.9, n_cells=2,
-    )
-    assert all(
-        "/_bucket=" in f for f, _ in fsutil.list_data_files(spark, out)
-    )
-
 
 def test_compact_rag_corpus_rebucket_and_crash_recovery(spark, tmp_path):
     """r13 verdict Next #4 + the migration crash matrix: an explicit
@@ -2286,7 +2209,9 @@ def test_compact_rag_corpus_rebucket_and_crash_recovery(spark, tmp_path):
     # explicit re-bucket 8 → 2: rows preserved, every row re-hashed
     rpt = compact_rag_corpus(spark, out, n_buckets=2)
     assert rpt["migration"]["n_buckets"] == 2
-    assert _corpus_layout(spark, out) == {"kind": "bucketed", "n_buckets": 2}
+    assert _corpus_layout(spark, out) == {
+        "kind": "bucketed", "n_buckets": 2, "bucket_by": "doc_id",
+    }
     assert sorted(
         tuple(row) for row in spark.read.parquet(out).select(*cols).collect()
     ) == rows_before
@@ -2326,7 +2251,9 @@ def test_compact_rag_corpus_rebucket_and_crash_recovery(spark, tmp_path):
         "files_migrated": len(listed), "n_buckets": 4, "resumed": True,
     }
     assert not junk.exists()  # the partial rewrite was discarded
-    assert _corpus_layout(spark, out) == {"kind": "bucketed", "n_buckets": 4}
+    assert _corpus_layout(spark, out) == {
+        "kind": "bucketed", "n_buckets": 4, "bucket_by": "doc_id",
+    }
     assert sorted(
         tuple(row) for row in spark.read.parquet(out).select(*cols).collect()
     ) == rows_before
@@ -2355,60 +2282,6 @@ def test_compact_rag_corpus_rebucket_and_crash_recovery(spark, tmp_path):
     assert sorted(
         tuple(row) for row in spark.read.parquet(out).select(*cols).collect()
     ) == rows_before
-
-
-def test_forget_rag_corpus_flat_legacy_layout(spark, tmp_path):
-    """A pre-r13 FLAT survivor corpus (root-level files, no meta
-    sidecar) keeps working: appends stay flat (mixing root files with
-    partition dirs would break parquet partition discovery) and forget
-    degrades to the documented full rewrite with the same counts."""
-    from xdump_spark import fsutil
-    from xdump_spark.operators.incremental import VectorStore
-    from xdump_spark.pipeline import (
-        _CORPUS_META,
-        forget_rag_docs,
-        prepare_rag_corpus,
-    )
-
-    store = VectorStore(spark, str(tmp_path / "vs"))
-    idx_dir = str(tmp_path / "tidx")
-    out = str(tmp_path / "chunks")
-
-    def body(tag):
-        return " ".join(f"{tag}{i} {tag}x{i} {tag}y{i}" for i in range(40))
-
-    # simulate the pre-r13 layout: flat files already present
-    spark.createDataFrame(
-        [("0:0", 0, 0, "seed row", 2)],
-        "chunk_id string, doc_id long, chunk_idx int, text string, "
-        "n_tokens int",
-    ).write.parquet(out)
-
-    r = prepare_rag_corpus(
-        spark.createDataFrame(
-            [(1, body("a")), (2, body("b"))], "doc_id long, text string"
-        ),
-        store, idx_dir, out_dir=out, max_tokens=32, overlap=8,
-        hash_embed_dim=64, threshold=0.9, n_cells=2,
-    )
-    per_doc = r.audit["accepted_chunks"] // 2
-    # still flat: no bucket dirs, no meta sidecar appeared
-    assert not fsutil.exists_atomic(
-        spark, fsutil.join(out, _CORPUS_META)
-    )
-    assert all(
-        "/_bucket=" not in f
-        for f, _ in fsutil.list_data_files(spark, out)
-    )
-    assert spark.read.parquet(out).count() == 1 + 2 * per_doc
-
-    rpt = forget_rag_docs(spark, store, idx_dir, [1], corpus_dir=out)
-    assert rpt["corpus_rows_deleted"] == per_doc
-    left = spark.read.parquet(out)
-    assert left.count() == 1 + per_doc
-    assert {r_["doc_id"] for r_ in left.select("doc_id").collect()} == {
-        0, 2,
-    }
 
 
 def test_forget_chunk_id_derivation_filters_before_distinct(
@@ -2590,20 +2463,13 @@ def test_prepare_rag_corpus_content_updated_resend_reenters_index(
     assert hits and all(h.chunk_id.startswith("1:") for h in hits)
 
 
-def test_prepare_rag_corpus_legacy_int_key_crash_replay_noop(
-    spark, tmp_path
-):
-    """Pre-r13 prepare_rag_corpus keyed the index append as the
-    BARE-INT id-only xor. A crash in its index-commit→store-commit
-    window, replayed after the upgrade, recomputes a DIFFERENT
-    (content-keyed, string) id — without a migration guard the replay
-    would append the same postings twice (silent df/n_docs
-    corruption). While the manifest still carries int-typed ids, a
-    batch whose id-only xor matches a committed int must be treated as
-    already applied — with a warning — and the store commit must still
-    land (completing the crashed run)."""
-    import warnings as _warnings
-
+def test_prepare_rag_corpus_crash_replay_noop(spark, tmp_path):
+    """A crash in prepare_rag_corpus's index-commit→store-commit window
+    leaves the batch's segment committed under its
+    ``rag2:{epoch}:{content_xor}`` key and the store without it. The
+    re-run recomputes the same survivors and key: the index append
+    returns the committed entry (nothing double-counted) and the store
+    commit lands, completing the crashed run."""
     from pyspark.sql import functions as F
 
     from xdump_spark.operators.chunking import chunk_tokens
@@ -2613,16 +2479,18 @@ def test_prepare_rag_corpus_legacy_int_key_crash_replay_noop(
         load_text_index,
         save_text_index,
     )
-    from xdump_spark.pipeline import prepare_rag_corpus
+    from xdump_spark.pipeline import _survivor_batch_xor, prepare_rag_corpus
     import xdump_spark.operators.retrieval as R
 
     body = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(40))
     docs = spark.createDataFrame([(1, body)], "doc_id long, text string")
     idx_dir = str(tmp_path / "tidx")
     store = VectorStore(spark, str(tmp_path / "vs"))
+    kw = dict(max_tokens=32, overlap=8, hash_embed_dim=64,
+              threshold=0.9, n_cells=2)
 
-    # reconstruct the pre-r13 crash state: the front door's chunks,
-    # indexed under the OLD id-only bare-int key; store commit LOST
+    # the crash state: the front door's chunks indexed under their key,
+    # the store commit lost
     chunks = chunk_tokens(
         docs, max_tokens=32, overlap=8, text_col="text", id_col="doc_id"
     ).select(
@@ -2631,213 +2499,22 @@ def test_prepare_rag_corpus_legacy_int_key_crash_replay_noop(
         ).alias("chunk_id"),
         F.col("chunk_text").alias("text"),
     )
-    legacy_xor = int(
-        chunks.agg(
-            F.expr("bit_xor(xxhash64(chunk_id))").alias("b")
-        ).collect()[0]["b"]
-    )
+    key = f"rag2:0:{_survivor_batch_xor(chunks)}"
     save_text_index(
-        build_text_index(chunks, id_col="chunk_id"), idx_dir,
-        batch_id=legacy_xor,
+        build_text_index(chunks, id_col="chunk_id"), idx_dir, batch_id=key
     )
     n0 = load_text_index(spark, idx_dir).n_docs
 
-    # the redelivery, under r13 code: every chunk is novel to the
-    # (empty) store, so the batch reaches the index append with the
-    # SAME chunk-id set the pre-r13 run committed
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        r = prepare_rag_corpus(
-            docs, store, idx_dir, max_tokens=32, overlap=8,
-            hash_embed_dim=64, threshold=0.9, n_cells=2,
-        )
+    r = prepare_rag_corpus(docs, store, idx_dir, **kw)
     assert r.audit["accepted_chunks"] == n0  # store commit landed
-    assert r.index_entry is not None
-    assert r.index_entry.get("batch_id") == legacy_xor  # the OLD entry
+    assert r.index_entry["batch_id"] == key  # the committed entry
     assert load_text_index(spark, idx_dir).n_docs == n0  # NOT doubled
     assert len(R._read_manifest(spark, idx_dir)["segments"]) == 1
-    assert any("pre-r13" in str(w.message) for w in caught)
 
-    # and the completed state is healthy: a full re-send now dedups to
-    # zero survivors and never reaches the append
-    r2 = prepare_rag_corpus(
-        docs, store, idx_dir, max_tokens=32, overlap=8,
-        hash_embed_dim=64, threshold=0.9, n_cells=2,
-    )
+    # the completed state is healthy: a re-send dedups to zero
+    # survivors and never reaches the append
+    r2 = prepare_rag_corpus(docs, store, idx_dir, **kw)
     assert r2.audit["accepted_chunks"] == 0 and r2.index_entry is None
-
-
-def _rag_crash_chunks(spark, docs):
-    """The front door's survivor chunk frame (chunk_id, text) for
-    reconstructing pre-r14 crash states: chunked exactly as
-    prepare_rag_corpus chunks, nothing stored."""
-    from pyspark.sql import functions as F
-
-    from xdump_spark.operators.chunking import chunk_tokens
-
-    return chunk_tokens(
-        docs, max_tokens=32, overlap=8, text_col="text", id_col="doc_id"
-    ).select(
-        F.concat_ws(
-            ":", F.col("doc_id").cast("string"), F.col("chunk_idx")
-        ).alias("chunk_id"),
-        F.col("chunk_text").alias("text"),
-    )
-
-
-def test_prepare_rag_corpus_r13_content_key_crash_replay_noop(
-    spark, tmp_path
-):
-    """r14 keys the index append as ``rag2:{epoch}:{content_xor}``;
-    r13 keyed the SAME content xor under the un-versioned ``rag:``
-    prefix. A crash in an r13 run's index-commit→store-commit window,
-    replayed after the upgrade, must hit the r13-era probe (an exact
-    content match — no ambiguity, no warning) instead of
-    double-applying the append under the new prefix."""
-    import warnings as _warnings
-
-    from pyspark.sql import functions as F
-
-    from xdump_spark.operators.incremental import VectorStore
-    from xdump_spark.operators.retrieval import (
-        build_text_index,
-        load_text_index,
-        save_text_index,
-    )
-    from xdump_spark.pipeline import prepare_rag_corpus
-    import xdump_spark.operators.retrieval as R
-
-    body = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(40))
-    docs = spark.createDataFrame([(1, body)], "doc_id long, text string")
-    idx_dir = str(tmp_path / "tidx")
-    store = VectorStore(spark, str(tmp_path / "vs"))
-
-    chunks = _rag_crash_chunks(spark, docs)
-    # the r13 content formula (no coalesce — bit-identical for
-    # non-null text, which is all the chunker emits)
-    content_xor = int(
-        chunks.agg(
-            F.expr(
-                "bit_xor(xxhash64(concat(chunk_id, ':', "
-                "cast(xxhash64(text) as string))))"
-            ).alias("b")
-        ).collect()[0]["b"]
-    )
-    save_text_index(
-        build_text_index(chunks, id_col="chunk_id"), idx_dir,
-        batch_id=f"rag:0:{content_xor}",
-    )
-    n0 = load_text_index(spark, idx_dir).n_docs
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        r = prepare_rag_corpus(
-            docs, store, idx_dir, max_tokens=32, overlap=8,
-            hash_embed_dim=64, threshold=0.9, n_cells=2,
-        )
-    assert r.audit["accepted_chunks"] == n0  # store commit landed
-    assert r.index_entry is not None
-    assert r.index_entry.get("batch_id") == f"rag:0:{content_xor}"
-    assert load_text_index(spark, idx_dir).n_docs == n0  # NOT doubled
-    assert len(R._read_manifest(spark, idx_dir)["segments"]) == 1
-    # an exact content match is not ambiguous — no conservative warning
-    assert not any("prepare_rag_corpus" in str(w.message) for w in caught)
-
-
-def test_prepare_rag_corpus_r12_era_string_key_crash_replay_noop(
-    spark, tmp_path
-):
-    """r13 verdict "What's missing #2": an r12-era
-    ``rag:{epoch}:{id_xor}`` key — an index that underwent retention
-    BEFORE the content-key upgrade and crashed in the narrow
-    append→store-commit window — was format-indistinguishable from an
-    r13 key and its replay double-applied. With the r14 versioned
-    prefix, the replay hits the conservative r12-era probe (warn +
-    treat as applied) while the manifest still carries un-versioned
-    ``rag:`` keys; compaction tombstones them, after which a
-    content-updated re-send LANDS instead of being skipped."""
-    import warnings as _warnings
-
-    from pyspark.sql import functions as F
-
-    from xdump_spark.operators.incremental import VectorStore
-    from xdump_spark.operators.retrieval import (
-        build_text_index,
-        compact_text_index,
-        load_text_index,
-        save_text_index,
-    )
-    from xdump_spark.pipeline import prepare_rag_corpus
-    import xdump_spark.operators.retrieval as R
-
-    body = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(40))
-    fixed = " ".join(f"sigma{i} tau{i} upsilon{i}" for i in range(40))
-    docs = spark.createDataFrame([(1, body)], "doc_id long, text string")
-    idx_dir = str(tmp_path / "tidx")
-    store = VectorStore(spark, str(tmp_path / "vs"))
-
-    chunks = _rag_crash_chunks(spark, docs)
-    legacy_xor = int(
-        chunks.agg(
-            F.expr("bit_xor(xxhash64(chunk_id))").alias("b")
-        ).collect()[0]["b"]
-    )
-    # reconstruct the r12-era crash state: post-retention epoch 1,
-    # the batch committed under the id-only xor, store commit LOST
-    save_text_index(
-        build_text_index(chunks, id_col="chunk_id"), idx_dir,
-        batch_id=f"rag:1:{legacy_xor}",
-    )
-    man = R._read_manifest(spark, idx_dir)
-    man["retention_epoch"] = 1
-    R._write_manifest(spark, idx_dir, man)
-    n0 = load_text_index(spark, idx_dir).n_docs
-
-    def ingest(text):
-        return prepare_rag_corpus(
-            spark.createDataFrame([(1, text)], "doc_id long, text string"),
-            store, idx_dir, max_tokens=32, overlap=8,
-            hash_embed_dim=64, threshold=0.9, n_cells=2,
-        )
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        r = ingest(body)
-    assert r.audit["accepted_chunks"] == n0  # store commit landed
-    assert r.index_entry.get("batch_id") == f"rag:1:{legacy_xor}"
-    assert load_text_index(spark, idx_dir).n_docs == n0  # NOT doubled
-    assert any("id-only key rag:1:" in str(w.message) for w in caught)
-
-    # a content-updated re-send still collides on its id set while the
-    # un-versioned key is carried — the documented conservative skip...
-    with _warnings.catch_warnings(record=True) as caught2:
-        _warnings.simplefilter("always")
-        r2 = ingest(fixed)
-    assert r2.audit["accepted_chunks"] == n0  # store accepted new text
-    assert r2.index_entry.get("batch_id") == f"rag:1:{legacy_xor}"
-    assert load_text_index(spark, idx_dir).n_docs == n0  # skipped
-    assert any("id-only key rag:1:" in str(w.message) for w in caught2)
-
-    # ...compaction tombstones the old key, closing the skip window
-    # for future batches...
-    compact_text_index(spark, idx_dir)
-    man2 = R._read_manifest(spark, idx_dir)
-    carried = list(man2["segments"][0].get("batch_ids", ()))
-    assert carried == [f"legacy:rag:1:{legacy_xor}"]
-    assert not R._has_old_rag_keys(man2)
-
-    # ...and the warning's prescribed recovery works: the store commit
-    # landed in r2 (a plain re-send would dedup to zero survivors), so
-    # recovery is forget_rag_docs + re-send — the forget clears all
-    # three artifacts and its epoch bump re-keys the batch
-    from xdump_spark.pipeline import forget_rag_docs
-
-    forget_rag_docs(spark, store, idx_dir, [1])
-    r3 = ingest(fixed)
-    assert r3.audit["accepted_chunks"] == n0
-    assert r3.index_entry is not None
-    assert str(r3.index_entry["batch_id"]).startswith("rag2:")
-    assert load_text_index(spark, idx_dir).n_docs == n0
 
 
 def _rag_chain_state(spark, store, idx_dir, out):
@@ -2954,10 +2631,9 @@ def test_prepare_rag_corpus_replace_crash_at_forget_ingest_seam(
 
 
 def test_prepare_rag_corpus_rag2_keys_survive_compaction(spark, tmp_path):
-    """New index appends key as ``rag2:{epoch}:{content_xor}``, and a
-    maintenance rekey must carry them VERBATIM (only bare-int and
-    un-versioned ``rag:`` generations are tombstoned) — a crash replay
-    after a compaction still no-ops against the carried key."""
+    """New index appends key as ``rag2:{epoch}:{content_xor}``, and
+    compaction must carry them VERBATIM — a crash replay after a
+    compaction still no-ops against the carried key."""
     from xdump_spark.operators.incremental import VectorStore
     from xdump_spark.operators.retrieval import compact_text_index
     from xdump_spark.pipeline import prepare_rag_corpus
@@ -2983,19 +2659,15 @@ def test_survivor_batch_xors_null_text_row_visible(spark):
     row — without the coalesce, concat yields NULL for that row and
     bit_xor silently skips it, so two batches differing only in a
     null-text chunk would collide on the same idempotence key."""
-    from xdump_spark.pipeline import _survivor_batch_xors
+    from xdump_spark.pipeline import _survivor_batch_xor
 
     schema = "chunk_id string, text string"
     base = spark.createDataFrame([("1:0", "hello world")], schema)
     with_null = spark.createDataFrame(
         [("1:0", "hello world"), ("1:1", None)], schema
     )
-    xor_base, _ = _survivor_batch_xors(base)
-    xor_null, legacy_null = _survivor_batch_xors(with_null)
-    assert xor_null != xor_base  # the null-text row contributes
-    # and the id-only legacy xor sees it too (ids are never null)
-    _, legacy_base = _survivor_batch_xors(base)
-    assert legacy_null != legacy_base
+    # the null-text row contributes
+    assert _survivor_batch_xor(with_null) != _survivor_batch_xor(base)
 
 
 def test_prepare_rag_corpus_composite_chunk_identity(spark, tmp_path):

@@ -205,6 +205,17 @@ def test_index_save_load_unknown_version_and_missing_manifest(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="version"):
         load_text_index(spark, str(tmp_path / "i2"))
+    # a v2 manifest (the pre-string-key format) is refused with rebuild
+    # guidance, not read
+    import json
+
+    p3 = str(tmp_path / "i3")
+    save_text_index(idx, p3, n_tbuckets=2)
+    mf = fsutil.join(p3, "index.json")
+    man = json.loads(fsutil.read_text_atomic(spark, mf))
+    fsutil.write_text_atomic(spark, mf, json.dumps({**man, "version": 2}))
+    with pytest.raises(ValueError, match="rebuild with save_text_index"):
+        load_text_index(spark, p3)
     # a half-written index (no manifest yet) is not loadable
     with pytest.raises(Exception):
         load_text_index(spark, str(tmp_path / "never_written"))
@@ -442,38 +453,6 @@ def test_save_refuses_in_place_rebuild(spark, docs_df, tmp_path):
         save_text_index(idx, path, n_tbuckets=4)
 
 
-def test_pre_r12_manifest_backfilled_before_delete_everything(
-    spark, docs_df, tmp_path
-):
-    """A pre-r12 manifest lacks postings_schema; a delete of every
-    postings-bearing doc on such an index would commit an all-empty
-    manifest that load_text_index refuses — AFTER destroying the data
-    to rebuild from. The manifest-rewriting paths backfill the key, so
-    the doomsday delete stays loadable."""
-    import json
-
-    from xdump_spark import fsutil
-    from xdump_spark.operators.retrieval import (
-        _INDEX_MANIFEST,
-        delete_text_index_docs,
-        load_text_index,
-        save_text_index,
-    )
-
-    path = str(tmp_path / "idx")
-    save_text_index(build_text_index(docs_df), path, n_tbuckets=4)
-    # simulate the pre-r12 layout
-    mf = fsutil.join(path, _INDEX_MANIFEST)
-    man = json.loads(fsutil.read_text_atomic(spark, mf))
-    del man["postings_schema"]
-    fsutil.write_text_atomic(spark, mf, json.dumps(man))
-
-    rpt = delete_text_index_docs(spark, path, [1, 2, 3, 4, 6])
-    assert rpt["deleted_docs"] == 5
-    loaded = load_text_index(spark, path)  # must not raise
-    assert loaded.n_docs == 1 and loaded.postings.count() == 0
-
-
 def test_mmr_duplicate_ids_with_different_vectors_deterministic(spark):
     """Same-id candidate rows with DIFFERENT vectors (a chunk re-sent
     with changed content under its original id) must select the same
@@ -636,110 +615,6 @@ def test_streaming_index_ingest_two_drops(spark, docs_df, tmp_path):
     assert man_batch.get("batch_id") == keys[0] or keys[0] in man_batch.get(
         "batch_ids", ()
     )
-
-
-def test_streaming_index_legacy_int_key_migration_window(
-    spark, docs_df, tmp_path
-):
-    """Manifests written before the (writer, epoch) keys hold BARE-INT
-    epochs. A redelivery straddling the upgrade (same checkpoint, crash
-    after the old code's manifest commit) must match the legacy key and
-    NO-OP — double-applying would corrupt df/n_docs, which is strictly
-    worse than the conservative skip. Pinned: a drop whose epoch
-    collides with a committed legacy int is skipped; a later epoch
-    (no legacy collision) appends normally with the new key shape."""
-    from xdump_spark.operators.retrieval import (
-        append_text_index,
-        load_text_index,
-        save_text_index,
-        streaming_index_ingest,
-    )
-    import xdump_spark.operators.retrieval as R
-
-    inp = tmp_path / "drops"
-    inp.mkdir()
-    idx_path = str(tmp_path / "idx")
-    # simulate a pre-upgrade index: segment committed under bare epoch 0
-    save_text_index(
-        build_text_index(docs_df.filter("doc_id <= 3")), idx_path,
-        n_tbuckets=4, batch_id=0,
-    )
-    n0 = load_text_index(spark, idx_path).n_docs
-
-    # the upgraded daemon redelivers epoch 0 (same drop content):
-    # legacy match → no-op, nothing double-applied — and the skip says
-    # so out loud (ADVICE r12 low: silent drops are unrecoverable; the
-    # warning names the batch so an operator can re-drop it if this
-    # was a genuinely new checkpoint)
-    import warnings as _warnings
-
-    docs_df.filter("doc_id <= 3").write.parquet(str(inp / "day1"))
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        q = streaming_index_ingest(spark, str(inp) + "/*", idx_path,
-                                   str(tmp_path / "ckpt"))
-        q.awaitTermination()
-    assert load_text_index(spark, idx_path).n_docs == n0
-    assert any("SKIPPED" in str(w.message) for w in caught)
-
-    # epoch 1 carries genuinely new docs: no legacy collision, appends
-    # under the new (writer, epoch) key
-    docs_df.filter("doc_id > 3").write.parquet(str(inp / "day2"))
-    q = streaming_index_ingest(spark, str(inp) + "/*", idx_path,
-                               str(tmp_path / "ckpt"))
-    q.awaitTermination()
-    assert load_text_index(spark, idx_path).n_docs == docs_df.count()
-    keys = [e["batch_id"] for e in
-            R._read_manifest(spark, idx_path)["segments"]]
-    assert 0 in keys and any(
-        isinstance(k, str) and k.endswith(":1") for k in keys
-    )
-
-
-def test_compact_rekeys_legacy_int_ids_closing_skip_window(
-    spark, docs_df, tmp_path
-):
-    """r12 verdict "What's missing #3": compact_text_index translates
-    carried bare-int batch ids into ``legacy:<int>`` tombstones while
-    it rewrites the manifest, so the post-compact manifest carries no
-    int-typed ids and a RECREATED checkpoint's epoch-0 batch — which
-    pre-compact would collide with the committed legacy int and be
-    conservatively skipped — now LANDS. (Safe because maintenance runs
-    from the ingest's scheduler lane: no pre-upgrade redelivery can be
-    in flight when compact runs.)"""
-    from xdump_spark.operators.retrieval import (
-        compact_text_index,
-        load_text_index,
-        save_text_index,
-        streaming_index_ingest,
-    )
-    import xdump_spark.operators.retrieval as R
-
-    idx_path = str(tmp_path / "idx")
-    # pre-upgrade index: segment committed under a bare-int epoch key
-    save_text_index(
-        build_text_index(docs_df.filter("doc_id <= 3")), idx_path,
-        n_tbuckets=4, batch_id=0,
-    )
-
-    compact_text_index(spark, idx_path)
-    man = R._read_manifest(spark, idx_path)
-    carried = [e["batch_id"] for e in man["segments"] if "batch_id" in e]
-    for e in man["segments"]:
-        carried.extend(e.get("batch_ids", ()))
-    assert carried and all(isinstance(b, str) for b in carried)
-    assert "legacy:0" in carried
-
-    # fresh checkpoint, epoch restarts at 0 — pre-compact this batch
-    # was the documented conservative skip; post-compact it must land
-    inp = tmp_path / "drops"
-    inp.mkdir()
-    docs_df.filter("doc_id > 3").write.parquet(str(inp / "day1"))
-    q = streaming_index_ingest(
-        spark, str(inp) + "/*", idx_path, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    assert load_text_index(spark, idx_path).n_docs == docs_df.count()
 
 
 def test_streaming_index_recreated_checkpoint_appends_new_data(

@@ -1,12 +1,11 @@
-"""Measure the r13 bucketed-corpus forget against the flat-layout
-rewrite it replaced (r12 verdict What's-wrong #1).
+"""Measure the bucketed survivor-corpus forget (r12 verdict What's-wrong
+#1).
 
-Builds the SAME synthetic survivor-chunk corpus twice — once flat
-(pre-r13 layout), once under the ``_bucket = pmod(xxhash64(doc_id), N)``
-partition layout — then forgets ONE document from each and reports
-wall time, files read, and files rewritten. The claim under test: the
-bucketed forget's cost tracks the doomed bucket (~corpus/N), the flat
-forget's tracks the corpus; untouched buckets are never opened.
+Builds a synthetic survivor-chunk corpus under the
+``_bucket = pmod(xxhash64(doc_id), N)`` partition layout, forgets ONE
+document from it, and reports wall time, files rewritten and files left
+untouched. The claim under test: the forget's cost tracks the doomed
+bucket (~corpus/N), not the corpus; untouched buckets are never opened.
 
 Run:  python tools/corpus_forget_probe.py [--rows 500000] [--docs 5000]
       [--buckets 64]
@@ -44,7 +43,6 @@ def main() -> None:
 
     spark = get_spark("corpus_forget_probe")
     tmp = tempfile.mkdtemp(prefix="forget_probe_")
-    flat_dir = f"{tmp}/flat"
     buck_dir = f"{tmp}/bucketed"
 
     # synthetic survivor chunks: rows/docs chunks per doc, ~200B text
@@ -65,26 +63,18 @@ def main() -> None:
             F.lit(40).alias("n_tokens"),
         )
     )
-    chunks.write.parquet(flat_dir)  # pre-r13 layout: plain parquet
-    _write_survivor_corpus(
-        spark.read.parquet(flat_dir), buck_dir, "doc_id", args.buckets
-    )
+    _write_survivor_corpus(chunks, buck_dir, "doc_id", args.buckets)
 
     report: dict = {
         "rows": args.rows,
         "docs": args.docs,
         "buckets": args.buckets,
-        "corpus_files_flat": len(fsutil.list_data_files(spark, flat_dir)),
-        "corpus_files_bucketed": len(
-            fsutil.list_data_files(spark, buck_dir)
-        ),
+        "corpus_files": len(fsutil.list_data_files(spark, buck_dir)),
     }
 
     try:
-        # warm codegen / FS caches so the FIRST timed forget does not
-        # carry one-time JVM costs (a fixed measurement order would
-        # otherwise systematically favor whichever layout runs second)
-        spark.read.parquet(flat_dir).count()
+        # warm codegen / FS caches so the timed forget does not carry
+        # one-time JVM costs
         spark.read.parquet(buck_dir).count()
 
         doomed = _delete_side(
@@ -92,26 +82,22 @@ def main() -> None:
                 F.col("doc_id").cast("string").alias("_doc")
             )
         )
-        for name, d in (("flat", flat_dir), ("bucketed", buck_dir)):
-            before = set(fsutil.list_data_files(spark, d))
-            t0 = time.time()
-            n = _forget_corpus_rows(spark, d, doomed, "doc_id")[
-                "rows_deleted"
-            ]
-            dt = time.time() - t0
-            after = set(fsutil.list_data_files(spark, d))
-            report[name] = {
-                "deleted_rows": n,
-                "sec": round(dt, 2),
-                "files_replaced": len(before - after),
-                "files_untouched": len(before & after),
-            }
-        assert report["flat"]["deleted_rows"] == per_doc
+        before = set(fsutil.list_data_files(spark, buck_dir))
+        t0 = time.time()
+        n = _forget_corpus_rows(spark, buck_dir, doomed, "doc_id")[
+            "rows_deleted"
+        ]
+        dt = time.time() - t0
+        after = set(fsutil.list_data_files(spark, buck_dir))
+        report["bucketed"] = {
+            "deleted_rows": n,
+            "sec": round(dt, 2),
+            "files_replaced": len(before - after),
+            "files_untouched": len(before & after),
+        }
         assert report["bucketed"]["deleted_rows"] == per_doc
-        # the pruning claim, as data: the bucketed forget left most of
-        # the corpus files byte-identical; the flat one replaced every
-        # file
-        assert report["flat"]["files_untouched"] == 0
+        # the pruning claim, as data: the forget left most of the
+        # corpus files byte-identical
         assert report["bucketed"]["files_untouched"] > 0
         print(json.dumps(report))
     finally:

@@ -793,11 +793,9 @@ def build_parser() -> argparse.ArgumentParser:
         choices=["stats", "compact", "retrain", "balance", "delete"],
         default="stats",
         help="stats = sizing/trigger inputs (no rewrite); compact = "
-             "rewrite append piles into sized files (text-index: also "
-             "rekeys pre-upgrade bare-int streaming batch ids to "
-             "legacy tombstones, closing the recreated-checkpoint "
-             "skip window — the in-place alternative to the "
-             "fresh-directory rebuild migration); retrain (vector) = "
+             "rewrite append piles into sized files (text-index: "
+             "merges every committed segment into one); retrain "
+             "(vector) = "
              "re-fit centroids + re-bucket history; balance (vector) = "
              "cell-occupancy drift check (retrain_recommended); delete "
              "= retention/right-to-be-forgotten removal (signature/"
@@ -817,11 +815,12 @@ def build_parser() -> argparse.ArgumentParser:
                          "parquet directory (optional third artifact)")
     mt.add_argument("--corpus-buckets", type=int, default=None,
                     help="rag compact: re-bucket the survivor corpus to "
-                         "this doc-hash bucket count (also the target "
-                         "for a flat legacy corpus' automatic "
-                         "migration, default 64; size as corpus_bytes / "
-                         "target-rewrite-bytes — each forget rewrites "
-                         "the doomed docs' whole buckets)")
+                         "this doc-hash bucket count (required to "
+                         "recover a corpus that lost its "
+                         "_corpus_meta.json sidecar; size as "
+                         "corpus_bytes / target-rewrite-bytes — each "
+                         "forget rewrites the doomed docs' whole "
+                         "buckets)")
     mt.add_argument("--id-col", default="doc_id",
                     help="rag compact: the survivor corpus' parent-doc "
                          "id column, the bucket-by key for a layout "
@@ -1756,7 +1755,7 @@ def run(args, spark) -> int:
                     }
             elif args.action == "compact":
                 # one-command maintenance for the chain: store cells,
-                # index segments (also rekeys legacy batch ids), and
+                # index segments, and
                 # the survivor corpus's per-bucket small files
                 from xdump_spark import fsutil
                 from xdump_spark.operators.retrieval import (

@@ -15,12 +15,19 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
+
 
 def overlap(*thunks):
     """Run independent builder thunks on driver threads; return results
-    in thunk order. Exceptions propagate from the failing thunk."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    in thunk order. Exceptions propagate from the failing thunk. Each
+    thunk runs with the caller's local properties (job group, job
+    description, scheduler pool) and session tags, so its Spark jobs
+    are attributed to — and cancelled with — the caller's."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futures]

@@ -1419,10 +1419,9 @@ class VectorStore:
     # FILE written via fsutil.write_text_atomic (tmp+rename — the BM25
     # segment-manifest discipline, retrieval.py), never a Spark
     # mode("overwrite") dir write (delete-then-write: a crash in the
-    # window leaves NO meta). Stores written by older rounds used a
-    # Spark-JSON ``meta/`` DIR; reads accept both, and any meta writer
-    # migrates to the file form (file written first, dir deleted after
-    # — a crash between the two leaves both, and the file wins).
+    # window leaves NO meta). The file is also the store's format
+    # marker: a directory holding only a Spark-JSON ``meta/`` dir (an
+    # older store format) raises instead of reading as an empty store.
     def _meta_file(self) -> str:
         from xdump_spark import fsutil
 
@@ -1450,9 +1449,17 @@ class VectorStore:
 
         if self._cached_meta() is not None:  # a stamp-fresh meta IS liveness
             return True
-        return fsutil.exists_atomic(self.spark, self._meta_file()) or fsutil.is_dir(
-            self.spark, fsutil.join(self.path, "meta")
-        )
+        if fsutil.exists_atomic(self.spark, self._meta_file()):
+            return True
+        if fsutil.is_dir(self.spark, fsutil.join(self.path, "meta")):
+            # reading as "no store" would let the next increment
+            # silently re-fit a fresh store over the old cells
+            raise ValueError(
+                f"VectorStore at {self.path} holds a meta/ dir but no "
+                "meta.json: that store format is no longer read — "
+                "rebuild the store into a fresh directory"
+            )
+        return False
 
     def _meta(self) -> dict:
         import json
@@ -1466,25 +1473,17 @@ class VectorStore:
         # must leave a stale stamp (next probe re-reads), never a fresh
         # stamp over stale content
         stamp = fsutil.status(self.spark, self._meta_file())
-        if fsutil.exists_atomic(self.spark, self._meta_file()):
-            meta = json.loads(
-                fsutil.read_text_atomic(self.spark, self._meta_file())
-            )
-            if stamp is not None:
-                self._meta_cache = (stamp, meta)
-        else:
-            # legacy dir format (pre-r9 stores) — no single file to
-            # stamp, so never cached
-            meta = json.loads(
-                self.spark.read.json(
-                    fsutil.join(self.path, "meta")
-                ).first()["meta"]
-            )
+        if not self.exists():
+            raise ValueError(f"no VectorStore at {self.path}")
+        meta = json.loads(
+            fsutil.read_text_atomic(self.spark, self._meta_file())
+        )
+        if stamp is not None:
+            self._meta_cache = (stamp, meta)
         return meta
 
     def _write_meta(self, meta: dict) -> None:
-        """Atomically commit the meta (see the liveness note above);
-        sweeps a legacy ``meta/`` dir AFTER the file is durable."""
+        """Atomically commit the meta (see the liveness note above)."""
         import json
 
         from xdump_spark import fsutil
@@ -1492,14 +1491,11 @@ class VectorStore:
         fsutil.write_text_atomic(self.spark, self._meta_file(), json.dumps(meta))
         stamp = fsutil.status(self.spark, self._meta_file())
         self._meta_cache = (stamp, dict(meta)) if stamp is not None else None
-        legacy = fsutil.join(self.path, "meta")
-        if fsutil.is_dir(self.spark, legacy):
-            fsutil.delete(self.spark, legacy)
 
     def _assigned_path(self, meta: dict | None = None) -> str:
-        """Data dir of the CURRENT generation. Pre-retrain stores have
-        no ``assigned_dir`` key and resolve to the original ``assigned``
-        (back-compat with stores written before generations existed)."""
+        """Data dir of the CURRENT generation. A store that was never
+        retrained has no ``assigned_dir`` key: generation 0 lives in
+        ``assigned``."""
         from xdump_spark import fsutil
 
         m = meta if meta is not None else self._meta()

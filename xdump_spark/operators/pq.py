@@ -576,8 +576,7 @@ def ivfpq_write(index: IVFPQIndex, path: str) -> None:
     partition pruning — same layout contract as similarity.ivf_write),
     plus centroids + codebook as tiny JSON alongside — committed
     data-first, then the meta as ONE tmp+rename file (the r9 atomic-meta
-    discipline shared with similarity.ivf_write and VectorStore; legacy
-    Spark-JSON meta dirs are still read and swept on rewrite)."""
+    discipline shared with similarity.ivf_write and VectorStore)."""
     import json
 
     from xdump_spark import fsutil
@@ -594,23 +593,13 @@ def ivfpq_write(index: IVFPQIndex, path: str) -> None:
         }
     )
     fsutil.write_text_atomic(spark, fsutil.join(path, "meta.json"), meta)
-    legacy = fsutil.join(path, "meta")
-    if fsutil.is_dir(spark, legacy):
-        fsutil.delete(spark, legacy)
 
 
 def ivfpq_read(spark, path: str) -> IVFPQIndex:
-    import json
-
     from xdump_spark import fsutil
+    from xdump_spark.operators.similarity import _read_index_meta
 
-    meta_file = fsutil.join(path, "meta.json")
-    if fsutil.exists_atomic(spark, meta_file):
-        meta = json.loads(fsutil.read_text_atomic(spark, meta_file))
-    else:  # legacy Spark-JSON dir layout (pre-r9 indexes)
-        meta = json.loads(
-            spark.read.json(fsutil.join(path, "meta")).first()["meta"]
-        )
+    meta = _read_index_meta(spark, path, "ivfpq_write")
     codes = spark.read.parquet(fsutil.join(path, "codes"))
     return IVFPQIndex(
         centers=meta["centers"],

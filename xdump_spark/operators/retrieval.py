@@ -134,10 +134,10 @@ def _read_manifest(spark, path: str) -> dict:
     man = json.loads(
         fsutil.read_text_atomic(spark, fsutil.join(path, _INDEX_MANIFEST))
     )
-    if man.get("version") != 2:
+    if man.get("version") != 3:
         raise ValueError(
             f"unsupported text-index version: {man.get('version')!r} "
-            "(this build reads the v2 segmented layout; rebuild with "
+            "(this build reads the v3 segmented layout; rebuild with "
             "save_text_index)"
         )
     return man
@@ -204,74 +204,6 @@ def _write_segment(index: TextIndex, path: str, seg: int, n_tbuckets: int) -> di
     return entry
 
 
-def _rekey_legacy_ids(ids: list) -> list:
-    """Translate carried pre-upgrade batch ids into string tombstones
-    (``legacy:<old>``) when a maintenance pass rewrites the manifest.
-    Two legacy generations are retired here:
-
-    * pre-(writer, epoch) BARE-INT ids (r12 verdict "What's missing
-      #3") — post-maintenance the manifest carries no int-typed ids,
-      so the conservative legacy-collision skip in
-      :func:`streaming_index_ingest` stops firing and a recreated
-      checkpoint's epoch-0 batch LANDS;
-    * pre-r14 un-versioned ``rag:``-prefixed keys (both the r12-era
-      id-only xor and the r13-era content xor) — post-maintenance
-      :func:`~xdump_spark.pipeline.prepare_rag_corpus`'s conservative
-      old-``rag:``-key replay probes stop firing, so a content-updated
-      re-send whose pre-r14 id-only key collides with a committed
-      entry is indexed instead of skipped. New appends key as
-      ``rag2:{epoch}:{content_xor}``, which this pass never touches.
-
-    Safety: a tombstoned id no longer matches a pre-upgrade
-    checkpoint's redelivery (which would re-apply the batch). That
-    window is closed by the module's existing single-writer lane
-    discipline — maintenance (compact/delete) runs from the same
-    scheduler lane as ingest, so when it runs there IS no in-flight
-    crashed redelivery; any pre-upgrade crash was either redelivered
-    before the maintenance pass or its checkpoint abandoned."""
-    return [
-        f"legacy:{b}"
-        if isinstance(b, int)
-        or (isinstance(b, str) and b.startswith("rag:"))
-        else b
-        for b in ids
-    ]
-
-
-def _has_legacy_int_ids(man: dict) -> bool:
-    """Does the manifest still carry pre-(writer, epoch) BARE-INT batch
-    ids? THE gate for every conservative legacy-migration check
-    (streaming_index_ingest's epoch-collision skip,
-    prepare_rag_corpus's id-only-xor replay guard) — one definition so
-    a change to the legacy representation cannot drift between
-    callers. Tombstoned ``legacy:<int>`` strings do NOT count: after a
-    maintenance rekey the window is closed."""
-    return any(
-        isinstance(e.get("batch_id"), int)
-        or any(isinstance(b, int) for b in e.get("batch_ids", ()))
-        for e in man["segments"]
-    )
-
-
-def _has_old_rag_keys(man: dict) -> bool:
-    """Does the manifest still carry pre-r14 un-versioned ``rag:``
-    batch keys (the r12-era id-only xor or the r13-era content xor —
-    the two are format-indistinguishable)? THE gate for
-    :func:`~xdump_spark.pipeline.prepare_rag_corpus`'s conservative
-    old-key replay probes, mirroring :func:`_has_legacy_int_ids` for
-    the bare-int generation. Tombstoned ``legacy:rag:…`` strings do
-    NOT count: after a maintenance rekey the window is closed."""
-
-    def _old(b) -> bool:
-        return isinstance(b, str) and b.startswith("rag:")
-
-    return any(
-        _old(e.get("batch_id"))
-        or any(_old(b) for b in e.get("batch_ids", ()))
-        for e in man["segments"]
-    )
-
-
 def _find_batch_entry(man: dict, batch_id) -> "dict | None":
     """The committed segment entry carrying ``batch_id`` (directly or
     in a merge's carried ``batch_ids``), or None — THE membership
@@ -286,7 +218,7 @@ def _find_batch_entry(man: dict, batch_id) -> "dict | None":
 
 
 def save_text_index(index: TextIndex, path: str, n_tbuckets: int = 64,
-                    batch_id: str | int | None = None) -> None:
+                    batch_id: str | None = None) -> None:
     """Persist a :class:`TextIndex`: the docstring's "the index IS the
     storage format", made literal — as segment 0 of a SEGMENTED layout
     (``postings/seg=K/_tbucket=J``): :func:`append_text_index` adds a
@@ -318,7 +250,7 @@ def save_text_index(index: TextIndex, path: str, n_tbuckets: int = 64,
     if batch_id is not None:  # streaming creation: see append_text_index
         entry["batch_id"] = batch_id
     _write_manifest(spark, path, {
-        "version": 2,
+        "version": 3,
         "id_col": index.id_col,
         "n_tbuckets": n_tbuckets,
         # the loader's schema of record when every committed segment is
@@ -332,7 +264,7 @@ def save_text_index(index: TextIndex, path: str, n_tbuckets: int = 64,
 
 def append_text_index(
     spark: SparkSession, path: str, docs: DataFrame, text_col: str = "text",
-    batch_id: str | int | None = None,
+    batch_id: str | None = None,
 ) -> dict:
     """Add documents to a SAVED index as a new committed segment — the
     daily-increment path: one tokenize pass over the NEW docs only,
@@ -362,14 +294,6 @@ def append_text_index(
     if batch_id is not None:
         entry["batch_id"] = batch_id
     man["segments"].append(entry)
-    # backfill the all-empty loader's schema of record onto pre-r12
-    # manifests while a postings frame is at hand (save writes it; a
-    # later delete-everything on an unbackfilled index would commit an
-    # unloadable manifest AFTER destroying the data to rebuild from)
-    man.setdefault(
-        "postings_schema",
-        sub.postings.select("term", "id", "tf", "dl").schema.json(),
-    )
     _write_manifest(spark, path, man)
     return entry
 
@@ -381,14 +305,9 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     written FIRST, the manifest then commits it alone, and only after
     that are the old (now uncommitted) segment dirs deleted — a crash
     at any point leaves a loadable index; orphan dirs from earlier
-    crashes are swept here too. Carried pre-upgrade batch ids (bare
-    ints and un-versioned ``rag:`` keys) are rekeyed to ``legacy:…``
-    tombstones while the manifest is being rewritten anyway (see
-    :func:`_rekey_legacy_ids`) — the post-compact manifest carries
-    only current-format keys, so the streaming ingester's
-    legacy-collision skip and prepare_rag_corpus's old-``rag:`` replay
-    probes can no longer swallow a genuinely new batch. Returns
-    {segments_before, seg}."""
+    crashes are swept here too. The constituents' batch ids are carried
+    into the merged entry, so append idempotence survives compaction.
+    Returns {segments_before, seg}."""
     from xdump_spark import fsutil
 
     man = _read_manifest(spark, path)
@@ -405,21 +324,13 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     entry = _write_segment(merged, path, seg, man["n_tbuckets"])
     before = [e["seg"] for e in man["segments"]]
     # carry the constituents' batch ids so a streaming caller's
-    # idempotence check (append_text_index batch_id) survives
-    # compaction; pre-upgrade bare-int ids are rekeyed to tombstones
-    # here (see _rekey_legacy_ids) so the post-compact manifest is
-    # int-free and the legacy-collision skip window closes
+    # idempotence check (append_text_index batch_id) survives compaction
     ids = [e["batch_id"] for e in man["segments"] if "batch_id" in e]
     for e in man["segments"]:
         ids.extend(e.get("batch_ids", ()))
-    ids = _rekey_legacy_ids(ids)
     if ids:
         entry["batch_ids"] = ids
     man["segments"] = [entry]
-    man.setdefault(  # pre-r12 manifest backfill (see append_text_index)
-        "postings_schema",
-        merged.postings.select("term", "id", "tf", "dl").schema.json(),
-    )
     _write_manifest(spark, path, man)
     for sub in ("postings", "term_stats"):
         base = fsutil.join(path, sub)
@@ -517,19 +428,10 @@ def delete_text_index_docs(spark: SparkSession, path: str, ids) -> dict:
     ids = [e["batch_id"] for e in man["segments"] if "batch_id" in e]
     for e in man["segments"]:
         ids.extend(e.get("batch_ids", ()))
-    # keep streaming idempotence alive across retention merges; legacy
-    # bare-int ids are rekeyed to tombstones like compact does (same
-    # maintenance-lane safety argument — see _rekey_legacy_ids)
-    ids = _rekey_legacy_ids(ids)
+    # keep streaming idempotence alive across retention merges
     if ids:
         entry["batch_ids"] = ids
     man["segments"] = [entry]
-    man.setdefault(  # pre-r12 manifest backfill — CRITICAL here: this
-        # very call may be committing the all-empty state whose load
-        # depends on it, after destroying the data to rebuild from
-        "postings_schema",
-        retained.postings.select("term", "id", "tf", "dl").schema.json(),
-    )
     # retention epoch (r12): content-keyed appenders (prepare_rag_corpus)
     # fold this counter into their batch key, so a doc re-sent AFTER a
     # retention delete — whose survivor chunk-id set, and therefore its
@@ -633,49 +535,6 @@ def streaming_index_ingest(
             save_text_index(idx, index_path, n_tbuckets=n_tbuckets,
                             batch_id=key)
         else:
-            # migration window: manifests written before the (writer,
-            # epoch) keys hold BARE-INT epochs — a crash straddling the
-            # upgrade would redeliver a batch whose old-format commit
-            # the new key cannot match, double-applying it (the exact
-            # df/n_docs corruption this mechanism prevents). Honor the
-            # legacy key with legacy semantics — but ONLY while the
-            # manifest actually still carries int-typed ids: on a
-            # new-format index the check is skipped entirely, so a
-            # recreated checkpoint's fresh epoch 0 can never be
-            # swallowed. On a legacy-keyed index the residual
-            # ambiguity is unavoidable — a recreated checkpoint's
-            # small epoch colliding with a committed legacy int is
-            # SKIPPED (the conservative side: a skipped batch is
-            # recoverable by re-dropping the files; doubled df is
-            # silent corruption). Legacy ids age out when
-            # compact_text_index / delete_text_index_docs next rewrite
-            # the manifest (rekeyed to string tombstones) — or with a
-            # fresh-directory rebuild.
-            man = _read_manifest(spark, index_path)
-            if _has_legacy_int_ids(man) and _find_batch_entry(
-                man, int(batch_id)
-            ):
-                # ADVICE r12 low: the conservative skip is recoverable
-                # (re-drop the files) ONLY if the operator can see it
-                # fired — on a legacy-keyed index a recreated
-                # checkpoint's genuinely new epoch-N batch is
-                # indistinguishable from a pre-upgrade redelivery, so
-                # say so loudly instead of silently dropping it
-                import warnings
-
-                warnings.warn(
-                    f"streaming_index_ingest: batch {int(batch_id)} "
-                    f"matches a committed LEGACY bare-int key at "
-                    f"{index_path} and was SKIPPED (conservative "
-                    "migration semantics). If this daemon's checkpoint "
-                    "is new (not a pre-upgrade redelivery), the "
-                    "batch's documents were NOT indexed — re-drop "
-                    "them after compacting the index "
-                    "(compact_text_index rekeys legacy ids and closes "
-                    "this window) or rebuild into a fresh directory.",
-                    stacklevel=2,
-                )
-                return
             append_text_index(spark, index_path, batch_df,
                               text_col=text_col, batch_id=key)
 
@@ -733,12 +592,6 @@ def load_text_index(spark: SparkSession, path: str) -> TextIndex:
 
         from pyspark.sql.types import StructType
 
-        if "postings_schema" not in man:
-            raise ValueError(
-                f"text index at {path} has only empty segments and no "
-                "postings_schema in its manifest (pre-r12 layout) — "
-                "rebuild with save_text_index"
-            )
         schema = StructType.fromJson(json.loads(man["postings_schema"]))
         postings = (
             spark.createDataFrame([], schema)

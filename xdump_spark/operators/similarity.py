@@ -595,23 +595,31 @@ def ivf_write(index: IVFIndex, path: str) -> None:
     spark = index.assigned.sparkSession
     meta = json.dumps({"centers": index.centers, "n_cells": index.n_cells})
     fsutil.write_text_atomic(spark, fsutil.join(path, "meta.json"), meta)
-    legacy = fsutil.join(path, "meta")
-    if fsutil.is_dir(spark, legacy):
-        fsutil.delete(spark, legacy)
 
 
-def ivf_read(spark, path: str) -> IVFIndex:
+def _read_index_meta(spark, path: str, writer: str) -> dict:
+    """The committed ``meta.json`` of a saved index — its one format
+    marker. Raises when it is missing: the path holds no index, or one
+    from before the single-file meta (a Spark-JSON ``meta/`` dir, no
+    longer read)."""
     import json
 
     from xdump_spark import fsutil
 
     meta_file = fsutil.join(path, "meta.json")
-    if fsutil.exists_atomic(spark, meta_file):
-        meta = json.loads(fsutil.read_text_atomic(spark, meta_file))
-    else:  # legacy Spark-JSON dir layout (pre-r9 indexes)
-        meta = json.loads(
-            spark.read.json(fsutil.join(path, "meta")).first()["meta"]
+    if not fsutil.exists_atomic(spark, meta_file):
+        raise ValueError(
+            f"no meta.json at {path}: not an index in the current format "
+            "(a Spark-JSON meta/ dir is no longer read) — rebuild it "
+            f"with {writer}"
         )
+    return json.loads(fsutil.read_text_atomic(spark, meta_file))
+
+
+def ivf_read(spark, path: str) -> IVFIndex:
+    from xdump_spark import fsutil
+
+    meta = _read_index_meta(spark, path, "ivf_write")
     assigned = spark.read.parquet(fsutil.join(path, "assigned"))
     return IVFIndex(
         centers=meta["centers"], assigned=assigned, n_cells=meta["n_cells"]

@@ -916,18 +916,18 @@ _CORPUS_BUCKET_COL = "_bucket"
 
 
 def _corpus_layout(spark, corpus_dir: str) -> dict:
-    """Detect the survivor-corpus layout at ``corpus_dir``:
-    ``{"kind": "bucketed", "n_buckets": N}`` (doc-hash partition dirs,
-    the r13 default), ``{"kind": "bucketed", "n_buckets": None}``
-    (bucket dirs present but the meta sidecar is gone — rewrites
-    preserve each row's recorded bucket; appends refuse),
-    ``{"kind": "flat"}`` (pre-r13 root-level files),
-    ``{"kind": "fresh"}`` (nothing yet), or ``{"kind": "migrating"}``
-    (an interrupted layout migration left its marker — every reader/
-    writer but :func:`compact_rag_corpus`, which completes it, must
-    refuse: mid-migration the directory may mix root files with
-    partition dirs). The marker check comes FIRST: during a re-bucket
-    the meta sidecar still names the OLD count."""
+    """Detect the survivor-corpus layout at ``corpus_dir``. The atomic
+    ``_corpus_meta.json`` sidecar is the corpus's format marker:
+    ``{"kind": "bucketed", "n_buckets": N, "bucket_by": col}``
+    (doc-hash partition dirs named by the sidecar),
+    ``{"kind": "fresh"}`` (nothing yet), ``{"kind": "unmarked"}``
+    (data files but no sidecar — every reader/writer but
+    :func:`compact_rag_corpus` refuses, see :func:`_unmarked_error`),
+    or ``{"kind": "migrating"}`` (an interrupted layout migration left
+    its marker — every reader/writer but :func:`compact_rag_corpus`,
+    which completes it, must refuse: mid-migration the directory holds
+    both the old and the new file sets). The marker check comes FIRST:
+    during a re-bucket the meta sidecar still names the OLD count."""
     import json
 
     from xdump_spark import fsutil
@@ -939,13 +939,11 @@ def _corpus_layout(spark, corpus_dir: str) -> dict:
     meta_path = fsutil.join(corpus_dir, _CORPUS_META)
     if fsutil.exists_atomic(spark, meta_path):
         meta = json.loads(fsutil.read_text_atomic(spark, meta_path))
-        return {"kind": "bucketed", "n_buckets": int(meta["n_buckets"])}
-    files = fsutil.list_data_files(spark, corpus_dir)
-    if not files:
-        return {"kind": "fresh"}
-    if any(f"/{_CORPUS_BUCKET_COL}=" in f for f, _ in files):
-        return {"kind": "bucketed", "n_buckets": None}
-    return {"kind": "flat"}
+        return {"kind": "bucketed", "n_buckets": int(meta["n_buckets"]),
+                "bucket_by": meta["bucket_by"]}
+    if fsutil.list_data_files(spark, corpus_dir):
+        return {"kind": "unmarked"}
+    return {"kind": "fresh"}
 
 
 def _migrating_error(corpus_dir: str) -> ValueError:
@@ -957,6 +955,28 @@ def _migrating_error(corpus_dir: str) -> ValueError:
     )
 
 
+def _unmarked_error(corpus_dir: str) -> ValueError:
+    return ValueError(
+        f"survivor corpus at {corpus_dir} holds data files but no "
+        f"{_CORPUS_META} sidecar, so its bucket layout is unknown — "
+        "run compact_rag_corpus(n_buckets=N) (CLI: maintain --kind rag "
+        "--action compact --corpus-buckets N) to rewrite it into N "
+        "doc-hash buckets and record a fresh sidecar"
+    )
+
+
+def _require_bucketed(spark, corpus_dir: str) -> dict:
+    """The corpus layout for a reader/writer other than
+    :func:`compact_rag_corpus`: ``fresh`` or ``bucketed``; raises on
+    the two states only compaction resolves."""
+    layout = _corpus_layout(spark, corpus_dir)
+    if layout["kind"] == "migrating":
+        raise _migrating_error(corpus_dir)
+    if layout["kind"] == "unmarked":
+        raise _unmarked_error(corpus_dir)
+    return layout
+
+
 def _write_survivor_corpus(
     survivors: DataFrame, corpus_dir: str, id_col: str, n_buckets: int
 ) -> None:
@@ -964,29 +984,22 @@ def _write_survivor_corpus(
     (``_bucket = pmod(xxhash64(string(doc_id)), n_buckets)`` — r12
     verdict Next #1): every chunk of a parent doc lands in ONE of
     ``n_buckets`` dirs, so :func:`forget_rag_docs` rewrites only the
-    buckets containing doomed docs instead of the whole corpus (the
-    flat layout made a single-doc forget rewrite 100 TB at 100 TB).
-    The bucket count is recorded once in an atomic
+    buckets containing doomed docs instead of the whole corpus (an
+    unpartitioned corpus would make a single-doc forget rewrite 100 TB
+    at 100 TB). The bucket count is recorded once in an atomic
     ``_corpus_meta.json`` sidecar, written BEFORE the first data file
     (a crash between the two leaves a readable empty corpus with its
     layout known; the ``_`` prefix keeps the sidecar invisible to
     parquet reads and ``fsutil.list_data_files`` alike). Later appends
     follow the RECORDED layout and ignore the parameter — one corpus,
-    one bucket count. A pre-r13 FLAT corpus keeps its flat layout on
-    append (mixing root-level files with partition dirs breaks parquet
-    partition discovery); :func:`compact_rag_corpus` migrates it to
-    the bucketed layout in one bounded rewrite (r14)."""
+    one bucket count. A directory holding data files but no sidecar
+    raises (:func:`_unmarked_error`)."""
     import json
 
     from xdump_spark import fsutil
 
     spark = survivors.sparkSession
-    layout = _corpus_layout(spark, corpus_dir)
-    if layout["kind"] == "migrating":
-        raise _migrating_error(corpus_dir)
-    if layout["kind"] == "flat":
-        survivors.write.mode("append").parquet(corpus_dir)
-        return
+    layout = _require_bucketed(spark, corpus_dir)
     if layout["kind"] == "fresh":
         n = int(n_buckets)
         if n < 1:
@@ -999,13 +1012,6 @@ def _write_survivor_corpus(
         )
     else:
         n = layout["n_buckets"]
-        if n is None:
-            raise ValueError(
-                f"survivor corpus at {corpus_dir} has bucket partition "
-                f"dirs but no {_CORPUS_META} sidecar — the bucket count "
-                "is unknowable, so appends cannot assign new rows. "
-                "Restore the sidecar or rebuild into a fresh directory."
-            )
     (
         survivors.withColumn(
             _CORPUS_BUCKET_COL,
@@ -1017,27 +1023,21 @@ def _write_survivor_corpus(
     )
 
 
-def _survivor_batch_xors(survivors: DataFrame) -> "tuple[int, int]":
-    """Both index-idempotence key ingredients in ONE agg over the
-    survivor rows: the CONTENT xor (chunk id + chunk text hashes —
-    the r13 key body) and the pre-r13 id-only xor (fuel for the
-    legacy migration probes in :func:`prepare_rag_corpus`). The
-    content formula hashes ``(chunk_id, coalesce(text, ''))`` — the
-    coalesce (ADVICE r13 low) keeps a null-text survivor row VISIBLE
-    to the key: without it the concat yields NULL for that row and
-    ``bit_xor`` silently skips it, so two batches differing only in
+def _survivor_batch_xor(survivors: DataFrame) -> int:
+    """The index-idempotence key body in ONE agg over the survivor
+    rows: the CONTENT xor of ``(chunk_id, coalesce(text, ''))`` hashes.
+    The coalesce (ADVICE r13 low) keeps a null-text survivor row
+    VISIBLE to the key: without it the concat yields NULL for that row
+    and ``bit_xor`` silently skips it, so two batches differing only in
     null-text chunks would collide on the same key. The chunker never
     emits null text today; the coalesce guards a future producer that
-    does. For non-null text the formula is bit-identical to the r13
-    one, so the r13-era replay probe can reuse the same xor."""
-    row = survivors.agg(
+    does."""
+    return int(survivors.agg(
         F.expr(
             "bit_xor(xxhash64(concat(chunk_id, ':', "
             "cast(xxhash64(coalesce(text, '')) as string))))"
-        ).alias("b"),
-        F.expr("bit_xor(xxhash64(chunk_id))").alias("legacy"),
-    ).collect()[0]
-    return int(row["b"]), int(row["legacy"])
+        )
+    ).collect()[0][0])
 
 
 def prepare_rag_corpus(
@@ -1141,6 +1141,7 @@ def prepare_rag_corpus(
     from xdump_spark.operators.incremental import incremental_semantic_dedup
     from xdump_spark.operators.retrieval import (
         _INDEX_MANIFEST,
+        _read_manifest,
         append_text_index,
         build_text_index,
         save_text_index,
@@ -1227,114 +1228,21 @@ def prepare_rag_corpus(
         # identical content key, and without the epoch it would no-op
         # against the retention merge's carried batch_ids — same
         # divergence. Within a crash-replay window no retention ran,
-        # the epoch is unchanged, and the replay still no-ops. The
-        # key carries a VERSIONED prefix (rag2:, r14): the r12-era
-        # id-only key and the r13-era content key shared the bare
-        # 'rag:' prefix and were format-indistinguishable, which left
-        # an r12-era crash replay double-applying under r13 (r13
-        # verdict What's-missing #2); versioning makes every legacy
-        # generation probe-able below and tombstone-able at
-        # maintenance time (retrieval._rekey_legacy_ids).
-        xor, legacy_xor = _survivor_batch_xors(survivors)
+        # the epoch is unchanged, and the replay still no-ops: it
+        # carries the committed key, so append_text_index returns the
+        # committed entry untouched.
         has_index = fsutil.exists_atomic(
             spark, fsutil.join(index_dir, _INDEX_MANIFEST)
         )
-        epoch = 0
-        man = None
+        epoch = (
+            int(_read_manifest(spark, index_dir).get("retention_epoch", 0))
+            if has_index else 0
+        )
+        bid = f"rag2:{epoch}:{_survivor_batch_xor(survivors)}"
         if has_index:
-            from xdump_spark.operators.retrieval import _read_manifest
-
-            man = _read_manifest(spark, index_dir)
-            epoch = int(man.get("retention_epoch", 0))
-        bid = f"rag2:{epoch}:{xor}"
-        if has_index:
-            # Pre-r14 migration probes (same conservative shape as
-            # streaming_index_ingest's legacy check), each gated on
-            # the manifest actually still CARRYING that generation's
-            # key format — on a current-format manifest none fires,
-            # so a fresh index never skips a genuinely new batch.
-            # Maintenance (compact/delete) tombstones both legacy
-            # generations (retrieval._rekey_legacy_ids), closing the
-            # probes' conservative-skip windows for good; the
-            # maintenance-lane discipline guarantees no crash replay
-            # is in flight when the rekey happens.
-            from xdump_spark.operators.retrieval import (
-                _find_batch_entry,
-                _has_legacy_int_ids,
-                _has_old_rag_keys,
+            entry = append_text_index(
+                spark, index_dir, survivors, batch_id=bid
             )
-
-            hit = None
-            warn_msg = None
-            if _has_old_rag_keys(man):
-                # r13-era content key: the SAME content xor under the
-                # un-versioned prefix. A hit is an exact content
-                # match, so a crash replay straddling the r13→r14
-                # upgrade no-ops correctly and silently.
-                hit = _find_batch_entry(man, f"rag:{epoch}:{xor}")
-                if hit is None:
-                    # r12-era id-only key (r13 verdict What's-missing
-                    # #2, ADVICE r13 low): a crashed pre-r13 run keyed
-                    # this batch as 'rag:{epoch}:{id_xor}'. A hit is
-                    # AMBIGUOUS — a pre-r13 crash replay (no-op is
-                    # correct) or a content-updated re-send colliding
-                    # on its id set (should append) — so take the
-                    # conservative side: skip with a warning rather
-                    # than risk doubled df. Recovery must go through
-                    # forget_rag_docs + re-send: the store commit
-                    # below still lands (a genuine replay needs it),
-                    # so a plain re-send would dedup to zero
-                    # survivors and never reach the append — the
-                    # forget clears all three artifacts AND its epoch
-                    # bump re-keys the batch past these probes.
-                    hit = _find_batch_entry(
-                        man, f"rag:{epoch}:{legacy_xor}"
-                    )
-                    if hit is not None:
-                        warn_msg = (
-                            f"prepare_rag_corpus: this batch's "
-                            f"pre-r13 id-only key rag:{epoch}:"
-                            f"{legacy_xor} matches a committed "
-                            f"un-versioned entry at {index_dir}; "
-                            "treating the index append as already "
-                            "applied (conservative migration "
-                            "semantics — an r12-era crash replay "
-                            "no-ops correctly). If this was a "
-                            "content-updated re-send, it was NOT "
-                            "re-indexed: forget_rag_docs its doc ids "
-                            "and re-send. Compacting the index "
-                            "tombstones un-versioned keys and closes "
-                            "this skip window for future batches."
-                        )
-            if hit is None and _has_legacy_int_ids(man):
-                # pre-r12 BARE-INT id-only key — same ambiguity, same
-                # conservative side (see the r12-era probe above)
-                hit = _find_batch_entry(man, legacy_xor)
-                if hit is not None:
-                    warn_msg = (
-                        f"prepare_rag_corpus: this batch's pre-r13 "
-                        f"id-only key {legacy_xor} matches a "
-                        f"committed legacy bare-int entry at "
-                        f"{index_dir}; treating the index append as "
-                        "already applied (conservative migration "
-                        "semantics — a pre-r13 crash replay no-ops "
-                        "correctly). If this was a content-updated "
-                        "re-send, it was NOT re-indexed: "
-                        "forget_rag_docs its doc ids and re-send. "
-                        "Compacting the index tombstones legacy ids "
-                        "and closes this skip window for future "
-                        "batches."
-                    )
-            if hit is not None:
-                if warn_msg is not None:
-                    import warnings
-
-                    warnings.warn(warn_msg, stacklevel=2)
-                entry = hit
-            else:
-                entry = append_text_index(
-                    spark, index_dir, survivors, batch_id=bid
-                )
         else:
             idx = build_text_index(survivors, id_col="chunk_id")
             save_text_index(idx, index_dir, batch_id=bid)
@@ -1394,16 +1302,17 @@ def _finish_corpus_migration(
 def _migrate_corpus_layout(
     spark, corpus_dir: str, target_n: int, id_col: str
 ) -> dict:
-    """In-place layout migration for the survivor corpus: flat →
-    bucketed (r13 verdict Next #1) or bucketed N → bucketed M (Next
+    """In-place layout migration for the survivor corpus: an unmarked
+    file set → bucketed, or bucketed N → bucketed M (r13 verdict Next
     #4), as one bounded rewrite of every current data file. The
     durable ``_corpus_migration.json`` marker (written FIRST, atomic)
     records the target count, the bucket-by column, and the exact old
     file list — it is what makes a crash anywhere re-runnable, and
     while it exists every other corpus reader/writer refuses
-    (:func:`_migrating_error`): mid-migration the directory mixes the
-    old and new layouts, which plain parquet reads cannot parse (flat
-    case) or would read with duplicated rows (re-bucket case)."""
+    (:func:`_migrating_error`): mid-migration the directory holds both
+    the old and the new file sets, which a plain parquet read would
+    return as duplicated rows (or cannot parse at all when the old
+    files sit at the root)."""
     import json
 
     from xdump_spark import fsutil
@@ -1502,21 +1411,18 @@ def compact_rag_corpus(
     chunk_id (the corpus family contract), and concurrent increment
     appends land new files that are never touched.
 
-    Layout migration rides the same maintenance pass (r14):
+    Layout migration rides the same maintenance pass:
 
-    * a pre-r13 FLAT corpus is MIGRATED to the bucketed layout
-      (``n_buckets`` or 64) instead of compacted flat — the compact
-      was going to read every flat file anyway, and one bounded
-      rewrite permanently sheds the flat forget degradation
-      (flat = full rewrite per forget; r13 verdict Next #1);
-    * an already-bucketed corpus given an EXPLICIT ``n_buckets``
-      different from its recorded count is RE-BUCKETED (Next #4) —
-      sizing guidance: N ≈ corpus_bytes / target_rewrite_bytes, since
-      each forget rewrites the doomed docs' whole buckets. This is
-      also the recovery path for a lost meta sidecar (the rewrite
-      records a fresh one);
-    * ``n_buckets=None`` (the default) never re-buckets an existing
-      bucketed corpus.
+    * a bucketed corpus given an EXPLICIT ``n_buckets`` different from
+      its recorded count is RE-BUCKETED (r13 verdict Next #4) — sizing
+      guidance: N ≈ corpus_bytes / target_rewrite_bytes, since each
+      forget rewrites the doomed docs' whole buckets;
+    * an UNMARKED corpus (data files, no meta sidecar) needs an
+      explicit ``n_buckets``: its files are rewritten into N buckets
+      and a fresh sidecar is recorded — the recovery the other corpus
+      readers/writers name when they refuse it; without ``n_buckets``
+      it raises;
+    * ``n_buckets=None`` (the default) never re-buckets.
 
     Migration is crash-re-runnable via a durable marker (see
     :func:`_migrate_corpus_layout`); while the marker exists, every
@@ -1527,8 +1433,6 @@ def compact_rag_corpus(
     so migration, like retention, owns its window. Returns
     {files_before, files_after, partitions_compacted} plus
     ``migration`` when a layout change happened."""
-    import json
-
     from xdump_spark import fsutil
     from xdump_spark.operators.incremental import _compact_partition_dirs
 
@@ -1538,23 +1442,13 @@ def compact_rag_corpus(
     ):
         migration = _resume_corpus_migration(spark, corpus_dir)
     layout = _corpus_layout(spark, corpus_dir)
-    if layout["kind"] == "flat":
-        migration = _migrate_corpus_layout(
-            spark, corpus_dir, n_buckets or 64, id_col
-        )
-    elif (
-        layout["kind"] == "bucketed"
-        and n_buckets is not None
-        and layout["n_buckets"] != n_buckets
+    if layout["kind"] == "unmarked" and n_buckets is None:
+        raise _unmarked_error(corpus_dir)
+    if layout["kind"] != "fresh" and n_buckets is not None and (
+        layout.get("n_buckets") != n_buckets
     ):
-        bucket_by = id_col
-        meta_path = fsutil.join(corpus_dir, _CORPUS_META)
-        if fsutil.exists_atomic(spark, meta_path):
-            bucket_by = json.loads(
-                fsutil.read_text_atomic(spark, meta_path)
-            ).get("bucket_by", id_col)
         migration = _migrate_corpus_layout(
-            spark, corpus_dir, n_buckets, bucket_by
+            spark, corpus_dir, n_buckets, layout.get("bucket_by", id_col)
         )
     rpt = _compact_partition_dirs(
         spark, corpus_dir, f"/{_CORPUS_BUCKET_COL}=",
@@ -1645,19 +1539,11 @@ def _forget_corpus_rows(spark, corpus_dir, doomed_side, id_col) -> dict:
     Crash discipline (the family's append-then-delete): survivors are
     durable before any original dies, so a crash leaves doomed rows
     beside duplicated survivors — incomplete (re-run the forget),
-    never lossy, duplicates dedupable by chunk_id.
-
-    Degradations take the COUNT-FIRST path — count the doomed rows,
-    rewrite only when any matched (the probe costs a second scan, but
-    it caps the no-match worst case: a typo'd forget against a 100 TB
-    corpus must not full-rewrite it): a pre-r13 FLAT corpus keeps its
-    flat shape; a bucketed corpus whose meta sidecar is gone (ADVICE
-    r13 low) rewrites every bucket on a real match but preserves each
-    row's recorded bucket assignment (the partition column read back
-    via basePath) and a no-match probe touches nothing. On the pruned
-    bucketed path a no-match request still rewrites the doomed docs'
-    candidate buckets (~touched/N of the corpus) — bounded, and the
-    price of the single-scan count.
+    never lossy, duplicates dedupable by chunk_id. A no-match request
+    still rewrites the doomed docs' candidate buckets (~touched/N of
+    the corpus) — bounded, and the price of the single-scan count. An
+    unmarked or mid-migration corpus raises (see
+    :func:`_require_bucketed`).
 
     Returns ``{rows_deleted, buckets_touched, files_rewritten}`` —
     the two structural fields are THE 100-TB scale signals
@@ -1669,72 +1555,33 @@ def _forget_corpus_rows(spark, corpus_dir, doomed_side, id_col) -> dict:
     from xdump_spark import fsutil
 
     zero = {"rows_deleted": 0, "buckets_touched": 0, "files_rewritten": 0}
-    layout = _corpus_layout(spark, corpus_dir)
-    if layout["kind"] == "migrating":
-        raise _migrating_error(corpus_dir)
-    bucketed = layout["kind"] == "bucketed"
-    pruned = bool(bucketed and layout["n_buckets"])
-    if pruned:
-        n = layout["n_buckets"]
-        # ≤ n_buckets distinct values regardless of request size — a
-        # driver-safe collect even for a 1e8-doc mass forget
-        doomed_buckets = {
-            int(r.b)
-            for r in doomed_side.select(
-                F.pmod(F.xxhash64("_doc"), F.lit(n)).alias("b")
-            ).distinct().collect()
-        }
-        # list ONLY the doomed buckets' dirs: a whole-corpus listing
-        # would put O(corpus files) driver work under a one-doc forget
-        # — the exact cost class the bucketing exists to remove
-        files = [
-            f
-            for b in sorted(doomed_buckets)
-            for f, _ in fsutil.list_data_files(
-                spark,
-                fsutil.join(corpus_dir, f"{_CORPUS_BUCKET_COL}={b}"),
-            )
-        ]
-    else:
-        files = [f for f, _ in fsutil.list_data_files(spark, corpus_dir)]
-    if not files:
-        return dict(zero)
-    # the dirs actually holding files = the dirs the rewrite touches
-    n_touched_buckets = len(
-        {f.rpartition("/")[0] for f in files} if bucketed else ()
-    )
-    reader = spark.read
-    if bucketed:
-        # leaf-file reads drop partition columns unless the basePath
-        # anchors them — survivors must keep their bucket for write-back
-        reader = reader.option("basePath", corpus_dir)
-    rows = reader.parquet(*files)
-    if not pruned:
-        # degraded layouts: count first, rewrite only on a match
-        # (docstring) — flat appends stay flat; sidecar-less bucketed
-        # survivors keep their recorded bucket via the basePath read
-        doomed_rows = rows.withColumn(
-            "_doc", F.col(id_col).cast("string")
-        ).join(doomed_side, "_doc", "left_semi")
-        n_doomed = doomed_rows.count()
-        if n_doomed == 0:
-            return dict(zero)
-        survivors = (
-            rows.withColumn("_doc", F.col(id_col).cast("string"))
-            .join(doomed_side, "_doc", "left_anti")
-            .drop("_doc")
+    layout = _require_bucketed(spark, corpus_dir)
+    if layout["kind"] == "fresh":
+        return zero
+    n = layout["n_buckets"]
+    # ≤ n_buckets distinct values regardless of request size — a
+    # driver-safe collect even for a 1e8-doc mass forget
+    doomed_buckets = {
+        int(r.b)
+        for r in doomed_side.select(
+            F.pmod(F.xxhash64("_doc"), F.lit(n)).alias("b")
+        ).distinct().collect()
+    }
+    # list ONLY the doomed buckets' dirs: a whole-corpus listing would
+    # put O(corpus files) driver work under a one-doc forget — the
+    # exact cost class the bucketing exists to remove
+    files = [
+        f
+        for b in sorted(doomed_buckets)
+        for f, _ in fsutil.list_data_files(
+            spark, fsutil.join(corpus_dir, f"{_CORPUS_BUCKET_COL}={b}"),
         )
-        writer = survivors.write.mode("append")
-        if bucketed:
-            writer = writer.partitionBy(_CORPUS_BUCKET_COL)
-        writer.parquet(corpus_dir)
-        for f in files:
-            fsutil.delete(spark, f, recursive=False)
-        return {
-            "rows_deleted": n_doomed,
-            "buckets_touched": n_touched_buckets,
-            "files_rewritten": len(files),
-        }
+    ]
+    if not files:
+        return zero
+    # leaf-file reads drop partition columns unless the basePath
+    # anchors them — survivors must keep their bucket for write-back
+    rows = spark.read.option("basePath", corpus_dir).parquet(*files)
     obs = Observation()
     marked = (
         rows.withColumn("_doc", F.col(id_col).cast("string"))
@@ -1760,7 +1607,8 @@ def _forget_corpus_rows(spark, corpus_dir, doomed_side, id_col) -> dict:
         fsutil.delete(spark, f, recursive=False)
     return {
         "rows_deleted": int(obs.get["doomed"]),
-        "buckets_touched": n_touched_buckets,
+        # the dirs actually holding files = the dirs the rewrite touches
+        "buckets_touched": len({f.rpartition("/")[0] for f in files}),
         "files_rewritten": len(files),
     }
 
@@ -1797,13 +1645,10 @@ def forget_rag_docs(
     the buckets containing doomed docs are read and rewritten, with
     the doomed count observed on the rewrite pass itself — one scan,
     cost tracking the doomed bucket count, untouched buckets
-    byte-identical; a pre-r13 flat corpus degrades to the full
-    rewrite until :func:`compact_rag_corpus` migrates it (r14).
+    byte-identical. A corpus without its meta sidecar raises; recover
+    it with ``compact_rag_corpus(n_buckets=N)``.
 
-    Two contract notes. (1) The derivation requires the composite
-    chunk-id scheme (the r12 front door); on a pre-r12 corpus with
-    hashed chunk ids, delete per-artifact with explicit chunk ids
-    instead. (2) Dedup semantics: a doc whose chunks were all REJECTED
+    Dedup semantics: a doc whose chunks were all REJECTED
     as duplicates (a re-send) owns no chunk ids — forgetting it is a
     no-op; the content is forgotten by naming its CANONICAL (surviving)
     doc, which is what right-to-be-forgotten means in a deduplicated
@@ -1834,6 +1679,9 @@ def forget_rag_docs(
         delete_text_index_docs,
     )
 
+    if corpus_dir is not None:
+        # refuse an unreadable corpus before the store and index legs run
+        _require_bucketed(spark, corpus_dir)
     doomed_docs = _as_id_frame(spark, doc_ids, id_col).select(
         F.col(id_col).cast("string").alias("_doc")
     )

@@ -354,11 +354,7 @@ def compute_closure(
                 return None
             return [col.to_pylist() for col in tbl.columns]
 
-        collected = (
-            overlap(*[lambda df=df: grab(df) for _, _, df, _ in grabs])
-            if grabs
-            else []
-        )
+        collected = overlap(*[lambda df=df: grab(df) for _, _, df, _ in grabs])
         if any(cols is None for cols in collected):
             return False
 
@@ -535,19 +531,14 @@ def compute_closure(
                 return parent, rows.select(*propagation_columns(parent))
             return parent, narrow_increment(parent, rows)
 
-        # Each parent's jobs are independent; run the round's work from a
-        # thread pool so the scheduler overlaps them — wall time per round
-        # becomes max over touched tables, not sum. Each thread mutates
-        # only its own parent's state.
-        if len(contribs) <= 1:
-            results = [advance(t, ps) for t, ps in contribs.items()]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
+        # Each parent's jobs are independent; overlap them on driver
+        # threads so wall time per round becomes max over touched tables,
+        # not sum. Each thread mutates only its own parent's state.
+        from xdump_spark.operators.concurrency import overlap
 
-            with ThreadPoolExecutor(max_workers=min(8, len(contribs))) as pool:
-                results = list(
-                    pool.map(lambda kv: advance(kv[0], kv[1]), contribs.items())
-                )
+        results = overlap(
+            *[lambda t=t, ps=ps: advance(t, ps) for t, ps in contribs.items()]
+        )
         for parent, rows in results:
             if rows is not None:
                 pending.setdefault(parent, []).append(rows)
