@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from xdump_spark.observed import RowCount
 from xdump_spark.operators.text import tokens
 
 # Mersenne prime 2^61-1: classic universal-hash modulus; products of two
@@ -542,11 +543,11 @@ def minhash_lsh_pairs(
     # eagerly checkpoint so every consumer reads materialized blocks — a
     # lazy persist lets parallel stages of the SAME job race and recompute
     # the whole scan→norm→signature pipeline per consumer. (Exact mode
-    # checkpointed them above, overlapped with the shingle side.)
+    # checkpointed them above, overlapped with the shingle side.) The
+    # signature count rides that checkpoint (observed, no count job).
     if verify != "exact":
-        sigs = minhash_signatures(normed, num_perm, shingle_k).localCheckpoint(
-            eager=True
-        )
+        sig_rows = RowCount(minhash_signatures(normed, num_perm, shingle_k))
+        sigs = sig_rows.frame.localCheckpoint(eager=True)
 
     # Driver fast path (r15, EXACT mode only): banding + candidate
     # enumeration + exact intersection counts in numpy on one Arrow grab
@@ -559,7 +560,7 @@ def minhash_lsh_pairs(
     # at sf0.1), while exact mode's per-pair set intersections collapse
     # into one driver GEMM (6.0 → 2.6 s measured, see
     # OPTIMIZATION_r15.md).
-    n_sig = stats["n"] if verify == "exact" else sigs.count()
+    n_sig = stats["n"] if verify == "exact" else sig_rows.count()
     if (
         verify == "exact"
         and n_sig <= _DRIVER_PAIR_MAX_DOCS
@@ -642,10 +643,10 @@ def minhash_lsh_pairs(
     # estimate mode: verification is num_perm integer comparisons per pair
     # (zip_with stays JVM-side). The signature frame is num_perm longs per
     # doc: broadcast both join sides while small so the (much larger)
-    # candidate pair set never shuffles; sigs is checkpointed, so the
-    # count is a metadata-cheap job. A pandas-UDF verifier was measured
-    # 2-3× SLOWER than the interpreted zip_with here (Arrow transfer of
-    # both signature arrays per pair dominates).
+    # candidate pair set never shuffles (n_sig rode the signature
+    # checkpoint). A pandas-UDF verifier was measured 2-3× SLOWER than
+    # the interpreted zip_with here (Arrow transfer of both signature
+    # arrays per pair dominates).
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     if n_sig <= _BROADCAST_SIG_LIMIT:
@@ -812,10 +813,10 @@ def simhash_pairs(
     The signature frame (two longs per doc) is eagerly checkpointed: the
     band self-join reads it twice, the 64-vote aggregation behind it is
     the dominant cost, and a lazy persist lets parallel stages of the
-    same job race and recompute it per consumer."""
-    sigs = simhash_frame(df, text_col, id_col, hash_fn=hash_fn).localCheckpoint(
-        eager=True
-    )
+    same job race and recompute it per consumer. Its row count rides the
+    checkpoint (observed, no count job)."""
+    sig_rows = RowCount(simhash_frame(df, text_col, id_col, hash_fn=hash_fn))
+    sigs = sig_rows.frame.localCheckpoint(eager=True)
     band_w = 15 if hash_fn == "md5" else 16
     # Driver fast path (r15): for a driver-small signature frame the
     # band self-join + XOR/bit_count verify is pure job latency —
@@ -823,7 +824,7 @@ def simhash_pairs(
     # numpy on one Arrow grab (bit-identical: integer-only arithmetic,
     # same hot-bucket drop, lockstep-tested). Oversized inputs keep the
     # distributed self-join unchanged.
-    if sigs.count() <= _DRIVER_PAIR_MAX_DOCS:
+    if sig_rows.count() <= _DRIVER_PAIR_MAX_DOCS:
         fast = _driver_simhash_pairs(
             df.sparkSession,
             sigs,

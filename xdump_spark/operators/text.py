@@ -253,12 +253,6 @@ def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, _PUNCT, ""))
 
 
-def stopword_hits(text: Column, words: list[str]) -> Column:
-    """Number of token OCCURRENCES that are in ``words`` (not distinct)."""
-    lit_arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(tokens(text), lambda x: F.array_contains(lit_arr, x)))
-
-
 def quality_frame(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document quality metrics: char/token counts, mean token length,
     punctuation ratio, English-stopword ratio.

@@ -50,8 +50,13 @@ optional via its parameter so the composition degrades to any subset.
 Scale: the composition inherits each stage's posture — the only
 shuffles are span dedup's hash groupBy/join, sampling-independent
 stratification (none), the shuffle sort, and the sink's bucketed
-repartition. Stage counts (the audit) each add one count job; pass
-``audit=False`` to skip them on production runs.
+repartition. The audit costs one count job, not one per stage: each
+stage's output carries an Observation (xdump_spark/observed.py), and
+ONE barrier count of the last stage before the shuffle sort fills them
+all; the split counts ride the sink writes. A build that runs Spark jobs
+of its own (fuzzy/semantic/store dedup, the compression gate, DSIR,
+mixture estimation) and each checkpoint write take one barrier more
+before them. ``audit=False`` skips even that.
 """
 
 from __future__ import annotations
@@ -62,6 +67,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xdump_spark.checkpointing import frame_fingerprint as _frame_fp
+from xdump_spark.observed import RowCount
 from xdump_spark.operators.cleaning import (
     deterministic_shuffle,
     normalize_text,
@@ -285,8 +291,13 @@ def prepare_training_corpus(
       ``"strip"`` (GPT-3 App. C: only the overlapped >= span_k-token
       spans are cut, the doc survives if it still clears
       ``min_tokens``).
-    - The audit counts docs after each stage — each entry is one count
-      job over a narrow plan; disable on production runs.
+    - The audit counts docs after each stage. The counts ride
+      Observations: one barrier count before the shuffle sort fills
+      every stage's, plus one before each build that runs Spark jobs
+      and each checkpoint write; the split counts ride the sink writes
+      (one count job per split without a sink). A stage whose metric
+      the plan dropped (an emptied join side) is counted on its own.
+      ``audit=False`` skips all of it.
     - ``checkpoint_dir`` makes the run RESTART-SAFE (see
       ``xdump_spark/checkpointing.py``): each named stage's output is
       materialized as parquet with a chained configuration fingerprint,
@@ -354,28 +365,69 @@ def prepare_training_corpus(
             resume=resume,
         )
 
-    def run(stage, ck, build, extra=None, chain_only=False):
+    # Audited stage outputs carry a RowCount (xdump_spark/observed.py)
+    # that the next full pass over the chain fills; ``pending`` holds
+    # the ones not yet read, oldest first.
+    pending: list = []
+    sc = docs.sparkSession.sparkContext
+
+    def settle():
+        """Read every pending stage count with ONE barrier count of the
+        newest pending frame: its plan holds every pending stage beneath
+        it and no limit or range sort, so each Observation sees exactly
+        one full pass. Runs before any build that runs Spark jobs, before
+        a checkpoint, and before the shuffle sort."""
+        if not pending:
+            return
+        stage, rc = pending.pop()
+        counts[stage] = rc.frame.count()
+        for stage, rc in pending:
+            counts[stage] = rc.count()
+        pending.clear()
+
+    def last_job():
+        """The newest Spark job id of this thread's job group."""
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        return max(sc.statusTracker().getJobIdsForGroup(group), default=-1)
+
+    def run(stage, ck, build, extra=None, chain_only=False, eager=False):
         """Run one stage: chain its parameters ``ck`` into the checkpoint
         fingerprint, load it from a valid checkpoint or call ``build``,
-        and record its audit count. ``build`` is a thunk, so a checkpoint
+        and audit its row count. ``build`` is a thunk, so a checkpoint
         hit skips construction and any driver jobs in it (DSIR fit,
-        mixture-rate estimation). ``ck=None`` marks the input (audited,
-        never chained); ``chain_only`` a stage that chains but neither
-        checkpoints nor audits. ``extra``, a dict the build fills,
-        round-trips through the manifest to resumed runs."""
+        mixture-rate estimation); ``eager`` marks a build that runs
+        such jobs, which settles the pending counts first. ``ck=None``
+        marks the input (audited, never chained); ``chain_only`` a stage
+        that chains but neither checkpoints nor audits. ``extra``, a
+        dict the build fills, round-trips through the manifest to
+        resumed runs."""
         chained = ckpt is not None and ck is not None
         audited = audit and not chain_only
         if chained and not chain_only and ckpt.wants(stage):
+            settle()
             df, n, x = ckpt.stage(stage, ck, build, extra)
             if extra is not None:
                 extra.update(x)
-        else:
-            if chained:
-                ckpt.advance(stage, ck)
-            df = build()
-            n = df.count() if audited else None
+            if audited:
+                counts[stage] = n
+            return df
+        if chained:
+            ckpt.advance(stage, ck)
+        if eager:
+            settle()
+        mark = last_job() if pending else None
+        df = build()
+        if mark is not None and last_job() != mark:
+            # an undeclared eager build: its jobs may have filled the
+            # pending Observations with partial counts — count each
+            for s, rc in pending:
+                counts[s] = rc.frame.count()
+            pending.clear()
         if audited:
-            counts[stage] = n
+            counts[stage] = None  # keeps the stage's place in the audit
+            rc = RowCount(df)
+            pending.append((stage, rc))
+            df = rc.frame
         return df
 
     cur = run("input", None, lambda: docs)
@@ -491,7 +543,11 @@ def prepare_training_corpus(
         ck.update(doc_dedup=doc_dedup, id_col=id_col)
         _, once, increment, replay = _DEDUP_MODES[doc_dedup]
         if dedup_store is None:
-            cur = run("doc_deduped", ck, lambda: once(cur, ck))
+            # fuzzy and semantic builds run probes and checkpoints
+            cur = run(
+                "doc_deduped", ck, lambda: once(cur, ck),
+                eager=doc_dedup != "exact",
+            )
         else:
             # Production increments: dedup TODAY'S batch against the
             # store's history of every previously-accepted doc. The
@@ -525,7 +581,7 @@ def prepare_training_corpus(
                 live.append(commit)
                 return _keep_ids(cur, accepted, "id", id_col)
 
-            cur = run("doc_deduped", ck, build)
+            cur = run("doc_deduped", ck, build, eager=True)
             commit_key = ckpt.chain if ckpt is not None else None
             dd_frame = cur
 
@@ -588,6 +644,7 @@ def prepare_training_corpus(
                 ),
                 id_col, id_col,
             ),
+            eager=True,  # the ratio frame is an eager checkpoint
         )
 
     if audio_gate is not None:
@@ -685,6 +742,7 @@ def prepare_training_corpus(
                 .select(id_col),
                 id_col, "left_anti",
             ),
+            eager=True,  # lm_score sizes its input with an RDD probe
         )
 
     if dsir_target is not None:
@@ -719,6 +777,7 @@ def prepare_training_corpus(
                 "text_col": text_col,
             },
             _build_dsir,
+            eager=True,
         )
 
     if sample_rates is not None:
@@ -793,9 +852,13 @@ def prepare_training_corpus(
             {"target": target_mixture, "mixture_col": mixture_col},
             _build_mixture,
             extra=mix,
+            eager=True,
         )
         mixture_rates = mix.get("mixture_rates")
 
+    # the audit barrier: the shuffle's range sort would run every
+    # pending stage twice (sampling pass + sort), so they settle first
+    settle()
     cur = deterministic_shuffle(cur, seed=shuffle_seed, id_col=id_col)
 
     # deterministic train/val/test split (cleaning.hash_split): membership
@@ -812,8 +875,9 @@ def prepare_training_corpus(
         split_frames = hash_split(cur, splits, seed=split_seed, id_col=id_col)
         pack_input = split_frames[next(iter(splits))]
         if audit:
-            for name, f in split_frames.items():
-                counts[f"split_{name}"] = f.count()
+            # filled after the sink writes (or counted, without a sink)
+            for name in split_frames:
+                counts[f"split_{name}"] = None
 
     sequences = None
     vocab = None
@@ -871,16 +935,31 @@ def prepare_training_corpus(
         from xdump_spark.sources.corpus_sink import write_corpus
 
         if split_frames is not None:
-            # one sized-parquet dir per split under out_dir
+            # one sized-parquet dir per split under out_dir; the writes
+            # are independent jobs, so they overlap. Each split's count
+            # rides its write: splits sit above the sort, read once.
             from xdump_spark import fsutil
+            from xdump_spark.operators.concurrency import overlap
 
-            for name, f in split_frames.items():
-                write_corpus(
-                    f, fsutil.join(out_dir, name),
+            frames = split_frames
+            if audit:
+                observed = {n: RowCount(f) for n, f in split_frames.items()}
+                frames = {n: rc.frame for n, rc in observed.items()}
+            overlap(*(
+                lambda n=n, f=f: write_corpus(
+                    f, fsutil.join(out_dir, n),
                     partition_by=partition_by, mode=out_mode,
                 )
+                for n, f in frames.items()
+            ))
+            if audit:
+                for n, rc in observed.items():
+                    counts[f"split_{n}"] = rc.count()
         else:
             write_corpus(cur, out_dir, partition_by=partition_by, mode=out_mode)
+    elif audit and split_frames is not None:
+        for name, f in split_frames.items():
+            counts[f"split_{name}"] = f.count()
 
     card = None
     if make_card:
@@ -1148,9 +1227,14 @@ def prepare_rag_corpus(
     )
 
     spark = docs.sparkSession
+    # Every count here rides an eager checkpoint the ingest takes
+    # anyway: the docs count the chunk+embed checkpoint (only that pass
+    # reads the observed frame — the forget below gets the plain one),
+    # the chunk and survivor counts their own checkpoints.
     counts: dict = {}
     if audit:
-        counts["docs"] = docs.count()
+        counts["docs"] = None  # filled by the chunk+embed checkpoint
+        doc_rows = RowCount(docs)
 
     if replace:
         # one-call replace/upsert (docstring): forget the incoming doc
@@ -1163,7 +1247,8 @@ def prepare_rag_corpus(
         )
 
     chunks = chunk_tokens(
-        docs, max_tokens=max_tokens, overlap=overlap,
+        doc_rows.frame if audit else docs, max_tokens=max_tokens,
+        overlap=overlap,
         text_col=text_col, id_col=id_col,
     ).select(
         F.concat_ws(
@@ -1185,20 +1270,27 @@ def prepare_rag_corpus(
 
     embedded = chunks.withColumn(
         vec_col, hash_embed_col("text", dim=hash_embed_dim)
-    ).localCheckpoint(eager=True)  # chunk+embed feeds dedup AND survivors
+    )
     if audit:
-        counts["chunks"] = embedded.count()
+        chunk_rows = RowCount(embedded)
+        embedded = chunk_rows.frame
+    # chunk+embed feeds dedup AND survivors
+    embedded = embedded.localCheckpoint(eager=True)
+    if audit:
+        counts["docs"] = doc_rows.count()
+        counts["chunks"] = chunk_rows.count()
 
     res = incremental_semantic_dedup(
         embedded, store, threshold=threshold, id_col="chunk_id",
         vec_col=vec_col, n_cells=n_cells, defer_commit=True,
         **(semantic_kwargs or {}),
     )
-    survivors = embedded.drop(vec_col).join(
+    surv_rows = RowCount(embedded.drop(vec_col).join(
         res.accepted.withColumnRenamed("id", "chunk_id"), "chunk_id",
         "left_semi",
-    ).localCheckpoint(eager=True)
-    n_surv = survivors.count()
+    ))
+    survivors = surv_rows.frame.localCheckpoint(eager=True)
+    n_surv = surv_rows.count()  # exact: the checkpoint has run
     counts["accepted_chunks"] = n_surv
 
     if out_dir is not None:

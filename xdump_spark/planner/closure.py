@@ -684,8 +684,3 @@ def recursive_ancestors_doubling(
     if reached.count() <= BROADCAST_KEY_LIMIT:
         keys = F.broadcast(keys)
     return base.join(keys, on=key, how="left_semi")
-
-
-def closure_summary(result: dict[str, DataFrame]) -> list[tuple[str, int]]:
-    """(table, selected-row-count) pairs, sorted by table name."""
-    return sorted((name, df.count()) for name, df in result.items())
