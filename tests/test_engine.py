@@ -3,6 +3,7 @@
 dump a known fixture, assert archive members and row sets, load back,
 compare contents and sequence state."""
 
+import json
 import zipfile
 
 import pytest
@@ -13,8 +14,9 @@ from xdump_spark.archive import (
     parse_csv_bytes,
     rows_to_csv,
 )
-from xdump_spark.engine import SparkDumpEngine, toposort_tables
-from xdump_spark.catalog import ForeignKey
+from xdump_spark.engine import SparkDumpEngine, sequence_state, toposort_tables
+from xdump_spark.catalog import Catalog, ForeignKey
+from xdump_spark.planner.closure import compute_closure
 
 from .conftest import ids
 
@@ -209,6 +211,24 @@ def test_roundtrip_decimal_and_binary(tmp_path, spark):
     got = {tuple(r) for r in loaded.frames["items"].collect()}
     assert got == set(rows)
     assert loaded.frames["items"].schema == st
+
+
+def test_roundtrip_byte_and_short_columns(tmp_path, spark):
+    """tinyint/smallint cells load back as ints (tinyint cells used to stay
+    CSV strings, which createDataFrame rejected)."""
+    from pyspark.sql import types as T
+
+    st = T.StructType([
+        T.StructField("id", T.ShortType(), False),
+        T.StructField("flag", T.ByteType(), True),
+    ])
+    rows = [(1, -128), (2, None), (300, 127)]
+    cat = Catalog({"small": spark.createDataFrame(rows, st)}, [])
+    out = str(tmp_path / "small.zip")
+    SparkDumpEngine(spark, cat).dump(out, full_tables=["small"])
+    loaded = SparkDumpEngine(spark, cat).load(out).frames["small"]
+    assert loaded.schema == st
+    assert sorted(tuple(r) for r in loaded.collect()) == rows
 
 
 def test_sequence_state_skips_non_numeric_keys(spark):
@@ -449,6 +469,17 @@ def test_dump_enforces_small_selection_contract(tmp_path, engine):
     with pytest.raises(ValueError, match="dump_distributed"):
         engine.dump(str(big), full_tables=["groups"], max_driver_rows=1)
     assert not big.exists()
+    # The per-table collects run together; here the oversized table
+    # (employees, 5 rows) is not the first one collected (groups, 2 rows,
+    # fits). Its error still surfaces, nothing is written, and no job of
+    # the dump outlives the call.
+    seed = {"employees": engine.catalog.tables["employees"]}
+    assert list(compute_closure(engine.catalog, ("groups",), seed)) == ["groups", "employees"]
+    mid = tmp_path / "mid.zip"
+    with pytest.raises(ValueError, match=r"table 'employees' exceeds max_driver_rows=3;"):
+        engine.dump(str(mid), full_tables=["groups"], partial_tables=seed, max_driver_rows=3)
+    assert not mid.exists()
+    assert list(engine.spark.sparkContext.statusTracker().getActiveJobsIds()) == []
     # opting out restores the old behavior
     out = str(tmp_path / "ok.zip")
     engine.dump(out, full_tables=["groups"], max_driver_rows=None)
@@ -477,3 +508,140 @@ def test_parquet_db_sequence_manifest_and_allocation(tmp_path, spark, engine):
     assert db.allocate_keys("employees") == [8]          # persisted advance
     assert db.sequences()["employees"] == 8
     assert db.allocate_keys("tickets") == [1]            # unknown table starts fresh
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs: the delta of the next job id
+    in the status store (job ids are dense and increasing within an
+    application)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def next_job_id() -> int:
+        sc.listenerBus().waitUntilEmpty(30_000)
+        jobs = sc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1) + 1
+
+    first = next_job_id()
+    fn()
+    return next_job_id() - first
+
+
+def _int_field(name):
+    from pyspark.sql import types as T
+
+    return T.StructField(name, T.IntegerType(), False)
+
+
+def test_dump_sequences_from_collected_rows(tmp_path, spark):
+    """A data dump takes sequence state from the rows it collected, at no
+    Spark job; it must equal sequence_state on the same selections, and
+    sequences.json must be byte-identical to what sequence_state gives:
+    exact Python ints, sorted table order, no entry for a string key, an
+    all-null key or an empty selection."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from xdump_spark.archive import SEQUENCES_MEMBER
+
+    def table(dt, values):
+        return spark.createDataFrame(
+            [(v, i) for i, v in enumerate(values)],
+            T.StructType([T.StructField("id", dt, True), _int_field("n")]),
+        )
+
+    tables = {
+        "t_int": table(T.IntegerType(), [3, 9, 1]),
+        "t_long": table(T.LongType(), [2**40, 5]),
+        "t_dec10": table(T.DecimalType(10, 0), [Decimal(7), Decimal(42)]),
+        "t_dec38": table(T.DecimalType(38, 0), [Decimal(2**70), Decimal(1)]),
+        "t_nulls": table(T.IntegerType(), [None, 3, None]),
+        "t_all_null": table(T.IntegerType(), [None]),
+        "t_str": table(T.StringType(), ["ZX-991", "AA-002"]),
+        "t_empty": table(T.IntegerType(), []),
+    }
+    cat = Catalog(tables, [], primary_keys={t: "id" for t in tables})
+    out = str(tmp_path / "seq.zip")
+    SparkDumpEngine(spark, cat).dump(out, full_tables=sorted(tables, reverse=True))
+
+    expected = {"t_dec10": 42, "t_dec38": 2**70, "t_int": 9, "t_long": 2**40, "t_nulls": 3}
+    reference = sequence_state(tables, cat)
+    assert reference == expected
+    with zipfile.ZipFile(out) as zf:
+        raw = zf.read(SEQUENCES_MEMBER)
+    assert raw == json.dumps(reference, indent=2).encode()
+    dumped = DumpArchive(out).read_sequences()
+    assert dumped == expected and all(type(v) is int for v in dumped.values())
+
+
+def test_projected_seed_without_declared_key_dumps(tmp_path, spark, engine):
+    """A seed of an unreferenced table may project columns; when it leaves
+    out the table's declared primary key, that table has no sequence state
+    (it used to fail the dump with a missing-key error)."""
+    out = str(tmp_path / "proj.zip")
+    tickets = engine.catalog.tables["tickets"]
+    counts = engine.dump(out, partial_tables={"tickets": tickets.select("author_id", "subject")})
+    assert counts["tickets"] == 5
+    assert DumpArchive(out).read_sequences() == {"employees": 3, "groups": 1}
+
+def test_dump_load_replay_job_budget(tmp_path, spark, engine):
+    """dump → load → write_parquet_db on the fixture catalog: sequence
+    state rides the collected rows, and the loaded frames are Arrow-built
+    local relations, so the flow runs at most 9 Spark jobs (13 when
+    sequence state re-ran every closure plan)."""
+    out = str(tmp_path / "dump.zip")
+
+    def flow():
+        engine.dump(
+            out,
+            full_tables=["groups"],
+            partial_tables={"employees": "SELECT * FROM employees ORDER BY id DESC LIMIT 2"},
+        )
+        engine.load(out).write_parquet_db(str(tmp_path / "db"))
+
+    assert _jobs_submitted(spark, flow) <= 9
+
+
+def test_timestamp_roundtrip_under_non_utc_local_zone(tmp_path, spark):
+    """collect() hands TimestampType values out as naive wall-clock times
+    in the process's local zone, and the archive stores them so. The load
+    must read them back in that zone, not in the session's (UTC): under
+    America/New_York a naive Arrow load turned 06:30 into 01:30.
+    TimestampNTZ and Date carry no zone."""
+    import os
+    import time
+    from datetime import date, datetime
+
+    from pyspark.sql import types as T
+
+    st = T.StructType([
+        _int_field("id"),
+        T.StructField("ts", T.TimestampType(), True),
+        T.StructField("ntz", T.TimestampNTZType(), True),
+        T.StructField("d", T.DateType(), True),
+    ])
+    rows = [
+        (1, datetime(2024, 1, 15, 6, 30), datetime(2024, 1, 15, 6, 30), date(2024, 1, 15)),
+        (2, datetime(2024, 7, 1, 23, 45, 1, 250000), datetime(2024, 7, 1, 23, 45, 1, 250000),
+         date(2024, 7, 1)),
+        (3, None, None, None),
+    ]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        cat = Catalog({"events": spark.createDataFrame(rows, st)}, [])
+        eng = SparkDumpEngine(spark, cat)
+        out = str(tmp_path / "ts.zip")
+        eng.dump(out, full_tables=["events"])
+        csv = DumpArchive(out).read_data()["events"].decode()
+        assert "1,2024-01-15 06:30:00,2024-01-15 06:30:00,2024-01-15" in csv
+        loaded = eng.load(out).frames["events"]
+        assert loaded.schema == st
+        assert sorted(tuple(r) for r in loaded.collect()) == rows
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()

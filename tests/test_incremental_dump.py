@@ -180,3 +180,26 @@ def test_incremental_anti_join_fallback_without_sequence(tmp_path, spark, engine
     assert counts == {"groups": 1}
     loaded = SparkDumpEngine(spark, grown.__class__({})).load(delta_zip)
     assert ids(loaded.frames["groups"]) == {3}
+
+
+def test_incremental_schema_only_lists_changed_tables(tmp_path, spark, engine, employees_catalog):
+    """With dump_data=False nothing is collected, so the delta's tables are
+    probed for rows: the schema and sequence state name only the tables
+    that grew."""
+    base_zip = str(tmp_path / "base.zip")
+    engine.dump(base_zip, full_tables=["groups", "tickets"])
+    grown = employees_catalog.with_table(
+        "groups",
+        employees_catalog.tables["groups"].unionByName(
+            spark.createDataFrame([(3, "Guest")], employees_catalog.tables["groups"].schema)
+        ),
+    )
+    delta_zip = str(tmp_path / "delta.zip")
+    counts = SparkDumpEngine(spark, grown).dump_incremental(
+        delta_zip, since=base_zip, full_tables=["groups", "tickets"], dump_data=False
+    )
+    assert counts == {}
+    arc = DumpArchive(delta_zip)
+    assert sorted(arc.read_schema()["tables"]) == ["groups"]
+    assert arc.read_sequences() == {"groups": 3}
+    assert arc.read_data() == {}

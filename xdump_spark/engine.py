@@ -1,9 +1,12 @@
 """Dump/load orchestration — the reference's top-level ``backend.dump`` /
 ``backend.load`` lifecycle (xdump/base.py:87-106, 220-250) on Spark.
 
-dump(): validate → FK-closure over seeds → schema manifest + sequence
-state → per-table CSV into a zip. load(): schema manifest (optional) →
-CSV → typed DataFrames → write in FK-topological order.
+dump(): validate → FK-closure over seeds → per-table collect, CSV encode
+and max serial key (the sequence state), the tables' jobs submitted
+together → schema manifest + sequences + CSVs into a zip. load(): schema
+manifest (optional) → CSV → typed Arrow tables → DataFrames (JVM local
+relations) → replay: parquet tables written together, JDBC tables one by
+one in FK-topological order.
 
 The driver-side CSV collect is intentional for the dump path: partial
 dumps are small by construction (the reference streams straight into a
@@ -13,14 +16,22 @@ writes spark-native partitioned parquet/CSV instead.
 
 from __future__ import annotations
 
+import json
 import os
+from dataclasses import dataclass
+from datetime import date, datetime, timezone
+from decimal import Decimal
+
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from xdump_spark.archive import DumpArchive, rows_to_csv, parse_csv_bytes
 from xdump_spark.catalog import Catalog, ForeignKey
+from xdump_spark.operators.concurrency import overlap
 from xdump_spark.planner.closure import compute_closure, validate_tables
 from xdump_spark.timing import log_time, logger
 
@@ -49,30 +60,38 @@ def toposort_tables(tables: list[str], fks: list[ForeignKey]) -> list[str]:
     return out
 
 
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _serial_key(catalog: Catalog, table: str, schema: T.StructType) -> str | None:
+    """The table's primary key when it carries a counter to restore:
+    integral, or decimal with scale 0. String/uuid keys carry no counter.
+    JDBC sources commonly surface serial keys as DecimalType(p, 0)
+    (PostgreSQL numeric, Oracle NUMBER(10,0)) — those ARE integral."""
+    pk = catalog.primary_key(table)
+    if pk is None or pk not in schema.names:
+        return None
+    dt = schema[pk].dataType
+    if isinstance(dt, _INTEGRAL) or (isinstance(dt, T.DecimalType) and dt.scale == 0):
+        return pk
+    return None
+
+
 def sequence_state(selections: dict[str, DataFrame], catalog: Catalog) -> dict[str, int]:
     """Per-table max serial-key — the analog of dumping PostgreSQL
     sequence positions so a loaded database continues numbering correctly
     (reference: xdump/postgresql.py:136-146). Covers LEAF tables through
     the catalog's explicit primary keys.
 
-    All per-table max aggregates run as ONE unioned Spark job (each leg is
-    a map-side max over its own scan) instead of a driver loop of one
-    collect per table."""
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    Only a schema-only dump (``dump_data=False``) calls this: a data dump
+    takes the same maxima from the rows it already collected, at no Spark
+    job. Here each table's max is an aggregate over its closure plan, so
+    every selection's plan runs again — one Spark job or more per table,
+    even though the legs are unioned into one collect."""
     parts: list[DataFrame] = []
     for table, df in sorted(selections.items()):
-        pk = catalog.primary_key(table)
+        pk = _serial_key(catalog, table, df.schema)
         if pk is None:
-            continue
-        dt = df.schema[pk].dataType
-        # Sequence state only makes sense for serial integer keys;
-        # string/uuid keys carry no counter to restore. JDBC sources
-        # commonly surface serial keys as DecimalType(p, 0) (PostgreSQL
-        # numeric, Oracle NUMBER(10,0)) — those ARE integral.
-        if not (
-            isinstance(dt, integral)
-            or (isinstance(dt, T.DecimalType) and dt.scale == 0)
-        ):
             continue
         parts.append(
             df.agg(
@@ -93,6 +112,15 @@ def sequence_state(selections: dict[str, DataFrame], catalog: Catalog) -> dict[s
         for r in merged.collect()
         if r["max_key"] is not None
     }
+
+
+@dataclass
+class _Exported:
+    """One table's export: only these outlive the collected rows."""
+
+    csv: bytes
+    rows: int
+    max_key: int | None       # the table's sequence state, None if it has none
 
 
 class SparkDumpEngine:
@@ -130,9 +158,15 @@ class SparkDumpEngine:
         ``max_driver_rows``: each table is collected through
         ``limit(max_driver_rows + 1)``, so the driver never holds more
         than that many rows of one table, and a table that fills the
-        limit raises before any archive is written. Use
-        ``dump_distributed`` for large selections, or pass
-        ``max_driver_rows=None`` to opt out."""
+        limit raises before any archive is written. The tables are
+        collected concurrently, so at most that many rows per table are
+        held at once. Use ``dump_distributed`` for large selections, or
+        pass ``max_driver_rows=None`` to opt out.
+
+        Sequence state (``dump_schema``) is each table's max serial key,
+        taken from the collected rows at no Spark job; with
+        ``dump_data=False`` nothing is collected and ``sequence_state``
+        runs instead."""
         with log_time("total dump"):
             return self._dump(
                 filename, full_tables, partial_tables, dump_schema, dump_data,
@@ -144,34 +178,61 @@ class SparkDumpEngine:
         compression, max_driver_rows=None,
     ) -> dict[str, int]:
         selections = self._select(full_tables, partial_tables)
-        return self._export(
+        return self._write_archive(
             filename, selections, dump_schema, dump_data, compression, max_driver_rows
         )
 
-    def _export(
+    def _export(self, table: str, df: DataFrame, max_driver_rows) -> _Exported:
+        """Collect one table, check ``max_driver_rows``, encode its CSV
+        and take its max serial key from the collected rows. ``collect()``,
+        not ``toArrow()``: Arrow hands TimestampType back tz-aware, where
+        the archive's CSV holds the naive local wall-clock values that
+        ``collect()`` gives."""
+        with log_time(f"export {table}", level=10):
+            cols = df.columns
+            if max_driver_rows is not None:
+                df = df.limit(max_driver_rows + 1)
+            rows = df.collect()
+        if max_driver_rows is not None and len(rows) > max_driver_rows:
+            raise ValueError(
+                f"dump() collects to the driver and the selection for "
+                f"table {table!r} exceeds max_driver_rows="
+                f"{max_driver_rows}; use dump_distributed() for large "
+                "selections (executors write partitioned parquet/CSV) "
+                "or raise max_driver_rows explicitly"
+            )
+        logger.debug("%s: %d rows", table, len(rows))
+        pk = _serial_key(self.catalog, table, df.schema)
+        max_key = None
+        if pk is not None:
+            i = cols.index(pk)
+            max_key = max((r[i] for r in rows if r[i] is not None), default=None)
+        return _Exported(
+            rows_to_csv(cols, rows),
+            len(rows),
+            None if max_key is None else int(max_key),   # exact for decimal(38,0)
+        )
+
+    def _write_archive(
         self, filename, selections, dump_schema, dump_data, compression,
-        max_driver_rows=None,
+        max_driver_rows=None, omit_empty=False,
     ) -> dict[str, int]:
-        data: dict[str, bytes] = {}
-        counts: dict[str, int] = {}
+        """``omit_empty``: leave out every table that collected no row —
+        from the data, the schema and the sequence state (a delta dump's
+        unchanged tables)."""
+        exported: dict[str, _Exported] = {}
         if dump_data:
-            for table, df in selections.items():
-                with log_time(f"export {table}", level=10):
-                    cols = df.columns
-                    if max_driver_rows is not None:
-                        df = df.limit(max_driver_rows + 1)
-                    rows = [tuple(r) for r in df.collect()]
-                if max_driver_rows is not None and len(rows) > max_driver_rows:
-                    raise ValueError(
-                        f"dump() collects to the driver and the selection for "
-                        f"table {table!r} exceeds max_driver_rows="
-                        f"{max_driver_rows}; use dump_distributed() for large "
-                        "selections (executors write partitioned parquet/CSV) "
-                        "or raise max_driver_rows explicitly"
-                    )
-                counts[table] = len(rows)
-                data[table] = rows_to_csv(cols, rows)
-                logger.debug("%s: %d rows", table, counts[table])
+            # The per-table jobs are tiny and independent: submit them
+            # together. A table over max_driver_rows raises out of
+            # overlap() after its siblings' jobs are cancelled and have
+            # stopped, before any archive is written.
+            exported = dict(zip(selections, overlap(*[
+                lambda t=t, df=df: self._export(t, df, max_driver_rows)
+                for t, df in selections.items()
+            ])))
+            if omit_empty:
+                exported = {t: e for t, e in exported.items() if e.rows}
+                selections = {t: selections[t] for t in exported}
         schema = None
         sequences = None
         if dump_schema:
@@ -186,9 +247,17 @@ class SparkDumpEngine:
                     if fk.table in selections and fk.foreign_table in selections
                 ],
             }
-            sequences = sequence_state(selections, self.catalog)
+            if dump_data:
+                sequences = {
+                    t: exported[t].max_key
+                    for t in sorted(exported)
+                    if exported[t].max_key is not None
+                }
+            else:
+                sequences = sequence_state(selections, self.catalog)
+        data = {t: e.csv for t, e in exported.items()}
         DumpArchive(filename).write(schema, sequences, data, compression)
-        return counts
+        return {t: e.rows for t, e in exported.items()}
 
     def dump_incremental(
         self,
@@ -239,9 +308,12 @@ class SparkDumpEngine:
                     )
                 else:
                     delta[table] = df
-        delta = {t: d for t, d in delta.items() if d.limit(1).count() > 0}
-        return self._export(
-            filename, delta, dump_schema, dump_data, compression, max_driver_rows
+        if not dump_data:
+            # no collected rows to tell an empty delta by
+            delta = {t: d for t, d in delta.items() if d.limit(1).count() > 0}
+        return self._write_archive(
+            filename, delta, dump_schema, dump_data, compression, max_driver_rows,
+            omit_empty=True,
         )
 
     def dump_distributed(
@@ -322,14 +394,9 @@ class SparkDumpEngine:
             header, rows = parse_csv_bytes(csv_bytes)
             if schema and table in schema["tables"]:
                 st = T.StructType.fromJson(schema["tables"][table]["spark_schema"])
-                typed_rows = [
-                    tuple(_coerce(v, st[c].dataType) for v, c in zip(row, header))
-                    for row in rows
-                ]
-                frames[table] = self.spark.createDataFrame(typed_rows, st)
             else:
                 st = T.StructType([T.StructField(c, T.StringType(), True) for c in header])
-                frames[table] = self.spark.createDataFrame([tuple(r) for r in rows], st)
+            frames[table] = self._frame(header, rows, st)
         fks = (
             [ForeignKey.from_dict(d) for d in schema.get("foreign_keys", [])]
             if schema
@@ -337,62 +404,82 @@ class SparkDumpEngine:
         )
         return LoadedDump(frames, fks, sequences)
 
+    def _frame(self, header: list[str], rows: list[list], st: T.StructType) -> DataFrame:
+        """Typed frame from parsed CSV cells, sent to the JVM as an Arrow
+        table with ``st``'s Arrow types: a JVM LocalRelation, so the
+        replay's writes read it without Python workers (a list of tuples
+        would be a LogicalRDD of pickled rows)."""
+        arrow_schema = to_arrow_schema(st)
+        columns = list(zip(*rows)) if rows else [()] * len(header)
+        arrays = []
+        for c, cells, field in zip(header, columns, arrow_schema):
+            parse = _parser(st[c].dataType)
+            arrays.append(
+                pa.array([None if v is None else parse(v) for v in cells], type=field.type)
+            )
+        return self.spark.createDataFrame(
+            pa.Table.from_arrays(arrays, schema=arrow_schema), st
+        )
 
-def _coerce(v: str | None, dt: T.DataType):
-    if v is None:
-        return None
+
+def _local_timestamp(v: str) -> datetime:
+    """A TimestampType cell: ``collect()`` hands these out as naive
+    wall-clock times in the process's local zone, and that is how the
+    archive holds them. Pinned to UTC here: the Arrow path would read a
+    naive value in the session time zone instead of the local one."""
+    return datetime.fromisoformat(v).astimezone(timezone.utc)
+
+
+def _binary(v: str) -> bytes:
+    # format_csv_value writes bytes PG-COPY-style as \x<hex>
+    if v.startswith("\\x"):
+        return bytes.fromhex(v[2:])
+    return v.encode("utf-8")
+
+
+def _parser(dt: T.DataType):
+    """The parser of one non-null CSV cell of type ``dt``."""
     if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
         # complex cells are embedded as JSON by format_csv_value
-        import json
-
-        return _from_jsonable(json.loads(v), dt)
-    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType)):
-        return int(v)
+        return lambda v: _from_jsonable(json.loads(v), dt)
+    if isinstance(dt, _INTEGRAL):
+        return int
     if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return float(v)
+        return float
     if isinstance(dt, T.BooleanType):
-        return v == "true"
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        from datetime import datetime
-
-        return datetime.fromisoformat(v)
+        return lambda v: v == "true"
+    if isinstance(dt, T.TimestampType):
+        return _local_timestamp
+    if isinstance(dt, T.TimestampNTZType):
+        return datetime.fromisoformat
     if isinstance(dt, T.DateType):
-        from datetime import date
-
-        return date.fromisoformat(v)
+        return date.fromisoformat
     if isinstance(dt, T.DecimalType):
-        from decimal import Decimal
-
-        return Decimal(v)
+        return Decimal
     if isinstance(dt, T.BinaryType):
-        # format_csv_value writes bytes PG-COPY-style as \x<hex>
-        if v.startswith("\\x"):
-            return bytes.fromhex(v[2:])
-        return v.encode("utf-8")
-    return v
+        return _binary
+    return str
 
 
 def _from_jsonable(o, dt: T.DataType):
     """Type a JSON-decoded complex cell back to what createDataFrame
     expects for ``dt`` (inverse of archive._to_jsonable): containers
     recurse; scalar leaves arrive either natively typed from JSON
-    (int/float/bool) or as the string encodings _coerce already parses
+    (int/float/bool) or as the string encodings _parser already parses
     (temporals, decimals, bytes)."""
     if o is None:
         return None
     if isinstance(dt, T.ArrayType):
         return [_from_jsonable(x, dt.elementType) for x in o]
     if isinstance(dt, T.MapType):
-        return {_coerce(k, dt.keyType): _from_jsonable(x, dt.valueType) for k, x in o.items()}
+        return {_parser(dt.keyType)(k): _from_jsonable(x, dt.valueType) for k, x in o.items()}
     if isinstance(dt, T.StructType):
         return {f.name: _from_jsonable(o.get(f.name), f.dataType) for f in dt.fields}
     if isinstance(o, str):
-        return _coerce(o, dt)
+        return _parser(dt)(o)
     if isinstance(dt, (T.FloatType, T.DoubleType)):
         return float(o)
     if isinstance(dt, T.DecimalType):
-        from decimal import Decimal
-
         return Decimal(str(o))
     return o
 
@@ -411,14 +498,18 @@ class LoadedDump:
         return toposort_tables(sorted(self.frames), self.foreign_keys)
 
     def write_parquet_db(self, db_dir: str, mode: str = "errorifexists") -> list[str]:
-        """Replay into a parquet-directory database, parents first. Dumped
+        """Replay into a parquet-directory database. Parquet directories
+        carry no FK constraints, so the per-table writes are submitted
+        together; the returned order is still parents first. Dumped
         sequence state lands in the database's counter manifest
         (``sequences.json``) so ``ParquetDatabase.allocate_keys`` continues
         numbering after the load — the file-backend analog of the
         reference's sequences.sql replay (xdump/base.py:227-237)."""
         order = self.load_order()
-        for table in order:
-            self.frames[table].write.mode(mode).parquet(os.path.join(db_dir, table))
+        overlap(*[
+            lambda t=t: self.frames[t].write.mode(mode).parquet(os.path.join(db_dir, t))
+            for t in order
+        ])
         if self.sequences:
             from xdump_spark.sources.parquet_db import ParquetDatabase
 

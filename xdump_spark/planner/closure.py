@@ -43,7 +43,11 @@ Scale properties (the reason for this shape):
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from dataclasses import dataclass, field
+
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,8 +66,8 @@ BROADCAST_KEY_LIMIT = 5_000_000
 # manager chain paid ~20 tiny jobs of pure scheduling latency on the
 # round loop). Any oversized table keeps the distributed loop for the
 # whole closure. The bound keeps the driver safe the same way the
-# broadcast limit does: ~3 longs/row, so 1M rows is ~24 MB collected per
-# table (dict overhead included, well under typical driver heaps), and
+# broadcast limit does: ~3 longs/row, so 1M rows is ~100 MB of Python
+# ints in key-sorted column lists per table (under typical driver heaps), and
 # aggregate driver memory is bounded by (reached tables) × limit narrow
 # rows — with the 10-table catalog the same order as one broadcast
 # relation.
@@ -257,7 +261,7 @@ def compute_closure(
         worklist could statically touch fits DRIVER_CLOSURE_LIMIT narrow
         rows, collect each table's (key + FK columns) projection once —
         one bounded collect per table, overlapped on driver threads — and
-        saturate the entire closure as a dict-speed BFS. The distributed
+        saturate the entire closure as a driver-side BFS. The distributed
         loop pays a checkpoint job + a count job per TOUCHED TABLE per
         ROUND (the merge scenario = ~4 rounds × up to 6 tables of pure
         scheduling latency, 8↔32-core ratio 1.02 in the r14 driver bench
@@ -344,17 +348,24 @@ def compute_closure(
 
         limit = DRIVER_CLOSURE_LIMIT
 
-        def grab(df: DataFrame):
+        def grab(df: DataFrame, by_key: bool):
             # Arrow transfer, not collect(): a py4j Row collect of a
             # 150k-row narrow costs ~1 s of driver-side Row construction
             # alone (guide §6 Arrow-for-driver-transfers); the columnar
-            # path is ~20× cheaper. Column-major lists out.
+            # path is ~20× cheaper. Column-major lists out; a table whose
+            # rows are looked up by key comes sorted by it, null keys
+            # dropped (no key value selects them).
             tbl = df.limit(limit + 1).toArrow()
             if tbl.num_rows > limit:
                 return None
+            if by_key:
+                order = pc.sort_indices(tbl, sort_keys=[(tbl.column_names[0], "ascending")])
+                tbl = tbl.take(order).slice(0, tbl.num_rows - tbl.column(0).null_count)
             return [col.to_pylist() for col in tbl.columns]
 
-        collected = overlap(*[lambda df=df: grab(df) for _, _, df, _ in grabs])
+        collected = overlap(*[
+            lambda df=df, kind=kind: grab(df, kind == "table") for kind, _, df, _ in grabs
+        ])
         if any(cols is None for cols in collected):
             return False
 
@@ -362,7 +373,7 @@ def compute_closure(
         # tables get an entry even when empty so their out-membership
         # matches the loop (which adds the seed key-set unconditionally).
         selected: dict[str, set] = {}
-        table_rows: dict[str, dict] = {}
+        table_rows: dict[str, list[list]] = {}
         pend: list[tuple[str, object]] = []
 
         def contribute(parent: str, value) -> None:
@@ -375,10 +386,10 @@ def compute_closure(
 
         for (kind, t, _df, tgts), cols in zip(grabs, collected):
             if kind == "table":
-                by_key: dict = {}
-                for key, vals in zip(cols[0], zip(*cols[1:])):
-                    by_key.setdefault(key, []).append(vals)
-                table_rows[t] = by_key
+                # Key-sorted columns, searched by bisection: this BFS is
+                # the driver-memory peak of a whole dump, and per-row
+                # containers (a dict of tuple lists) cost ~4× as much.
+                table_rows[t] = cols
             elif kind == "seed" and key_of[t] is not None:
                 # Seed keys are seen-but-not-expanded: the loop never
                 # re-pulls base rows for seed keys either (they enter the
@@ -397,11 +408,19 @@ def compute_closure(
 
         while pend:
             t, v = pend.pop()
-            for vt in table_rows.get(t, {}).get(v, ()):
+            cols = table_rows.get(t)
+            if cols is None:
+                continue
+            keys = cols[0]
+            # equality, not bisect_right: a NaN key matches no row
+            r = bisect_left(keys, v)
+            while r < len(keys) and keys[r] == v:
                 for i, (_c, parent) in enumerate(targets[t]):
-                    contribute(parent, vt[i])
+                    contribute(parent, cols[1 + i][r])
+                r += 1
 
         from pyspark.sql import types as T
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         for t in sorted(reach - full):
             s = sel(t)
@@ -410,19 +429,21 @@ def compute_closure(
             vals = selected.get(t)
             if vals is None:
                 continue
+            # Key sets go to the JVM as an Arrow table, typed from the
+            # Spark field (never inferred): the frame is a JVM
+            # LocalRelation, so the semi-join that materializes the table
+            # — and every action over it — reads the keys without
+            # starting Python workers. A list of tuples would be a
+            # LogicalRDD of pickled rows, unpickled on every scan.
             schema = T.StructType([catalog.tables[t].schema[s.key_col]])
-            session = catalog.tables[t].sparkSession
-            if len(vals) > 100_000:
-                # Arrow path for big key sets (same reasoning as grab())
-                import pandas as pd
-
-                keys = session.createDataFrame(
-                    pd.DataFrame({s.key_col: sorted(vals)}), schema
-                )
-            else:
-                keys = session.createDataFrame(
-                    [(v,) for v in sorted(vals)], schema
-                )
+            arrow_schema = to_arrow_schema(schema)
+            keys = catalog.tables[t].sparkSession.createDataFrame(
+                pa.Table.from_arrays(
+                    [pa.array(sorted(vals), type=arrow_schema[0].type)],
+                    schema=arrow_schema,
+                ),
+                schema,
+            )
             s.add_keys(keys, len(vals))
         return True
 
