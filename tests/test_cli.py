@@ -788,7 +788,8 @@ def test_cli_maintain_window_and_text_index(spark, tmp_path, capsys):
     assert st["rows"] > 0
     rp = run(["--kind", "window", "--store-path", str(tmp_path / "ws"),
               "--action", "compact"])
-    assert rp["files"] > 0  # post-compact stats
+    assert set(rp) == {"files_before", "files_after", "bands_compacted"}
+    assert 0 < rp["files_after"] <= rp["files_before"]
 
     idx_path = str(tmp_path / "bm25")
     save_text_index(build_text_index(docs, id_col="doc_id"), idx_path)

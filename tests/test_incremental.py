@@ -298,18 +298,10 @@ def test_exact_store_defer_commit(spark, tmp_path):
 # ------------------------------------------- r7 skew/size guards ----
 
 
-def _append_raw(spark, store, rows, num_perm=128, bands=32):
+def _append_raw(spark, store, rows):
     """Force rows into the store bypassing greedy acceptance (to build
     pathological store states the guards must then handle)."""
-    from xdump_spark.operators.dedup import _norm_text, _spread, minhash_signatures
-    from xdump_spark.operators.incremental import _banded
-
-    df = spark.createDataFrame(rows, DOC_SCHEMA)
-    normed = _spread(df.select("doc_id", "text")).select(
-        F.col("doc_id").alias("id"), _norm_text(F.col("text")).alias("_norm")
-    )
-    sigs = minhash_signatures(normed, num_perm)
-    store.append(_banded(sigs, num_perm, bands).localCheckpoint(eager=True))
+    store.append(*store.rows(spark.createDataFrame(rows, DOC_SCHEMA)))
 
 
 def test_incremental_neardup_guard_equivalent_off_pathology(spark, tmp_path):
@@ -498,23 +490,95 @@ def test_signature_store_compact_preserves_decisions(spark, tmp_path):
     assert r_c.store_rows == r_u.store_rows
 
 
-def test_signature_store_compact_respects_target_bytes(spark, tmp_path):
-    """A tiny target_file_bytes keeps multiple files per band (no
-    pointless merge below the threshold); a huge one merges to 1."""
-    s = SignatureStore(spark, str(tmp_path / "s"))
-    for i in range(3):
-        incremental_neardup(
-            spark.createDataFrame(
-                [(100 * i + j, f"distinct doc {i} {j} " + OTHER[: 5 * j]) for j in range(3)],
-                DOC_SCHEMA,
-            ),
-            s,
+@pytest.mark.parametrize("kind", ["signature", "window"])
+def test_signature_store_compact_respects_target_bytes(spark, tmp_path, kind):
+    """Both band stores compact through the one Hadoop-FS kernel, here
+    on a ``file://`` URI store path: a tiny target_file_bytes keeps
+    multiple files per band (no pointless merge below the threshold), a
+    huge one merges to 1 per band, and the distinct rows are kept."""
+    import hashlib
+
+    from xdump_spark.operators.spans import (
+        WindowHashStore,
+        incremental_span_flags,
+    )
+
+    path = (tmp_path / kind).as_uri()
+    if kind == "signature":
+        s = SignatureStore(spark, path)
+        increment = lambda b: incremental_neardup(b, s)  # noqa: E731
+    else:
+        s = WindowHashStore(spark, path)
+        increment = lambda b: incremental_span_flags(b, s, k=4)  # noqa: E731
+
+    def text(i, j):  # unrelated docs: every increment accepts all
+        return " ".join(
+            hashlib.md5(f"{i}.{j}.{n}".encode()).hexdigest()[:8]
+            for n in range(24)
         )
+
+    for i in range(2):
+        increment(spark.createDataFrame(
+            [(100 * i + j, text(i, j)) for j in range(3)], DOC_SCHEMA
+        ))
     before = s.stats()["files"]
+    rows = sorted(s.read().distinct().collect())
     rpt = s.compact(target_file_bytes=1)  # every file already >= 1 byte
     assert rpt["files_after"] == before and rpt["bands_compacted"] == 0
     rpt2 = s.compact()  # default 128 MB >> store size -> full merge
-    assert rpt2["files_after"] == s.stats()["bands"]
+    assert rpt2["files_after"] == s.stats()["bands"] < before
+    assert sorted(s.read().distinct().collect()) == rows
+
+
+def test_signature_store_scheme_marker(spark, tmp_path):
+    """num_perm, bands, shingle_k and the signature formula are the
+    store's scheme, kept in one JSON marker. An increment, probe or
+    append under another scheme, or against a tampered or markerless
+    store, raises with rebuild guidance (before the marker, a re-sent
+    document was accepted as novel with no error). Compaction and
+    retention keep the marker."""
+    import json
+
+    from xdump_spark import fsutil
+
+    store = SignatureStore(spark, str(tmp_path / "s"))
+    for rows in ([(1, BASE)], [(3, OTHER)]):
+        incremental_neardup(spark.createDataFrame(rows, DOC_SCHEMA), store)
+    marker = fsutil.join(store.path, "_scheme.json")
+    scheme = json.loads(fsutil.read_text(spark, marker))
+    assert scheme == {
+        "kind": "signature", "formula": "minhash-byte-shingle-xxhash64-band-v1",
+        "num_perm": 128, "bands": 32, "shingle_k": 5,
+    }
+    resent = spark.createDataFrame([(10, BASE)], DOC_SCHEMA)
+
+    def rejected():
+        r = incremental_neardup(resent, store, defer_commit=True)
+        return _ids(r.accepted) == [] and r.pairs[0][:2] == (10, 1)
+
+    assert rejected()  # at the store's own scheme
+
+    def refused(want, **kw):
+        with pytest.raises(ValueError, match=want):
+            incremental_neardup(resent, store, **kw)
+        with pytest.raises(ValueError, match="rebuild the store"):
+            store.probe(resent, **kw)
+        with pytest.raises(ValueError, match="rebuild the store"):
+            store.append(*store.rows(resent, **kw))
+
+    refused("'bands': 16", bands=16)
+    refused("'shingle_k': 3", shingle_k=3)
+
+    # maintenance needs no scheme and keeps the marker
+    assert store.compact()["bands_compacted"] > 0
+    assert store.delete_ids([3])["bands_rewritten"] > 0
+    assert json.loads(fsutil.read_text(spark, marker)) == scheme
+    assert rejected()
+
+    fsutil.write_text_atomic(spark, marker, "minhash-v0")  # not JSON
+    refused("minhash-v0")
+    fsutil.delete(spark, marker)
+    refused("no scheme marker")
 
 
 def test_exact_hash_store_compact(spark, tmp_path):
@@ -574,6 +638,38 @@ def test_exact_hash_store_compact(spark, tmp_path):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {store.table_name}")
+
+
+def test_exact_hash_store_refuses_other_bucket_count(spark, tmp_path):
+    """ExactHashStore needs no scheme marker: its catalog table records
+    the bucketing. An append at another ``n_buckets`` raises Spark's own
+    AnalysisException, and a dedup read through a handle at another
+    ``n_buckets`` decides the same."""
+    import uuid
+
+    from pyspark.errors import AnalysisException
+
+    from xdump_spark.operators.incremental import (
+        ExactHashStore,
+        content_hashes,
+        incremental_exact_dedup,
+    )
+
+    name = f"seen_{uuid.uuid4().hex[:8]}"
+    loc = str(tmp_path / name)
+    store = ExactHashStore(spark, name, n_buckets=8, path=loc)
+    try:
+        incremental_exact_dedup(
+            spark.createDataFrame([(1, "aaa"), (2, "bbb")], DOC_SCHEMA), store
+        )
+        other = ExactHashStore(spark, name, n_buckets=4, path=loc)
+        b2 = spark.createDataFrame([(9, "aaa"), (10, "ccc")], DOC_SCHEMA)
+        with pytest.raises(AnalysisException, match="bucketing"):
+            other.append(content_hashes(b2).select("h1", "h2"))
+        accepted, _ = incremental_exact_dedup(b2, other, defer_commit=True)
+        assert _ids(accepted) == [10]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_exact_hash_store_compact_respects_target_bytes(spark, tmp_path):

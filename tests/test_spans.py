@@ -361,24 +361,28 @@ def test_window_store_compaction(spark, tmp_path):
 
     from xdump_spark.operators.spans import WindowHashStore, incremental_span_flags
 
+    def text(i, j):  # ~23 windows per doc, so appends share bands
+        body = " ".join(f"u{i}_{j}_{n}" for n in range(20))
+        return f"w{i} x{j} {body} c d e f g h i j"
+
     store = WindowHashStore(spark, str(tmp_path / "wsc"))
     for i in range(3):  # three appends -> three file sets
-        b = _docs(spark, [(i * 10 + j, f"w{i} x{j} c d e f g h i j") for j in range(3)])
+        b = _docs(spark, [(i * 10 + j, text(i, j)) for j in range(3)])
         incremental_span_flags(b, store, k=8)
     files_before = len(glob.glob(f"{store.path}/band=*/*.parquet"))
     rows_before = store.read().count()
     distinct_before = store.read().distinct().count()
+    # the shared tail window was appended once, not once per batch
+    assert rows_before == distinct_before
 
     store.compact()
     files_after = len(glob.glob(f"{store.path}/band=*/*.parquet"))
     assert files_after < files_before
     assert store.read().distinct().count() == distinct_before
-    assert store.read().count() <= rows_before  # dup hash rows collapsed
+    assert store.read().count() == rows_before
 
     # the compacted store still works as dedup state
-    flags = incremental_span_flags(
-        _docs(spark, [(99, "w0 x0 c d e f g h i j")]), store, k=8
-    )
+    flags = incremental_span_flags(_docs(spark, [(99, text(0, 0))]), store, k=8)
     assert flags.count() == 1
 
 
@@ -408,37 +412,58 @@ def test_strip_contaminated_spans_surgical(spark):
 
 
 def test_window_store_format_marker(spark, tmp_path):
-    """The hash formula is part of the persisted store format: reads and
-    appends fail loudly on a marker mismatch (or a markerless store from
-    before the marker existed) instead of silently matching nothing."""
-    import pytest
+    """The hash formula and the window length ``k`` are the store's
+    scheme, kept in one JSON marker: reads, probes and appends fail
+    loudly on another ``k``, a tampered marker, the older plain-text
+    ``_window_hash_format`` marker or no marker, instead of silently
+    matching nothing. Compaction keeps the marker."""
+    import json
 
-    from xdump_spark.operators.spans import WindowHashStore, _window_hashes
+    from xdump_spark import fsutil
+    from xdump_spark.operators.spans import WindowHashStore, incremental_span_flags
 
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    wins = _window_hashes(docs, 8, "text", "doc_id")
-
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     store = WindowHashStore(spark, str(tmp_path / "wsfmt"))
-    store.append(wins)
-    assert store.read().count() == 1  # marker written, read passes
+    store.append(*store.rows(_docs(spark, [(1, text)]), 8))
+    store.append(*store.rows(_docs(spark, [(2, text + " lambda")]), 8))
+    marker = fsutil.join(store.path, "_scheme.json")
+    scheme = json.loads(fsutil.read_text(spark, marker))
+    assert scheme == {
+        "kind": "window", "formula": "xxhash64-token-slice-v2", "k": 8,
+    }
+    assert store.read(scheme).distinct().count() == 4
 
     # compaction preserves the marker
-    store.compact()
-    assert store.read().count() == 1
+    assert store.compact()["bands_compacted"] >= 1
+    assert store.read(scheme).distinct().count() == 4
 
-    # tampered / older-formula marker -> loud failure on read and append
-    from xdump_spark import fsutil
+    # a re-send at the store's k is flagged; at another k it raises
+    # (before the scheme marker it flagged nothing, with no error)
+    resent = _docs(spark, [(3, text)])
+    assert incremental_span_flags(resent, store, k=8, update_store=False).count() == 1
+    with pytest.raises(ValueError, match="rebuild the store"):
+        incremental_span_flags(resent, store, k=10)
+    with pytest.raises(ValueError, match="'k': 8"):
+        store.append(*store.rows(resent, 10))
 
-    fsutil.write_text_atomic(spark, store._format_path(), "gram-string-v1")
-    with pytest.raises(ValueError, match="window-hash format"):
-        store.read()
-    with pytest.raises(ValueError, match="window-hash format"):
-        store.append(wins)
+    def refused(want):
+        with pytest.raises(ValueError, match=want):
+            store.read()
+        with pytest.raises(ValueError, match="rebuild the store"):
+            incremental_span_flags(resent, store, k=8)
+        with pytest.raises(ValueError, match="rebuild the store"):
+            store.append(*store.rows(resent, 8))
 
-    # markerless non-empty store (written before the marker existed)
-    fsutil.delete(spark, store._format_path())
-    with pytest.raises(ValueError, match="window-hash format"):
-        store.read()
+    # tampered / older-formula marker
+    fsutil.write_text_atomic(
+        spark, marker, json.dumps({**scheme, "formula": "gram-string-v1"})
+    )
+    refused("gram-string-v1")
+    # the plain-text marker of the previous format, without the JSON one
+    plain = fsutil.join(store.path, "_window_hash_format")
+    fsutil.delete(spark, marker)
+    fsutil.write_text_atomic(spark, plain, "xxhash64-token-slice-v2")
+    refused("no scheme marker")
+    # no marker at all
+    fsutil.delete(spark, plain)
+    refused("no scheme marker")

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import functions as F
-
 from xdump_spark.operators.incremental import (
     ExactHashStore,
     SignatureStore,
@@ -65,18 +63,8 @@ def test_signature_probe_empty_store_and_hot_bucket_guard(spark, tmp_path):
         [(i, BASE) for i in range(1, 6)], DOC_SCHEMA
     )
     # append all five as if accepted (bypass dedup: craft via increment
-    # on disjoint stores would reject; use the signature path directly)
-    from xdump_spark.operators.incremental import (
-        _banded,
-        _norm_text,
-        _spread,
-        minhash_signatures,
-    )
-
-    normed = _spread(template).select(
-        F.col("doc_id").alias("id"), _norm_text(F.col("text")).alias("_norm")
-    )
-    store.append(_banded(minhash_signatures(normed, 128, 5), 128, 32))
+    # on disjoint stores would reject; use the store's row formula)
+    store.append(*store.rows(template))
     assert store.probe(q, max_bucket=4).count() == 0
     assert store.probe(q, max_bucket=None).count() == 5
 

@@ -62,10 +62,8 @@ def main() -> int:
     args = ap.parse_args()
     skip = set(args.skip.split(",")) if args.skip else set()
 
-    from xdump_spark.operators.dedup import _norm_text, _spread, minhash_signatures
     from xdump_spark.operators.incremental import (
         SignatureStore,
-        _banded,
         incremental_neardup,
     )
     from xdump_spark.queries import _cat
@@ -85,12 +83,7 @@ def main() -> int:
     def build_store(path: str) -> SignatureStore:
         shutil.rmtree(path, ignore_errors=True)
         s = SignatureStore(spark, path)
-        normed = _spread(hist.select("doc_id", "text")).select(
-            F.col("doc_id").alias("id"), _norm_text(F.col("text")).alias("_norm")
-        )
-        s.append(
-            _banded(minhash_signatures(normed, np), np, bands)
-        )
+        s.append(*s.rows(hist, num_perm=np, bands=bands))
         return s
 
     t0 = time.time()
@@ -150,10 +143,7 @@ def main() -> int:
         frag = SignatureStore(spark, frag_path)
         for i in range(10):
             part = hist.filter(F.pmod(F.xxhash64("doc_id"), F.lit(10)) == i)
-            normed = _spread(part.select("doc_id", "text")).select(
-                F.col("doc_id").alias("id"), _norm_text(F.col("text")).alias("_norm")
-            )
-            frag.append(_banded(minhash_signatures(normed, np), np, bands))
+            frag.append(*frag.rows(part, num_perm=np, bands=bands))
         st = frag.stats()
         results["I4_files_fragmented"] = st["files"]
 

@@ -1905,11 +1905,6 @@ def run(args, spark) -> int:
             )
         elif args.action == "stats":
             rpt = store.stats()
-        elif args.kind == "window":
-            # WindowHashStore's knob is files_per_band (its swap-based
-            # rewrite has no byte-sizing), and its compact returns None
-            store.compact()
-            rpt = store.stats()
         else:
             rpt = store.compact(target_file_bytes=args.target_file_bytes)
         print(_json.dumps(rpt))

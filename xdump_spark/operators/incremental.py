@@ -41,22 +41,6 @@ from xdump_spark.operators.dedup import (
 )
 
 
-def _banded(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    rows_per_band = num_perm // bands
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(
-                F.slice("sig", j * rows_per_band + 1, rows_per_band)
-            ).alias("bucket"),
-        )
-        for j in range(bands)
-    ]
-    return sigs.select(
-        "id", "sig", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
 def _estimate_jaccard(sig_a, sig_b, num_perm: int):
     matches = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v))
     return F.round(matches / F.lit(float(num_perm)), 6)
@@ -225,14 +209,36 @@ def _as_id_frame(spark: SparkSession, ids, col: str) -> DataFrame:
     return spark.createDataFrame(rows, [col]).distinct()
 
 
-class SignatureStore:
-    """Parquet-backed (id, sig, band, bucket) store, partitioned by band
-    so candidate probes read only the band layout they join on. At corpus
-    scale this is the only persistent dedup state — text never re-reads."""
+class _BandStore:
+    """The files-on-disk half shared by the band-partitioned hash stores
+    (:class:`SignatureStore`, ``spans.WindowHashStore``): parquet rows
+    partitioned by ``band``, plus one scheme marker. Each subclass keeps
+    only its row formula (``rows``) and the parameters that define it.
+
+    The marker is one atomic JSON file recording the store kind, the
+    formula version and the row-defining parameters. Rows written under
+    another scheme silently match nothing (every historical duplicate
+    missed, no error), so ``append`` writes the marker before the first
+    data file and otherwise checks it, and ``read`` checks it. ``stats``,
+    ``compact`` and retention need no scheme: the shared kernels touch
+    only files under ``band=`` dirs, so the marker survives them."""
+
+    KIND = ""
+    FORMULA = ""
+    COLUMNS: tuple = ()  # the stored row layout
+    _SCHEME_FILE = "_scheme.json"
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+
+    def _scheme(self, **params) -> dict:
+        return {"kind": self.KIND, "formula": self.FORMULA, **params}
+
+    def _scheme_path(self) -> str:
+        from xdump_spark import fsutil
+
+        return fsutil.join(self.path, self._SCHEME_FILE)
 
     def exists(self) -> bool:
         # Hadoop FS, not os.path: on hdfs:///object-store paths a local
@@ -245,21 +251,65 @@ class SignatureStore:
             for n in fsutil.list_names(self.spark, self.path)
         )
 
-    def read(self) -> DataFrame | None:
+    def _check_scheme(self, scheme: dict | None) -> None:
+        """Raise unless the marker equals ``scheme``; ``None`` accepts
+        any parameters of this store's kind and formula."""
+        import json
+
+        from xdump_spark import fsutil
+
+        found = None
+        if fsutil.exists_atomic(self.spark, self._scheme_path()):
+            text = fsutil.read_text_atomic(self.spark, self._scheme_path())
+            try:
+                found = json.loads(text)
+            except ValueError:
+                found = text.strip()
+        if scheme is None:
+            ok = isinstance(found, dict) and {**found, **self._scheme()} == found
+        else:
+            ok = found == scheme
+        if ok:
+            return
+        have = "no scheme marker" if found is None else f"scheme {found!r}"
+        raise ValueError(
+            f"{type(self).__name__} at {self.path!r} holds rows written "
+            f"under {have}; this call uses {scheme or self._scheme()!r}. "
+            "Rows of another scheme silently match nothing. Call with the "
+            "store's own parameters, or rebuild the store: re-append the "
+            "accepted corpus into a fresh directory."
+        )
+
+    def read(self, scheme: dict | None = None) -> DataFrame | None:
         if not self.exists():
             return None
+        self._check_scheme(scheme)
         return self.spark.read.parquet(self.path)
 
-    def append(self, banded: DataFrame) -> None:
+    def append(self, rows: DataFrame, scheme: dict) -> None:
+        import json
+
+        from xdump_spark import fsutil
+
+        # Marker first: exists() ignores underscore files, so a crash
+        # between the marker and the data write leaves an "empty" store.
+        # An EXISTING store must match before rows are mixed in.
+        if self.exists():
+            self._check_scheme(scheme)
+        else:
+            fsutil.write_text_atomic(
+                self.spark, self._scheme_path(),
+                json.dumps(scheme, sort_keys=True),
+            )
         # one narrow shuffle of the (small) increment so each band gains
         # ~one file per append instead of one per upstream task — without
         # it a daily store accrues tasks×bands files and every probe pays
         # the listing (measured: SCALE.md r8's VectorStore twin of this
         # fix cut 10-increment file count 14,349 → 622 and flattened the
         # rising per-increment cost)
-        banded.repartition(F.col("band")).write.mode("append").partitionBy(
-            "band"
-        ).parquet(self.path)
+        rows.select(*self.COLUMNS).repartition(F.col("band")).write.mode(
+            "append"
+        ).partitionBy("band").parquet(self.path)
 
     def stats(self) -> dict:
         """{files, bytes, rows, bands} — the compaction trigger inputs.
@@ -268,17 +318,11 @@ class SignatureStore:
         from xdump_spark import fsutil
 
         files = fsutil.list_data_files(self.spark, self.path)
-        bands = {
-            f.rsplit("/", 2)[-2] for f, _ in files if "/band=" in f
-        }
-        rows = (
-            self.spark.read.parquet(self.path).count() if files else 0
-        )
         return {
             "files": len(files),
             "bytes": sum(b for _, b in files),
-            "rows": rows,
-            "bands": len(bands),
+            "rows": self.spark.read.parquet(self.path).count() if files else 0,
+            "bands": len({f.rsplit("/", 2)[-2] for f, _ in files if "/band=" in f}),
         }
 
     def compact(self, target_file_bytes: int = 128 << 20) -> dict:
@@ -286,11 +330,9 @@ class SignatureStore:
         into ~``target_file_bytes`` files (365 appends/band/year on a
         daily crawl; on an object store every probe join pays that
         listing + open cost). Crash discipline and concurrency notes in
-        :func:`_compact_partition_dirs`; duplicate-row harmlessness:
-        candidate pairs are dropDuplicates-ed, ``store_rows`` counts
-        distinct ids, and an overstated hot-bucket count only makes the
-        guard more conservative. Returns {files_before, files_after,
-        bands_compacted}."""
+        :func:`_compact_partition_dirs`; duplicate rows it may leave
+        cannot change a decision of either store. Returns
+        {files_before, files_after, bands_compacted}."""
         rpt = _compact_partition_dirs(
             self.spark, self.path, "/band=", target_file_bytes
         )
@@ -299,6 +341,50 @@ class SignatureStore:
             "files_after": rpt["files_after"],
             "bands_compacted": rpt["partitions_compacted"],
         }
+
+
+class SignatureStore(_BandStore):
+    """Parquet-backed (id, sig, band, bucket) store, partitioned by band
+    so candidate probes read only the band layout they join on. At corpus
+    scale this is the only persistent dedup state — text never re-reads.
+    Its scheme: ``num_perm``, ``bands`` and ``shingle_k``."""
+
+    KIND = "signature"
+    FORMULA = "minhash-byte-shingle-xxhash64-band-v1"
+    COLUMNS = ("id", "sig", "band", "bucket")
+
+    def rows(
+        self,
+        docs: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        num_perm: int = 128,
+        bands: int = 32,
+        shingle_k: int = 5,
+    ) -> tuple:
+        """(banded, scheme): the docs' (id, sig, band, bucket) store
+        rows — normalized text, MinHash signatures, LSH band keys — and
+        the scheme they were built under. The one place a caller gets
+        rows it may append or probe with."""
+        normed = _spread(docs.select(F.col(id_col), F.col(text_col))).select(
+            F.col(id_col).alias("id"), _norm_text(F.col(text_col)).alias("_norm")
+        )
+        sigs = minhash_signatures(normed, num_perm, shingle_k)
+        r = num_perm // bands
+        band_structs = [
+            F.struct(
+                F.lit(j).alias("band"),
+                F.xxhash64(F.slice("sig", j * r + 1, r)).alias("bucket"),
+            )
+            for j in range(bands)
+        ]
+        banded = sigs.select(
+            "id", "sig", F.explode(F.array(*band_structs)).alias("bb")
+        ).select("id", "sig", "bb.band", "bb.bucket")
+        scheme = self._scheme(
+            num_perm=num_perm, bands=bands, shingle_k=shingle_k
+        )
+        return banded, scheme
 
     def probe(
         self,
@@ -322,7 +408,7 @@ class SignatureStore:
         on the (small) query side only, broadcast into the store's
         band-partitioned scan, estimate on signature agreement.
         ``num_perm``/``bands``/``shingle_k`` must match the store's
-        (signatures are scheme-specific, like the increment).
+        scheme (a mismatch raises, like the increment).
         ``max_bucket`` drops degenerate template buckets by STORED
         membership, the increment's guard. Empty store → typed empty
         frame."""
@@ -331,14 +417,12 @@ class SignatureStore:
         out_schema = (
             f"query_id {id_t}, stored_id {id_t}, est double"
         )
-        stored = self.read()
+        banded, scheme = self.rows(
+            docs, text_col, id_col, num_perm, bands, shingle_k
+        )
+        stored = self.read(scheme)
         if stored is None:
             return spark.createDataFrame([], out_schema)
-        normed = _spread(docs.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col).alias("id"), _norm_text(F.col(text_col)).alias("_norm")
-        )
-        sigs = minhash_signatures(normed, num_perm, shingle_k)
-        banded = _banded(sigs, num_perm, bands)
         if max_bucket is not None:
             hot = (
                 stored.groupBy("band", "bucket")
@@ -390,7 +474,7 @@ class SignatureStore:
             return {"deleted_rows": 0, "bands_rewritten": 0}
         doomed = _delete_side(doomed)
         matched = (
-            self.read()
+            self.spark.read.parquet(self.path)
             .join(doomed, "id", "left_semi")
             .count()
         )
@@ -468,21 +552,23 @@ def incremental_neardup(
     measured estimate-verification precision 0.64 at 64 perms vs 0.97
     at 128 (threshold 0.6, recall ~1.0 at both) — at corpus scale,
     where near-threshold pair mass is guaranteed, 64 over-rejects.
-    Signatures already in a store written at a different ``num_perm``
-    will mismatch; pass the store's setting explicitly when resuming an
-    older store.
+    ``num_perm``, ``bands`` and ``shingle_k`` are the store's scheme: an
+    increment whose scheme differs from the one recorded in a non-empty
+    store raises ``ValueError`` before touching it (its rows would match
+    nothing), so resume an older store with its own settings.
     """
     if resolve not in ("greedy", "components"):
         raise ValueError(f"resolve must be 'greedy' or 'components', got {resolve!r}")
     spark = new_docs.sparkSession
-    normed = _spread(new_docs.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col).alias("id"), _norm_text(F.col(text_col)).alias("_norm")
+    banded, scheme = store.rows(
+        new_docs, text_col, id_col, num_perm, bands, shingle_k
     )
-    sigs = minhash_signatures(normed, num_perm, shingle_k).localCheckpoint(eager=True)
-    banded = _banded(sigs, num_perm, bands).localCheckpoint(eager=True)
+    stored = store.read(scheme)
+    banded = banded.localCheckpoint(eager=True)
+    # one row per band by construction: band 0 is each doc's signature
+    sigs = banded.filter(F.col("band") == 0).select("id", "sig")
 
     est = _estimate_jaccard(F.col("sig_a"), F.col("sig_b"), num_perm)
-    stored = store.read()
 
     if max_bucket is not None:
         # Hot (band, bucket) groups by COMBINED membership: a template
@@ -619,7 +705,7 @@ def incremental_neardup(
     accepted_banded = accepted_banded.localCheckpoint(eager=True)
 
     def commit() -> None:
-        store.append(accepted_banded)
+        store.append(accepted_banded, scheme)
 
     accepted = accepted_banded.select("id").distinct()
     if defer_commit:
@@ -629,7 +715,8 @@ def incremental_neardup(
         )
     commit()
     n = (
-        store.read().select("id").distinct().count() if count_store else -1
+        store.read(scheme).select("id").distinct().count()
+        if count_store else -1
     )
     return IncrementResult(
         pairs=pairs, accepted=accepted, store_rows=n, rejects=rejects_df
@@ -762,6 +849,18 @@ class ExactHashStore:
         # readers until refreshed
         self.spark.catalog.refreshTable(self.table_name)
 
+    def _replace_files(self, old_files: list, rows: DataFrame) -> None:
+        """The rewrite step of compaction and retention: APPEND ``rows``
+        through the bucketed write, then delete the listed originals. A
+        crash in between can only duplicate hashes, and duplicate
+        (h1, h2) rows cannot change a left-anti join's answer."""
+        from xdump_spark import fsutil
+
+        self.append(rows)
+        for f in old_files:
+            fsutil.delete(self.spark, f, recursive=False)
+        self.spark.catalog.refreshTable(self.table_name)
+
     def stats(self) -> dict:
         """{files, bytes, rows, buckets} ([0-stats] when absent).
         ``files`` counts data files across all buckets — each append
@@ -799,7 +898,6 @@ class ExactHashStore:
         Concurrent appends land new files that are never touched.
         Returns {files_before, files_after}."""
         from xdump_spark import fsutil
-        from xdump_spark.sources.bucketed import write_bucketed
 
         if not self.exists():
             return {"files_before": 0, "files_after": 0}
@@ -821,17 +919,12 @@ class ExactHashStore:
             # one coalesced pass over the listed files only (a raw-path
             # read: fine — the write re-buckets, one exchange of 16 B/row
             # hashes, the expected O(store) compaction cost)
-            rows = self.spark.read.parquet(*old_files).repartition(
-                n_out, "h1", "h2"
+            self._replace_files(
+                old_files,
+                self.spark.read.parquet(*old_files).repartition(
+                    n_out, "h1", "h2"
+                ),
             )
-            write_bucketed(
-                rows.select("h1", "h2"), self.table_name, ["h1", "h2"],
-                n_buckets=self.n_buckets, mode="append", path=self.path,
-            )
-            self.spark.catalog.refreshTable(self.table_name)
-            for f in old_files:
-                fsutil.delete(self.spark, f, recursive=False)
-            self.spark.catalog.refreshTable(self.table_name)
         return {
             "files_before": len(old_files),
             "files_after": len(self.spark.table(self.table_name).inputFiles()),
@@ -894,9 +987,6 @@ class ExactHashStore:
         leaves doomed hashes present beside duplicated survivors —
         deletion incomplete (re-run), duplicates harmless (the module
         invariant). Returns {deleted_rows, files_rewritten}."""
-        from xdump_spark import fsutil
-        from xdump_spark.sources.bucketed import write_bucketed
-
         if not self.exists():
             return {"deleted_rows": 0, "files_rewritten": 0}
         doomed = _delete_side(hashes.select("h1", "h2").distinct())
@@ -907,19 +997,12 @@ class ExactHashStore:
         if not matched:
             return {"deleted_rows": 0, "files_rewritten": 0}
         old_files = list(t.inputFiles())
-        survivors = (
+        self._replace_files(
+            old_files,
             self.spark.read.parquet(*old_files)
             .join(doomed, ["h1", "h2"], "left_anti")
-            .repartition(self.n_buckets, "h1", "h2")
+            .repartition(self.n_buckets, "h1", "h2"),
         )
-        write_bucketed(
-            survivors.select("h1", "h2"), self.table_name, ["h1", "h2"],
-            n_buckets=self.n_buckets, mode="append", path=self.path,
-        )
-        self.spark.catalog.refreshTable(self.table_name)
-        for f in old_files:
-            fsutil.delete(self.spark, f, recursive=False)
-        self.spark.catalog.refreshTable(self.table_name)
         return {"deleted_rows": matched, "files_rewritten": len(old_files)}
 
     def delete_docs(self, docs: DataFrame, text_col: str = "text") -> dict:

@@ -45,10 +45,10 @@ for dedup purposes.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from xdump_spark.operators.incremental import _BandStore
 
 _WS = r"\s+"
 
@@ -172,7 +172,7 @@ def duplicated_spans(
     return _merge_islands(cov, k)
 
 
-class WindowHashStore:
+class WindowHashStore(_BandStore):
     """Parquet-backed (band, h1, h2) store of the accepted corpus's window
     hashes — the persistent state for INCREMENTAL span dedup (new shards
     checked against everything already ingested without re-reading text).
@@ -184,141 +184,26 @@ class WindowHashStore:
     re-tokenization, columnar compression, and an equi-joinable layout.
     ``band = pmod(h1, n_bands)`` bounds file count and spreads writes;
     increments probe it with one broadcast-hash join (store never
-    shuffles).
+    shuffles). Its scheme: the window length ``k``, under the
+    token-array-slice hashing of :func:`_window_hashes`.
     """
 
     N_BANDS = 64
+    KIND = "window"
+    FORMULA = "xxhash64-token-slice-v2"
+    COLUMNS = ("band", "h1", "h2")
 
-    # The window-hash FORMULA is part of the persisted format: (band,
-    # h1, h2) rows written under a different formula silently match
-    # nothing (every historical duplicate would be missed, no error).
-    # r14 switched the hashes from the joined gram string to the
-    # token-array slice, so the store carries an explicit format marker
-    # and reads fail loudly on any mismatch — including markerless
-    # stores written before the marker existed, which must be rebuilt
-    # (re-append the corpus or run the batch pass once).
-    HASH_FORMAT = "xxhash64-token-slice-v2"
-    _FORMAT_FILE = "_window_hash_format"
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def exists(self) -> bool:
-        # Hadoop FS, not os.path: an hdfs:///object-store store must not
-        # be silently treated as empty (the r6 ADVICE SignatureStore fix)
-        from xdump_spark import fsutil
-
-        return fsutil.is_dir(self.spark, self.path) and any(
-            not n.startswith((".", "_"))
-            for n in fsutil.list_names(self.spark, self.path)
+    def rows(
+        self, docs: DataFrame, k: int, text_col: str = "text",
+        id_col: str = "doc_id",
+    ) -> tuple:
+        """(wins, scheme): the docs' (doc_id, pos, h1, h2, band) window
+        hashes and the scheme they were built under; ``append`` stores
+        their (band, h1, h2) projection."""
+        wins = _window_hashes(docs, k, text_col, id_col).withColumn(
+            "band", F.pmod("h1", F.lit(self.N_BANDS))
         )
-
-    def _format_path(self) -> str:
-        from xdump_spark import fsutil
-
-        return fsutil.join(self.path, self._FORMAT_FILE)
-
-    def _check_format(self) -> None:
-        from xdump_spark import fsutil
-
-        marker = (
-            fsutil.read_text(self.spark, self._format_path()).strip()
-            if fsutil.exists(self.spark, self._format_path())
-            else None
-        )
-        if marker != self.HASH_FORMAT:
-            raise ValueError(
-                f"WindowHashStore at {self.path!r} was written with window-"
-                f"hash format {marker!r}, this engine produces "
-                f"{self.HASH_FORMAT!r}; probing it would silently match "
-                "nothing. Rebuild the store (re-append the accepted corpus) "
-                "before running increments."
-            )
-
-    def _write_format(self) -> None:
-        from xdump_spark import fsutil
-
-        if not fsutil.exists(self.spark, self._format_path()):
-            fsutil.mkdirs(self.spark, self.path)
-            fsutil.write_text_atomic(
-                self.spark, self._format_path(), self.HASH_FORMAT
-            )
-
-    def read(self) -> DataFrame | None:
-        if not self.exists():
-            return None
-        self._check_format()
-        return self.spark.read.parquet(self.path)
-
-    def append(self, wins: DataFrame) -> None:
-        # Marker first: exists() ignores underscore files, so a crash
-        # between the marker and the data write leaves an "empty" store.
-        # An EXISTING store must match before rows are mixed in.
-        if self.exists():
-            self._check_format()
-        self._write_format()
-        # repartition-by-band before the append: ~one file per band per
-        # increment instead of one per upstream task (the store-family
-        # small-file discipline — see SCALE.md r8's VectorStore
-        # measurement of the unrepartitioned failure mode)
-        wins.select(
-            F.pmod("h1", F.lit(self.N_BANDS)).alias("band"), "h1", "h2"
-        ).repartition(F.col("band")).write.mode("append").partitionBy(
-            "band"
-        ).parquet(self.path)
-
-    def stats(self) -> dict:
-        """{files, bytes, rows, bands} — the compaction-trigger inputs,
-        same shape as the other persistent stores (SignatureStore
-        convention; rows is a parquet-metadata count, no data scan)."""
-        from xdump_spark import fsutil
-
-        files = fsutil.list_data_files(self.spark, self.path)
-        bands = {f.rsplit("/", 2)[-2] for f, _ in files if "/band=" in f}
-        rows = self.spark.read.parquet(self.path).count() if files else 0
-        return {
-            "files": len(files),
-            "bytes": sum(b for _, b in files),
-            "rows": rows,
-            "bands": len(bands),
-        }
-
-    def compact(self, files_per_band: int = 1) -> None:
-        """Rewrite the store to ``files_per_band`` files per band and drop
-        duplicate hash rows (re-appended shards accumulate them; dedup
-        semantics only need existence). Every foreachBatch increment
-        appends a file set, so a long-running stream degrades into a
-        small-file store — run this between increments (NOT concurrently
-        with one: the swap below replaces the directory). The rewrite
-        lands beside the store and swaps in via two renames, so a crash
-        leaves either the old or the new store, never a mix."""
-        import shutil
-
-        df = self.read()
-        if df is None:
-            return
-        tmp = self.path.rstrip("/") + ".compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            df.select("band", "h1", "h2")
-            .distinct()
-            .repartition(self.N_BANDS * files_per_band, "band")
-            .write.partitionBy("band")
-            .parquet(tmp)
-        )
-        # the rewritten store keeps the format marker (the swap below
-        # would otherwise move it out with the old directory)
-        from xdump_spark import fsutil
-
-        fsutil.write_text_atomic(
-            self.spark, fsutil.join(tmp, self._FORMAT_FILE), self.HASH_FORMAT
-        )
-        old = self.path.rstrip("/") + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        return wins, self._scheme(k=k)
 
 
 def incremental_span_flags(
@@ -336,8 +221,10 @@ def incremental_span_flags(
     Returns (doc_id, span_start, span_end, span_tokens, n_windows) over
     the new batch only — flag semantics; acceptance/stripping policy is
     the caller's (pair with :func:`strip_duplicated_spans`-style rebuild
-    or drop-the-doc). With ``update_store`` the batch's windows are
-    appended afterwards, so the next increment sees this one.
+    or drop-the-doc). With ``update_store`` the batch's distinct window
+    hashes that the store does not hold yet are appended afterwards, so
+    the next increment sees this one and the store holds each hash once.
+    ``k`` is the store's scheme: a mismatch raises ``ValueError``.
 
     Scale: the batch side is window-hashed once and localCheckpoint'd
     (narrow, batch-sized); the store-probe join BROADCASTS the batch's
@@ -346,20 +233,26 @@ def incremental_span_flags(
     incremental.py probe discipline. Within-batch duplication reuses the
     min!=max detection of :func:`duplicated_spans`.
     """
-    wins = _window_hashes(new_docs, k, text_col, id_col).localCheckpoint(eager=True)
+    wins, scheme = store.rows(new_docs, k, text_col, id_col)
+    stored = store.read(scheme)
+    wins = wins.localCheckpoint(eager=True)
+    fresh = wins.select("band", "h1", "h2").distinct()
 
     covs = []
-    stored = store.read()
     if stored is not None:
-        probe = wins.select("h1", "h2").distinct()
         hit_hashes = (
-            stored.join(F.broadcast(probe), ["h1", "h2"])
-            .select("h1", "h2")
+            stored.join(F.broadcast(fresh), ["band", "h1", "h2"])
+            .select("band", "h1", "h2")
             .distinct()
+            .localCheckpoint(eager=True)
         )
         covs.append(
-            wins.join(F.broadcast(hit_hashes), ["h1", "h2"]).select("doc_id", "pos")
+            wins.join(F.broadcast(hit_hashes), ["band", "h1", "h2"])
+            .select("doc_id", "pos")
         )
+        # the store keeps each hash once: append only the batch's
+        # distinct hashes it does not already hold
+        fresh = fresh.join(F.broadcast(hit_hashes), ["band", "h1", "h2"], "left_anti")
     intra = _duplicated_hashes(wins, 2).select("h1", "h2")
     covs.append(wins.join(intra, ["h1", "h2"]).select("doc_id", "pos"))
 
@@ -368,7 +261,7 @@ def incremental_span_flags(
         cov.select("doc_id", "pos", (F.col("pos") + F.lit(k)).alias("end")), k
     ).localCheckpoint(eager=True)
     if update_store:
-        store.append(wins)
+        store.append(fresh, scheme)
     return spans
 
 

@@ -149,20 +149,11 @@ def _fuzzy_increment(src, store, ck):
 
 def _fuzzy_replay(frame, store, ck):
     # re-sign the accepted docs (one narrow pass over the stage parquet)
-    from xdump_spark.operators.dedup import _norm_text, _spread, minhash_signatures
-    from xdump_spark.operators.incremental import _banded
-
-    id_col, text_col, kw = ck["id_col"], ck["text_col"], ck["kwargs"]
-    num_perm = kw.get("num_perm", 128)
-    normed = _spread(frame.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col).alias("id"), _norm_text(F.col(text_col)).alias("_norm"),
-    )
-    store.append(
-        _banded(
-            minhash_signatures(normed, num_perm, kw.get("shingle_k", 5)),
-            num_perm, kw.get("bands", 32),
-        )
-    )
+    scheme_kw = {
+        k: v for k, v in ck["kwargs"].items()
+        if k in ("num_perm", "bands", "shingle_k")
+    }
+    store.append(*store.rows(frame, ck["text_col"], ck["id_col"], **scheme_kw))
 
 
 def _semantic_once(src, ck):

@@ -2436,22 +2436,15 @@ def _neardup_probe_store(spark, sf_dir):
     setup per (session, sf), the ``_bench_pq_store`` pattern."""
     import tempfile
 
-    from xdump_spark.operators import incremental as INC
-    from xdump_spark.operators.dedup import _norm_text, minhash_signatures
+    from xdump_spark.operators.incremental import SignatureStore
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _probe_store_cache:
-        store = INC.SignatureStore(
-            spark, tempfile.mkdtemp() + "/probe_sigstore"
-        )
+        store = SignatureStore(spark, tempfile.mkdtemp() + "/probe_sigstore")
         docs = _cat(spark, sf_dir).tables["documents"]
-        normed = docs.filter("doc_id % 3 = 0").select(
-            F.col("doc_id").alias("id"),
-            _norm_text(F.col("text")).alias("_norm"),
-        )
-        store.append(
-            INC._banded(minhash_signatures(normed, 64, 5), 64, 16)
-        )
+        store.append(*store.rows(
+            docs.filter("doc_id % 3 = 0"), num_perm=64, bands=16
+        ))
         _probe_store_cache[key] = store
     return _probe_store_cache[key]
 
