@@ -27,7 +27,7 @@ CURATE_AUDIT = {
     "input": 500, "cleaned": 500, "span_stripped": 500, "doc_deduped": 479,
     "quality_gated": 476, "split_train": 425, "split_val": 51,
 }
-CURATE_JOB_BUDGET = 25
+CURATE_JOB_BUDGET = 10
 
 
 @pytest.fixture
@@ -48,18 +48,40 @@ def test_curate_chain_audit(spark, docs, tmp_path):
         assert got == CURATE_AUDIT[f"split_{name}"]
 
 
-def test_curate_chain_job_budget(spark, docs, tmp_path):
-    """The curate shape runs at most ``CURATE_JOB_BUDGET`` Spark jobs;
-    a count job per stage and per split would make it 52."""
+def _jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs."""
     sc = spark.sparkContext
     group = f"curate-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "curate audit job budget")
+    sc.setJobGroup(group, "curate job budget")
     try:
-        prepare_training_corpus(docs, out_dir=str(tmp_path / "out"), **CURATE)
+        fn()
     finally:
         sc.setJobGroup("", "")
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_curate_chain_job_budget(spark, docs, tmp_path):
+    """The curate shape runs at most ``CURATE_JOB_BUDGET`` Spark jobs:
+    one local checkpoint of the chain fills the audit, and the split
+    writes read it. A count job per stage and per split made it 52; a
+    barrier count with each split write running the chain again, 25."""
+    jobs = _jobs(spark, lambda: prepare_training_corpus(
+        docs, out_dir=str(tmp_path / "out"), **CURATE,
+    ))
     assert jobs <= CURATE_JOB_BUDGET, jobs
+
+
+def test_unaudited_split_sink_runs_the_chain_once(spark, docs, tmp_path):
+    """``audit=False`` with two splits and a sink: both split writes read
+    the one local checkpoint of the chain, so the run takes the audited
+    run's jobs. With each write running the chain itself it took 18."""
+    jobs = _jobs(spark, lambda: prepare_training_corpus(
+        docs, out_dir=str(tmp_path / "out"), audit=False, **CURATE,
+    ))
+    assert jobs <= CURATE_JOB_BUDGET, jobs
+    for name in ("train", "val"):
+        got = spark.read.parquet(str(tmp_path / "out" / name)).count()
+        assert got == CURATE_AUDIT[f"split_{name}"]
 
 
 def test_curate_chain_without_sink(spark, docs):

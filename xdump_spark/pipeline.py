@@ -49,14 +49,20 @@ optional via its parameter so the composition degrades to any subset.
 
 Scale: the composition inherits each stage's posture — the only
 shuffles are span dedup's hash groupBy/join, sampling-independent
-stratification (none), the shuffle sort, and the sink's bucketed
-repartition. The audit costs one count job, not one per stage: each
-stage's output carries an Observation (xdump_spark/observed.py), and
-ONE barrier count of the last stage before the shuffle sort fills them
-all; the split counts ride the sink writes. A build that runs Spark jobs
+stratification (none), the shuffle sort, and, with ``partition_by``
+only, the sink's bucketed repartition: without it the sort's range
+exchange cuts the sink's files, so the part files keep the training
+order. The chain runs once: when the call reads it at all (the audit,
+the sink or the data card), ONE eager local checkpoint of the last
+stage before the shuffle sort materializes it, and the sort, the
+splits, the sink, packing, chunks and the data card read that. The same
+pass is the audit barrier: each stage's output carries an Observation
+(xdump_spark/observed.py) that it fills, so the audit costs no count
+job; the split counts ride the sink writes. A build that runs Spark jobs
 of its own (fuzzy/semantic/store dedup, the compression gate, DSIR,
-mixture estimation) and each checkpoint write take one barrier more
-before them. ``audit=False`` skips even that.
+mixture estimation) and each checkpoint write take one barrier count
+before them. ``audit=False`` skips those; with no sink and no card
+either, nothing runs and the returned frames stay lazy.
 """
 
 from __future__ import annotations
@@ -283,12 +289,18 @@ def prepare_training_corpus(
       spans are cut, the doc survives if it still clears
       ``min_tokens``).
     - The audit counts docs after each stage. The counts ride
-      Observations: one barrier count before the shuffle sort fills
-      every stage's, plus one before each build that runs Spark jobs
-      and each checkpoint write; the split counts ride the sink writes
-      (one count job per split without a sink). A stage whose metric
-      the plan dropped (an emptied join side) is counted on its own.
-      ``audit=False`` skips all of it.
+      Observations: the eager local checkpoint before the shuffle sort
+      fills every stage's, plus one barrier count before each build that
+      runs Spark jobs and each checkpoint write; the split counts ride
+      the sink writes (one count job per split without a sink). A stage
+      whose metric the plan dropped (an emptied join side) is counted on
+      its own. ``audit=False`` skips the counts; the checkpoint still
+      runs for a sink or a data card, so the chain runs once.
+    - The returned frames (corpus, splits, sequences, chunks) sit on
+      that local checkpoint whenever it runs, as ``prepare_rag_corpus``'s
+      do: its blocks live on the executors, so a lost executor fails the
+      run instead of recomputing. ``checkpoint_dir`` is the
+      restart-safe route.
     - ``checkpoint_dir`` makes the run RESTART-SAFE (see
       ``xdump_spark/checkpointing.py``): each named stage's output is
       materialized as parquet with a chained configuration fingerprint,
@@ -362,19 +374,24 @@ def prepare_training_corpus(
     pending: list = []
     sc = docs.sparkSession.sparkContext
 
-    def settle():
-        """Read every pending stage count with ONE barrier count of the
-        newest pending frame: its plan holds every pending stage beneath
-        it and no limit or range sort, so each Observation sees exactly
-        one full pass. Runs before any build that runs Spark jobs, before
-        a checkpoint, and before the shuffle sort."""
-        if not pending:
-            return
-        stage, rc = pending.pop()
-        counts[stage] = rc.frame.count()
+    def settle(frame=None):
+        """Read every pending stage count with ONE full pass: a barrier
+        count of the newest pending frame or, given ``frame`` (one above
+        every pending stage), its eager local checkpoint, which is
+        returned. The pass's plan holds every pending stage beneath it
+        and no limit or range sort, so each Observation sees exactly one
+        full pass. Runs before any build that runs Spark jobs, before a
+        stage checkpoint write, and (with ``frame``) before the shuffle
+        sort."""
+        if frame is not None:
+            frame = frame.localCheckpoint(eager=True)
+        elif pending:
+            stage, rc = pending.pop()
+            counts[stage] = rc.frame.count()
         for stage, rc in pending:
             counts[stage] = rc.count()
         pending.clear()
+        return frame
 
     def last_job():
         """The newest Spark job id of this thread's job group."""
@@ -847,10 +864,28 @@ def prepare_training_corpus(
         )
         mixture_rates = mix.get("mixture_rates")
 
-    # the audit barrier: the shuffle's range sort would run every
-    # pending stage twice (sampling pass + sort), so they settle first
-    settle()
-    cur = deterministic_shuffle(cur, seed=shuffle_seed, id_col=id_col)
+    # The sink's file budget comes from the chain's input files, which
+    # the local checkpoint below does not have: size it first. Without
+    # ``partition_by`` the shuffle's range exchange cuts the files, so
+    # the part files keep the training order.
+    n_files = None
+    if out_dir is not None:
+        from xdump_spark.sources.corpus_sink import file_count
+
+        n_files = file_count(cur)
+    # Whatever reads the chain below would run it again, each read: the
+    # range sort samples it and then sorts it, every sink write and the
+    # audit's split counts run the sort, the data card collects several
+    # times. So whenever this call reads it at all, one eager local
+    # checkpoint is the single full pass, and it fills every pending
+    # count. Without a read (no audit, sink or card) the returned frames
+    # stay lazy.
+    if pending or out_dir is not None or make_card:
+        cur = settle(cur)
+    cur = deterministic_shuffle(
+        cur, seed=shuffle_seed, id_col=id_col,
+        partitions=None if partition_by else n_files,
+    )
 
     # deterministic train/val/test split (cleaning.hash_split): membership
     # is a pure function of (split_seed, id) — zero shuffle, stable across
@@ -925,6 +960,16 @@ def prepare_training_corpus(
     if out_dir is not None:
         from xdump_spark.sources.corpus_sink import write_corpus
 
+        def sink(f, path):
+            if partition_by:
+                write_corpus(
+                    f, path, partition_by=partition_by, mode=out_mode,
+                    _n_files=n_files,
+                )
+            else:
+                # the sort's range exchange cut the files, in order
+                f.write.mode(out_mode).parquet(path)
+
         if split_frames is not None:
             # one sized-parquet dir per split under out_dir; the writes
             # are independent jobs, so they overlap. Each split's count
@@ -937,17 +982,14 @@ def prepare_training_corpus(
                 observed = {n: RowCount(f) for n, f in split_frames.items()}
                 frames = {n: rc.frame for n, rc in observed.items()}
             overlap(*(
-                lambda n=n, f=f: write_corpus(
-                    f, fsutil.join(out_dir, n),
-                    partition_by=partition_by, mode=out_mode,
-                )
+                lambda n=n, f=f: sink(f, fsutil.join(out_dir, n))
                 for n, f in frames.items()
             ))
             if audit:
                 for n, rc in observed.items():
                     counts[f"split_{n}"] = rc.count()
         else:
-            write_corpus(cur, out_dir, partition_by=partition_by, mode=out_mode)
+            sink(cur, out_dir)
     elif audit and split_frames is not None:
         for name, f in split_frames.items():
             counts[f"split_{name}"] = f.count()
