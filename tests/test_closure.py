@@ -301,24 +301,23 @@ class TestPointerDoubling:
 class TestDriverFastpathLockstep:
     """The r15 whole-closure driver fast path must agree with the
     distributed loop row-for-row on every golden scenario shape; the
-    loop is forced by shrinking the collect bounds to zero."""
+    loop is forced by a zero driver budget."""
 
-    def _both(self, monkeypatch, catalog, full=(), partial=None, spark=None):
-        from xdump_spark.planner import closure as C
+    def _both(self, catalog, full=(), partial=None, spark=None):
+        from xdump_spark import cutover
 
         fast = compute_closure(catalog, full, dict(partial or {}), spark=spark)
-        monkeypatch.setattr(C, "DRIVER_CLOSURE_LIMIT", 0)
-        slow = compute_closure(catalog, full, dict(partial or {}), spark=spark)
+        with cutover.budget(0):
+            slow = compute_closure(catalog, full, dict(partial or {}), spark=spark)
         assert set(fast) == set(slow)
         for t in fast:
             key = fast[t].columns[0]
             assert ids(fast[t], key) == ids(slow[t], key), t
         return fast
 
-    def test_merge_mixed_edges(self, monkeypatch, spark, employees_catalog):
+    def test_merge_mixed_edges(self, spark, employees_catalog):
         # two seeds, multi-hop + recursive edges — the xd_union_merge shape
         self._both(
-            monkeypatch,
             employees_catalog,
             partial={
                 "tickets": seed(employees_catalog, "tickets", "id = 3"),
@@ -326,30 +325,27 @@ class TestDriverFastpathLockstep:
             },
         )
 
-    def test_full_table_skip_and_propagate(self, monkeypatch, spark, employees_catalog):
+    def test_full_table_skip_and_propagate(self, spark, employees_catalog):
         self._both(
-            monkeypatch,
             employees_catalog,
             full=["employees"],
         )
 
-    def test_full_edge_into_skipped(self, monkeypatch, spark, employees_catalog):
+    def test_full_edge_into_skipped(self, spark, employees_catalog):
         self._both(
-            monkeypatch,
             employees_catalog,
             full=["groups"],
             partial={"employees": seed(employees_catalog, "employees", "id = 1")},
         )
 
-    def test_sql_seed(self, monkeypatch, spark, employees_catalog):
+    def test_sql_seed(self, spark, employees_catalog):
         self._both(
-            monkeypatch,
             employees_catalog,
             partial={"employees": "SELECT * FROM employees ORDER BY id DESC LIMIT 2"},
             spark=spark,
         )
 
-    def test_duplicate_key_rows_keep_all_edges(self, monkeypatch, spark):
+    def test_duplicate_key_rows_keep_all_edges(self, spark):
         # A duplicated referenced-key value must pull EVERY matching row's
         # edges in both paths (the collected edge maps accumulate per key;
         # last-write-wins would silently under-export).
@@ -362,6 +358,6 @@ class TestDriverFastpathLockstep:
         )
         cat = Catalog({"nodes": nodes}, [ForeignKey("nodes", "parent", "nodes", "nid")])
         out = self._both(
-            monkeypatch, cat, partial={"nodes": nodes.filter("nid = 50")}
+            cat, partial={"nodes": nodes.filter("nid = 50")}
         )
         assert ids(out["nodes"], "nid") == {10, 20, 30, 40, 50}

@@ -1699,15 +1699,16 @@ def test_vector_store_vectors_pq_reconstruction_opt_in(spark, tmp_path):
     assert sorted(from_store) == sorted(from_corpus)
 
 
-def test_retention_delete_broadcast_guard(spark, tmp_path, monkeypatch):
+def test_retention_delete_broadcast_guard(spark, tmp_path):
     """r11 verdict "What's missing #2": every retention delete used to
     broadcast the doomed frame UNCONDITIONALLY — a mass-retention
     request (1e8 ids) would blow the broadcast or the driver. The
-    ``_delete_side`` guard broadcasts only below
-    ``MAX_BROADCAST_DELETE_IDS`` and degrades to a shuffle join above
-    it; results are identical either way."""
+    ``_delete_side`` guard broadcasts only while the request fits the
+    driver budget and degrades to a shuffle join past it; results are
+    identical either way."""
     import numpy as np
 
+    from xdump_spark import cutover
     from xdump_spark.operators import incremental as I
     from xdump_spark.operators.incremental import (
         VectorStore,
@@ -1727,11 +1728,11 @@ def test_retention_delete_broadcast_guard(spark, tmp_path, monkeypatch):
     assert "strategy=broadcast" in plan_small
 
     # plan pin, mass-retention path: no broadcast hint on the doomed side
-    monkeypatch.setattr(I, "MAX_BROADCAST_DELETE_IDS", 5)
-    plan_large = (
-        big.join(I._delete_side(doomed), "neighbor_id", "left_anti")
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
+    with cutover.budget(5 * I._DELETE_ID_BYTES):
+        plan_large = (
+            big.join(I._delete_side(doomed), "neighbor_id", "left_anti")
+            ._jdf.queryExecution().optimizedPlan().toString()
+        )
     assert "strategy=broadcast" not in plan_large
 
     # end-to-end over the shuffle path: a VectorStore delete past the
@@ -1746,7 +1747,8 @@ def test_retention_delete_broadcast_guard(spark, tmp_path, monkeypatch):
         ),
         st, threshold=0.99, n_cells=2,
     )
-    rpt = st.delete_ids(list(range(8)))  # 8 > patched threshold of 5
+    with cutover.budget(5 * I._DELETE_ID_BYTES):
+        rpt = st.delete_ids(list(range(8)))  # 8 > a budget of 5 ids
     assert rpt["deleted_rows"] == 8
     left = {
         r["neighbor_id"]

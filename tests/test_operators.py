@@ -651,51 +651,74 @@ def test_minhash_estimate_calibration(spark):
     assert truth01 == est01 and len(truth01) == 25
 
 
-def test_minhash_exact_driver_fastpath_lockstep(spark, monkeypatch):
+def test_minhash_exact_driver_fastpath_lockstep(spark, caplog):
     """r15: verify='exact' takes a bounded driver fast path (numpy
-    banding + one intersection GEMM) when the corpus fits
-    _DRIVER_PAIR_MAX_*; forcing the bounds to zero must reproduce the
-    distributed result row-for-row — on the oracle panel's real shape,
-    with the skew guard engaged, and when the raw-pair budget forces the
-    mid-function fallback."""
+    banding + one intersection GEMM) when the corpus fits the driver
+    budget; a budget that admits only the shingle broadcast must
+    reproduce the distributed result row-for-row — on the oracle panel's
+    real shape, with the skew guard engaged, and when a budget that
+    admits the entry check declines the candidate enumeration (the
+    mid-function fallback)."""
+    import contextlib
+    import logging
 
-    def pairs(df, **kw):
-        return sorted(tuple(r) for r in D.minhash_lsh_pairs(df, **kw).collect())
+    from xdump_spark import cutover
+
+    caplog.set_level(logging.DEBUG, logger="xdump_spark")
+
+    def pairs(df, budget=None, **kw):
+        """Sorted pairs and the (site, bytes, path) cutover records."""
+        caplog.clear()
+        with cutover.budget(budget) if budget is not None else contextlib.nullcontext():
+            got = sorted(tuple(r) for r in D.minhash_lsh_pairs(df, **kw).collect())
+        recs = [r.cutover for r in caplog.records if hasattr(r, "cutover")]
+        return got, [(c["site"], c["bytes"], c["path"]) for c in recs]
+
+    def lockstep(df, **kw):
+        """Fast rows and records, and the rows and last path under the
+        smallest budget that admits the broadcast guard (the entry or
+        the enumeration check declines)."""
+        fast, recs = pairs(df, **kw)
+        assert recs[0][0] == "dedup.exact_verify"
+        slow, slow_recs = pairs(df, budget=recs[0][1], **kw)
+        return fast, recs, slow, slow_recs[-1][2]
 
     d01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     panel_kw = dict(
         threshold=0.6, num_perm=32, bands=16, verify="exact", max_bucket=None
     )
-    fast = pairs(d01.filter("doc_id % 3 = 0"), **panel_kw)
+    panel = d01.filter("doc_id % 3 = 0")
+    fast, recs, slow, slow_path = lockstep(panel, **panel_kw)
+    assert [r[2] for r in recs] == ["driver"] * 3 and slow_path == "distributed"
+    # budget that passes the entry check and fails the enumeration check
+    entry = max(recs[0][1], recs[1][1])
+    budget_fallback, mid = pairs(panel, budget=entry, **panel_kw)
+    assert [(s, p) for s, _, p in mid] == [
+        ("dedup.exact_verify", "driver"),
+        ("dedup.minhash_pairs", "driver"),
+        ("dedup.minhash_pairs", "distributed"),
+    ]
+    assert fast and fast == slow == budget_fallback
     # low threshold + tight bucket cap: prefilter margin and hot-bucket
     # drop both engaged
-    guard_kw = dict(
-        threshold=0.2, num_perm=32, bands=16, verify="exact", max_bucket=20
+    fast_guard, _, slow_guard, slow_path = lockstep(
+        d01, threshold=0.2, num_perm=32, bands=16, verify="exact", max_bucket=20
     )
-    fast_guard = pairs(d01, **guard_kw)
+    assert fast_guard == slow_guard and slow_path == "distributed"
     # duplicate ids: a doc repeated under its own id must not pair with
     # itself (the distributed self-join keeps id_a < id_b)
-    dup = d01.filter("doc_id % 3 = 0").unionByName(d01.filter("doc_id % 30 = 0"))
-    fast_dup = pairs(dup, **panel_kw)
-    # raw-pair budget exhausted mid-function ⇒ _driver_lsh_pairs returns
-    # None and the distributed plan must produce the same rows
-    monkeypatch.setattr(D, "_DRIVER_PAIR_MAX_RAW_PAIRS", 0)
-    budget_fallback = pairs(d01.filter("doc_id % 3 = 0"), **panel_kw)
-    monkeypatch.setattr(D, "_DRIVER_PAIR_MAX_RAW_PAIRS", 50_000_000)
-    monkeypatch.setattr(D, "_DRIVER_PAIR_MAX_DOCS", 0)
-    slow = pairs(d01.filter("doc_id % 3 = 0"), **panel_kw)
-    slow_guard = pairs(d01, **guard_kw)
-    assert fast and fast == slow == budget_fallback
-    assert fast_guard == slow_guard
-    assert fast_dup == pairs(dup, **panel_kw)
+    dup = panel.unionByName(d01.filter("doc_id % 30 = 0"))
+    fast_dup, _, slow_dup, _ = lockstep(dup, **panel_kw)
+    assert fast_dup == slow_dup
 
 
-def test_simhash_driver_fastpath_lockstep(spark, monkeypatch):
+def test_simhash_driver_fastpath_lockstep(spark):
     """r15: simhash_pairs takes the integer-only driver fast path
-    (numpy banding + XOR popcount) below _DRIVER_PAIR_MAX_DOCS; forcing
-    the bound to zero must reproduce the distributed self-join
-    row-for-row — on the oracle panel's md5 exhaustive shape and on the
-    default xxhash64 configuration with the skew guard engaged."""
+    (numpy banding + XOR popcount) while it fits the driver budget; a
+    zero budget must reproduce the distributed self-join row-for-row —
+    on the oracle panel's md5 exhaustive shape and on the default
+    xxhash64 configuration with the skew guard engaged."""
+    from xdump_spark import cutover
 
     def pairs(df, **kw):
         return sorted(tuple(r) for r in D.simhash_pairs(df, **kw).collect())
@@ -708,10 +731,10 @@ def test_simhash_driver_fastpath_lockstep(spark, monkeypatch):
     # itself (the distributed self-join keeps id_a < id_b)
     dup = d01.unionByName(d01.filter("doc_id % 10 = 0"))
     fast_dup = pairs(dup, **panel_kw)
-    monkeypatch.setattr(D, "_DRIVER_PAIR_MAX_DOCS", 0)
-    assert fast_panel == pairs(d01, **panel_kw) and fast_panel
-    assert fast_default == pairs(d01, max_bucket=20)
-    assert fast_dup == pairs(dup, **panel_kw)
+    with cutover.budget(0):
+        assert fast_panel == pairs(d01, **panel_kw) and fast_panel
+        assert fast_default == pairs(d01, max_bucket=20)
+        assert fast_dup == pairs(dup, **panel_kw)
 
 
 # ------------------------------------------- connected components ----
@@ -832,13 +855,13 @@ def test_connected_components_random_vs_union_find(spark):
     assert got == want
 
 
-def test_cosine_topk_query_batch_guard(spark, vecs, monkeypatch):
-    """The query-batch collect is contract-guarded: oversized query sides
-    must raise with a pointer at the bucketed pair path."""
-    monkeypatch.setattr(S, "MAX_QUERY_BATCH_ROWS", 2)
-    import pytest as _pytest
+def test_cosine_topk_query_batch_guard(spark, vecs):
+    """The query-batch collect is contract-guarded: a query side past
+    the driver budget must raise with a pointer at the bucketed pair
+    path."""
+    from xdump_spark import cutover
 
-    with _pytest.raises(ValueError, match="embedding_neardup_pairs"):
+    with cutover.budget(0), pytest.raises(ValueError, match="embedding_neardup_pairs"):
         S.cosine_topk(vecs, vecs, k=2)
 
 

@@ -57,26 +57,24 @@ def main() -> None:
 
     # r12: mass-retention path — the same delete size through BOTH join
     # strategies (fresh store each, deletes mutate): default broadcast
-    # vs the _delete_side shuffle fallback forced by dropping
-    # MAX_BROADCAST_DELETE_IDS to 1. Confirms the degraded plan is not
-    # a cliff at the sizes local[32] can hold; at true mass-retention
-    # size (1e8 ids vs 1e9 rows) only the shuffle plan can run at all.
+    # vs the _delete_side shuffle fallback forced by a zero driver
+    # budget. Confirms the degraded plan is not a cliff at the sizes
+    # local[32] can hold; at true mass-retention size (1e8 ids vs 1e9
+    # rows) only the shuffle plan can run at all.
     if os.environ.get("XD_RET_MASS"):
-        import xdump_spark.operators.incremental as I
+        import contextlib
+
+        from xdump_spark import cutover
 
         for n in sizes:
             doomed = list(range(0, n, 3))  # ~a third of the store
             walls = {}
-            for mode, cap in (("broadcast", 2_000_000), ("shuffle", 1)):
+            for mode, pin in (("broadcast", contextlib.nullcontext()), ("shuffle", cutover.budget(0))):
                 store = build_store(spark, n, dtype, n_cells=n_cells)
-                old = I.MAX_BROADCAST_DELETE_IDS
-                I.MAX_BROADCAST_DELETE_IDS = cap
-                try:
+                with pin:
                     t0 = time.time()
                     rpt = store.delete_ids(doomed)
                     walls[mode] = time.time() - t0
-                finally:
-                    I.MAX_BROADCAST_DELETE_IDS = old
                 assert rpt["deleted_rows"] == len(doomed), rpt
             print(
                 f"mass vector/{dtype} n={n}: delete {len(doomed)} ids — "

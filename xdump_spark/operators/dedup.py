@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from xdump_spark import cutover
 from xdump_spark.observed import RowCount
 from xdump_spark.operators.text import tokens
 
@@ -39,19 +40,6 @@ _MERSENNE = (1 << 61) - 1
 # shuffled joins instead).
 _BROADCAST_SIG_LIMIT = 250_000
 
-# verify="exact" broadcasts every doc's hashed shingle set (~8 B/shingle,
-# a few KB/doc) into BOTH candidate joins; cap the corpus it accepts so
-# the broadcast cannot silently approach Spark's hard limit — estimate
-# mode is the scale path past this.
-MAX_EXACT_VERIFY_DOCS = 250_000
-# The broadcast size is driven by TOTAL shingle bytes, not doc count:
-# 250k docs of ~10 KB each would be a ~20 GB broadcast — past Spark's
-# 8 GB hard limit — so the doc-count cap alone measures the wrong
-# quantity. Each hashed shingle is one long (8 B) plus array overhead;
-# budget ~16 B/shingle and cap well under the 8 GB broadcast limit
-# (the set is broadcast into TWO joins).
-MAX_EXACT_VERIFY_SHINGLE_BYTES = 2 << 30  # 2 GiB
-_EXACT_VERIFY_BYTES_PER_SHINGLE = 16
 
 
 from xdump_spark.operators.sizing import spread as _spread  # noqa: E402
@@ -266,62 +254,62 @@ def _perm_params(num_perm: int) -> list[tuple[int, int]]:
 # MinHash + banded LSH near-dup pairs
 # --------------------------------------------------------------------------
 
-# r15 driver fast path bounds (_driver_lsh_pairs). The banded self-join +
-# per-pair verification of a DRIVER-SMALL corpus is pure job latency on a
-# cluster: when the checkpointed signature frame fits these bounds, the
-# banding, candidate enumeration, and verification COUNTS run as numpy on
-# the driver (one Arrow collect of the narrow frames), and only the final
-# Jaccard arithmetic returns to Spark expressions so rounding semantics
-# stay bit-identical with the distributed path. Any oversized input keeps
-# the distributed plan — the same scale-adaptive cutover discipline as
-# planner/closure.py's DRIVER_CLOSURE_LIMIT.
-_DRIVER_PAIR_MAX_DOCS = 8192            # n² float32 intersection matrix ≤ 256 MB
-_DRIVER_PAIR_MAX_SHINGLES = 8_000_000   # exact mode: CSR collect ≤ ~64 MB
-_DRIVER_PAIR_MAX_DENSE_BYTES = 1536 << 20  # exact mode: n × V float32 budget
-_DRIVER_PAIR_MAX_RAW_PAIRS = 50_000_000    # Σ C(bucket, 2) enumeration budget
+# r15 driver fast paths (_driver_lsh_pairs, _driver_simhash_pairs). The
+# banded self-join + per-pair verification of a DRIVER-SMALL corpus is
+# pure job latency on a cluster: when the modeled driver peak fits the
+# driver budget (xdump_spark.cutover), the banding, candidate
+# enumeration, and verification COUNTS run as numpy on the driver (one
+# Arrow collect of the narrow frames), and only the final Jaccard
+# arithmetic returns to Spark expressions so rounding semantics stay
+# bit-identical with the distributed path. An input whose peak exceeds
+# the budget keeps the distributed plan. Σ C(bucket, 2) raw candidate
+# pairs cost 24 B each at the enumeration's peak: the per-bucket keys,
+# their concatenation and np.unique's sorted copy.
+_RAW_PAIR_BYTES = 24
 
 
-def _arrow_list_matrix(tbl, col: str, width: int):
-    """(n × width) numpy matrix from an Arrow list column of uniform
-    ``width``-length arrays; None when any row deviates (caller falls
-    back to the distributed path)."""
-    la = tbl.column(col).combine_chunks()
-    flat = la.flatten().to_numpy(zero_copy_only=False)
-    n = len(tbl)
-    if len(flat) != n * width:
+def _sorted_by_id(frame: DataFrame):
+    """A collected (id, ...) frame as an Arrow table sorted by id, and
+    its ids; None on a null or duplicate id. Null ids keep the
+    distributed path's null semantics; a duplicate id would pair a row
+    with its own id (id_a == id_b), which the distributed self-join's
+    id_a < id_b never emits."""
+    st = frame.toArrow()
+    ids = st.column("id").to_pylist()
+    if any(i is None for i in ids) or len(set(ids)) < len(ids):
         return None
-    return np.ascontiguousarray(flat.reshape(n, width))
+    arr = np.asarray(ids)
+    order = np.argsort(arr, kind="stable")
+    return st.take(order), arr[order]
 
 
 def _driver_banded_candidates(
-    SIG: np.ndarray, bands: int, rows_per_band: int, max_bucket: int | None
+    SIG: np.ndarray, bands: int, rows_per_band: int, max_bucket: int | None, fits
 ):
     """Unique candidate row-index pairs (ia < ib) sharing ≥1 LSH band,
     enumerated driver-side. Bucket membership is EXACT slice equality —
     the very contract the distributed form's xxhash64 bucketing
     implements (see the banding comment in minhash_lsh_pairs). Returns
-    (ia, ib) or None when Σ C(bucket, 2) exceeds the enumeration budget.
-    Rows must be pre-sorted by id so row order == id order."""
+    (ia, ib), or None when ``fits`` declines the bytes the Σ C(bucket, 2)
+    raw pairs would hold. Rows must be pre-sorted by id so row order ==
+    id order."""
     n = SIG.shape[0]
-    keys = []
-    total_raw = 0
+    buckets = []
     for j in range(bands):
         sl = SIG[:, j * rows_per_band : (j + 1) * rows_per_band]
         _, inv = np.unique(sl, axis=0, return_inverse=True)
         counts = np.bincount(inv)
         order = np.argsort(inv, kind="stable")  # stable ⇒ ascending rows per bucket
-        inv_sorted = inv[order]
-        starts = np.searchsorted(inv_sorted, np.arange(len(counts)))
-        for b in np.nonzero(counts >= 2)[0]:
-            m = int(counts[b])
-            if max_bucket is not None and m > max_bucket:
-                continue  # the skew guard drops hot buckets wholesale
-            total_raw += m * (m - 1) // 2
-            if total_raw > _DRIVER_PAIR_MAX_RAW_PAIRS:
-                return None
-            rs = order[starts[b] : starts[b] + m]
-            iu, ju = np.triu_indices(m, 1)
-            keys.append(rs[iu].astype(np.int64) * n + rs[ju])
+        starts = np.searchsorted(inv[order], np.arange(len(counts)))
+        # the skew guard drops hot buckets wholesale
+        keep = (counts >= 2) & (counts <= (n if max_bucket is None else max_bucket))
+        buckets += [order[starts[b] : starts[b] + counts[b]] for b in np.nonzero(keep)[0]]
+    if not fits(_RAW_PAIR_BYTES * sum(len(rs) * (len(rs) - 1) // 2 for rs in buckets)):
+        return None
+    keys = []
+    for rs in buckets:
+        iu, ju = np.triu_indices(len(rs), 1)
+        keys.append(rs[iu].astype(np.int64) * n + rs[ju])
     if not keys:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     k = np.unique(np.concatenate(keys))
@@ -337,65 +325,58 @@ def _driver_lsh_pairs(
     threshold: float,
     max_bucket: int | None,
     id_type: str,
+    held: int,
 ) -> DataFrame | None:
     """Driver-side candidate generation + exact-verification counts for
-    a bounded-small corpus (bounds above; exact mode only — the
-    estimate mode's 128-comparison verify was MEASURED faster left
-    distributed, see OPTIMIZATION_r15.md). ``docs`` is the checkpointed
+    a driver-small corpus (``held`` is the modeled peak before banding;
+    exact mode only — the estimate mode's 128-comparison verify was
+    MEASURED faster left distributed, see OPTIMIZATION_r15.md). ``docs`` is the checkpointed
     (id, hashed shingles) frame. Returns the final pair frame, or None
     to fall back to the distributed path. Only pairs inside a
     conservative margin of the threshold ship back to Spark, where the
     identical division/round/filter expressions run — so results are
     bit-identical to the distributed form."""
-    rows_per_band = num_perm // bands
-    st = sigs.toArrow()
-    n = len(st)
+    got = _sorted_by_id(sigs)
+    if got is None:
+        return None
+    st, ids = got
+    n = len(ids)
     if n < 2:
         return spark.createDataFrame(
             [], f"id_a {id_type}, id_b {id_type}, jaccard double"
         )
-    SIG = _arrow_list_matrix(st, "sig", num_perm)
-    if SIG is None:
+    # a ragged signature column falls back to the distributed path
+    flat = st.column("sig").combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    if len(flat) != n * num_perm:
         return None
-    id_list = st.column("id").to_pylist()
-    if any(i is None for i in id_list) or len(set(id_list)) < n:
-        # null ids keep the distributed path's null semantics; duplicate
-        # ids would pair a row with its own id (id_a == id_b), which the
-        # distributed self-join's id_a < id_b never emits
-        return None
-    ids = np.asarray(id_list)
-    order = np.argsort(ids, kind="stable")
-    ids, SIG = ids[order], SIG[order]
-
-    cand = _driver_banded_candidates(SIG, bands, rows_per_band, max_bucket)
-    if cand is None:
-        return None
-    ia, ib = cand
+    SIG = flat.reshape(n, num_perm)
 
     # |A ∩ B| for every pair at once via ONE dense matmul over the
     # doc × distinct-shingle incidence matrix (counts ≤ 2^24 are exact
     # in float32). The per-pair array_intersect probe this replaces
     # walked both shingle arrays per candidate pair.
-    dt = docs.toArrow()
-    la = dt.column("shingles").combine_chunks()
-    flat = la.flatten().to_numpy(zero_copy_only=False)
-    lens = la.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-    ids_d = np.asarray(dt.column("id").to_pylist())
-    order_d = np.argsort(ids_d, kind="stable")
-    if not np.array_equal(ids_d[order_d], ids):
+    got = _sorted_by_id(docs)
+    if got is None or not np.array_equal(got[1], ids):
         return None  # signature/shingle frames out of step — distributed path
+    la = got[0].column("shingles").combine_chunks()
+    flat = la.flatten().to_numpy(zero_copy_only=False)
+    sizes = la.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
+    if sizes.max(initial=0) >= (1 << 24):
+        return None
     uniqv, inv = np.unique(flat, return_inverse=True)
     V = len(uniqv)
-    if n * V * 4 > _DRIVER_PAIR_MAX_DENSE_BYTES or lens.max(initial=0) >= (1 << 24):
+    # the peak adds the dense S (n × V float32) and the raw pairs
+    cand = _driver_banded_candidates(
+        SIG, bands, num_perm // bands, max_bucket,
+        lambda raw: cutover.fits(spark, "dedup.minhash_pairs", held + 4 * n * V + raw),
+    )
+    if cand is None:
         return None
+    ia, ib = cand
     S = np.zeros((n, V), dtype=np.float32)
-    row_of = np.empty(len(ids_d), dtype=np.int64)
-    row_of[order_d] = np.arange(n)
-    S[np.repeat(row_of, lens), inv] = 1.0
+    S[np.repeat(np.arange(n), sizes), inv] = 1.0
     P = S @ S.T
     inter = P[ia, ib].astype(np.int64)
-    sizes = np.zeros(n, dtype=np.int64)
-    sizes[row_of] = lens
     # Conservative prefilter: only near-threshold pairs ship to Spark
     # (round moves a value by ≤ 5e-7, so every pair the JVM filter keeps
     # satisfies inter/uni ≥ threshold − 1e-6); the authoritative
@@ -465,12 +446,14 @@ def minhash_lsh_pairs(
     matters more than bounded cost (the correctness panel does).
 
     ``verify="exact"`` is the small-corpus oracle path: every doc's
-    hashed shingle set is broadcast to the candidate joins, so it is
-    guarded at ``MAX_EXACT_VERIFY_DOCS`` rows — beyond that use the
-    estimate mode (signature-only verification, the scale default)."""
+    hashed shingle set is broadcast to the candidate joins, so it
+    refuses a corpus whose broadcasts exceed the driver budget
+    (xdump_spark.cutover) — beyond that use the estimate mode
+    (signature-only verification, the scale default)."""
     rows_per_band = num_perm // bands
     assert rows_per_band * bands == num_perm
     assert verify in ("estimate", "exact")
+    spark = df.sparkSession
 
     normed = _spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("id"), _norm_text(F.col(text_col)).alias("_norm")
@@ -501,10 +484,8 @@ def minhash_lsh_pairs(
                     lambda s: F.xxhash64(s),
                 ).alias("shingles"),
             ).filter(F.size("shingles") > 0).localCheckpoint(eager=True)
-            # One cheap agg over the checkpointed frame guards BOTH axes:
-            # doc count (join fan-out) and total shingle bytes (broadcast
-            # size — the quantity that actually hits Spark's 8 GB
-            # broadcast limit).
+            # One cheap agg over the checkpointed frame sizes the
+            # broadcast guard and the driver fast path.
             return d, d.agg(
                 F.count("*").alias("n"), F.sum(F.size("shingles")).alias("sh")
             ).collect()[0]
@@ -521,63 +502,56 @@ def minhash_lsh_pairs(
         from xdump_spark.operators.concurrency import overlap as _ov
 
         (docs, stats), sigs = _ov(_docs_side, _sigs_side)
-        n_docs, n_shingles = stats["n"], stats["sh"] or 0
-        if n_docs > MAX_EXACT_VERIFY_DOCS:
+        n_shingles = stats["sh"] or 0
+        # the driver builds both broadcast relations of the hashed
+        # shingle sets: ~16 B per shingle (the long plus array overhead)
+        if not cutover.fits(spark, "dedup.exact_verify", 2 * 16 * n_shingles, "refused"):
             raise ValueError(
-                f"verify='exact' broadcasts every doc's shingle set: corpus "
-                f"has {n_docs} docs > MAX_EXACT_VERIFY_DOCS="
-                f"{MAX_EXACT_VERIFY_DOCS}; use verify='estimate' "
-                "(signature-only verification) at scale"
+                f"verify='exact' would broadcast {n_shingles} hashed shingles twice, past the "
+                "driver budget; use verify='estimate' (signature-only verification) at scale"
             )
-        est_bytes = n_shingles * _EXACT_VERIFY_BYTES_PER_SHINGLE
-        if est_bytes > MAX_EXACT_VERIFY_SHINGLE_BYTES:
-            raise ValueError(
-                f"verify='exact' would broadcast ~{est_bytes >> 20} MiB of "
-                f"hashed shingles ({n_shingles} shingles x "
-                f"{_EXACT_VERIFY_BYTES_PER_SHINGLE} B) > "
-                f"{MAX_EXACT_VERIFY_SHINGLE_BYTES >> 20} MiB cap; use "
-                "verify='estimate' (signature-only verification) at scale"
+        # Driver fast path (r15, EXACT mode only): banding + candidate
+        # enumeration + exact intersection counts in numpy on one Arrow
+        # grab when the corpus fits the driver budget; the Jaccard
+        # arithmetic returns to the identical Spark expressions, so the
+        # result is bit-identical (lockstep-tested). The distributed plan
+        # runs unchanged past the budget — and estimate mode stays
+        # distributed at every size: its signature-agreement verify is
+        # cheap per pair and was MEASURED faster on the cluster path (3.8
+        # vs 2.4 s at sf0.1), while exact mode's per-pair set
+        # intersections collapse into one driver GEMM (6.0 → 2.6 s
+        # measured, see OPTIMIZATION_r15.md).
+        n_sig = stats["n"]
+        # peak before banding: collected signatures (Arrow + numpy, 16 B
+        # per component), hashed shingles (Arrow, flat, inverse: 24 B
+        # each) and P = S·Sᵀ (n² float32)
+        held = 16 * num_perm * n_sig + 24 * n_shingles + 4 * n_sig * n_sig
+        if cutover.fits(spark, "dedup.minhash_pairs", held):
+            fast = _driver_lsh_pairs(
+                spark,
+                sigs,
+                docs,
+                num_perm,
+                bands,
+                threshold,
+                max_bucket,
+                df.schema[id_col].dataType.simpleString(),
+                held,
             )
-    # Signatures have three consumers (banding + both sides of pair
-    # verification) and the frame is tiny (num_perm longs per doc):
-    # eagerly checkpoint so every consumer reads materialized blocks — a
-    # lazy persist lets parallel stages of the SAME job race and recompute
-    # the whole scan→norm→signature pipeline per consumer. (Exact mode
-    # checkpointed them above, overlapped with the shingle side.) The
-    # signature count rides that checkpoint (observed, no count job).
-    if verify != "exact":
+            if fast is not None:
+                return fast
+    else:
+        # Signatures have three consumers (banding + both sides of pair
+        # verification) and the frame is tiny (num_perm longs per doc):
+        # eagerly checkpoint so every consumer reads materialized blocks
+        # — a lazy persist lets parallel stages of the SAME job race and
+        # recompute the whole scan→norm→signature pipeline per consumer.
+        # (Exact mode checkpointed them above, overlapped with the
+        # shingle side.) The signature count rides that checkpoint
+        # (observed, no count job).
         sig_rows = RowCount(minhash_signatures(normed, num_perm, shingle_k))
         sigs = sig_rows.frame.localCheckpoint(eager=True)
-
-    # Driver fast path (r15, EXACT mode only): banding + candidate
-    # enumeration + exact intersection counts in numpy on one Arrow grab
-    # when the corpus is driver-small (bounds at _DRIVER_PAIR_MAX_*);
-    # the Jaccard arithmetic returns to the identical Spark expressions,
-    # so the result is bit-identical (lockstep-tested). The distributed
-    # plan runs unchanged past the bounds — and estimate mode stays
-    # distributed at every size: its signature-agreement verify is cheap
-    # per pair and was MEASURED faster on the cluster path (3.8 vs 2.4 s
-    # at sf0.1), while exact mode's per-pair set intersections collapse
-    # into one driver GEMM (6.0 → 2.6 s measured, see
-    # OPTIMIZATION_r15.md).
-    n_sig = stats["n"] if verify == "exact" else sig_rows.count()
-    if (
-        verify == "exact"
-        and n_sig <= _DRIVER_PAIR_MAX_DOCS
-        and n_shingles <= _DRIVER_PAIR_MAX_SHINGLES
-    ):
-        fast = _driver_lsh_pairs(
-            df.sparkSession,
-            sigs,
-            docs,
-            num_perm,
-            bands,
-            threshold,
-            max_bucket,
-            df.schema[id_col].dataType.simpleString(),
-        )
-        if fast is not None:
-            return fast
+        n_sig = sig_rows.count()
 
     # xxhash64 hashes the array slice directly (no per-component string
     # cast + concat): bucket VALUES differ from a string-keyed scheme but
@@ -739,34 +713,32 @@ def _driver_simhash_pairs(
     max_bucket: int | None,
     band_w: int,
     id_type: str,
+    held: int,
 ) -> DataFrame | None:
-    """Driver-side banding + Hamming verification for a bounded-small
-    signature frame (r15; the minhash exact fast path's integer-only
-    sibling — Hamming distance is bit_count of the XOR, so there is no
-    float arithmetic to keep in Spark and final pairs ship directly).
+    """Driver-side banding + Hamming verification for a driver-small
+    signature frame (``held`` is the modeled peak before banding; r15;
+    the minhash exact fast path's integer-only sibling — Hamming
+    distance is bit_count of the XOR, so there is no float arithmetic
+    to keep in Spark and final pairs ship directly).
     Returns the pair frame, or None to fall back to the distributed
     self-join."""
-    st = sigs.toArrow()
-    n = len(st)
-    if n < 2:
+    got = _sorted_by_id(sigs)
+    if got is None:
+        return None
+    st, ids = got
+    if len(ids) < 2:
         return spark.createDataFrame(
             [], f"id_a {id_type}, id_b {id_type}, hamming int"
         )
-    id_list = st.column("id").to_pylist()
-    if any(i is None for i in id_list) or len(set(id_list)) < n:
-        # null ids keep the distributed path's null semantics; duplicate
-        # ids would pair a row with its own id (id_a == id_b), which the
-        # distributed self-join's id_a < id_b never emits
-        return None
-    ids = np.asarray(id_list)
     sig = st.column("sig").to_numpy(zero_copy_only=False).astype(np.int64)
-    order = np.argsort(ids, kind="stable")
-    ids, sig = ids[order], sig[order]
     mask = np.int64((1 << band_w) - 1)
     BANDS = np.column_stack(
         [(sig >> np.int64(band_w * i)) & mask for i in range(4)]
     )
-    cand = _driver_banded_candidates(BANDS, 4, 1, max_bucket)
+    cand = _driver_banded_candidates(
+        BANDS, 4, 1, max_bucket,
+        lambda raw: cutover.fits(spark, "dedup.simhash_pairs", held + raw),
+    )
     if cand is None:
         return None
     ia, ib = cand
@@ -823,8 +795,11 @@ def simhash_pairs(
     # banding, candidate enumeration, and Hamming popcounts run as
     # numpy on one Arrow grab (bit-identical: integer-only arithmetic,
     # same hot-bucket drop, lockstep-tested). Oversized inputs keep the
-    # distributed self-join unchanged.
-    if sig_rows.count() <= _DRIVER_PAIR_MAX_DOCS:
+    # distributed self-join unchanged. Peak before banding per doc: the
+    # collected id and signature (Arrow 16 B, Python id 40 B, numpy
+    # 16 B) and four band columns (32 B).
+    held = 104 * sig_rows.count()
+    if cutover.fits(df.sparkSession, "dedup.simhash_pairs", held):
         fast = _driver_simhash_pairs(
             df.sparkSession,
             sigs,
@@ -832,6 +807,7 @@ def simhash_pairs(
             max_bucket,
             band_w,
             df.schema[id_col].dataType.simpleString(),
+            held,
         )
         if fast is not None:
             return fast

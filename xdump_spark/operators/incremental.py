@@ -34,6 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xdump_spark import cutover
 from xdump_spark.operators.dedup import (
     _norm_text,
     _spread,
@@ -167,29 +168,28 @@ def _delete_from_partitions(
     return len(dirs)
 
 
-# A retention request is the broadcast side by contract — but ONLY
-# while it is small. A mass-retention request (drop an entire source
-# domain: 1e8 ids) unconditionally broadcast would blow the broadcast
-# memory or the driver (r11 verdict "What's missing #2"); above this
-# threshold the delete joins fall back to a shuffle join, which at that
-# request size is the plan you want anyway (both sides are big).
-MAX_BROADCAST_DELETE_IDS = 2_000_000
+# A doomed id in the broadcast relation the driver builds: the key plus
+# its row and hash-table slot.
+_DELETE_ID_BYTES = 64
 
 
 def _delete_side(doomed: DataFrame) -> DataFrame:
     """Hint the doomed frame for a retention anti/semi join: broadcast
-    when small (the overwhelmingly common case — plan-pinned in tests),
-    plain (shuffle-join) when the request exceeds
-    ``MAX_BROADCAST_DELETE_IDS``. The size probe is a limit+count (one
-    cheap job per delete call — retention is maintenance, not a hot
-    path), mirroring ``similarity.MAX_QUERY_BATCH_ROWS``' contract
-    enforcement, except retention degrades to the scalable plan rather
-    than raising: a right-to-be-forgotten request must not be refused
-    for being too thorough."""
-    n = doomed.limit(MAX_BROADCAST_DELETE_IDS + 1).count()
-    if n > MAX_BROADCAST_DELETE_IDS:
-        return doomed
-    return F.broadcast(doomed)
+    while it fits the driver budget (the overwhelmingly common case —
+    plan-pinned in tests), plain (shuffle-join) past it. A mass-retention
+    request (drop an entire source domain: 1e8 ids) unconditionally
+    broadcast would blow the broadcast memory or the driver (r11 verdict
+    "What's missing #2"); at that size both sides are big and the
+    shuffle join is the plan you want anyway. The size probe is a
+    limit+count (one cheap job per delete call — retention is
+    maintenance, not a hot path; no collect follows it). Unlike the
+    query batch, retention degrades to the scalable plan rather than
+    raising: a right-to-be-forgotten request must not be refused for
+    being too thorough."""
+    spark = doomed.sparkSession
+    n = doomed.limit(cutover.budget_bytes(spark) // _DELETE_ID_BYTES + 1).count()
+    small = cutover.fits(spark, "incremental.delete", _DELETE_ID_BYTES * n)
+    return F.broadcast(doomed) if small else doomed
 
 
 def _as_id_frame(spark: SparkSession, ids, col: str) -> DataFrame:
@@ -598,18 +598,19 @@ def incremental_neardup(
         banded_cand = banded
 
     def _bounded_collect(df: DataFrame, what: str) -> list:
-        df = df.localCheckpoint(eager=True)
-        n = df.count()
-        if n > max_pairs:
+        tbl = cutover.bounded_collect(
+            df, max_pairs, f"incremental_neardup.{what.split()[0]}", "refused"
+        )
+        if tbl is None:
             raise ValueError(
-                f"incremental_neardup: {n} {what} exceed max_pairs="
+                f"incremental_neardup: more {what} than max_pairs="
                 f"{max_pairs}; greedy resolution would collect them all "
                 "to the driver. Shrink the increment batch, run "
                 "incremental_exact_dedup first (template re-crawls are "
                 "mostly byte-identical), or lower max_bucket to drop "
                 "degenerate template buckets."
             )
-        return df.collect()
+        return tbl.to_pylist()
 
     # new vs STORE: equi-join on the band key; the (small) new side
     # broadcasts, the store side prunes to matching band partitions.

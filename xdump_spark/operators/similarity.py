@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from xdump_spark import cutover
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -100,29 +102,36 @@ def _pair_cosine_udf(round_to: int = 6):
     return cos
 
 
-# A query batch is the broadcast side by contract; at 64 dims this caps
-# the driver matrix at ~100 MB. Bigger "query" sides mean the caller is
-# doing an all-pairs scan, which is embedding_neardup_pairs' job.
-MAX_QUERY_BATCH_ROWS = 200_000
+# A collected vector row lives three times on the driver (the Arrow
+# table, the float64 matrix, the pickled scoring closure): 3 × 8 B at the
+# 64 dims the engine's embeddings carry.
+_VECTOR_ROW_BYTES = 3 * 8 * 64
+
+
+def _collect_vectors(df: DataFrame, what: str, instead: str):
+    """(ids, float64 matrix, row norms) of a (id, vector) frame,
+    collected as one bounded Arrow job; raises, naming ``instead``, past
+    the driver budget."""
+    tbl = cutover.bounded_collect(
+        df, cutover.budget_bytes(df.sparkSession) // _VECTOR_ROW_BYTES,
+        f"similarity.{what.replace(' ', '_')}", "refused",
+    )
+    if tbl is None:
+        raise ValueError(f"{what} exceeds the driver budget; {instead}")
+    ids = tbl.column(0).to_pylist()
+    M = _matrix(tbl.column(1).to_pandas()) if ids else np.zeros((0, 0))
+    return ids, M, _norms(M)
 
 
 def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
     """Driver-collect the query batch (it is the broadcast side by
     contract: a query batch is small; the corpus is the big side — the
-    contract is ENFORCED with a limit+count probe before collecting)."""
-    if queries.limit(MAX_QUERY_BATCH_ROWS + 1).count() > MAX_QUERY_BATCH_ROWS:
-        raise ValueError(
-            f"query batch exceeds MAX_QUERY_BATCH_ROWS={MAX_QUERY_BATCH_ROWS}; "
-            "for corpus-vs-corpus similarity use embedding_neardup_pairs "
-            "(bucketed) or split the query side into batches"
-        )
-    rows = queries.select(id_col, vec_col).collect()
-    ids = [r[0] for r in rows]
-    if rows:
-        Q = np.vstack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    else:
-        Q = np.zeros((0, 0))
-    return ids, Q, _norms(Q) if len(ids) else np.zeros(0)
+    contract is ENFORCED by the driver budget)."""
+    return _collect_vectors(
+        queries.select(id_col, vec_col), "query batch",
+        "for corpus-vs-corpus similarity use embedding_neardup_pairs "
+        "(bucketed) or split the query side into batches",
+    )
 
 
 def _local_topk(nid, col, qid, k):
@@ -905,11 +914,6 @@ def ivf_topk(
     return ivf_search(index, queries, k=k, id_col=id_col, vec_col=vec_col, n_probe=n_probe)
 
 
-# Exact all-pairs is the oracle baseline for SMALL corpora only; above
-# this the LSH path is mandatory (and the guard names it).
-MAX_EXACT_PAIRS_ROWS = 100_000
-
-
 def embedding_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
@@ -925,7 +929,7 @@ def embedding_neardup_pairs(
     """Pairs with cosine ≥ threshold.
 
     ``exact=True`` — baseline / oracle path: the corpus is collected to a
-    driver matrix (guarded ≤ MAX_EXACT_PAIRS_ROWS rows) and each corpus
+    driver matrix (refused past the driver budget) and each corpus
     partition computes one (batch × n) matmul, emitting only the pairs
     that clear the threshold — O(n²) multiply-adds in BLAS, never O(n²)
     rows in the plan. Otherwise candidates must share a sign-LSH bucket
@@ -935,17 +939,12 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     )
     if exact:
-        n_rows = c.count()
-        if n_rows > MAX_EXACT_PAIRS_ROWS:
-            raise ValueError(
-                f"exact all-pairs is the small-n oracle baseline: corpus has "
-                f"{n_rows} rows > {MAX_EXACT_PAIRS_ROWS}; use exact=False "
-                "(sign-LSH bucketed candidates) at scale"
-            )
-        rows = c.collect()
-        all_ids = np.array([r[0] for r in rows])
-        A = np.vstack([np.asarray(r[1], dtype=np.float64) for r in rows])
-        an = _norms(A)
+        ids, A, an = _collect_vectors(
+            c, "exact pairs corpus",
+            "exact all-pairs is the small-n oracle baseline; use exact=False "
+            "(sign-LSH bucketed candidates) at scale",
+        )
+        all_ids = np.array(ids)
         out_schema = f"id_a {_id_type(corpus, id_col)}, id_b {_id_type(corpus, id_col)}, cosine_sim double"
 
         def score(batches):

@@ -52,26 +52,24 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xdump_spark import cutover
 from xdump_spark.catalog import Catalog
 
 # Key-sets below this row count are broadcast into the semi-join; larger
 # ones go through a shuffled join (AQE may still pick SHJ/SMJ).
 BROADCAST_KEY_LIMIT = 5_000_000
 
-# When every table the worklist could touch fits this narrow-projection
-# (key + FK columns) row bound, the FK subgraph is collected once (one
-# bounded collect per table, overlapped on driver threads) and the entire
-# fixed point saturates as a driver-side BFS — O(tables) small jobs
-# instead of O(depth × tables) checkpoint+count job pairs (a 10-level
-# manager chain paid ~20 tiny jobs of pure scheduling latency on the
-# round loop). Any oversized table keeps the distributed loop for the
-# whole closure. The bound keeps the driver safe the same way the
-# broadcast limit does: ~3 longs/row, so 1M rows is ~100 MB of Python
-# ints in key-sorted column lists per table (under typical driver heaps), and
-# aggregate driver memory is bounded by (reached tables) × limit narrow
-# rows — with the 10-table catalog the same order as one broadcast
-# relation.
-DRIVER_CLOSURE_LIMIT = 1_000_000
+# When every table the worklist could touch fits the driver budget
+# (xdump_spark.cutover) as a narrow projection (key + FK columns), the FK
+# subgraph is collected once (one bounded collect per table, overlapped
+# on driver threads) and the entire fixed point saturates as a
+# driver-side BFS — O(tables) small jobs instead of O(depth × tables)
+# checkpoint+count job pairs (a 10-level manager chain paid ~20 tiny jobs
+# of pure scheduling latency on the round loop). Any oversized table
+# keeps the distributed loop for the whole closure. The collects are held
+# at once, so each gets an equal share of the budget; a collected value
+# costs its Arrow long plus a Python int in a key-sorted column list.
+_VALUE_BYTES = 8 + 40
 
 
 def validate_tables(catalog: Catalog, full_tables, partial_tables) -> None:
@@ -258,15 +256,16 @@ def compute_closure(
 
     def driver_closure_fastpath() -> bool:
         """Whole-closure driver-side fixed point (r15): when EVERY table the
-        worklist could statically touch fits DRIVER_CLOSURE_LIMIT narrow
-        rows, collect each table's (key + FK columns) projection once —
-        one bounded collect per table, overlapped on driver threads — and
-        saturate the entire closure as a driver-side BFS. The distributed
-        loop pays a checkpoint job + a count job per TOUCHED TABLE per
-        ROUND (the merge scenario = ~4 rounds × up to 6 tables of pure
-        scheduling latency, 8↔32-core ratio 1.02 in the r14 driver bench
-        — job latency, not compute); the fast path pays O(tables)
-        bounded collects in one overlapped wave. Key-set semantics are
+        worklist could statically touch fits its share of the driver
+        budget as narrow rows, collect each table's (key + FK columns)
+        projection once — one bounded collect per table, overlapped on
+        driver threads — and saturate the entire closure as a
+        driver-side BFS. The distributed loop pays a checkpoint job + a
+        count job per TOUCHED TABLE per ROUND (the merge scenario = ~4
+        rounds × up to 6 tables of pure scheduling latency, 8↔32-core
+        ratio 1.02 in the r14 driver bench — job latency, not compute);
+        the fast path pays O(tables) bounded collects in one overlapped
+        wave. Key-set semantics are
         identical: seed keys are marked seen without re-pulling base
         rows, null FK values never propagate, edges into full tables are
         skipped, and self-edges saturate naturally. Returns False — and
@@ -299,24 +298,15 @@ def compute_closure(
         # collected row tuples.
         targets: dict[str, list[tuple[str, str]]] = {}
         for t in reach:
-            tgts = [
-                (fk.column, fk.foreign_table)
-                for fk in catalog.outgoing(t)
-                if fk.foreign_table not in full
-            ]
-            for col, parent in tgts:
-                fkc = next(
-                    fk.foreign_column
-                    for fk in catalog.outgoing(t)
-                    if fk.column == col and fk.foreign_table == parent
-                )
-                if key_of[parent] != fkc:
+            fks = [fk for fk in catalog.outgoing(t) if fk.foreign_table not in full]
+            for fk in fks:
+                if key_of[fk.foreign_table] != fk.foreign_column:
                     raise ValueError(
-                        f"FK {t}.{col} disagrees with key column "
-                        f"{key_of[parent]!r} of {parent!r}"
+                        f"FK {t}.{fk.column} disagrees with key column "
+                        f"{key_of[fk.foreign_table]!r} of {fk.foreign_table!r}"
                     )
-            if tgts:
-                targets[t] = tgts
+            if fks:
+                targets[t] = [(fk.column, fk.foreign_table) for fk in fks]
 
         # Frames whose rows must be collected: every full table's
         # propagation projection (all rows propagate once), every
@@ -326,46 +316,36 @@ def compute_closure(
         grabs: list[tuple[str, str, DataFrame, list[tuple[str, str]]]] = []
         for t in sorted(reach):
             tgts = targets.get(t, [])
-            if t in full:
-                if tgts:
-                    grabs.append(
-                        ("full", t, catalog.tables[t].select(
-                            *[F.col(c) for c, _ in tgts]), tgts)
-                    )
-                continue
-            if key_of[t] is not None and tgts:
-                grabs.append(
-                    ("table", t, catalog.tables[t].select(
-                        key_of[t], *[F.col(c) for c, _ in tgts]), tgts)
-                )
-            if t in seeds and (key_of[t] is not None or tgts):
-                cols = ([key_of[t]] if key_of[t] is not None else []) + [
-                    F.col(c) for c, _ in tgts
-                ]
-                grabs.append(("seed", t, seeds[t].select(*cols), tgts))
+            key = [] if key_of[t] is None else [key_of[t]]  # none for full tables
+            narrow = key + [F.col(c) for c, _ in tgts]
+            if t in full and tgts:
+                grabs.append(("full", t, catalog.tables[t].select(*narrow), tgts))
+            if key and tgts:
+                grabs.append(("table", t, catalog.tables[t].select(*narrow), tgts))
+            if t in seeds and narrow:
+                grabs.append(("seed", t, seeds[t].select(*narrow), tgts))
 
         from xdump_spark.operators.concurrency import overlap
 
-        limit = DRIVER_CLOSURE_LIMIT
-
-        def grab(df: DataFrame, by_key: bool):
+        def grab(kind: str, t: str, df: DataFrame):
             # Arrow transfer, not collect(): a py4j Row collect of a
             # 150k-row narrow costs ~1 s of driver-side Row construction
             # alone (guide §6 Arrow-for-driver-transfers); the columnar
             # path is ~20× cheaper. Column-major lists out; a table whose
             # rows are looked up by key comes sorted by it, null keys
             # dropped (no key value selects them).
-            tbl = df.limit(limit + 1).toArrow()
-            if tbl.num_rows > limit:
+            share = cutover.budget_bytes(df.sparkSession) // len(grabs)
+            tbl = cutover.bounded_collect(
+                df, share // (_VALUE_BYTES * len(df.columns)), f"closure.{kind}.{t}"
+            )
+            if tbl is None:
                 return None
-            if by_key:
+            if kind == "table":
                 order = pc.sort_indices(tbl, sort_keys=[(tbl.column_names[0], "ascending")])
                 tbl = tbl.take(order).slice(0, tbl.num_rows - tbl.column(0).null_count)
             return [col.to_pylist() for col in tbl.columns]
 
-        collected = overlap(*[
-            lambda df=df, kind=kind: grab(df, kind == "table") for kind, _, df, _ in grabs
-        ])
+        collected = overlap(*[lambda g=g: grab(*g[:3]) for g in grabs])
         if any(cols is None for cols in collected):
             return False
 
