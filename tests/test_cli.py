@@ -1371,3 +1371,57 @@ def test_cli_prepare_rag(spark, tmp_path, capsys):
     with _pytest.raises(SystemExit, match="--index-dir"):
         run("maintain", ["--kind", "rag",
                          "--store-path", str(tmp_path / "vs")])
+
+
+def test_curate_cli_and_config_lockstep(spark, tmp_path, monkeypatch):
+    """The CLI's curate flags and the equivalent curate config reach
+    prepare_training_corpus with the same arguments: both surfaces run
+    through config.run_curate, so they cannot drift apart."""
+    import json
+
+    from xdump_spark import pipeline
+
+    captured = []
+
+    class _Result:
+        audit, resumed, mixture_rates = {}, [], None
+        sequences = chunks = card = None
+
+    def fake(docs, **kwargs):
+        store = kwargs.pop("dedup_store")
+        captured.append((docs.columns, type(store), vars(store), kwargs))
+        return _Result()
+
+    monkeypatch.setattr(pipeline, "prepare_training_corpus", fake)
+    docs = "/root/testdata/sf0.001/documents.parquet"
+    out = str(tmp_path / "corpus")
+    ck = str(tmp_path / "ck")
+    terms = tmp_path / "terms.txt"
+    terms.write_text("spam\n\n  eggs  \n")
+    assert cli.run(cli.build_parser().parse_args([
+        "curate", "-i", docs, "-o", out, "--span-k", "0", "--min-tokens", "2",
+        "--doc-dedup", "exact", "--dedup-store-table", "seen",
+        "--dedup-store-buckets", "8", "--blocklist", str(terms),
+        "--sample", "en=0.5", "--sample", "de=1.0",
+        "--splits", "train=0.9,val=0.1", "--split-seed", "7", "--seed", "3",
+        "--checkpoint-dir", ck, "--checkpoint-stages", "cleaned, deduped",
+        "--no-resume", "--no-audit", "--overwrite",
+    ]), spark) == 0
+    cfg = tmp_path / "curate.json"
+    cfg.write_text(json.dumps({
+        "input": docs, "output": out, "span_k": 0, "min_tokens": 2,
+        "doc_dedup": "exact", "dedup_store": {"table": "seen", "n_buckets": 8},
+        "blocklist": ["spam", "eggs"],
+        "sample_rates": {"en": 0.5, "de": 1.0},
+        "splits": {"train": 0.9, "val": 0.1}, "split_seed": 7,
+        "shuffle_seed": 3, "checkpoint_dir": ck,
+        "checkpoint_stages": ["cleaned", "deduped"],
+        "resume": False, "audit": False, "overwrite": True,
+    }))
+    from xdump_spark.config import curate_from_config
+
+    curate_from_config(spark, str(cfg))
+    cli_call, cfg_call = captured
+    assert cli_call == cfg_call
+    assert cli_call[3]["blocklist"] == ["spam", "eggs"]
+    assert cli_call[3]["checkpoint_stages"] == {"cleaned", "deduped"}

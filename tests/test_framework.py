@@ -284,3 +284,41 @@ def test_curate_from_config_dsir_keys(spark, tmp_path):
         json.dump(cfg, f)
     res = curate_from_config(spark, p)
     assert res.audit.get("dsir_selected") == 20, res.audit
+
+
+def test_jdbc_load_restarts_sequences_once(spark, tmp_path, monkeypatch):
+    """A JDBC load replays the dumped sequence state once: ``write_jdbc``
+    already runs ``apply_sequences_jdbc``, so ``JdbcBackend.load_dump``
+    must not run every RESTART / setval a second time. A ``recreate``
+    cleanup, which a JDBC target has no means for, names ``truncate``."""
+    from tests.test_jdbc_live import derby_db
+    from xdump_spark.sources import jdbc as J
+
+    url = derby_db.__wrapped__(spark, tmp_path)
+    settings = {
+        "DATABASES": {
+            "default": {"ENGINE": "xdump_spark.jdbc", "NAME": url, "DRIVER": DERBY_DRIVER},
+            "target": {
+                "ENGINE": "xdump_spark.jdbc",
+                "NAME": f"jdbc:derby:{tmp_path}/seqonce;create=true",
+                "DRIVER": DERBY_DRIVER,
+            },
+        },
+        "XDUMP": {"FULL_TABLES": ["groups"], "PARTIAL_TABLES": {}},
+    }
+    zip_path = str(tmp_path / "dump.zip")
+    dump_command(spark, settings, zip_path)
+
+    calls = []
+    real = J.apply_sequences_jdbc
+
+    def counting(*args, **kwargs):
+        calls.append(args[2])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(J, "apply_sequences_jdbc", counting)
+    load_command(spark, settings, zip_path, alias="target")
+    assert calls == [{"groups": 2}]
+
+    with pytest.raises(ValueError, match="truncate"):
+        load_command(spark, settings, zip_path, alias="target", cleanup_method="recreate")

@@ -9,7 +9,7 @@ over JDBC, and verify the copy.
 
 import pytest
 
-from xdump_spark.catalog import ForeignKey
+from xdump_spark.catalog import Catalog, ForeignKey
 from xdump_spark.engine import SparkDumpEngine
 from xdump_spark.sources import jdbc as J
 
@@ -213,3 +213,36 @@ def test_cli_jdbc_dump_and_load(spark, derby_db, tmp_path):
     rs.close()
     st.close()
     conn.close()
+
+
+def test_cli_jdbc_load_truncate_replaces_rows(spark, derby_db, tmp_path):
+    """`load --jdbc-url --cleanup-method truncate` empties the target
+    before each load, so loading the same archive twice leaves each
+    table holding the archive's rows, not twice as many."""
+    from xdump_spark import cli
+
+    out = str(tmp_path / "dump.zip")
+    assert cli.run(cli.build_parser().parse_args([
+        "dump", "--jdbc-url", derby_db, "--jdbc-driver", DERBY_DRIVER,
+        "-o", out, "-f", "groups",
+        "-p", "employees:SELECT * FROM employees WHERE id = 5",
+    ]), spark) == 0
+    archive = SparkDumpEngine(spark, Catalog({})).load(out)
+    want = {t: f.count() for t, f in archive.frames.items()}
+    assert want == {"groups": 2, "employees": 3}
+
+    dst_url = f"jdbc:derby:{tmp_path}/truncdst;create=true"
+    _connect(spark, dst_url).close()
+    load = [
+        "load", "-i", out, "--jdbc-url", dst_url, "--jdbc-driver", DERBY_DRIVER,
+        "--cleanup-method", "truncate",
+    ]
+    for _ in range(2):
+        assert cli.run(cli.build_parser().parse_args(load), spark) == 0
+    dst_opts = J.jdbc_options(dst_url, driver=DERBY_DRIVER)
+    got = {t: J.read_table(spark, dst_opts, t).count() for t in want}
+    assert got == want
+
+    recreate = load[:-1] + ["recreate"]
+    with pytest.raises(ValueError, match="truncate"):
+        cli.run(cli.build_parser().parse_args(recreate), spark)

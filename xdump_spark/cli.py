@@ -11,7 +11,12 @@ source.
     python -m xdump_spark.cli load -i dump.zip -o DBDIR \
         [--cleanup-method {recreate,truncate}]
     python -m xdump_spark.cli load -i dump.zip --jdbc-url jdbc:... \
-        [-U user] [-W password] [--jdbc-driver CLASS]
+        [-U user] [-W password] [--jdbc-driver CLASS] [--cleanup-method truncate]
+
+Each subcommand is one function in ``_COMMANDS``. dump, load and curate
+run through the same functions as the JSON-config and framework entry
+points (``framework.run_dump``, ``framework.run_load``,
+``config.run_curate``).
 """
 
 from __future__ import annotations
@@ -168,63 +173,67 @@ def build_parser() -> argparse.ArgumentParser:
     ld.add_argument("--jdbc-driver", default=None, help="JDBC driver class name")
     ld.add_argument(
         "--cleanup-method", choices=["recreate", "truncate"], default=None,
-        help="clean the target before loading (reference: xdump/cli/load.py:25-37)",
+        help="clean the target before loading (reference: "
+        "xdump/cli/load.py:25-37); a --jdbc-url target takes truncate only",
     )
     ld.add_argument(
         "--backend", type=resolve_backend, default=None,
         help=f"target class as 'pkg.module:Class' (default {DEFAULT_BACKEND})",
     )
 
+    # curate flags carry no defaults: a flag left out is left out of the
+    # curate request too (_curate_request), so prepare_training_corpus's
+    # signature holds every default, as it does for a curate config
     c = sub.add_parser(
         "curate",
         help="prepare a training corpus from a documents table "
         "(pipeline.prepare_training_corpus from the shell)",
+        argument_default=argparse.SUPPRESS,
     )
     c.add_argument("-i", "--input", required=True, help="documents parquet path")
     c.add_argument(
-        "--input-format", choices=["parquet", "wet"], default="parquet",
+        "--input-format", choices=["parquet", "wet"],
         help="'wet' reads Common-Crawl WET/WARC conversion records "
              "(sources/warc.py) with (doc_id, url, date, text) columns; "
              "corrupt files quarantine, never fail the run",
     )
     c.add_argument("-o", "--output", required=True, help="output corpus directory")
-    c.add_argument("--text-col", default="text")
-    c.add_argument("--id-col", default="doc_id")
+    c.add_argument("--text-col")
+    c.add_argument("--id-col")
     c.add_argument("--markup", action="store_true", help="strip HTML tags/entities first")
     c.add_argument("--line-filter", action="store_true", help="C4 per-line gates")
     c.add_argument("--line-dedup", action="store_true", help="global keep-first line dedup")
-    c.add_argument("--url-col", default="url")
+    c.add_argument("--url-col")
     c.add_argument("--dedup-urls", action="store_true",
                    help="drop re-crawls by canonical URL (before any text stage)")
-    c.add_argument("--domain-cap", type=int, default=None,
+    c.add_argument("--domain-cap", type=int,
                    help="max docs per registrable domain (salted top-k)")
     c.add_argument(
-        "--span-k", type=int, default=8,
+        "--span-k", type=int,
         help="strip cross-doc substrings of >= K tokens (0 disables)",
     )
     c.add_argument(
-        "--doc-dedup", choices=["exact", "fuzzy", "semantic"], default=None,
+        "--doc-dedup", choices=["exact", "fuzzy", "semantic"],
         help="document-level dedup stage: exact fingerprint, MinHash-LSH "
         "fuzzy clusters (components.fuzzy_dedup), or SemDeDup embedding "
         "dedup (similarity.semantic_dedup — input must carry "
         "--embedding-col)",
     )
-    c.add_argument("--fuzzy-threshold", type=float, default=0.8)
-    c.add_argument("--semantic-threshold", type=float, default=0.95)
+    c.add_argument("--fuzzy-threshold", type=float)
+    c.add_argument("--semantic-threshold", type=float)
     c.add_argument("--semantic-cells", type=int, default=16,
                    help="with --doc-dedup semantic: KMeans cell count "
                         "(SemDeDup runs 50k at web scale; must be <= the "
                         "corpus size)")
-    c.add_argument("--embedding-col", default="embedding",
+    c.add_argument("--embedding-col",
                    help="with --doc-dedup semantic: the vector column on "
                         "the input (join embeddings upstream)")
-    c.add_argument("--vector-store", default=None,
+    c.add_argument("--vector-store",
                    help="with --doc-dedup semantic: persistent embedding "
                         "VectorStore directory; this run dedups against "
                         "all previously-accepted vectors and records its "
                         "survivors (daily-crawl increments)")
     c.add_argument("--vector-dtype", choices=["float64", "float32", "pq"],
-                   default="float64",
                    help="with --vector-store: on-disk vector "
                         "representation at store CREATION (float32 "
                         "halves store bytes and transfer; pq stores "
@@ -232,10 +241,10 @@ def build_parser() -> argparse.ArgumentParser:
                         "a documented threshold-margin decision "
                         "caveat; compute stays float64). An existing "
                         "store keeps its own recorded dtype.")
-    c.add_argument("--pq-m", type=int, default=8,
+    c.add_argument("--pq-m", type=int,
                    help="with --vector-dtype pq: codes per vector at "
                         "store CREATION (the bytes/accuracy dial)")
-    c.add_argument("--pq-k", type=int, default=256,
+    c.add_argument("--pq-k", type=int,
                    help="with --vector-dtype pq: codewords per subspace "
                         "at store creation")
     c.add_argument("--exact-guard", action="store_true",
@@ -244,49 +253,47 @@ def build_parser() -> argparse.ArgumentParser:
                         "each increment, so byte-identical re-sends "
                         "reject even across pq retrains (an existing "
                         "store keeps its own recorded setting)")
-    c.add_argument("--embeddings", default=None, metavar="PARQUET",
+    c.add_argument("--embeddings", metavar="PARQUET",
                    help="with --doc-dedup semantic: an embedding table to "
                         "attach by id before the pipeline (docs without a "
                         "vector are dropped — they cannot be semantically "
                         "deduped)")
-    c.add_argument("--embeddings-id-col", default="vec_id",
+    c.add_argument("--embeddings-id-col",
                    help="id column of the --embeddings table")
-    c.add_argument("--hash-embed", type=int, default=None, metavar="DIM",
+    c.add_argument("--hash-embed", type=int, metavar="DIM",
                    help="with --doc-dedup semantic: compute DETERMINISTIC "
                         "hashing-trick embeddings from the text itself "
                         "(text.hash_embed_col, no model required — lexical "
                         "k-gram geometry) instead of loading --embeddings")
-    c.add_argument("--dedup-store-table", default=None,
+    c.add_argument("--dedup-store-table",
                    help="with --doc-dedup exact: persistent hash-store table; "
                         "this run dedups against all previously-accepted docs "
                         "and records its survivors (daily-crawl increments)")
-    c.add_argument("--dedup-store-path", default=None,
+    c.add_argument("--dedup-store-path",
                    help="external location for the hash-store table")
-    c.add_argument("--dedup-store-buckets", type=int, default=64)
-    c.add_argument("--neardup-store", default=None,
+    c.add_argument("--dedup-store-buckets", type=int)
+    c.add_argument("--neardup-store",
                    help="with --doc-dedup fuzzy: persistent MinHash "
                         "SignatureStore directory; this run near-dedups "
                         "against all previously-accepted docs and records "
                         "its survivors' signatures (daily-crawl increments)")
-    c.add_argument("--min-tokens", type=int, default=5)
+    c.add_argument("--min-tokens", type=int)
     c.add_argument(
         "--gopher", action="store_true",
         help="apply the Gopher quality rules (curation.gopher_filter)",
     )
     c.add_argument(
-        "--blocklist", default=None, metavar="TERMS_FILE",
+        "--blocklist", metavar="TERMS_FILE",
         help="drop docs containing any term from this file (one per line; "
         "C4 banned-word semantics, cleaning.blocklist_filter)",
     )
+    c.add_argument("--blocklist-mode", choices=["token", "substring"])
     c.add_argument(
-        "--blocklist-mode", choices=["token", "substring"], default="token",
-    )
-    c.add_argument(
-        "--sample", action="append", default=[], type=parse_sample_rate,
+        "--sample", action="append", type=parse_sample_rate,
         metavar="LANG=RATE", help="per-stratum deterministic rate (repeatable)",
     )
     c.add_argument(
-        "--compression-min", type=float, default=None,
+        "--compression-min", type=float,
         help="drop docs whose zlib compression ratio falls below this "
         "floor (redundancy gate, curation.compression_ratio_frame)",
     )
@@ -296,22 +303,22 @@ def build_parser() -> argparse.ArgumentParser:
         "production runs over a large crawl should skip them)",
     )
     c.add_argument(
-        "--splits", type=parse_splits, default=None,
+        "--splits", type=parse_splits,
         metavar="train=0.98,val=0.01,test=0.01",
         help="deterministic hash_split of the final corpus: one output "
              "sub-directory per split; membership is a pure function of "
              "(--split-seed, id) so re-runs agree; packing/shards use "
              "the first-named split only",
     )
-    c.add_argument("--split-seed", type=int, default=0)
+    c.add_argument("--split-seed", type=int)
     c.add_argument(
-        "--checkpoint-dir", default=None,
+        "--checkpoint-dir",
         help="restart-safe runs: materialize each stage under this dir "
         "with a chained config fingerprint; a rerun resumes from the "
         "latest still-valid stage (xdump_spark/checkpointing.py)",
     )
     c.add_argument(
-        "--checkpoint-stages", default=None, metavar="S1,S2",
+        "--checkpoint-stages", metavar="S1,S2",
         help="comma-separated stage names to materialize (default all); "
         "unlisted stages still chain into the fingerprint",
     )
@@ -321,74 +328,68 @@ def build_parser() -> argparse.ArgumentParser:
         "of resuming",
     )
     c.add_argument(
-        "--quality-model", default=None, metavar="MODEL_JSON",
+        "--quality-model", metavar="MODEL_JSON",
         help="LinearModel JSON (classifier.fit_linear_classifier output); "
         "docs scoring below --quality-min are dropped",
     )
-    c.add_argument("--quality-min", type=float, default=0.5)
+    c.add_argument("--quality-min", type=float)
     c.add_argument(
-        "--ppl-model", default=None, metavar="LM_DIR",
+        "--ppl-model", metavar="LM_DIR",
         help="saved Stupid-Backoff LM (train-lm output); docs above "
         "--max-ppl perplexity are dropped (the CCNet filter)",
     )
-    c.add_argument("--max-ppl", type=float, default=None)
+    c.add_argument("--max-ppl", type=float)
     c.add_argument(
-        "--dsir-target", default=None, metavar="TARGET_PARQUET",
+        "--dsir-target", metavar="TARGET_PARQUET",
         help="DSIR selection stage: importance-resample toward this "
         "target corpus's hashed n-gram distribution (with --dsir-n)",
     )
-    c.add_argument("--dsir-n", type=int, default=None)
-    c.add_argument("--dsir-temperature", type=float, default=1.0)
+    c.add_argument("--dsir-n", type=int)
+    c.add_argument("--dsir-temperature", type=float)
     c.add_argument(
-        "--mixture", action="append", default=[], type=parse_sample_rate,
+        "--mixture", action="append", type=parse_sample_rate,
         metavar="SOURCE=SHARE",
         help="target mixture share per source (repeatable); the corpus is "
         "downsampled so its composition matches (curation.mixture_resample)",
     )
     c.add_argument(
-        "--card-out", default=None, metavar="CARD_JSON",
+        "--card-out", metavar="CARD_JSON",
         help="write the output corpus's data card JSON here",
     )
     c.add_argument(
-        "--benchmark", default=None,
+        "--benchmark",
         help="parquet of eval docs; overlapping corpus docs are dropped "
         "(or span-stripped with --contamination-policy strip)",
     )
+    c.add_argument("--contamination-policy", choices=["drop", "strip"])
+    c.add_argument("--seed", type=int, help="shuffle seed")
     c.add_argument(
-        "--contamination-policy", choices=["drop", "strip"], default="drop",
-    )
-    c.add_argument("--seed", type=int, default=0, help="shuffle seed")
-    c.add_argument(
-        "--pack-budget", type=int, default=None,
+        "--pack-budget", type=int,
         help="pack documents into sequences of <= N tokens",
     )
     c.add_argument(
         "--tokenize", action="store_true",
         help="with --pack-budget: emit (seq_id, input_ids) token shards",
     )
+    c.add_argument("--shards-out", help="write the pack/shard table here")
     c.add_argument(
-        "--shards-out", default=None,
-        help="write the pack/shard table here",
-    )
-    c.add_argument(
-        "--chunk-budget", type=int, default=None,
+        "--chunk-budget", type=int,
         help="split surviving docs into <= N-token chunks "
              "(RAG/embedding ingestion output)",
     )
-    c.add_argument("--chunk-overlap", type=int, default=0,
+    c.add_argument("--chunk-overlap", type=int,
                    help="tokens shared between neighboring chunks")
-    c.add_argument("--chunk-by", choices=["tokens", "sentences"],
-                   default="tokens")
-    c.add_argument("--chunks-out", default=None,
+    c.add_argument("--chunk-by", choices=["tokens", "sentences"])
+    c.add_argument("--chunks-out",
                    help="write the chunk table here (parquet)")
     c.add_argument(
-        "--shards-format", choices=["parquet", "binary"], default="parquet",
+        "--shards-format", choices=["parquet", "binary"],
         help="'binary' writes mmap-ready .bin/.idx token shards + "
              "manifest.json (sources/token_shards.py) instead of parquet "
              "(requires --tokenize)",
     )
     c.add_argument(
-        "--partition-by", action="append", default=[],
+        "--partition-by", action="append",
         help="hive-partition the output corpus by these columns (repeatable)",
     )
     c.add_argument(
@@ -942,999 +943,856 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def run(args, spark) -> int:
-    """Execute a parsed CLI command against an existing session (split from
-    ``main`` so tests can drive the CLI without owning session lifecycle)."""
-    from xdump_spark.catalog import Catalog
-    from xdump_spark.engine import SparkDumpEngine
-    from xdump_spark.timing import configure
+def _dump(args, spark) -> None:
+    from xdump_spark.framework import JdbcBackend, run_dump
 
-    configure(getattr(args, "verbosity", 0))
-    backend_cls = getattr(args, "backend", None) or resolve_backend(DEFAULT_BACKEND)
-    if args.command == "dump":
-        if getattr(args, "jdbc_url", None):
-            import tempfile
-
-            from xdump_spark.sources.jdbc import jdbc_catalog
-
-            stage = args.stage_dir or tempfile.mkdtemp(prefix="xdump_stage_")
-            catalog = jdbc_catalog(
-                spark,
-                args.jdbc_url,
-                user=args.jdbc_user,
-                password=args.jdbc_password,
-                driver=args.jdbc_driver,
-                tables=args.jdbc_tables or None,
-                stage_dir=stage,
-            )
-        else:
-            db = backend_cls(spark, args.input_db)
-            catalog = db.catalog()
-        engine = SparkDumpEngine(spark, catalog)
-        kwargs = dict(
-            full_tables=args.full_tables,
-            partial_tables=dict(args.partial),
-            dump_schema=not args.no_schema,
-            dump_data=not args.no_data,
-            compression=args.compression,
+    if args.jdbc_url:
+        db = JdbcBackend(
+            spark, args.jdbc_url, user=args.jdbc_user,
+            password=args.jdbc_password, driver=args.jdbc_driver,
+            stage_dir=args.stage_dir, tables=args.jdbc_tables or None,
         )
-        if getattr(args, "since", None):
-            counts = engine.dump_incremental(args.output, since=args.since, **kwargs)
-        else:
-            counts = engine.dump(args.output, **kwargs)
-        for table in sorted(counts):
-            print(f"{table}: {counts[table]} rows")
-        print(f"wrote {args.output}")
-    elif args.command == "curate":
-        from xdump_spark.pipeline import prepare_training_corpus
+    else:
+        db = args.backend(spark, args.input_db)
+    counts = run_dump(
+        spark, db, args.output,
+        since=args.since,
+        full_tables=args.full_tables,
+        partial_tables=dict(args.partial),
+        dump_schema=not args.no_schema,
+        dump_data=not args.no_data,
+        compression=args.compression,
+    )
+    for table in sorted(counts):
+        print(f"{table}: {counts[table]} rows")
+    print(f"wrote {args.output}")
 
-        if getattr(args, "input_format", "parquet") == "wet":
-            from xdump_spark.sources.warc import read_wet
 
-            docs, corrupt = read_wet(spark, args.input)
-            # ONE collect (bounded: one row per corrupt FILE) — count()
-            # plus collect() would parse the whole crawl twice
-            corrupt_rows = corrupt.collect()
-            if corrupt_rows:
-                print(f"quarantined {len(corrupt_rows)} corrupt WET file(s):")
-                for r in corrupt_rows:
-                    print(f"  {r.path} @byte {r.byte_offset}: {r.reason}")
-            # materialize the parse ONCE: without this every pipeline
-            # action (each audit count, each stage with multiple
-            # consumers) re-runs the full WARC inflate+parse — O(stages)
-            # crawl parses per run
-            docs = docs.localCheckpoint(eager=True)
-        else:
-            docs = spark.read.parquet(args.input)
-        if args.embeddings and args.hash_embed:
+def _load(args, spark) -> None:
+    from xdump_spark.framework import JdbcBackend, run_load
+
+    if args.jdbc_url:
+        db = JdbcBackend(
+            spark, args.jdbc_url, user=args.jdbc_user,
+            password=args.jdbc_password, driver=args.jdbc_driver,
+        )
+    else:
+        db = args.backend(spark, args.output_db)
+    order = run_load(spark, db, args.input, cleanup_method=args.cleanup_method)
+    print(f"loaded tables (FK order): {', '.join(order)}")
+
+
+def _flags(args) -> dict:
+    """A subcommand's own flags: the parsed arguments without the ones
+    ``run`` reads."""
+    return {k: v for k, v in vars(args).items()
+            if k not in ("command", "verbosity", "backend")}
+
+
+# curate flags that fill one object of the curate request: object key →
+# flag groups, each {flag dest: object key}. A group counts only when its
+# first flag is given; the other flags of a group are ignored without it.
+_CURATE_OBJECTS = {
+    "dedup_store": (
+        {"dedup_store_table": "table", "dedup_store_path": "path",
+         "dedup_store_buckets": "n_buckets"},
+        {"neardup_store": "path"},
+        {"vector_store": "path", "vector_dtype": "dtype", "pq_m": "pq_m",
+         "pq_k": "pq_k", "exact_guard": "exact_guard"},
+    ),
+    "embeddings": ({"embeddings": "path", "embeddings_id_col": "id_col"},),
+}
+
+# curate flags named otherwise in the curate request
+_CURATE_RENAMED = {"seed": "shuffle_seed", "quality_min": "quality_score_min"}
+
+
+def _curate_request(args) -> dict:
+    """The curate flags as a curate request (``config.run_curate``): the
+    same keys a curate config file holds, and only those of given flags."""
+    req = _flags(args)
+    if req.get("embeddings") and req.get("hash_embed"):
+        raise SystemExit(
+            "--embeddings and --hash-embed are mutually exclusive "
+            "(one embedding source)"
+        )
+    if (req.get("embeddings") or req.get("hash_embed")) and req.get("doc_dedup") != "semantic":
+        # without the guard, --embeddings' INNER join would silently
+        # drop every doc missing a vector from a run that never uses
+        # the vectors
+        raise SystemExit("--embeddings/--hash-embed require --doc-dedup semantic")
+    if req.get("shards_format") == "binary" and req.get("shards_out") and not req.get("tokenize"):
+        raise SystemExit(
+            "--shards-format binary requires --tokenize "
+            "(doc-id packs have no token ids to binarize)"
+        )
+    for key, groups in _CURATE_OBJECTS.items():
+        objs = [{k: req.pop(f) for f, k in g.items() if f in req}
+                for g in groups if next(iter(g)) in req]
+        for flag in (f for g in groups for f in g):
+            req.pop(flag, None)
+        if len(objs) > 1:
             raise SystemExit(
-                "--embeddings and --hash-embed are mutually exclusive "
-                "(one embedding source)"
+                "--dedup-store-table, --neardup-store and --vector-store are "
+                "mutually exclusive (one dedup stage, one store)"
             )
-        if (args.embeddings or args.hash_embed) and args.doc_dedup != "semantic":
-            # without the guard, --embeddings' INNER join would silently
-            # drop every doc missing a vector from a run that never uses
-            # the vectors
-            raise SystemExit(
-                "--embeddings/--hash-embed require --doc-dedup semantic"
-            )
-        if args.embeddings:
-            # semantic dedup front door: attach the embedding table by id
-            # (broadcast-or-shuffle equi-join Catalyst picks; INNER — a
-            # doc without a vector cannot be semantically deduped, and a
-            # silent null would crash the cell kernel instead)
-            from pyspark.sql import functions as F
+        if objs:
+            req[key] = objs[0]
+    n_cells = req.pop("semantic_cells")
+    if req.get("doc_dedup") == "semantic":
+        req["semantic_kwargs"] = {"n_cells": n_cells}
+    for flag, key in _CURATE_RENAMED.items():
+        if flag in req:
+            req[key] = req.pop(flag)
+    for flag, key in (("sample", "sample_rates"), ("mixture", "target_mixture")):
+        if flag in req:
+            req[key] = dict(req.pop(flag))
+    for flag, key in (("no_audit", "audit"), ("no_resume", "resume")):
+        if req.pop(flag, False):
+            req[key] = False
+    if "checkpoint_stages" in req:
+        req["checkpoint_stages"] = [
+            s.strip() for s in req["checkpoint_stages"].split(",") if s.strip()
+        ]
+    if "blocklist" in req:
+        req["blocklist"] = [
+            line.strip()
+            for line in Path(req["blocklist"]).read_text().splitlines()
+            if line.strip()
+        ]
+    return req
 
-            emb = spark.read.parquet(args.embeddings).select(
-                F.col(args.embeddings_id_col).alias(args.id_col),
-                F.col(args.embedding_col),
-            )
-            docs = docs.join(emb, args.id_col, "inner")
-        # (--hash-embed is handled INSIDE the pipeline: the vector is
-        # computed on the cleaned text the other dedup modes see)
-        benchmark = spark.read.parquet(args.benchmark) if args.benchmark else None
-        dedup_store = None
-        if args.dedup_store_table:
-            from xdump_spark.operators.incremental import ExactHashStore
 
-            dedup_store = ExactHashStore(
-                spark, args.dedup_store_table,
-                n_buckets=args.dedup_store_buckets,
-                path=args.dedup_store_path,
-            )
-        if args.neardup_store:
-            if dedup_store is not None:
-                raise SystemExit(
-                    "--neardup-store and --dedup-store-table are mutually "
-                    "exclusive (one dedup stage, one store)"
-                )
-            from xdump_spark.operators.incremental import SignatureStore
+def _curate(args, spark) -> None:
+    from xdump_spark.config import run_curate
 
-            dedup_store = SignatureStore(spark, args.neardup_store)
-        if args.vector_store:
-            if dedup_store is not None:
-                raise SystemExit(
-                    "--vector-store is mutually exclusive with the other "
-                    "dedup stores (one dedup stage, one store)"
-                )
-            from xdump_spark.operators.incremental import VectorStore
+    res = run_curate(spark, _curate_request(args))
+    for stage, n in res.audit.items():
+        print(f"{stage}: {n} docs")
+    if res.resumed:
+        print(f"resumed from checkpoint: {', '.join(res.resumed)}")
+    if res.mixture_rates is not None:
+        print(f"mixture rates: {res.mixture_rates}")
+    print(f"wrote {args.output}")
 
-            dedup_store = VectorStore(
-                spark, args.vector_store, dtype=args.vector_dtype,
-                pq_m=args.pq_m, pq_k=args.pq_k,
-                exact_guard=args.exact_guard,
-            )
-        quality_model = None
-        if args.quality_model:
-            from xdump_spark.config import _load_quality_model
 
-            quality_model = _load_quality_model(args.quality_model)
-        res = prepare_training_corpus(
-            docs,
+def _index_report(spark, index_dir: str) -> dict:
+    """``text_index_stats`` of a saved BM25 index; an empty report when a
+    zero-batch drain on a fresh deployment never created the index."""
+    from xdump_spark import fsutil
+    from xdump_spark.operators.retrieval import _INDEX_MANIFEST, text_index_stats
+
+    if fsutil.exists_atomic(spark, fsutil.join(index_dir, _INDEX_MANIFEST)):
+        return text_index_stats(spark, index_dir)
+    return {"segments": 0, "n_docs": 0, "files": 0, "bytes": 0}
+
+
+def _ingest(args, spark) -> None:
+    import json as _json
+
+    from xdump_spark import fsutil
+    from xdump_spark.streaming.ingest import run_ingest
+
+    # the ingest flags are named after run_ingest's parameters
+    q = run_ingest(spark, **_flags(args))
+    if args.processing_time:
+        # always-on: report and block (the scheduler owns the kill);
+        # --await-seconds turns it into a bounded run that stops
+        # cleanly after the wait (run_ingest already waited it out)
+        print(_json.dumps({"kind": args.kind, "mode": "always-on"}))
+        if args.await_seconds is not None:
+            q.stop()
+        else:
+            q.awaitTermination()
+        return
+    # drained: the output count is parquet footer metadata only.
+    # run_ingest stopped the query before returning even when
+    # --await-seconds expired first, so the count is final; "drained"
+    # reports whether the drop was fully consumed (False = the bound
+    # cut it short; re-run resumes from the checkpoint)
+    rpt = {
+        "kind": args.kind,
+        "mode": "drain",
+        "drained": bool(getattr(q, "xd_drained", True)),
+    }
+    if args.kind == "index":
+        # the output is the INDEX directory (postings + term_stats +
+        # manifest), not a row corpus
+        rpt.update(_index_report(spark, args.output))
+    else:
+        rpt["output_rows"] = (
+            spark.read.parquet(args.output).count()
+            if fsutil.exists(spark, args.output)
+            else 0
+        )
+        if args.kind == "rag":
+            # the second artifact: the BM25 index of the survivor chunks
+            rpt["index"] = _index_report(spark, args.index_dir)
+    print(_json.dumps(rpt))
+
+
+def _train_lm(args, spark) -> None:
+    from xdump_spark.operators.lm import save_ngram_lm, train_ngram_lm
+
+    docs = spark.read.parquet(args.input)
+    model = train_ngram_lm(
+        docs, text_col=args.text_col, prune_min_count=args.prune_min_count
+    )
+    save_ngram_lm(model, args.output)
+    print(
+        f"wrote {args.output} (N={model.n_tokens} tokens, "
+        f"V={model.vocab_size} types)"
+    )
+
+
+def _train_quality(args, spark) -> None:
+    import json
+
+    from pyspark.sql import functions as F
+
+    from xdump_spark.operators.classifier import (
+        fit_linear_classifier,
+        quality_feature_frame,
+    )
+
+    docs = spark.read.parquet(args.input)
+    if args.label_col not in docs.columns:
+        raise SystemExit(f"label column {args.label_col!r} not in {args.input}")
+    feats = quality_feature_frame(
+        docs, text_col=args.text_col, id_col=args.id_col
+    ).join(
+        docs.select(args.id_col, F.col(args.label_col).alias("label")),
+        args.id_col,
+    )
+    model = fit_linear_classifier(
+        feats, id_col=args.id_col, max_rows=args.max_rows
+    )
+    with open(args.output, "w") as fh:
+        json.dump(model.to_dict(), fh, indent=2)
+    print(f"wrote {args.output} (features: {', '.join(model.features)})")
+
+
+def _select(args, spark) -> None:
+    from xdump_spark.operators.dsir import dsir_resample, dsir_score, fit_dsir
+
+    raw = spark.read.parquet(args.input)
+    target = spark.read.parquet(args.target)
+    model = fit_dsir(
+        target, raw, text_col=args.text_col, num_buckets=args.buckets
+    )
+    mode = "overwrite" if args.overwrite else "errorifexists"
+    if args.scores_out:
+        dsir_score(raw, model, args.text_col, args.id_col).write.mode(
+            mode
+        ).parquet(args.scores_out)
+        print(f"wrote scores to {args.scores_out}")
+    picked = dsir_resample(
+        raw, model, n=args.n, text_col=args.text_col, id_col=args.id_col,
+        temperature=args.temperature, seed=args.seed,
+    )
+    out = raw.join(picked.select(args.id_col), args.id_col, "left_semi")
+    out.write.mode(mode).parquet(args.output)
+    # count the WRITTEN parquet (footer metadata — no recompute of the
+    # scoring/top-n job, which an uncached picked.count() would redo)
+    n_sel = spark.read.parquet(args.output).count()
+    print(f"selected {n_sel} of {raw.count()} docs -> {args.output}")
+
+
+def _train_tokenizer(args, spark) -> None:
+    import json
+
+    docs = spark.read.parquet(args.input)
+    if args.algo == "bpe":
+        from xdump_spark.operators.bpe import bpe_train
+
+        tok = bpe_train(
+            docs, vocab_size=args.vocab_size, text_col=args.text_col,
+            max_words=args.max_words, pretok=args.pretok,
+            byte_fallback=args.byte_fallback,
+        )
+        size = len(tok.vocab)
+    else:
+        from xdump_spark.operators.unigram import unigram_train
+
+        tok = unigram_train(
+            docs, vocab_size=args.vocab_size, text_col=args.text_col,
+            max_words=args.max_words, pretok=args.pretok,
+            byte_fallback=args.byte_fallback,
+        )
+        size = len(tok.pieces)
+    with open(args.output, "w") as fh:
+        json.dump({"algo": args.algo, **tok.to_dict()}, fh)
+    print(f"wrote {args.output} ({args.algo}, {size} entries)")
+
+
+def _media_profile(args, spark) -> None:
+    from pyspark.sql import functions as F
+
+    media = spark.read.parquet(args.input).select(
+        F.col(args.id_col).alias("doc_id"), F.col(args.blob_col).alias("blob")
+    )
+    if args.kind == "image":
+        from xdump_spark.operators.multimodal import decode_blobs
+
+        prof = decode_blobs(media, use_real_codec=True)
+    else:
+        from xdump_spark.operators.audio import decode_audio
+
+        prof = decode_audio(media)
+    mode = "overwrite" if args.overwrite else "errorifexists"
+    prof.write.mode(mode).parquet(args.output)
+    n = spark.read.parquet(args.output).count()
+    print(f"profiled {n} blobs -> {args.output}")
+
+
+def _datacard(args, spark) -> None:
+    import json
+
+    from xdump_spark.operators.datacard import (
+        conversation_card,
+        data_card,
+        preference_card,
+    )
+
+    frame = spark.read.parquet(args.input)
+    kind = getattr(args, "kind", "documents")
+    if kind == "conversations":
+        card = conversation_card(frame)
+    elif kind == "pairs":
+        card = preference_card(frame)
+    else:
+        card = data_card(
+            frame,
             text_col=args.text_col,
             id_col=args.id_col,
-            url_col=args.url_col,
-            dedup_urls=args.dedup_urls,
-            domain_cap=args.domain_cap,
-            markup=args.markup,
-            line_filter=args.line_filter,
-            line_dedup=args.line_dedup,
-            span_k=args.span_k or None,
-            doc_dedup=args.doc_dedup,
-            dedup_store=dedup_store,
-            fuzzy_threshold=args.fuzzy_threshold,
-            embedding_col=args.embedding_col,
-            semantic_threshold=args.semantic_threshold,
-            semantic_kwargs=(
-                {"n_cells": args.semantic_cells}
-                if args.doc_dedup == "semantic" else None
-            ),
-            hash_embed=args.hash_embed,
-            min_tokens=args.min_tokens,
-            blocklist=(
-                [
-                    line.strip()
-                    for line in Path(args.blocklist).read_text().splitlines()
-                    if line.strip()
-                ]
-                if args.blocklist
-                else None
-            ),
-            blocklist_mode=args.blocklist_mode,
-            gopher=args.gopher,
-            compression_min=args.compression_min,
-            quality_model=quality_model,
-            quality_score_min=args.quality_min,
-            ppl_model=args.ppl_model,
-            max_ppl=args.max_ppl,
-            dsir_target=(
-                spark.read.parquet(args.dsir_target) if args.dsir_target else None
-            ),
-            dsir_n=args.dsir_n,
-            dsir_temperature=args.dsir_temperature,
-            sample_rates=dict(args.sample) or None,
-            target_mixture=dict(args.mixture) or None,
-            benchmark=benchmark,
-            contamination_policy=args.contamination_policy,
-            shuffle_seed=args.seed,
-            splits=args.splits,
-            split_seed=args.split_seed,
-            pack_budget=args.pack_budget,
-            tokenize=args.tokenize,
-            chunk_budget=args.chunk_budget,
-            chunk_overlap=args.chunk_overlap,
-            chunk_by=args.chunk_by,
-            out_dir=args.output,
-            partition_by=tuple(args.partition_by),
-            out_mode="overwrite" if args.overwrite else "errorifexists",
-            make_card=bool(args.card_out),
-            audit=not args.no_audit,
-            checkpoint_dir=args.checkpoint_dir,
-            checkpoint_stages=(
-                {s.strip() for s in args.checkpoint_stages.split(",") if s.strip()}
-                if args.checkpoint_stages
-                else None
-            ),
-            resume=not args.no_resume,
+            source_col=args.source_col,
+            lang_col=args.lang_col,
         )
-        for stage, n in res.audit.items():
-            print(f"{stage}: {n} docs")
-        if res.resumed:
-            print(f"resumed from checkpoint: {', '.join(res.resumed)}")
-        if res.mixture_rates is not None:
-            print(f"mixture rates: {res.mixture_rates}")
-        if args.card_out:
-            import json
-
-            with open(args.card_out, "w") as fh:
-                json.dump(res.card, fh, indent=2, sort_keys=True)
-            print(f"wrote data card to {args.card_out}")
-        if res.sequences is not None and args.shards_out:
-            if args.shards_format == "binary":
-                if not args.tokenize:
-                    raise SystemExit(
-                        "--shards-format binary requires --tokenize "
-                        "(doc-id packs have no token ids to binarize)"
-                    )
-                from xdump_spark.sources.token_shards import write_binary_shards
-
-                m = write_binary_shards(res.sequences, args.shards_out)
-                print(
-                    f"wrote {m['n_shards']} binary shard(s), "
-                    f"{m['n_tokens']} tokens ({m['dtype']}) to {args.shards_out}"
-                )
-            else:
-                mode = "overwrite" if args.overwrite else "errorifexists"
-                res.sequences.write.mode(mode).parquet(args.shards_out)
-                print(f"wrote sequences to {args.shards_out}")
-        if res.chunks is not None and args.chunks_out:
-            mode = "overwrite" if args.overwrite else "errorifexists"
-            res.chunks.write.mode(mode).parquet(args.chunks_out)
-            print(f"wrote chunks to {args.chunks_out}")
+    payload = json.dumps(card, indent=2, sort_keys=True)
+    if args.output:
+        with open(args.output, "w") as fh:
+            fh.write(payload + "\n")
         print(f"wrote {args.output}")
-    elif args.command == "train-lm":
-        from xdump_spark.operators.lm import save_ngram_lm, train_ngram_lm
+    else:
+        print(payload)
 
-        docs = spark.read.parquet(args.input)
-        model = train_ngram_lm(
-            docs, text_col=args.text_col, prune_min_count=args.prune_min_count
+
+def _prepare_rag(args, spark) -> None:
+    import json as _json
+
+    from xdump_spark.operators.incremental import VectorStore
+    from xdump_spark.pipeline import prepare_rag_corpus
+
+    store = VectorStore(
+        spark, args.store_path, dtype=args.vector_dtype,
+        pq_m=args.pq_m, pq_k=args.pq_k,
+        exact_guard=args.exact_guard,
+    )
+    res = prepare_rag_corpus(
+        spark.read.parquet(args.input), store, args.index_dir,
+        out_dir=args.output, text_col=args.text_col,
+        id_col=args.id_col, max_tokens=args.max_tokens,
+        overlap=args.overlap, hash_embed_dim=args.hash_embed,
+        threshold=args.threshold, n_cells=args.cells,
+        corpus_buckets=args.corpus_buckets,
+    )
+    print(_json.dumps({
+        "audit": res.audit,
+        "index_entry": res.index_entry,
+        "store": args.store_path,
+        "index": args.index_dir,
+    }))
+
+
+def _hash_store(args, spark):
+    """The --dedup-store-* flags of prepare-sft / prepare-pairs as an
+    ExactHashStore (None without --dedup-store-table)."""
+    if not args.dedup_store_table:
+        return None
+    from xdump_spark.operators.incremental import ExactHashStore
+
+    return ExactHashStore(
+        spark, args.dedup_store_table,
+        n_buckets=args.dedup_store_buckets, path=args.dedup_store_path,
+    )
+
+
+def _write_prepared(res, frame, args) -> None:
+    """Write a prepare-sft / prepare-pairs result: one sub-directory per
+    split (or the whole frame), then the store commit, then the rejects."""
+    if res.splits is not None:
+        for name, f in res.splits.items():
+            f.write.mode("overwrite").parquet(os.path.join(args.output, name))
+    else:
+        frame.write.mode("overwrite").parquet(args.output)
+    if res.store_commit is not None:
+        res.store_commit()  # only after the output is durably written
+    if args.rejects_out:
+        res.rejects.write.mode("overwrite").parquet(args.rejects_out)
+
+
+def _prepare_sft(args, spark) -> None:
+    from xdump_spark.operators import sft
+
+    if args.input_format == "jsonl":
+        convs, corrupt = sft.read_conversations_jsonl(spark, args.input)
+        if args.corrupt_out:
+            corrupt.write.mode("overwrite").parquet(args.corrupt_out)
+    else:
+        convs = spark.read.parquet(args.input)
+    vocab = spark.read.parquet(args.vocab) if args.vocab else None
+    res = sft.prepare_sft_corpus(
+        convs,
+        template=args.template,
+        allowed_roles=sft.DEFAULT_ROLES + tuple(args.allow_role),
+        require_alternation=not args.no_alternation,
+        require_assistant_last=not args.allow_user_last,
+        dedup=not args.no_dedup,
+        dedup_store=_hash_store(args, spark),
+        benchmark=(
+            spark.read.parquet(args.benchmark) if args.benchmark else None
+        ),
+        contamination_n=args.contamination_n,
+        shuffle_seed=args.shuffle_seed,
+        splits=args.splits,
+        split_seed=args.split_seed,
+        audit=not args.no_audit,
+        vocab=vocab,
+    )
+    _write_prepared(res, res.convs, args)
+    if res.encoded is not None:
+        enc_out = args.encoded_out or os.path.join(args.output, "encoded")
+        res.encoded.write.mode("overwrite").parquet(enc_out)
+        print(f"wrote {enc_out} (token ids + loss masks)")
+    for stage, n in res.audit.items():
+        print(f"{stage}: {n}")
+    print(f"wrote {args.output}")
+
+
+def _prepare_pairs(args, spark) -> None:
+    from xdump_spark.operators import preference
+
+    if args.input_format == "jsonl":
+        pairs, corrupt = preference.read_preference_jsonl(
+            spark, args.input,
+            schema=(
+                preference.RATINGS_SCHEMA if args.from_ratings else None
+            ),
         )
-        save_ngram_lm(model, args.output)
+        if args.corrupt_out:
+            corrupt.write.mode("overwrite").parquet(args.corrupt_out)
+    else:
+        pairs = spark.read.parquet(args.input)
+    res = preference.prepare_preference_corpus(
+        pairs,
+        template=args.template,
+        dedup=not args.no_dedup,
+        dedup_store=_hash_store(args, spark),
+        drop_contradictions=not args.keep_contradictions,
+        max_per_prompt=args.max_per_prompt,
+        benchmark=(
+            spark.read.parquet(args.benchmark) if args.benchmark else None
+        ),
+        contamination_n=args.contamination_n,
+        shuffle_seed=args.shuffle_seed,
+        audit=not args.no_audit,
+        from_ratings=args.from_ratings,
+        response_col=args.response_col,
+        rating_col=args.rating_col,
+        rating_policy=args.rating_policy,
+        rating_margin=args.rating_margin,
+        splits=args.splits,
+        split_seed=args.split_seed,
+    )
+    _write_prepared(res, res.pairs, args)
+    for stage, n in res.audit.items():
+        print(f"{stage}: {n}")
+    if res.length_bias is not None:
         print(
-            f"wrote {args.output} (N={model.n_tokens} tokens, "
-            f"V={model.vocab_size} types)"
+            "length_bias: "
+            f"frac_chosen_longer={res.length_bias['frac_chosen_longer']:.3f} "
+            f"mean_token_delta={res.length_bias['mean_token_delta']:.2f}"
         )
-    elif args.command == "train-quality":
-        import json
+    print(f"wrote {args.output}")
 
-        from pyspark.sql import functions as F
 
-        from xdump_spark.operators.classifier import (
-            fit_linear_classifier,
-            quality_feature_frame,
-        )
+def _search(args, spark) -> None:
+    import json as _json
 
-        docs = spark.read.parquet(args.input)
-        if args.label_col not in docs.columns:
-            raise SystemExit(f"label column {args.label_col!r} not in {args.input}")
-        feats = quality_feature_frame(
-            docs, text_col=args.text_col, id_col=args.id_col
-        ).join(
-            docs.select(args.id_col, F.col(args.label_col).alias("label")),
-            args.id_col,
-        )
-        model = fit_linear_classifier(
-            feats, id_col=args.id_col, max_rows=args.max_rows
-        )
-        with open(args.output, "w") as fh:
-            json.dump(model.to_dict(), fh, indent=2)
-        print(f"wrote {args.output} (features: {', '.join(model.features)})")
-    elif args.command == "select":
-        from xdump_spark.operators.dsir import dsir_resample, dsir_score, fit_dsir
+    from xdump_spark.operators.incremental import VectorStore
 
-        raw = spark.read.parquet(args.input)
-        target = spark.read.parquet(args.target)
-        model = fit_dsir(
-            target, raw, text_col=args.text_col, num_buckets=args.buckets
-        )
-        mode = "overwrite" if args.overwrite else "errorifexists"
-        if args.scores_out:
-            dsir_score(raw, model, args.text_col, args.id_col).write.mode(
-                mode
-            ).parquet(args.scores_out)
-            print(f"wrote scores to {args.scores_out}")
-        picked = dsir_resample(
-            raw, model, n=args.n, text_col=args.text_col, id_col=args.id_col,
-            temperature=args.temperature, seed=args.seed,
-        )
-        out = raw.join(picked.select(args.id_col), args.id_col, "left_semi")
-        out.write.mode(mode).parquet(args.output)
-        # count the WRITTEN parquet (footer metadata — no recompute of the
-        # scoring/top-n job, which an uncached picked.count() would redo)
-        n_sel = spark.read.parquet(args.output).count()
-        print(f"selected {n_sel} of {raw.count()} docs -> {args.output}")
-    elif args.command == "train-tokenizer":
-        import json
+    if args.id_col is None:
+        args.id_col = "vec_id" if args.kind == "vector" else "doc_id"
+    if args.kind == "signature":
+        from xdump_spark.operators.incremental import SignatureStore
 
-        docs = spark.read.parquet(args.input)
-        if args.algo == "bpe":
-            from xdump_spark.operators.bpe import bpe_train
-
-            tok = bpe_train(
-                docs, vocab_size=args.vocab_size, text_col=args.text_col,
-                max_words=args.max_words, pretok=args.pretok,
-                byte_fallback=args.byte_fallback,
-            )
-            size = len(tok.vocab)
-        else:
-            from xdump_spark.operators.unigram import unigram_train
-
-            tok = unigram_train(
-                docs, vocab_size=args.vocab_size, text_col=args.text_col,
-                max_words=args.max_words, pretok=args.pretok,
-                byte_fallback=args.byte_fallback,
-            )
-            size = len(tok.pieces)
-        with open(args.output, "w") as fh:
-            json.dump({"algo": args.algo, **tok.to_dict()}, fh)
-        print(f"wrote {args.output} ({args.algo}, {size} entries)")
-    elif args.command == "media-profile":
-        from pyspark.sql import functions as F
-
-        media = spark.read.parquet(args.input).select(
-            F.col(args.id_col).alias("doc_id"), F.col(args.blob_col).alias("blob")
-        )
-        if args.kind == "image":
-            from xdump_spark.operators.multimodal import decode_blobs
-
-            prof = decode_blobs(media, use_real_codec=True)
-        else:
-            from xdump_spark.operators.audio import decode_audio
-
-            prof = decode_audio(media)
-        mode = "overwrite" if args.overwrite else "errorifexists"
-        prof.write.mode(mode).parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(f"profiled {n} blobs -> {args.output}")
-    elif args.command == "datacard":
-        import json
-
-        from xdump_spark.operators.datacard import (
-            conversation_card,
-            data_card,
-            preference_card,
-        )
-
-        frame = spark.read.parquet(args.input)
-        kind = getattr(args, "kind", "documents")
-        if kind == "conversations":
-            card = conversation_card(frame)
-        elif kind == "pairs":
-            card = preference_card(frame)
-        else:
-            card = data_card(
-                frame,
-                text_col=args.text_col,
-                id_col=args.id_col,
-                source_col=args.source_col,
-                lang_col=args.lang_col,
-            )
-        payload = json.dumps(card, indent=2, sort_keys=True)
-        if args.output:
-            with open(args.output, "w") as fh:
-                fh.write(payload + "\n")
-            print(f"wrote {args.output}")
-        else:
-            print(payload)
-    elif args.command == "prepare-rag":
-        import json as _json
-
-        from xdump_spark.operators.incremental import VectorStore
-        from xdump_spark.pipeline import prepare_rag_corpus
-
-        store = VectorStore(
-            spark, args.store_path, dtype=args.vector_dtype,
-            pq_m=args.pq_m, pq_k=args.pq_k,
-            exact_guard=args.exact_guard,
-        )
-        res = prepare_rag_corpus(
-            spark.read.parquet(args.input), store, args.index_dir,
-            out_dir=args.output, text_col=args.text_col,
-            id_col=args.id_col, max_tokens=args.max_tokens,
-            overlap=args.overlap, hash_embed_dim=args.hash_embed,
-            threshold=args.threshold, n_cells=args.cells,
-            corpus_buckets=args.corpus_buckets,
-        )
-        print(_json.dumps({
-            "audit": res.audit,
-            "index_entry": res.index_entry,
-            "store": args.store_path,
-            "index": args.index_dir,
-        }))
-    elif args.command == "prepare-sft":
-        from xdump_spark.operators import sft
-
-        if args.input_format == "jsonl":
-            convs, corrupt = sft.read_conversations_jsonl(spark, args.input)
-            if args.corrupt_out:
-                corrupt.write.mode("overwrite").parquet(args.corrupt_out)
-        else:
-            convs = spark.read.parquet(args.input)
-        vocab = spark.read.parquet(args.vocab) if args.vocab else None
-        dedup_store = None
-        if args.dedup_store_table:
-            from xdump_spark.operators.incremental import ExactHashStore
-
-            dedup_store = ExactHashStore(
-                spark, args.dedup_store_table,
-                n_buckets=args.dedup_store_buckets,
-                path=args.dedup_store_path,
-            )
-        res = sft.prepare_sft_corpus(
-            convs,
-            template=args.template,
-            allowed_roles=sft.DEFAULT_ROLES + tuple(args.allow_role),
-            require_alternation=not args.no_alternation,
-            require_assistant_last=not args.allow_user_last,
-            dedup=not args.no_dedup,
-            dedup_store=dedup_store,
-            benchmark=(
-                spark.read.parquet(args.benchmark) if args.benchmark else None
-            ),
-            contamination_n=args.contamination_n,
-            shuffle_seed=args.shuffle_seed,
-            splits=args.splits,
-            split_seed=args.split_seed,
-            audit=not args.no_audit,
-            vocab=vocab,
-        )
-        if res.splits is not None:
-            for name, f in res.splits.items():
-                f.write.mode("overwrite").parquet(
-                    os.path.join(args.output, name)
-                )
-        else:
-            res.convs.write.mode("overwrite").parquet(args.output)
-        if res.store_commit is not None:
-            res.store_commit()  # only after the output is durably written
-        if args.rejects_out:
-            res.rejects.write.mode("overwrite").parquet(args.rejects_out)
-        if res.encoded is not None:
-            enc_out = args.encoded_out or os.path.join(args.output, "encoded")
-            res.encoded.write.mode("overwrite").parquet(enc_out)
-            print(f"wrote {enc_out} (token ids + loss masks)")
-        for stage, n in res.audit.items():
-            print(f"{stage}: {n}")
-        print(f"wrote {args.output}")
-    elif args.command == "prepare-pairs":
-        from xdump_spark.operators import preference
-
-        if args.input_format == "jsonl":
-            pairs, corrupt = preference.read_preference_jsonl(
-                spark, args.input,
-                schema=(
-                    preference.RATINGS_SCHEMA if args.from_ratings else None
-                ),
-            )
-            if args.corrupt_out:
-                corrupt.write.mode("overwrite").parquet(args.corrupt_out)
-        else:
-            pairs = spark.read.parquet(args.input)
-        dedup_store = None
-        if args.dedup_store_table:
-            from xdump_spark.operators.incremental import ExactHashStore
-
-            dedup_store = ExactHashStore(
-                spark, args.dedup_store_table,
-                n_buckets=args.dedup_store_buckets,
-                path=args.dedup_store_path,
-            )
-        res = preference.prepare_preference_corpus(
-            pairs,
-            template=args.template,
-            dedup=not args.no_dedup,
-            dedup_store=dedup_store,
-            drop_contradictions=not args.keep_contradictions,
-            max_per_prompt=args.max_per_prompt,
-            benchmark=(
-                spark.read.parquet(args.benchmark) if args.benchmark else None
-            ),
-            contamination_n=args.contamination_n,
-            shuffle_seed=args.shuffle_seed,
-            audit=not args.no_audit,
-            from_ratings=args.from_ratings,
-            response_col=args.response_col,
-            rating_col=args.rating_col,
-            rating_policy=args.rating_policy,
-            rating_margin=args.rating_margin,
-            splits=args.splits,
-            split_seed=args.split_seed,
-        )
-        if res.splits is not None:
-            for name, f in res.splits.items():
-                f.write.mode("overwrite").parquet(
-                    os.path.join(args.output, name)
-                )
-        else:
-            res.pairs.write.mode("overwrite").parquet(args.output)
-        if res.store_commit is not None:
-            res.store_commit()  # only after the output is durably written
-        if args.rejects_out:
-            res.rejects.write.mode("overwrite").parquet(args.rejects_out)
-        for stage, n in res.audit.items():
-            print(f"{stage}: {n}")
-        if res.length_bias is not None:
-            print(
-                "length_bias: "
-                f"frac_chosen_longer={res.length_bias['frac_chosen_longer']:.3f} "
-                f"mean_token_delta={res.length_bias['mean_token_delta']:.2f}"
-            )
-        print(f"wrote {args.output}")
-    elif args.command == "ingest":
-        import json as _json
-
-        from xdump_spark.streaming.ingest import run_ingest
-
-        q = run_ingest(
-            spark,
-            kind=args.kind,
-            input_dir=args.input_dir,
-            output=args.output,
-            checkpoint_dir=args.checkpoint_dir,
-            store_table=args.store_table,
-            store_path=args.store_path,
-            store_buckets=args.store_buckets,
-            vector_dtype=args.vector_dtype,
-            corrupt_out=args.corrupt_out,
-            rejects_out=args.rejects_out,
-            template=args.template,
-            keep_contradictions=args.keep_contradictions,
-            path_glob=args.path_glob,
-            text_col=args.text_col,
-            id_col=args.id_col,
-            vec_col=args.vec_col,
-            semantic_threshold=args.semantic_threshold,
-            semantic_cells=args.semantic_cells,
-            semantic_max_cell=args.semantic_max_cell,
-            pq_m=args.pq_m,
-            pq_k=args.pq_k,
-            exact_guard=args.exact_guard,
-            hash_embed=args.hash_embed,
-            doc_dedup=args.doc_dedup,
-            fuzzy_threshold=args.fuzzy_threshold,
-            schema=args.schema,
-            processing_time=args.processing_time,
-            await_seconds=args.await_seconds,
-            index_dir=args.index_dir,
-            chunk_tokens=args.chunk_tokens,
-            chunk_overlap=args.chunk_overlap,
-            corpus_buckets=args.corpus_buckets,
-            replace=args.replace,
-        )
-        if args.processing_time:
-            # always-on: report and block (the scheduler owns the kill);
-            # --await-seconds turns it into a bounded run that stops
-            # cleanly after the wait (run_ingest already waited it out)
-            print(_json.dumps({"kind": args.kind, "mode": "always-on"}))
-            if args.await_seconds is not None:
-                q.stop()
-            else:
-                q.awaitTermination()
-        else:
-            # drained: the output count is parquet footer metadata only.
-            # run_ingest stopped the query before returning even when
-            # --await-seconds expired first, so the count is final;
-            # "drained" reports whether the drop was fully consumed
-            # (False = the bound cut it short; re-run resumes from the
-            # checkpoint)
-            from xdump_spark import fsutil
-
-            rpt = {
-                "kind": args.kind,
-                "mode": "drain",
-                "drained": bool(getattr(q, "xd_drained", True)),
-            }
-            if args.kind == "index":
-                # the output is the INDEX directory (postings +
-                # term_stats + manifest), not a row corpus. A zero-batch
-                # drain on a fresh deployment never created the index —
-                # report an empty one instead of failing the (successful)
-                # empty drain on the missing manifest (ADVICE r11 low)
-                from xdump_spark.operators.retrieval import (
-                    _INDEX_MANIFEST,
-                    text_index_stats,
-                )
-
-                if fsutil.exists_atomic(
-                    spark, fsutil.join(args.output, _INDEX_MANIFEST)
-                ):
-                    rpt.update(text_index_stats(spark, args.output))
-                else:
-                    rpt.update(
-                        {"segments": 0, "n_docs": 0, "files": 0, "bytes": 0}
-                    )
-            elif args.kind == "rag":
-                # two artifacts: the survivor-chunk corpus (output) and
-                # the BM25 index (index_dir) — report both, tolerating
-                # a zero-batch drain that created neither
-                from xdump_spark.operators.retrieval import (
-                    _INDEX_MANIFEST,
-                    text_index_stats,
-                )
-
-                rpt["output_rows"] = (
-                    spark.read.parquet(args.output).count()
-                    if fsutil.exists(spark, args.output)
-                    else 0
-                )
-                if fsutil.exists_atomic(
-                    spark, fsutil.join(args.index_dir, _INDEX_MANIFEST)
-                ):
-                    rpt["index"] = text_index_stats(spark, args.index_dir)
-                else:
-                    rpt["index"] = {"segments": 0, "n_docs": 0,
-                                    "files": 0, "bytes": 0}
-            else:
-                rpt["output_rows"] = (
-                    spark.read.parquet(args.output).count()
-                    if fsutil.exists(spark, args.output)
-                    else 0
-                )
-            print(_json.dumps(rpt))
-    elif args.command == "search":
-        import json as _json
-
-        from xdump_spark.operators.incremental import VectorStore
-
-        if args.id_col is None:
-            args.id_col = "vec_id" if args.kind == "vector" else "doc_id"
-        if args.kind == "signature":
-            from xdump_spark.operators.incremental import SignatureStore
-
-            if not args.store_path:
-                raise SystemExit("--kind signature needs --store-path")
-            sig = SignatureStore(spark, args.store_path)
-            res = sig.probe(
-                spark.read.parquet(args.queries),
-                text_col=args.text_col, id_col=args.id_col,
-                threshold=args.threshold, num_perm=args.num_perm,
-                bands=args.bands, shingle_k=args.shingle_k,
-                max_bucket=args.max_bucket or None,
-            )
-            res.write.mode("overwrite").parquet(args.output)
-            n = spark.read.parquet(args.output).count()
-            print(_json.dumps({
-                "kind": "signature", "store": args.store_path,
-                "threshold": args.threshold, "rows": n,
-            }))
-            return 0
-        if args.kind == "exact":
-            from xdump_spark.operators.incremental import ExactHashStore
-
-            if not args.store_table:
-                raise SystemExit("--kind exact needs --store-table")
-            ex = ExactHashStore(
-                spark, args.store_table, n_buckets=args.buckets,
-                path=args.store_path,
-            )
-            res = ex.contains(
-                spark.read.parquet(args.queries),
-                text_col=args.text_col, id_col=args.id_col,
-            )
-            res.write.mode("overwrite").parquet(args.output)
-            out = spark.read.parquet(args.output)
-            print(_json.dumps({
-                "kind": "exact", "store": args.store_table,
-                "rows": out.count(),
-                "stored": out.filter("is_stored").count(),
-            }))
-            return 0
         if not args.store_path:
-            raise SystemExit("--kind vector needs --store-path")
-        store = VectorStore(spark, args.store_path)
-        if not store.exists():
-            raise SystemExit(f"no VectorStore at {args.store_path}")
-        queries = spark.read.parquet(args.queries)
-        mmr_vecs = None
-        if args.mmr is not None:
-            if args.corpus:
-                mmr_vecs = spark.read.parquet(args.corpus)
-            else:
-                # r12: a FLOAT store serves its own diversity vectors
-                # (the RAG front door's layout needs no side table);
-                # pq stores hold only codes — --allow-recon (r13) opts
-                # into PQ reconstructions for the diversity term,
-                # otherwise they still need --corpus
-                try:
-                    mmr_vecs = store.vectors(
-                        id_col=args.id_col, vec_col=args.vec_col,
-                        reconstructed=args.allow_recon,
-                    )
-                except ValueError as e:
-                    # the store's own message carries the right advice
-                    # (--corpus vs --allow-recon vs empty store) — a
-                    # fixed '--corpus' prefix would mislead the
-                    # --allow-recon-on-empty-store case
-                    raise SystemExit(f"search --mmr: {e}")
-        if args.text_index:
-            if args.rerank is not None or (
-                args.corpus and args.mmr is None
-            ):
-                raise SystemExit(
-                    "--rerank/--corpus apply to pure ANN search; the "
-                    "hybrid path fuses raw ranks (use a float store or "
-                    "accept ADC ranks on the vector side). --corpus "
-                    "with --mmr is the exception: it supplies the "
-                    "diversity vectors."
-                )
-            from xdump_spark.operators.retrieval import (
-                hybrid_topk,
-                load_text_index,
-            )
-
-            idx = load_text_index(spark, args.text_index)
-            try:
-                weights = tuple(
-                    float(w) for w in args.weights.split(",")
-                )
-            except ValueError:
-                raise SystemExit(f"bad --weights {args.weights!r}")
-            if len(weights) != 2:
-                raise SystemExit("--weights needs exactly two numbers")
-            res = hybrid_topk(
-                idx, store, queries, k=args.k, depth=args.depth,
-                k_rrf=args.k_rrf, weights=weights,
-                query_id_col=args.id_col,
-                query_text_col=args.query_text_col,
-                query_vec_col=args.vec_col, n_probe=args.n_probe,
-            )
-        else:
-            corpus = (
-                spark.read.parquet(args.corpus) if args.corpus else None
-            )
-            res = store.search(
-                queries, k=args.k, n_probe=args.n_probe,
-                id_col=args.id_col, vec_col=args.vec_col,
-                rerank=args.rerank, corpus=corpus,
-            )
-        if args.mmr is not None:
-            from xdump_spark.operators.retrieval import mmr_rerank
-
-            id_col = res.columns[1]      # doc_id | neighbor_id
-            score_col = res.columns[2]   # rrf_score | cosine_sim | pq_sim
-            res = mmr_rerank(
-                res, mmr_vecs, k=args.mmr,
-                lam=args.mmr_lambda, id_col=id_col, score_col=score_col,
-                vec_id_col=args.id_col, vec_col=args.vec_col,
-            )
+            raise SystemExit("--kind signature needs --store-path")
+        sig = SignatureStore(spark, args.store_path)
+        res = sig.probe(
+            spark.read.parquet(args.queries),
+            text_col=args.text_col, id_col=args.id_col,
+            threshold=args.threshold, num_perm=args.num_perm,
+            bands=args.bands, shingle_k=args.shingle_k,
+            max_bucket=args.max_bucket or None,
+        )
         res.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()
-        score_col = res.columns[2]  # cosine_sim | pq_sim | rrf_score | mmr_score
         print(_json.dumps({
-            "store": args.store_path, "k": args.k,
-            "n_probe": args.n_probe, "score": score_col, "rows": n,
+            "kind": "signature", "store": args.store_path,
+            "threshold": args.threshold, "rows": n,
         }))
-    elif args.command == "maintain":
-        import json as _json
+        return
+    if args.kind == "exact":
+        from xdump_spark.operators.incremental import ExactHashStore
 
-        if args.kind == "exact":
-            if not args.store_table:
-                raise SystemExit("--kind exact needs --store-table")
-            from xdump_spark.operators.incremental import ExactHashStore
-
-            store = ExactHashStore(
-                spark, args.store_table, n_buckets=args.buckets,
-                path=args.store_path,
-            )
-        elif not args.store_path:
-            raise SystemExit(f"--kind {args.kind} needs --store-path")
-        elif args.kind == "signature":
-            from xdump_spark.operators.incremental import SignatureStore
-
-            store = SignatureStore(spark, args.store_path)
-        elif args.kind == "vector":
-            from xdump_spark.operators.incremental import VectorStore
-
-            store = VectorStore(spark, args.store_path)
-        elif args.kind == "window":
-            from xdump_spark.operators.spans import WindowHashStore
-
-            store = WindowHashStore(spark, args.store_path)
-        elif args.kind == "rag":
-            from xdump_spark.operators.incremental import VectorStore
-
-            store = VectorStore(spark, args.store_path)
+        if not args.store_table:
+            raise SystemExit("--kind exact needs --store-table")
+        ex = ExactHashStore(
+            spark, args.store_table, n_buckets=args.buckets,
+            path=args.store_path,
+        )
+        res = ex.contains(
+            spark.read.parquet(args.queries),
+            text_col=args.text_col, id_col=args.id_col,
+        )
+        res.write.mode("overwrite").parquet(args.output)
+        out = spark.read.parquet(args.output)
+        print(_json.dumps({
+            "kind": "exact", "store": args.store_table,
+            "rows": out.count(),
+            "stored": out.filter("is_stored").count(),
+        }))
+        return
+    if not args.store_path:
+        raise SystemExit("--kind vector needs --store-path")
+    store = VectorStore(spark, args.store_path)
+    if not store.exists():
+        raise SystemExit(f"no VectorStore at {args.store_path}")
+    queries = spark.read.parquet(args.queries)
+    mmr_vecs = None
+    if args.mmr is not None:
+        if args.corpus:
+            mmr_vecs = spark.read.parquet(args.corpus)
         else:
-            store = None  # text-index: module-level functions below
-
-        if args.action in ("retrain", "balance") and args.kind != "vector":
+            # r12: a FLOAT store serves its own diversity vectors
+            # (the RAG front door's layout needs no side table);
+            # pq stores hold only codes — --allow-recon (r13) opts
+            # into PQ reconstructions for the diversity term,
+            # otherwise they still need --corpus
+            try:
+                mmr_vecs = store.vectors(
+                    id_col=args.id_col, vec_col=args.vec_col,
+                    reconstructed=args.allow_recon,
+                )
+            except ValueError as e:
+                # the store's own message carries the right advice
+                # (--corpus vs --allow-recon vs empty store) — a
+                # fixed '--corpus' prefix would mislead the
+                # --allow-recon-on-empty-store case
+                raise SystemExit(f"search --mmr: {e}")
+    if args.text_index:
+        if args.rerank is not None or (
+            args.corpus and args.mmr is None
+        ):
             raise SystemExit(
-                f"--action {args.action} applies to --kind vector only"
+                "--rerank/--corpus apply to pure ANN search; the "
+                "hybrid path fuses raw ranks (use a float store or "
+                "accept ADC ranks on the vector side). --corpus "
+                "with --mmr is the exception: it supplies the "
+                "diversity vectors."
             )
-        if args.kind == "rag":
-            # the chain's artifacts as one unit: stats and
-            # whole-document forget (store -> index -> corpus)
-            if not args.index_dir:
-                raise SystemExit("--kind rag needs --index-dir")
-            from xdump_spark.operators.retrieval import text_index_stats
+        from xdump_spark.operators.retrieval import (
+            hybrid_topk,
+            load_text_index,
+        )
 
-            if args.action == "stats":
-                rpt = {"store": store.stats(),
-                       "index": text_index_stats(spark, args.index_dir)}
-                if args.corpus_dir:
-                    from xdump_spark import fsutil
-                    from xdump_spark.pipeline import _corpus_layout
+        idx = load_text_index(spark, args.text_index)
+        try:
+            weights = tuple(
+                float(w) for w in args.weights.split(",")
+            )
+        except ValueError:
+            raise SystemExit(f"bad --weights {args.weights!r}")
+        if len(weights) != 2:
+            raise SystemExit("--weights needs exactly two numbers")
+        res = hybrid_topk(
+            idx, store, queries, k=args.k, depth=args.depth,
+            k_rrf=args.k_rrf, weights=weights,
+            query_id_col=args.id_col,
+            query_text_col=args.query_text_col,
+            query_vec_col=args.vec_col, n_probe=args.n_probe,
+        )
+    else:
+        corpus = (
+            spark.read.parquet(args.corpus) if args.corpus else None
+        )
+        res = store.search(
+            queries, k=args.k, n_probe=args.n_probe,
+            id_col=args.id_col, vec_col=args.vec_col,
+            rerank=args.rerank, corpus=corpus,
+        )
+    if args.mmr is not None:
+        from xdump_spark.operators.retrieval import mmr_rerank
 
-                    cf = fsutil.list_data_files(spark, args.corpus_dir)
-                    rpt["corpus"] = {
-                        "layout": _corpus_layout(
-                            spark, args.corpus_dir
-                        )["kind"],
-                        "files": len(cf),
-                        "bytes": sum(b for _, b in cf),
-                    }
-            elif args.action == "compact":
-                # one-command maintenance for the chain: store cells,
-                # index segments, and
-                # the survivor corpus's per-bucket small files
+        id_col = res.columns[1]      # doc_id | neighbor_id
+        score_col = res.columns[2]   # rrf_score | cosine_sim | pq_sim
+        res = mmr_rerank(
+            res, mmr_vecs, k=args.mmr,
+            lam=args.mmr_lambda, id_col=id_col, score_col=score_col,
+            vec_id_col=args.id_col, vec_col=args.vec_col,
+        )
+    res.write.mode("overwrite").parquet(args.output)
+    n = spark.read.parquet(args.output).count()
+    score_col = res.columns[2]  # cosine_sim | pq_sim | rrf_score | mmr_score
+    print(_json.dumps({
+        "store": args.store_path, "k": args.k,
+        "n_probe": args.n_probe, "score": score_col, "rows": n,
+    }))
+
+
+def _maintain(args, spark) -> None:
+    import json as _json
+
+    if args.kind == "exact":
+        if not args.store_table:
+            raise SystemExit("--kind exact needs --store-table")
+        from xdump_spark.operators.incremental import ExactHashStore
+
+        store = ExactHashStore(
+            spark, args.store_table, n_buckets=args.buckets,
+            path=args.store_path,
+        )
+    elif not args.store_path:
+        raise SystemExit(f"--kind {args.kind} needs --store-path")
+    elif args.kind == "signature":
+        from xdump_spark.operators.incremental import SignatureStore
+
+        store = SignatureStore(spark, args.store_path)
+    elif args.kind == "vector":
+        from xdump_spark.operators.incremental import VectorStore
+
+        store = VectorStore(spark, args.store_path)
+    elif args.kind == "window":
+        from xdump_spark.operators.spans import WindowHashStore
+
+        store = WindowHashStore(spark, args.store_path)
+    elif args.kind == "rag":
+        from xdump_spark.operators.incremental import VectorStore
+
+        store = VectorStore(spark, args.store_path)
+    else:
+        store = None  # text-index: module-level functions below
+
+    if args.action in ("retrain", "balance") and args.kind != "vector":
+        raise SystemExit(
+            f"--action {args.action} applies to --kind vector only"
+        )
+    if args.kind == "rag":
+        # the chain's artifacts as one unit: stats and
+        # whole-document forget (store -> index -> corpus)
+        if not args.index_dir:
+            raise SystemExit("--kind rag needs --index-dir")
+        from xdump_spark.operators.retrieval import text_index_stats
+
+        if args.action == "stats":
+            rpt = {"store": store.stats(),
+                   "index": text_index_stats(spark, args.index_dir)}
+            if args.corpus_dir:
                 from xdump_spark import fsutil
-                from xdump_spark.operators.retrieval import (
-                    compact_text_index,
-                    text_index_stats,
-                )
-                from xdump_spark.pipeline import compact_rag_corpus
+                from xdump_spark.pipeline import _corpus_layout
 
-                if args.when_files_over is not None:
-                    # scheduled form: the gate is the chain's TOTAL
-                    # file count (all compactable artifacts pile up
-                    # together on a daily-increment cadence)
-                    total = (
-                        store.stats()["files"]
-                        + text_index_stats(spark, args.index_dir)["files"]
-                        + (
-                            len(fsutil.list_data_files(
-                                spark, args.corpus_dir
-                            ))
-                            if args.corpus_dir
-                            else 0
-                        )
-                    )
-                    if total <= args.when_files_over:
-                        print(_json.dumps(
-                            {"skipped": True, "files": total}
-                        ))
-                        return 0
-                rpt = {"store": store.compact(args.target_file_bytes),
-                       "index": compact_text_index(spark, args.index_dir)}
-                if args.corpus_dir:
-                    rpt["corpus"] = compact_rag_corpus(
-                        spark, args.corpus_dir,
-                        target_file_bytes=args.target_file_bytes,
-                        n_buckets=args.corpus_buckets,
-                        id_col=args.id_col,
-                    )
-            elif args.action == "delete":
-                if not args.delete_ids:
-                    raise SystemExit(
-                        "--action delete --kind rag needs --delete-ids "
-                        "(parquet of parent doc ids)"
-                    )
-                from xdump_spark.pipeline import forget_rag_docs
-
-                rpt = forget_rag_docs(
-                    spark, store, args.index_dir,
-                    spark.read.parquet(args.delete_ids),
-                    corpus_dir=args.corpus_dir,
-                )
-            else:
-                raise SystemExit(
-                    "--kind rag supports --action stats, compact, and "
-                    "delete (retrain the vector store with --kind "
-                    "vector)"
-                )
-            print(_json.dumps(rpt))
-            return 0
-        if args.action == "delete":
-            if args.kind == "exact":
-                if args.delete_docs:
-                    rpt = store.delete_docs(
-                        spark.read.parquet(args.delete_docs),
-                        text_col=args.text_col,
-                    )
-                elif args.delete_hashes:
-                    rpt = store.delete_hashes(
-                        spark.read.parquet(args.delete_hashes)
-                    )
-                else:
-                    raise SystemExit(
-                        "--action delete --kind exact needs "
-                        "--delete-docs or --delete-hashes (the store "
-                        "keeps content hashes, not ids)"
-                    )
-            elif args.kind in ("signature", "vector"):
-                if not args.delete_ids:
-                    raise SystemExit(
-                        f"--action delete --kind {args.kind} needs "
-                        "--delete-ids"
-                    )
-                rpt = store.delete_ids(spark.read.parquet(args.delete_ids))
-            elif args.kind == "text-index":
-                if not args.delete_ids:
-                    raise SystemExit(
-                        "--action delete --kind text-index needs "
-                        "--delete-ids"
-                    )
-                from xdump_spark.operators.retrieval import (
-                    delete_text_index_docs,
-                )
-
-                rpt = delete_text_index_docs(
-                    spark, args.store_path,
-                    spark.read.parquet(args.delete_ids),
-                )
-            else:
-                raise SystemExit(
-                    "--action delete supports exact/signature/vector "
-                    "stores and the saved text-index (window hashes "
-                    "are content-shared across documents — rebuild "
-                    "that artifact from the retained corpus instead)"
-                )
-            print(_json.dumps(rpt))
-            return 0
-        if args.when_files_over is not None and args.action == "compact":
-            if args.kind == "text-index":
-                from xdump_spark.operators.retrieval import text_index_stats
-
-                st = text_index_stats(spark, args.store_path)
-            else:
-                st = store.stats()
-            if st["files"] <= args.when_files_over:
-                print(_json.dumps({"skipped": True, **st}))
-                return 0
-        if args.action == "retrain":
-            if not args.n_cells:
-                raise SystemExit("--action retrain needs --n-cells")
-            if args.when_recommended:
-                from xdump_spark.operators.similarity import ivf_balance
-
-                bal = ivf_balance(
-                    store.index(),
-                    hot_cell_factor=args.hot_cell_factor,
-                    max_empty_frac=args.max_empty_frac,
-                )
-                if not bal["retrain_recommended"]:
-                    print(_json.dumps({"skipped": True, **bal}))
-                    return 0
-            rpt = store.retrain(
-                args.n_cells, sample_fraction=args.sample_fraction
-            )
-        elif args.action == "balance":
-            from xdump_spark.operators.similarity import ivf_balance
-
-            rpt = ivf_balance(store.index())
-        elif args.kind == "text-index":
+                cf = fsutil.list_data_files(spark, args.corpus_dir)
+                rpt["corpus"] = {
+                    "layout": _corpus_layout(
+                        spark, args.corpus_dir
+                    )["kind"],
+                    "files": len(cf),
+                    "bytes": sum(b for _, b in cf),
+                }
+        elif args.action == "compact":
+            # one-command maintenance for the chain: store cells,
+            # index segments, and
+            # the survivor corpus's per-bucket small files
+            from xdump_spark import fsutil
             from xdump_spark.operators.retrieval import (
                 compact_text_index,
                 text_index_stats,
             )
+            from xdump_spark.pipeline import compact_rag_corpus
 
-            rpt = (
-                text_index_stats(spark, args.store_path)
-                if args.action == "stats"
-                else compact_text_index(spark, args.store_path)
+            if args.when_files_over is not None:
+                # scheduled form: the gate is the chain's TOTAL
+                # file count (all compactable artifacts pile up
+                # together on a daily-increment cadence)
+                total = (
+                    store.stats()["files"]
+                    + text_index_stats(spark, args.index_dir)["files"]
+                    + (
+                        len(fsutil.list_data_files(
+                            spark, args.corpus_dir
+                        ))
+                        if args.corpus_dir
+                        else 0
+                    )
+                )
+                if total <= args.when_files_over:
+                    print(_json.dumps(
+                        {"skipped": True, "files": total}
+                    ))
+                    return
+            rpt = {"store": store.compact(args.target_file_bytes),
+                   "index": compact_text_index(spark, args.index_dir)}
+            if args.corpus_dir:
+                rpt["corpus"] = compact_rag_corpus(
+                    spark, args.corpus_dir,
+                    target_file_bytes=args.target_file_bytes,
+                    n_buckets=args.corpus_buckets,
+                    id_col=args.id_col,
+                )
+        elif args.action == "delete":
+            if not args.delete_ids:
+                raise SystemExit(
+                    "--action delete --kind rag needs --delete-ids "
+                    "(parquet of parent doc ids)"
+                )
+            from xdump_spark.pipeline import forget_rag_docs
+
+            rpt = forget_rag_docs(
+                spark, store, args.index_dir,
+                spark.read.parquet(args.delete_ids),
+                corpus_dir=args.corpus_dir,
             )
-        elif args.action == "stats":
-            rpt = store.stats()
         else:
-            rpt = store.compact(target_file_bytes=args.target_file_bytes)
+            raise SystemExit(
+                "--kind rag supports --action stats, compact, and "
+                "delete (retrain the vector store with --kind "
+                "vector)"
+            )
         print(_json.dumps(rpt))
-    else:
-        engine = SparkDumpEngine(spark, Catalog({}))   # load needs no source catalog
-        loaded = engine.load(args.input)
-        if getattr(args, "jdbc_url", None):
-            from xdump_spark.sources.jdbc import jdbc_options
+        return
+    if args.action == "delete":
+        if args.kind == "exact":
+            if args.delete_docs:
+                rpt = store.delete_docs(
+                    spark.read.parquet(args.delete_docs),
+                    text_col=args.text_col,
+                )
+            elif args.delete_hashes:
+                rpt = store.delete_hashes(
+                    spark.read.parquet(args.delete_hashes)
+                )
+            else:
+                raise SystemExit(
+                    "--action delete --kind exact needs "
+                    "--delete-docs or --delete-hashes (the store "
+                    "keeps content hashes, not ids)"
+                )
+        elif args.kind in ("signature", "vector"):
+            if not args.delete_ids:
+                raise SystemExit(
+                    f"--action delete --kind {args.kind} needs "
+                    "--delete-ids"
+                )
+            rpt = store.delete_ids(spark.read.parquet(args.delete_ids))
+        elif args.kind == "text-index":
+            if not args.delete_ids:
+                raise SystemExit(
+                    "--action delete --kind text-index needs "
+                    "--delete-ids"
+                )
+            from xdump_spark.operators.retrieval import (
+                delete_text_index_docs,
+            )
 
-            props = {
-                k: v
-                for k, v in jdbc_options(
-                    args.jdbc_url, user=args.jdbc_user,
-                    password=args.jdbc_password, driver=args.jdbc_driver,
-                ).items()
-                if k != "url"
-            }
-            order = loaded.write_jdbc(args.jdbc_url, props, mode="append")
+            rpt = delete_text_index_docs(
+                spark, args.store_path,
+                spark.read.parquet(args.delete_ids),
+            )
         else:
-            db = backend_cls(spark, args.output_db)
-            if args.cleanup_method == "recreate":
-                db.recreate()
-            elif args.cleanup_method == "truncate":
-                db.truncate()
-            order = loaded.load_order()
-            db.load_tables(loaded.frames, order, mode="overwrite")
-            db.write_fk_config(loaded.foreign_keys)
-            if loaded.sequences and hasattr(db, "write_sequences"):
-                db.write_sequences({t: int(v) for t, v in loaded.sequences.items()})
-        print(f"loaded tables (FK order): {', '.join(order)}")
+            raise SystemExit(
+                "--action delete supports exact/signature/vector "
+                "stores and the saved text-index (window hashes "
+                "are content-shared across documents — rebuild "
+                "that artifact from the retained corpus instead)"
+            )
+        print(_json.dumps(rpt))
+        return
+    if args.when_files_over is not None and args.action == "compact":
+        if args.kind == "text-index":
+            from xdump_spark.operators.retrieval import text_index_stats
+
+            st = text_index_stats(spark, args.store_path)
+        else:
+            st = store.stats()
+        if st["files"] <= args.when_files_over:
+            print(_json.dumps({"skipped": True, **st}))
+            return
+    if args.action == "retrain":
+        if not args.n_cells:
+            raise SystemExit("--action retrain needs --n-cells")
+        if args.when_recommended:
+            from xdump_spark.operators.similarity import ivf_balance
+
+            bal = ivf_balance(
+                store.index(),
+                hot_cell_factor=args.hot_cell_factor,
+                max_empty_frac=args.max_empty_frac,
+            )
+            if not bal["retrain_recommended"]:
+                print(_json.dumps({"skipped": True, **bal}))
+                return
+        rpt = store.retrain(
+            args.n_cells, sample_fraction=args.sample_fraction
+        )
+    elif args.action == "balance":
+        from xdump_spark.operators.similarity import ivf_balance
+
+        rpt = ivf_balance(store.index())
+    elif args.kind == "text-index":
+        from xdump_spark.operators.retrieval import (
+            compact_text_index,
+            text_index_stats,
+        )
+
+        rpt = (
+            text_index_stats(spark, args.store_path)
+            if args.action == "stats"
+            else compact_text_index(spark, args.store_path)
+        )
+    elif args.action == "stats":
+        rpt = store.stats()
+    else:
+        rpt = store.compact(target_file_bytes=args.target_file_bytes)
+    print(_json.dumps(rpt))
+
+_COMMANDS = {
+    "dump": _dump,
+    "load": _load,
+    "curate": _curate,
+    "train-lm": _train_lm,
+    "train-quality": _train_quality,
+    "select": _select,
+    "train-tokenizer": _train_tokenizer,
+    "media-profile": _media_profile,
+    "datacard": _datacard,
+    "prepare-rag": _prepare_rag,
+    "prepare-sft": _prepare_sft,
+    "prepare-pairs": _prepare_pairs,
+    "ingest": _ingest,
+    "search": _search,
+    "maintain": _maintain,
+}
+
+
+def run(args, spark) -> int:
+    """Execute a parsed CLI command against an existing session (split from
+    ``main`` so tests can drive the CLI without owning session lifecycle)."""
+    from xdump_spark.timing import configure
+
+    configure(getattr(args, "verbosity", 0))
+    args.backend = getattr(args, "backend", None) or resolve_backend(DEFAULT_BACKEND)
+    _COMMANDS[args.command](args, spark)
     return 0
 
 

@@ -1,9 +1,11 @@
-"""Config-file-driven dump/load — the analog of the reference's Django
+"""Config-file-driven runs — the analog of the reference's Django
 integration, where table sets live in settings (``XDUMP = {FULL_TABLES,
 PARTIAL_TABLES, BACKEND}``, reference: extra/django/xdump/management/
-core.py:7-74) and a management command runs the dump without CLI flags.
+core.py:7-74) and a management command runs without CLI flags. Three
+flows read a JSON file (no extra dependencies), and each runs through
+the same function as its CLI subcommand:
 
-Config is JSON (no extra dependencies):
+- **dump** (:func:`dump_from_config`, ``framework.run_dump``)::
 
     {
       "db": "/path/to/parquet_db",
@@ -14,6 +16,15 @@ Config is JSON (no extra dependencies):
       "dump_schema": true,
       "dump_data": true
     }
+
+- **curate** (:func:`curate_from_config`, :func:`run_curate`): the
+  keys of ``pipeline.prepare_training_corpus`` plus the input, the side
+  outputs and the ``dedup_store`` / ``embeddings`` objects.
+- **ingest** (:func:`ingest_from_config`): the keys of
+  ``streaming.ingest.run_ingest``, with the dedup store as one
+  ``store`` object.
+
+A key the file leaves out takes the default of the function it feeds.
 """
 
 from __future__ import annotations
@@ -23,40 +34,34 @@ import json
 from pyspark.sql import SparkSession
 
 
-def load_config(path: str) -> dict:
+def _read_config(path: str, what: str, required: tuple, known: set) -> dict:
     with open(path) as f:
         cfg = json.load(f)
-    for key in ("db", "output"):
+    for key in required:
         if key not in cfg:
-            raise ValueError(f"config missing required key {key!r}")
-    unknown = set(cfg) - {
+            raise ValueError(f"{what} missing required key {key!r}")
+    unknown = set(cfg) - known
+    if unknown:
+        raise ValueError(f"unknown {what} keys: {sorted(unknown)}")
+    return cfg
+
+
+def load_config(path: str) -> dict:
+    return _read_config(path, "config", ("db", "output"), {
         "db", "output", "full_tables", "partial_tables",
         "compression", "dump_schema", "dump_data", "since",
-    }
-    if unknown:
-        raise ValueError(f"unknown config keys: {sorted(unknown)}")
-    return cfg
+    })
 
 
 def dump_from_config(spark: SparkSession, path: str) -> dict[str, int]:
     """Run a dump as described by a JSON config file; returns per-table
     row counts (same as ``SparkDumpEngine.dump``)."""
-    from xdump_spark.engine import SparkDumpEngine
+    from xdump_spark.framework import run_dump
     from xdump_spark.sources.parquet_db import ParquetDatabase
 
     cfg = load_config(path)
-    engine = SparkDumpEngine(spark, ParquetDatabase(spark, cfg["db"]).catalog())
-    kwargs = dict(
-        full_tables=cfg.get("full_tables", []),
-        partial_tables=cfg.get("partial_tables", {}),
-        dump_schema=cfg.get("dump_schema", True),
-        dump_data=cfg.get("dump_data", True),
-        compression=cfg.get("compression", "deflated"),
-    )
-    if cfg.get("since"):
-        # incremental: export only rows newer than the prior archive
-        return engine.dump_incremental(cfg["output"], since=cfg["since"], **kwargs)
-    return engine.dump(cfg["output"], **kwargs)
+    db = ParquetDatabase(spark, cfg.pop("db"))
+    return run_dump(spark, db, cfg.pop("output"), **cfg)
 
 
 _CURATE_KEYS = {
@@ -74,19 +79,12 @@ _CURATE_KEYS = {
     "audio_gate", "dedup_store", "url_col", "dedup_urls", "domain_cap",
     "input_format", "audit", "checkpoint_dir", "checkpoint_stages",
     "resume", "chunk_budget", "chunk_overlap", "chunk_by", "chunks_out",
+    "splits", "split_seed", "card_out",
 }
 
 
 def load_curate_config(path: str) -> dict:
-    with open(path) as f:
-        cfg = json.load(f)
-    for key in ("input", "output"):
-        if key not in cfg:
-            raise ValueError(f"curate config missing required key {key!r}")
-    unknown = set(cfg) - _CURATE_KEYS
-    if unknown:
-        raise ValueError(f"unknown curate config keys: {sorted(unknown)}")
-    return cfg
+    return _read_config(path, "curate config", ("input", "output"), _CURATE_KEYS)
 
 
 _INGEST_KEYS = {
@@ -99,21 +97,23 @@ _INGEST_KEYS = {
     "replace",
 }
 
+# ingest ``store`` object key → run_ingest parameter
+_INGEST_STORE_KEYS = {
+    "table": "store_table", "path": "store_path", "n_buckets": "store_buckets",
+    "dtype": "vector_dtype", "pq_m": "pq_m", "pq_k": "pq_k",
+    "exact_guard": "exact_guard",
+}
+
 
 def load_ingest_config(path: str) -> dict:
-    with open(path) as f:
-        cfg = json.load(f)
-    for key in ("kind", "input_dir", "output", "checkpoint_dir"):
-        if key not in cfg:
-            raise ValueError(f"ingest config missing required key {key!r}")
-    unknown = set(cfg) - _INGEST_KEYS
-    if unknown:
-        raise ValueError(f"unknown ingest config keys: {sorted(unknown)}")
+    cfg = _read_config(
+        path, "ingest config",
+        ("kind", "input_dir", "output", "checkpoint_dir"), _INGEST_KEYS,
+    )
     store = cfg.get("store", {})
     if not isinstance(store, dict):
         raise ValueError("ingest config 'store' must be an object")
-    unknown = set(store) - {"table", "path", "n_buckets", "dtype",
-                            "pq_m", "pq_k", "exact_guard"}
+    unknown = set(store) - set(_INGEST_STORE_KEYS)
     if unknown:
         raise ValueError(f"unknown ingest store keys: {sorted(unknown)}")
     return cfg
@@ -143,42 +143,9 @@ def ingest_from_config(spark: SparkSession, path: str):
     from xdump_spark.streaming.ingest import run_ingest
 
     cfg = load_ingest_config(path)
-    store = cfg.get("store", {})
+    store = cfg.pop("store", {})
     return run_ingest(
-        spark,
-        kind=cfg["kind"],
-        input_dir=cfg["input_dir"],
-        output=cfg["output"],
-        checkpoint_dir=cfg["checkpoint_dir"],
-        store_table=store.get("table"),
-        store_path=store.get("path"),
-        store_buckets=store.get("n_buckets", 64),
-        vector_dtype=store.get("dtype", "float64"),
-        pq_m=store.get("pq_m", 8),
-        pq_k=store.get("pq_k", 256),
-        exact_guard=store.get("exact_guard", False),
-        corrupt_out=cfg.get("corrupt_out"),
-        rejects_out=cfg.get("rejects_out"),
-        template=cfg.get("template", "chatml"),
-        keep_contradictions=cfg.get("keep_contradictions", False),
-        path_glob=cfg.get("path_glob", "*"),
-        text_col=cfg.get("text_col", "text"),
-        id_col=cfg.get("id_col", "doc_id"),
-        vec_col=cfg.get("vec_col", "embedding"),
-        semantic_threshold=cfg.get("semantic_threshold", 0.95),
-        semantic_cells=cfg.get("semantic_cells", 16),
-        semantic_max_cell=cfg.get("semantic_max_cell", 50_000),
-        hash_embed=cfg.get("hash_embed"),
-        doc_dedup=cfg.get("doc_dedup", "exact"),
-        fuzzy_threshold=cfg.get("fuzzy_threshold", 0.5),
-        schema=cfg.get("schema"),
-        processing_time=cfg.get("processing_time"),
-        await_seconds=cfg.get("await_seconds"),
-        index_dir=cfg.get("index_dir"),
-        chunk_tokens=cfg.get("chunk_tokens", 256),
-        chunk_overlap=cfg.get("chunk_overlap", 32),
-        corpus_buckets=cfg.get("corpus_buckets", 64),
-        replace=cfg.get("replace", False),
+        spark, **cfg, **{_INGEST_STORE_KEYS[k]: v for k, v in store.items()}
     )
 
 
@@ -188,6 +155,156 @@ def _load_quality_model(path: str):
 
     with open(path) as fh:
         return LinearModel.from_dict(json.load(fh))
+
+
+# doc_dedup → the persistent store its ``dedup_store`` object opens:
+# (class in operators.incremental, required key, optional keys). The
+# required key is the constructor's first argument, the optional keys
+# its keyword arguments.
+_DEDUP_STORES = {
+    # the near-dup MinHash SignatureStore
+    "fuzzy": ("SignatureStore", "path", ()),
+    # the embedding VectorStore; dtype, pq_m, pq_k and exact_guard
+    # apply at store creation only
+    "semantic": ("VectorStore", "path", ("dtype", "pq_m", "pq_k", "exact_guard")),
+    # the exact-dedup hash store (doc_dedup == "exact")
+    "exact": ("ExactHashStore", "table", ("path", "n_buckets")),
+}
+
+
+def _dedup_store(spark: SparkSession, sc: dict, doc_dedup: str | None):
+    from xdump_spark.operators import incremental
+
+    cls, required, optional = _DEDUP_STORES.get(doc_dedup, _DEDUP_STORES["exact"])
+    if required not in sc or set(sc) - {required, *optional}:
+        extra = f" (+ optional {', '.join(map(repr, optional))})" if optional else " only"
+        raise ValueError(
+            f"dedup_store config with doc_dedup={doc_dedup!r} needs "
+            f"{required!r}{extra}; got keys {sorted(sc)}"
+        )
+    rest = {k: v for k, v in sc.items() if k != required}
+    return getattr(incremental, cls)(spark, sc[required], **rest)
+
+
+def run_curate(spark: SparkSession, req: dict):
+    """Run one curate request: the one curate path behind
+    :func:`curate_from_config` and the CLI's ``curate``. ``req`` holds
+    curate config keys (:func:`load_curate_config`); only the keys it
+    holds reach ``prepare_training_corpus``, so every default is that
+    function's. Around the pipeline it reads the input (parquet, or WET
+    with the corrupt files printed), joins the ``embeddings`` table,
+    opens the ``dedup_store``, loads the quality model, and writes the
+    side outputs (``card_out``, ``shards_out``, ``chunks_out``).
+
+    Returns the :class:`~xdump_spark.pipeline.CorpusResult`."""
+    from xdump_spark.pipeline import prepare_training_corpus
+
+    kw = dict(req)
+    src, out = kw.pop("input"), kw.pop("output")
+    input_format = kw.pop("input_format", "parquet")
+    embeddings = kw.pop("embeddings", None)
+    shards_out = kw.pop("shards_out", None)
+    shards_format = kw.pop("shards_format", "parquet")
+    chunks_out = kw.pop("chunks_out", None)
+    card_out = kw.pop("card_out", None)
+    mode = "overwrite" if kw.pop("overwrite", False) else "errorifexists"
+    hash_embed = kw.get("hash_embed")
+    if input_format not in ("parquet", "wet"):
+        raise ValueError(
+            f"input_format must be 'parquet' or 'wet', got {input_format!r}"
+        )
+    if embeddings and hash_embed:
+        raise ValueError(
+            "embeddings and hash_embed are mutually exclusive "
+            "(one embedding source)"
+        )
+    if hash_embed is not None and not isinstance(hash_embed, int):
+        raise ValueError(
+            f"hash_embed config must be an int dim; got {hash_embed!r}"
+        )
+    if (embeddings or hash_embed) and kw.get("doc_dedup") != "semantic":
+        raise ValueError(
+            "embeddings/hash_embed require doc_dedup='semantic' (the "
+            "embeddings inner join would silently drop vector-less docs "
+            "from a run that never uses the vectors)"
+        )
+    if embeddings and ("path" not in embeddings or set(embeddings) - {"path", "id_col"}):
+        raise ValueError(
+            "embeddings config needs 'path' (+ optional 'id_col'); "
+            f"got keys {sorted(embeddings)}"
+        )
+    if shards_out and shards_format == "binary" and not kw.get("tokenize"):
+        raise ValueError("shards_format 'binary' requires tokenize: true")
+    for key, read in (
+        ("dedup_store", lambda sc: _dedup_store(spark, sc, kw.get("doc_dedup"))),
+        ("quality_model", _load_quality_model),
+        ("benchmark", spark.read.parquet),
+        ("dsir_target", spark.read.parquet),
+    ):
+        if key in kw:
+            kw[key] = read(kw[key]) if kw[key] else None
+    if "span_k" in kw:
+        kw["span_k"] = kw["span_k"] or None   # 0 disables span dedup
+    if "partition_by" in kw:
+        kw["partition_by"] = tuple(kw["partition_by"])
+    if "checkpoint_stages" in kw:
+        kw["checkpoint_stages"] = set(kw["checkpoint_stages"] or ()) or None
+    if card_out:
+        kw["make_card"] = True
+
+    if input_format == "wet":
+        from xdump_spark.sources.warc import read_wet
+
+        docs, corrupt = read_wet(spark, src)
+        # the quarantine contract is only useful if someone SEES it: ONE
+        # collect (bounded: one row per corrupt FILE) — count() plus
+        # collect() would parse the whole crawl twice
+        corrupt_rows = corrupt.collect()
+        if corrupt_rows:
+            print(f"quarantined {len(corrupt_rows)} corrupt WET file(s):")
+            for r in corrupt_rows:
+                print(f"  {r.path} @byte {r.byte_offset}: {r.reason}")
+        # materialize the parse ONCE: without this every pipeline action
+        # (each stage with multiple consumers) re-runs the full WARC
+        # inflate+parse — O(stages) crawl parses per run
+        docs = docs.localCheckpoint(eager=True)
+    else:
+        docs = spark.read.parquet(src)
+    if embeddings:
+        # attach the embedding table by id for doc_dedup='semantic'
+        # (INNER: a doc without a vector cannot be semantically deduped,
+        # and a silent null would crash the cell kernel instead); the
+        # vector is computed inside the pipeline with hash_embed
+        from pyspark.sql import functions as F
+
+        id_col = kw.get("id_col", "doc_id")
+        emb = spark.read.parquet(embeddings["path"]).select(
+            F.col(embeddings.get("id_col", "vec_id")).alias(id_col),
+            F.col(kw.get("embedding_col", "embedding")),
+        )
+        docs = docs.join(emb, id_col, "inner")
+
+    res = prepare_training_corpus(docs, out_dir=out, out_mode=mode, **kw)
+    if card_out:
+        with open(card_out, "w") as fh:
+            json.dump(res.card, fh, indent=2, sort_keys=True)
+        print(f"wrote data card to {card_out}")
+    if res.sequences is not None and shards_out:
+        if shards_format == "binary":
+            from xdump_spark.sources.token_shards import write_binary_shards
+
+            m = write_binary_shards(res.sequences, shards_out)
+            print(
+                f"wrote {m['n_shards']} binary shard(s), "
+                f"{m['n_tokens']} tokens ({m['dtype']}) to {shards_out}"
+            )
+        else:
+            res.sequences.write.mode(mode).parquet(shards_out)
+            print(f"wrote sequences to {shards_out}")
+    if res.chunks is not None and chunks_out:
+        res.chunks.write.mode(mode).parquet(chunks_out)
+        print(f"wrote chunks to {chunks_out}")
+    return res
 
 
 def curate_from_config(spark: SparkSession, path: str):
@@ -205,192 +322,4 @@ def curate_from_config(spark: SparkSession, path: str):
 
     Returns the :class:`~xdump_spark.pipeline.CorpusResult`.
     """
-    from xdump_spark.pipeline import prepare_training_corpus
-
-    cfg = load_curate_config(path)
-    mode = "overwrite" if cfg.get("overwrite") else "errorifexists"
-    dedup_store = None
-    if cfg.get("dedup_store"):
-        sc = dict(cfg["dedup_store"])
-        if cfg.get("doc_dedup") == "fuzzy":
-            # {"path": str} — the persistent near-dup SignatureStore
-            # this run increments against (r7).
-            from xdump_spark.operators.incremental import SignatureStore
-
-            unknown = set(sc) - {"path"}
-            if unknown or "path" not in sc:
-                raise ValueError(
-                    "dedup_store config with doc_dedup='fuzzy' needs "
-                    f"'path' only; got keys {sorted(cfg['dedup_store'])}"
-                )
-            dedup_store = SignatureStore(spark, sc["path"])
-        elif cfg.get("doc_dedup") == "semantic":
-            # {"path": str, "dtype": "float64"|"float32" (optional)} —
-            # the persistent embedding VectorStore this run increments
-            # against (r8); dtype applies at store creation only (r9).
-            from xdump_spark.operators.incremental import VectorStore
-
-            unknown = set(sc) - {"path", "dtype", "pq_m", "pq_k",
-                                 "exact_guard"}
-            if unknown or "path" not in sc:
-                raise ValueError(
-                    "dedup_store config with doc_dedup='semantic' needs "
-                    "'path' (+ optional 'dtype', 'pq_m', 'pq_k', "
-                    f"'exact_guard'); got keys {sorted(cfg['dedup_store'])}"
-                )
-            dedup_store = VectorStore(
-                spark, sc["path"], dtype=sc.get("dtype", "float64"),
-                pq_m=sc.get("pq_m", 8), pq_k=sc.get("pq_k", 256),
-                exact_guard=sc.get("exact_guard", False),
-            )  # "pq" is a valid dtype here — codes on disk, meta wins
-        else:
-            # {"table": str, "path": str (optional), "n_buckets": int
-            # (optional)} — the persistent exact-dedup hash store this
-            # run increments against (requires doc_dedup == "exact").
-            from xdump_spark.operators.incremental import ExactHashStore
-
-            unknown = set(sc) - {"table", "path", "n_buckets"}
-            if unknown or "table" not in sc:
-                raise ValueError(
-                    "dedup_store config needs 'table' (+ optional 'path', "
-                    f"'n_buckets'); got keys {sorted(cfg['dedup_store'])}"
-                )
-            dedup_store = ExactHashStore(
-                spark, sc["table"], n_buckets=sc.get("n_buckets", 64),
-                path=sc.get("path"),
-            )
-    if cfg.get("input_format", "parquet") == "wet":
-        from xdump_spark.sources.warc import read_wet
-
-        input_docs, wet_corrupt = read_wet(spark, cfg["input"])
-        # the quarantine contract is only useful if someone SEES it —
-        # one collect (one row per corrupt file, bounded)
-        corrupt_rows = wet_corrupt.collect()
-        if corrupt_rows:
-            print(f"quarantined {len(corrupt_rows)} corrupt WET file(s):")
-            for r in corrupt_rows:
-                print(f"  {r.path} @byte {r.byte_offset}: {r.reason}")
-        # one parse, not one per downstream action (see cli.py curate)
-        input_docs = input_docs.localCheckpoint(eager=True)
-    elif cfg.get("input_format", "parquet") == "parquet":
-        input_docs = spark.read.parquet(cfg["input"])
-    else:
-        raise ValueError(
-            f"input_format must be 'parquet' or 'wet', got {cfg['input_format']!r}"
-        )
-    if cfg.get("embeddings") and cfg.get("hash_embed"):
-        raise ValueError(
-            "embeddings and hash_embed are mutually exclusive "
-            "(one embedding source)"
-        )
-    hash_embed = cfg.get("hash_embed")
-    if hash_embed is not None and not isinstance(hash_embed, int):
-        raise ValueError(
-            f"hash_embed config must be an int dim; got {hash_embed!r}"
-        )
-    if (cfg.get("embeddings") or hash_embed) and cfg.get("doc_dedup") != "semantic":
-        raise ValueError(
-            "embeddings/hash_embed require doc_dedup='semantic' (the "
-            "embeddings inner join would silently drop vector-less docs "
-            "from a run that never uses the vectors)"
-        )
-    if cfg.get("embeddings"):
-        # {"path": str, "id_col": str (default vec_id)} — attach the
-        # embedding table by id for doc_dedup='semantic' (INNER join:
-        # a doc without a vector cannot be semantically deduped)
-        from pyspark.sql import functions as F
-
-        ec = dict(cfg["embeddings"])
-        unknown = set(ec) - {"path", "id_col"}
-        if unknown or "path" not in ec:
-            raise ValueError(
-                "embeddings config needs 'path' (+ optional 'id_col'); "
-                f"got keys {sorted(cfg['embeddings'])}"
-            )
-        id_col = cfg.get("id_col", "doc_id")
-        emb = spark.read.parquet(ec["path"]).select(
-            F.col(ec.get("id_col", "vec_id")).alias(id_col),
-            F.col(cfg.get("embedding_col", "embedding")),
-        )
-        input_docs = input_docs.join(emb, id_col, "inner")
-    res = prepare_training_corpus(
-        input_docs,
-        text_col=cfg.get("text_col", "text"),
-        id_col=cfg.get("id_col", "doc_id"),
-        url_col=cfg.get("url_col", "url"),
-        dedup_urls=cfg.get("dedup_urls", False),
-        domain_cap=cfg.get("domain_cap"),
-        markup=cfg.get("markup", False),
-        line_filter=cfg.get("line_filter", False),
-        line_dedup=cfg.get("line_dedup", False),
-        span_k=cfg.get("span_k", 8) or None,
-        doc_dedup=cfg.get("doc_dedup"),
-        dedup_store=dedup_store,
-        embedding_col=cfg.get("embedding_col", "embedding"),
-        semantic_threshold=cfg.get("semantic_threshold", 0.95),
-        semantic_kwargs=cfg.get("semantic_kwargs"),
-        hash_embed=hash_embed,
-        fuzzy_threshold=cfg.get("fuzzy_threshold", 0.8),
-        fuzzy_kwargs=cfg.get("fuzzy_kwargs"),
-        min_tokens=cfg.get("min_tokens", 5),
-        blocklist=cfg.get("blocklist"),
-        blocklist_mode=cfg.get("blocklist_mode", "token"),
-        gopher=cfg.get("gopher", False),
-        compression_min=cfg.get("compression_min"),
-        audio_gate=cfg.get("audio_gate"),
-        quality_model=(
-            _load_quality_model(cfg["quality_model"])
-            if cfg.get("quality_model")
-            else None
-        ),
-        quality_score_min=cfg.get("quality_score_min", 0.5),
-        ppl_model=cfg.get("ppl_model"),
-        max_ppl=cfg.get("max_ppl"),
-        dsir_target=(
-            spark.read.parquet(cfg["dsir_target"]) if cfg.get("dsir_target") else None
-        ),
-        dsir_n=cfg.get("dsir_n"),
-        dsir_temperature=cfg.get("dsir_temperature", 1.0),
-        dsir_buckets=cfg.get("dsir_buckets", 65_536),
-        dsir_seed=cfg.get("dsir_seed", 0),
-        sample_rates=cfg.get("sample_rates"),
-        strata_col=cfg.get("strata_col", "lang"),
-        target_mixture=cfg.get("target_mixture"),
-        mixture_col=cfg.get("mixture_col", "source"),
-        benchmark=(
-            spark.read.parquet(cfg["benchmark"]) if cfg.get("benchmark") else None
-        ),
-        contamination_policy=cfg.get("contamination_policy", "drop"),
-        shuffle_seed=cfg.get("shuffle_seed", 0),
-        splits=cfg.get("splits"),
-        split_seed=cfg.get("split_seed", 0),
-        pack_budget=cfg.get("pack_budget"),
-        chunk_budget=cfg.get("chunk_budget"),
-        chunk_overlap=cfg.get("chunk_overlap", 0),
-        chunk_by=cfg.get("chunk_by", "tokens"),
-        tokenize=cfg.get("tokenize", False),
-        vocab_size=cfg.get("vocab_size", 65_536),
-        out_dir=cfg["output"],
-        partition_by=tuple(cfg.get("partition_by", ())),
-        out_mode=mode,
-        audit=cfg.get("audit", True),
-        checkpoint_dir=cfg.get("checkpoint_dir"),
-        checkpoint_stages=(
-            set(cfg["checkpoint_stages"]) if cfg.get("checkpoint_stages") else None
-        ),
-        resume=cfg.get("resume", True),
-    )
-    if res.sequences is not None and cfg.get("shards_out"):
-        if cfg.get("shards_format", "parquet") == "binary":
-            if not cfg.get("tokenize"):
-                raise ValueError(
-                    "shards_format 'binary' requires tokenize: true"
-                )
-            from xdump_spark.sources.token_shards import write_binary_shards
-
-            write_binary_shards(res.sequences, cfg["shards_out"])
-        else:
-            res.sequences.write.mode(mode).parquet(cfg["shards_out"])
-    if res.chunks is not None and cfg.get("chunks_out"):
-        res.chunks.write.mode(mode).parquet(cfg["chunks_out"])
-    return res
+    return run_curate(spark, load_curate_config(path))

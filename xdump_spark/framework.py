@@ -72,6 +72,7 @@ class JdbcBackend:
         password: str | None = None,
         driver: str | None = None,
         stage_dir: str | None = None,
+        tables: list[str] | None = None,
     ):
         from xdump_spark.sources.jdbc import jdbc_options
 
@@ -80,6 +81,7 @@ class JdbcBackend:
         self.options = jdbc_options(url, user=user, password=password, driver=driver)
         self.properties = {k: v for k, v in self.options.items() if k != "url"}
         self.stage_dir = stage_dir
+        self.tables = tables
 
     def catalog(self) -> Catalog:
         from xdump_spark.sources.jdbc import jdbc_catalog
@@ -91,6 +93,7 @@ class JdbcBackend:
             user=self.properties.get("user"),
             password=self.properties.get("password"),
             driver=self.properties.get("driver"),
+            tables=self.tables,
             stage_dir=stage,
         )
 
@@ -142,19 +145,9 @@ class JdbcBackend:
             conn.close()
 
     def load_dump(self, loaded) -> list[str]:
-        """FK-toposorted JDBC ingest + sequence replay (same path as the
-        CLI's --jdbc-url load, cli.py:179-190)."""
-        from xdump_spark.sources.jdbc import apply_sequences_jdbc
-
-        order = loaded.write_jdbc(self.url, self.properties, mode="append")
-        if loaded.sequences:
-            apply_sequences_jdbc(
-                self.spark,
-                self.url,
-                {t: int(v) for t, v in loaded.sequences.items()},
-                self.properties,
-            )
-        return order
+        """FK-toposorted JDBC ingest; ``write_jdbc`` also restarts the
+        target's serial counters (``apply_sequences_jdbc``)."""
+        return loaded.write_jdbc(self.url, self.properties, mode="append")
 
 
 def _resolve(spec: str):
@@ -209,6 +202,55 @@ def get_dump_kwargs(settings: Mapping[str, Any]) -> dict[str, Any]:
     }
 
 
+def run_dump(
+    spark: SparkSession, db, filename: str, since: str | None = None, **kwargs
+) -> dict[str, int]:
+    """Dump ``db.catalog()`` to ``filename``: the one dump path behind
+    :func:`dump_command`, ``config.dump_from_config`` and the CLI's
+    ``dump``. ``since`` switches to an incremental dump against a prior
+    archive (``SparkDumpEngine.dump_incremental``); ``kwargs`` are the
+    table sets and archive flags of ``SparkDumpEngine.dump``. Returns
+    per-table row counts."""
+    from xdump_spark.engine import SparkDumpEngine
+
+    engine = SparkDumpEngine(spark, db.catalog())
+    if since:
+        return engine.dump_incremental(filename, since=since, **kwargs)
+    return engine.dump(filename, **kwargs)
+
+
+def run_load(
+    spark: SparkSession, db, filename: str, cleanup_method: str | None = None
+) -> list[str]:
+    """Load ``filename`` into ``db`` after an optional ``truncate`` or
+    ``recreate`` cleanup (reference: xdump/cli/load.py:25-37): the one
+    load path behind :func:`load_command` and the CLI's ``load``. A
+    backend with ``load_dump`` (:class:`JdbcBackend`) takes the parsed
+    dump whole; any other writes the frames in FK order, its FK config
+    and, when it keeps them, the sequence state. Returns the load order."""
+    from xdump_spark.engine import SparkDumpEngine
+
+    if cleanup_method not in (None, "truncate", "recreate"):
+        raise ValueError(f"unknown cleanup_method {cleanup_method!r}")
+    if cleanup_method and not hasattr(db, cleanup_method):
+        supported = [m for m in ("truncate", "recreate") if hasattr(db, m)]
+        raise ValueError(
+            f"{type(db).__name__} has no {cleanup_method!r} cleanup; "
+            f"cleanup_method must be one of {supported}"
+        )
+    loaded = SparkDumpEngine(spark, Catalog({})).load(filename)
+    if cleanup_method:
+        getattr(db, cleanup_method)()
+    if hasattr(db, "load_dump"):
+        return db.load_dump(loaded)
+    order = loaded.load_order()
+    db.load_tables(loaded.frames, order, mode="overwrite")
+    db.write_fk_config(loaded.foreign_keys)
+    if loaded.sequences and hasattr(db, "write_sequences"):
+        db.write_sequences({t: int(v) for t, v in loaded.sequences.items()})
+    return order
+
+
 def dump_command(
     spark: SparkSession,
     settings: Mapping[str, Any],
@@ -224,19 +266,16 @@ def dump_command(
     configured table sets from the aliased database to ``filename``.
     ``since`` switches to an incremental dump against a prior archive
     (engine.dump_incremental). Returns per-table row counts."""
-    from xdump_spark.engine import SparkDumpEngine
-
-    db = get_xdump_backend(spark, settings, alias, backend)
-    engine = SparkDumpEngine(spark, db.catalog())
-    kwargs = dict(
+    return run_dump(
+        spark,
+        get_xdump_backend(spark, settings, alias, backend),
+        filename,
+        since=since,
         dump_schema=dump_schema,
         dump_data=dump_data,
         compression=compression,
         **get_dump_kwargs(settings),
     )
-    if since:
-        return engine.dump_incremental(filename, since=since, **kwargs)
-    return engine.dump(filename, **kwargs)
 
 
 def load_command(
@@ -250,21 +289,9 @@ def load_command(
     """The ``xload`` management command (commands/xload.py:5-29): optional
     truncate/recreate cleanup, then FK-ordered load of ``filename`` into
     the aliased database. Returns the load order."""
-    from xdump_spark.engine import SparkDumpEngine
-
-    db = get_xdump_backend(spark, settings, alias, backend)
-    if cleanup_method == "truncate":
-        db.truncate()
-    elif cleanup_method == "recreate":
-        db.recreate()
-    elif cleanup_method is not None:
-        raise ValueError(f"unknown cleanup_method {cleanup_method!r}")
-    loaded = SparkDumpEngine(spark, Catalog({})).load(filename)
-    if hasattr(db, "load_dump"):  # JDBC protocol
-        return db.load_dump(loaded)
-    order = loaded.load_order()
-    db.load_tables(loaded.frames, order, mode="overwrite")
-    db.write_fk_config(loaded.foreign_keys)
-    if loaded.sequences and hasattr(db, "write_sequences"):
-        db.write_sequences({t: int(v) for t, v in loaded.sequences.items()})
-    return order
+    return run_load(
+        spark,
+        get_xdump_backend(spark, settings, alias, backend),
+        filename,
+        cleanup_method=cleanup_method,
+    )
