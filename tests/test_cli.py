@@ -160,8 +160,8 @@ def test_cli_custom_backend_dotted_path(spark, employees_catalog, tmp_path):
     assert cli.run(args, spark) == 0
     from xdump_spark.archive import DumpArchive, parse_csv_bytes
 
-    _, rows = parse_csv_bytes(DumpArchive(zip_path).read_data()["groups"])
-    assert {r[1] for r in rows} == {"ADMIN", "USER"}   # proves the custom catalog ran
+    groups = parse_csv_bytes(DumpArchive(zip_path).read_data()["groups"])
+    assert set(groups.column(1).to_pylist()) == {"ADMIN", "USER"}   # proves the custom catalog ran
 
 
 def test_parse_sample_rate():

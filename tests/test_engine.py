@@ -5,7 +5,9 @@ compare contents and sequence state."""
 
 import json
 import zipfile
+from collections import Counter
 
+import pyarrow as pa
 import pytest
 
 from xdump_spark.archive import (
@@ -135,10 +137,11 @@ def test_csv_copy_semantics():
     assert format_csv_value("") == '""'
     assert format_csv_value('say "hi"') == '"say ""hi"""'
     assert format_csv_value("a,b") == '"a,b"'
-    data = rows_to_csv(["a", "b"], [(None, ""), ("x,y", 'q"t')])
-    header, rows = parse_csv_bytes(data)
-    assert header == ["a", "b"]
-    assert rows == [[None, ""], ["x,y", 'q"t']]
+    data = rows_to_csv(pa.table({"a": [None, "x,y"], "b": ["", 'q"t']}))
+    assert data == b'a,b\n,""\n"x,y","q""t"\n'
+    parsed = parse_csv_bytes(data)
+    assert parsed.column_names == ["a", "b"]
+    assert parsed.to_pylist() == [{"a": None, "b": ""}, {"a": "x,y", "b": 'q"t'}]
 
 
 def test_input_check_via_engine(tmp_path, engine):
@@ -264,10 +267,10 @@ def test_csv_header_escaping_roundtrip():
     """Column names containing commas/quotes (Spark allows them, e.g. an
     unaliased aggregate) must round-trip through the archive CSV."""
     cols = ["id", "round(sum(x), 2)", 'say "hi"']
-    rows = [(1, "a", "b"), (2, None, "")]
-    header, parsed = parse_csv_bytes(rows_to_csv(cols, rows))
-    assert header == cols
-    assert parsed == [["1", "a", "b"], ["2", None, ""]]
+    table = pa.table([[1, 2], ["a", None], ["b", ""]], names=cols)
+    parsed = parse_csv_bytes(rows_to_csv(table))
+    assert parsed.column_names == cols
+    assert [list(r.values()) for r in parsed.to_pylist()] == [["1", "a", "b"], ["2", None, ""]]
 
 
 def test_parquet_db_truncate_file_form(tmp_path, spark):
@@ -600,6 +603,32 @@ def test_dump_load_replay_job_budget(tmp_path, spark, engine):
         engine.load(out).write_parquet_db(str(tmp_path / "db"))
 
     assert _jobs_submitted(spark, flow) <= 9
+    # each loaded frame holds one partition per maxPartitionBytes of
+    # Arrow bytes, so every small fixture table replays as one file
+    db = tmp_path / "db"
+    parts = {t.name: sorted(p.name for p in t.glob("part-*.parquet")) for t in db.iterdir()
+             if t.is_dir()}
+    assert set(parts) == {"employees", "groups"}
+    assert all(len(files) == 1 for files in parts.values()), parts
+
+
+def test_one_column_null_row_survives_load(tmp_path, spark):
+    """A one-column table's NULL row is an empty CSV line. pyarrow's CSV
+    reader drops empty lines by default, without an error; the load must
+    keep them as rows."""
+    from pyspark.sql import types as T
+
+    st = T.StructType([T.StructField("note", T.StringType(), True)])
+    rows = [("a",), (None,), ("",), (None,)]
+    cat = Catalog({"notes": spark.createDataFrame(rows, st)}, [])
+    out = str(tmp_path / "notes.zip")
+    assert SparkDumpEngine(spark, cat).dump(out, full_tables=["notes"]) == {"notes": 4}
+    assert sorted(DumpArchive(out).read_data()["notes"].split(b"\n")) == sorted(
+        [b"note", b"a", b"", b'""', b"", b""]
+    )
+    loaded = SparkDumpEngine(spark, cat).load(out).frames["notes"]
+    assert loaded.count() == 4
+    assert Counter(r.note for r in loaded.collect()) == Counter(r[0] for r in rows)
 
 
 def test_timestamp_roundtrip_under_non_utc_local_zone(tmp_path, spark):

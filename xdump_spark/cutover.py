@@ -66,7 +66,10 @@ def fits(spark: SparkSession, site: str, nbytes: int, over: str = "distributed")
 def bounded_collect(
     df: DataFrame, max_rows: int, site: str, over: str = "distributed"
 ) -> pa.Table | None:
-    """``df`` on the driver as one Arrow job, or None when it holds more
-    than ``max_rows`` rows (at most ``max_rows + 1`` of them cross)."""
+    """``df`` on the driver as one Arrow transfer, or None when it holds
+    more than ``max_rows`` rows (at most ``max_rows + 1`` of them cross).
+    The transfer is one Spark job over a plain plan; a plan that
+    broadcasts a relation runs the broadcast as a job of its own first,
+    so the export's semi-joins against driver-held key sets take 2."""
     tbl = df.limit(max_rows + 1).toArrow()
     return tbl if _decide(site, tbl.num_rows, "rows", max_rows, over) else None

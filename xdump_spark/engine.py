@@ -1,14 +1,18 @@
 """Dump/load orchestration — the reference's top-level ``backend.dump`` /
 ``backend.load`` lifecycle (xdump/base.py:87-106, 220-250) on Spark.
 
-dump(): validate → FK-closure over seeds → per-table collect, CSV encode
-and max serial key (the sequence state), the tables' jobs submitted
-together → schema manifest + sequences + CSVs into a zip. load(): schema
-manifest (optional) → CSV → typed Arrow tables → DataFrames (JVM local
-relations) → replay: parquet tables written together, JDBC tables one by
-one in FK-topological order.
+dump(): validate → FK-closure over seeds → each table to the driver as
+one bounded Arrow transfer, the tables' jobs submitted together → per
+table, on the calling thread, a columnar CSV encode and the max serial
+key (the sequence state) → schema manifest + sequences + CSVs into a zip.
+load(): schema manifest (optional) → ``pyarrow.csv`` parse → Arrow tables
+typed by the manifest → DataFrames (JVM local relations, one partition
+per ``spark.sql.files.maxPartitionBytes``) → replay: parquet tables
+written together, JDBC tables one by one in FK-topological order. No
+Python object is built per row on either side, only per distinct value
+of the types without a vectorized text form (archive.py).
 
-The driver-side CSV collect is intentional for the dump path: partial
+The driver-side transfer is intentional for the dump path: partial
 dumps are small by construction (the reference streams straight into a
 zip on one machine too). For big exports use ``dump_distributed`` which
 writes spark-native partitioned parquet/CSV instead.
@@ -23,14 +27,16 @@ from datetime import date, datetime, timezone
 from decimal import Decimal
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from xdump_spark.archive import DumpArchive, rows_to_csv, parse_csv_bytes
+from xdump_spark.archive import DumpArchive, parse_csv_bytes, per_distinct, rows_to_csv
 from xdump_spark.catalog import Catalog, ForeignKey
+from xdump_spark.cutover import bounded_collect
 from xdump_spark.operators.concurrency import overlap
 from xdump_spark.planner.closure import compute_closure, validate_tables
 from xdump_spark.timing import log_time, logger
@@ -116,7 +122,7 @@ def sequence_state(selections: dict[str, DataFrame], catalog: Catalog) -> dict[s
 
 @dataclass
 class _Exported:
-    """One table's export: only these outlive the collected rows."""
+    """One table's export: only these outlive the transferred table."""
 
     csv: bytes
     rows: int
@@ -153,18 +159,19 @@ class SparkDumpEngine:
         Total and per-table wall time is logged like the reference's
         verbosity surface (xdump/base.py:24-35,98).
 
-        Archive dumps collect each selected table to the driver — valid
-        because partial dumps are small by construction, and ENFORCED by
-        ``max_driver_rows``: each table is collected through
-        ``limit(max_driver_rows + 1)``, so the driver never holds more
-        than that many rows of one table, and a table that fills the
-        limit raises before any archive is written. The tables are
-        collected concurrently, so at most that many rows per table are
-        held at once. Use ``dump_distributed`` for large selections, or
-        pass ``max_driver_rows=None`` to opt out.
+        Archive dumps bring each selected table to the driver as Arrow —
+        valid because partial dumps are small by construction, and
+        ENFORCED by ``max_driver_rows``: each table crosses through
+        ``cutover.bounded_collect`` (``limit(max_driver_rows + 1)``), so
+        the driver never holds more than that many rows of one table,
+        and a table that fills the limit raises before any archive is
+        written. The tables are transferred concurrently, so at most that
+        many rows per table are held at once. Use ``dump_distributed``
+        for large selections, or pass ``max_driver_rows=None`` to opt out
+        (a plain ``toArrow()``).
 
         Sequence state (``dump_schema``) is each table's max serial key,
-        taken from the collected rows at no Spark job; with
+        taken from the transferred tables at no Spark job; with
         ``dump_data=False`` nothing is collected and ``sequence_state``
         runs instead."""
         with log_time("total dump"):
@@ -182,18 +189,14 @@ class SparkDumpEngine:
             filename, selections, dump_schema, dump_data, compression, max_driver_rows
         )
 
-    def _export(self, table: str, df: DataFrame, max_driver_rows) -> _Exported:
-        """Collect one table, check ``max_driver_rows``, encode its CSV
-        and take its max serial key from the collected rows. ``collect()``,
-        not ``toArrow()``: Arrow hands TimestampType back tz-aware, where
-        the archive's CSV holds the naive local wall-clock values that
-        ``collect()`` gives."""
+    def _export(self, table: str, df: DataFrame, max_driver_rows) -> pa.Table:
+        """One table on the driver as Arrow, refused over
+        ``max_driver_rows``. Only the transfer: the caller encodes."""
         with log_time(f"export {table}", level=10):
-            cols = df.columns
-            if max_driver_rows is not None:
-                df = df.limit(max_driver_rows + 1)
-            rows = df.collect()
-        if max_driver_rows is not None and len(rows) > max_driver_rows:
+            if max_driver_rows is None:
+                return df.toArrow()
+            tbl = bounded_collect(df, max_driver_rows, f"dump.export.{table}", over="refused")
+        if tbl is None:
             raise ValueError(
                 f"dump() collects to the driver and the selection for "
                 f"table {table!r} exceeds max_driver_rows="
@@ -201,15 +204,16 @@ class SparkDumpEngine:
                 "selections (executors write partitioned parquet/CSV) "
                 "or raise max_driver_rows explicitly"
             )
-        logger.debug("%s: %d rows", table, len(rows))
-        pk = _serial_key(self.catalog, table, df.schema)
-        max_key = None
-        if pk is not None:
-            i = cols.index(pk)
-            max_key = max((r[i] for r in rows if r[i] is not None), default=None)
+        return tbl
+
+    def _encode(self, table: str, schema: T.StructType, tbl: pa.Table) -> _Exported:
+        """The table's CSV, row count and max serial key."""
+        logger.debug("%s: %d rows", table, tbl.num_rows)
+        pk = _serial_key(self.catalog, table, schema)
+        max_key = None if pk is None else pc.max(tbl[pk]).as_py()
         return _Exported(
-            rows_to_csv(cols, rows),
-            len(rows),
+            rows_to_csv(tbl),
+            tbl.num_rows,
             None if max_key is None else int(max_key),   # exact for decimal(38,0)
         )
 
@@ -225,11 +229,14 @@ class SparkDumpEngine:
             # The per-table jobs are tiny and independent: submit them
             # together. A table over max_driver_rows raises out of
             # overlap() after its siblings' jobs are cancelled and have
-            # stopped, before any archive is written.
-            exported = dict(zip(selections, overlap(*[
+            # stopped, before any archive is written. The encoding runs
+            # here, one table at a time, each table dropped once encoded.
+            tables = overlap(*[
                 lambda t=t, df=df: self._export(t, df, max_driver_rows)
                 for t, df in selections.items()
-            ])))
+            ])
+            for t, df in selections.items():
+                exported[t] = self._encode(t, df.schema, tables.pop(0))
             if omit_empty:
                 exported = {t: e for t, e in exported.items() if e.rows}
                 selections = {t: selections[t] for t in exported}
@@ -389,14 +396,19 @@ class SparkDumpEngine:
         schema = arc.read_schema()
         sequences = arc.read_sequences()
         data = arc.read_data()
+        split_bytes = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            self.spark.conf.get("spark.sql.files.maxPartitionBytes")
+        )
         frames: dict[str, DataFrame] = {}
         for table, csv_bytes in data.items():
-            header, rows = parse_csv_bytes(csv_bytes)
+            text = parse_csv_bytes(csv_bytes)
             if schema and table in schema["tables"]:
                 st = T.StructType.fromJson(schema["tables"][table]["spark_schema"])
             else:
-                st = T.StructType([T.StructField(c, T.StringType(), True) for c in header])
-            frames[table] = self._frame(header, rows, st)
+                st = T.StructType(
+                    [T.StructField(c, T.StringType(), True) for c in text.column_names]
+                )
+            frames[table] = self._frame(typed_table(text, st), st, split_bytes)
         fks = (
             [ForeignKey.from_dict(d) for d in schema.get("foreign_keys", [])]
             if schema
@@ -404,22 +416,38 @@ class SparkDumpEngine:
         )
         return LoadedDump(frames, fks, sequences)
 
-    def _frame(self, header: list[str], rows: list[list], st: T.StructType) -> DataFrame:
-        """Typed frame from parsed CSV cells, sent to the JVM as an Arrow
-        table with ``st``'s Arrow types: a JVM LocalRelation, so the
-        replay's writes read it without Python workers (a list of tuples
-        would be a LogicalRDD of pickled rows)."""
-        arrow_schema = to_arrow_schema(st)
-        columns = list(zip(*rows)) if rows else [()] * len(header)
-        arrays = []
-        for c, cells, field in zip(header, columns, arrow_schema):
-            parse = _parser(st[c].dataType)
-            arrays.append(
-                pa.array([None if v is None else parse(v) for v in cells], type=field.type)
-            )
-        return self.spark.createDataFrame(
-            pa.Table.from_arrays(arrays, schema=arrow_schema), st
-        )
+    def _frame(self, tbl: pa.Table, st: T.StructType, split_bytes: int) -> DataFrame:
+        """The typed table as a JVM LocalRelation (the replay's writes read
+        it without Python workers; a list of tuples would be a LogicalRDD
+        of pickled rows), cut into partitions the way a file scan cuts its
+        input: one per ``spark.sql.files.maxPartitionBytes`` of Arrow
+        bytes. A small table then replays as one file, not
+        ``defaultParallelism`` of them."""
+        return self.spark.createDataFrame(tbl, st).coalesce(max(1, -(-tbl.nbytes // split_bytes)))
+
+
+def typed_table(text: pa.Table, st: T.StructType) -> pa.Table:
+    """An all-string table from ``parse_csv_bytes`` typed by ``st``, in
+    ``st``'s Arrow types: integers and floats by a vectorized cast,
+    strings as they are, every other type through ``_parser`` once per
+    distinct value."""
+    arrow_schema = to_arrow_schema(st)
+    columns = []
+    for col, field, dt in zip(text.columns, arrow_schema, (f.dataType for f in st.fields)):
+        if isinstance(dt, _INTEGRAL):
+            columns.append(col.cast(field.type))
+        elif isinstance(dt, (T.DoubleType, T.FloatType)):
+            # through float64, as float() read it: a float32 text is the
+            # shortest double of the float32 value
+            columns.append(col.cast(pa.float64()).cast(field.type))
+        elif isinstance(dt, T.StringType):
+            columns.append(col)
+        else:
+            parse = _parser(dt)
+            columns.append(pa.chunked_array(
+                [per_distinct(c, parse, field.type) for c in col.chunks], field.type
+            ))
+    return pa.Table.from_arrays(columns, schema=arrow_schema)
 
 
 def _local_timestamp(v: str) -> datetime:
