@@ -603,13 +603,59 @@ def test_dump_load_replay_job_budget(tmp_path, spark, engine):
         engine.load(out).write_parquet_db(str(tmp_path / "db"))
 
     assert _jobs_submitted(spark, flow) <= 9
-    # each loaded frame holds one partition per maxPartitionBytes of
-    # Arrow bytes, so every small fixture table replays as one file
+    # each loaded frame holds the partitions a file scan of its Arrow
+    # bytes would have, so every small fixture table replays as one file
     db = tmp_path / "db"
     parts = {t.name: sorted(p.name for p in t.glob("part-*.parquet")) for t in db.iterdir()
              if t.is_dir()}
     assert set(parts) == {"employees", "groups"}
     assert all(len(files) == 1 for files in parts.values()), parts
+
+
+def test_load_cuts_partitions_like_a_file_scan(tmp_path, spark):
+    """A loaded frame holds the partitions a file scan would cut from a
+    file of its Arrow bytes: one under openCostInBytes, and all
+    defaultParallelism of them from openCostInBytes × defaultParallelism
+    bytes on. maxPartitionBytes alone would make a 100 MB table replay
+    as a single task."""
+    from pyspark.sql import types as T
+
+    from xdump_spark.operators.sizing import ScanSplit
+
+    par = spark.sparkContext.defaultParallelism
+    assert -(-(100 << 20) // ScanSplit.of(spark).max_split_bytes(100 << 20, 1)) == par
+    st = T.StructType([T.StructField("id", T.LongType(), False),
+                       T.StructField("s", T.StringType(), True)])
+    rows = [(i, "x" * 100) for i in range(2000)]   # ~220 KB as Arrow
+    cat = Catalog({"t": spark.createDataFrame(rows, st)}, [])
+    out = str(tmp_path / "t.zip")
+    SparkDumpEngine(spark, cat).dump(out, full_tables=["t"])
+    assert SparkDumpEngine(spark, cat).load(out).frames["t"].rdd.getNumPartitions() == 1
+    spark.conf.set("spark.sql.files.openCostInBytes", "16k")
+    try:
+        loaded = SparkDumpEngine(spark, cat).load(out).frames["t"]
+        assert loaded.rdd.getNumPartitions() == par
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert sorted(loaded.collect()) == sorted(rows)
+
+
+def test_large_cells_survive_dump_load(tmp_path, spark):
+    """Cells of MiBs load back: pyarrow.csv reads in 1 MiB blocks by
+    default and refuses a record that crosses a block boundary."""
+    from pyspark.sql import types as T
+
+    st = T.StructType([T.StructField("id", T.LongType(), False),
+                       T.StructField("text", T.StringType(), True),
+                       T.StructField("blob", T.BinaryType(), True)])
+    text = 'a,"b"\nc' * (3 << 17)            # ~3 MiB, quoted in the archive
+    blob = bytes(range(256)) * (3 << 11)     # 1.5 MiB, 3 MiB as hex
+    rows = [(1, text, None), (2, None, blob), (3, "", b"")]
+    cat = Catalog({"big": spark.createDataFrame(rows, st)}, [])
+    out = str(tmp_path / "big.zip")
+    SparkDumpEngine(spark, cat).dump(out, full_tables=["big"])
+    loaded = SparkDumpEngine(spark, cat).load(out).frames["big"]
+    assert sorted((r.id, r.text, r.blob) for r in loaded.collect()) == rows
 
 
 def test_one_column_null_row_survives_load(tmp_path, spark):

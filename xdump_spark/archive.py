@@ -43,6 +43,7 @@ DATA_DIR = "dump/data/"
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 _MICROSECOND = timedelta(microseconds=1)
+_INT32_MAX = 2**31 - 1   # the largest block pyarrow.csv takes
 
 COMPRESSION = {
     # mirrors the reference CLI's choices (xdump/cli/dump.py:32-38)
@@ -223,9 +224,13 @@ def parse_csv_bytes(data: bytes) -> pa.Table:
     # the header alone through the csv module: read_csv has no all-string
     # switch, only per-name column types
     header = next(csv.reader(io.TextIOWrapper(io.BytesIO(data), "utf-8", newline="")))
+    # one block for the whole member (it is in memory already): read_csv
+    # refuses a record that crosses a block boundary, so its default 1 MiB
+    # blocks would refuse any cell of a MiB or more
+    block_size = min(len(data) + 1, _INT32_MAX)
     return pacsv.read_csv(
         io.BytesIO(data),
-        read_options=pacsv.ReadOptions(use_threads=False),
+        read_options=pacsv.ReadOptions(use_threads=False, block_size=block_size),
         parse_options=pacsv.ParseOptions(newlines_in_values=True, ignore_empty_lines=False),
         convert_options=pacsv.ConvertOptions(
             column_types={c: pa.string() for c in header},

@@ -6,8 +6,8 @@ one bounded Arrow transfer, the tables' jobs submitted together → per
 table, on the calling thread, a columnar CSV encode and the max serial
 key (the sequence state) → schema manifest + sequences + CSVs into a zip.
 load(): schema manifest (optional) → ``pyarrow.csv`` parse → Arrow tables
-typed by the manifest → DataFrames (JVM local relations, one partition
-per ``spark.sql.files.maxPartitionBytes``) → replay: parquet tables
+typed by the manifest → DataFrames (JVM local relations, cut into the
+partitions a file scan of as many bytes would have) → replay: parquet tables
 written together, JDBC tables one by one in FK-topological order. No
 Python object is built per row on either side, only per distinct value
 of the types without a vectorized text form (archive.py).
@@ -38,6 +38,7 @@ from xdump_spark.archive import DumpArchive, parse_csv_bytes, per_distinct, rows
 from xdump_spark.catalog import Catalog, ForeignKey
 from xdump_spark.cutover import bounded_collect
 from xdump_spark.operators.concurrency import overlap
+from xdump_spark.operators.sizing import ScanSplit
 from xdump_spark.planner.closure import compute_closure, validate_tables
 from xdump_spark.timing import log_time, logger
 
@@ -396,9 +397,7 @@ class SparkDumpEngine:
         schema = arc.read_schema()
         sequences = arc.read_sequences()
         data = arc.read_data()
-        split_bytes = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            self.spark.conf.get("spark.sql.files.maxPartitionBytes")
-        )
+        split = ScanSplit.of(self.spark)
         frames: dict[str, DataFrame] = {}
         for table, csv_bytes in data.items():
             text = parse_csv_bytes(csv_bytes)
@@ -408,7 +407,7 @@ class SparkDumpEngine:
                 st = T.StructType(
                     [T.StructField(c, T.StringType(), True) for c in text.column_names]
                 )
-            frames[table] = self._frame(typed_table(text, st), st, split_bytes)
+            frames[table] = self._frame(typed_table(text, st), st, split)
         fks = (
             [ForeignKey.from_dict(d) for d in schema.get("foreign_keys", [])]
             if schema
@@ -416,14 +415,17 @@ class SparkDumpEngine:
         )
         return LoadedDump(frames, fks, sequences)
 
-    def _frame(self, tbl: pa.Table, st: T.StructType, split_bytes: int) -> DataFrame:
+    def _frame(self, tbl: pa.Table, st: T.StructType, split: ScanSplit) -> DataFrame:
         """The typed table as a JVM LocalRelation (the replay's writes read
         it without Python workers; a list of tuples would be a LogicalRDD
-        of pickled rows), cut into partitions the way a file scan cuts its
-        input: one per ``spark.sql.files.maxPartitionBytes`` of Arrow
-        bytes. A small table then replays as one file, not
-        ``defaultParallelism`` of them."""
-        return self.spark.createDataFrame(tbl, st).coalesce(max(1, -(-tbl.nbytes // split_bytes)))
+        of pickled rows), in as many partitions as a file scan would cut
+        from a file of its Arrow bytes (``ScanSplit.max_split_bytes``): one
+        per ``openCostInBytes``, so a small table replays as one file and
+        over one JDBC connection, not ``defaultParallelism`` of them, and
+        from ``openCostInBytes × defaultParallelism`` bytes on all the
+        LocalRelation's ``defaultParallelism`` partitions."""
+        n = -(-tbl.nbytes // split.max_split_bytes(tbl.nbytes, 1))
+        return self.spark.createDataFrame(tbl, st).coalesce(max(1, n))
 
 
 def typed_table(text: pa.Table, st: T.StructType) -> pa.Table:

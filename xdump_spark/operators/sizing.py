@@ -7,6 +7,8 @@ dominant cost; file status calls are free by comparison.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 
 
@@ -88,18 +90,38 @@ def estimated_scan_partitions(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    spark = df.sparkSession
-    as_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
-    max_bytes = as_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    open_cost = as_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4MB"))
-    try:
-        min_parts = int(spark.conf.get("spark.sql.files.minPartitionNum"))
-    except Exception:
-        min_parts = spark.sparkContext.defaultParallelism
     total = input_bytes(df) or 0
-    padded = total + len(files) * open_cost
-    max_split = min(max_bytes, max(open_cost, -(-padded // max(1, min_parts))))
-    return max(1, -(-padded // max(1, max_split)))
+    split = ScanSplit.of(df.sparkSession)
+    padded = total + len(files) * split.open_cost
+    return max(1, -(-padded // split.max_split_bytes(total, len(files))))
+
+
+@dataclass(frozen=True)
+class ScanSplit:
+    """The session's file-scan split settings, read once: each read is a
+    JVM round trip of a millisecond or more."""
+
+    max_bytes: int
+    open_cost: int
+    min_parts: int
+
+    @classmethod
+    def of(cls, spark) -> "ScanSplit":
+        as_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+        min_parts = spark.conf.get("spark.sql.files.minPartitionNum", None)
+        return cls(
+            as_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")),
+            as_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4MB")),
+            int(min_parts) if min_parts else spark.sparkContext.defaultParallelism,
+        )
+
+    def max_split_bytes(self, total_bytes: int, n_files: int) -> int:
+        """The split size a scan of ``n_files`` files holding
+        ``total_bytes`` uses (FilePartition.maxSplitBytes): each file
+        padded with openCostInBytes, min(maxPartitionBytes,
+        max(openCost, paddedTotal / minPartitionNum))."""
+        padded = total_bytes + n_files * self.open_cost
+        return max(1, min(self.max_bytes, max(self.open_cost, -(-padded // max(1, self.min_parts)))))
 
 
 def spread(df: DataFrame) -> DataFrame:
